@@ -768,6 +768,13 @@ object Bench {
     names.map(byName)
   }
 
+  /** The one-line JSON result: the total first, then `body` (the full or
+    * compact per-query sections), then the scale factor and the `local[N]`
+    * width the board ran at, so the artifact states its own CPU count. */
+  private[graft] def resultLine(totalStr: String, body: String, sfDir: String,
+                                cpus: Int): String =
+    s"""{"metric":"total","value":$totalStr,"unit":"sec",$body,"sf":"$sfDir","cpus":$cpus}"""
+
   private def jsonMap(entries: Seq[(String, Double)]): String =
     entries.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
@@ -964,7 +971,8 @@ object Bench {
         }
         runs + cache + tb
       } else ""
-    val full = s"""{"metric":"total","value":$totalStr,"unit":"sec","queries":$warm,"cold":$cold$runsSection$nFailed,"sf":"$sfDir"}"""
+    val full = resultLine(totalStr,
+      s""""queries":$warm,"cold":$cold$runsSection$nFailed""", sfDir, cpus.toInt)
     // The driver parses the line from a bounded ~2 KB output tail; a line
     // that outgrows it gets clipped mid-JSON (round 5 lost the total this
     // way). Rounds 5-7 ALSO failed because sbt's forked-run logger
@@ -981,7 +989,9 @@ object Bench {
       if (isChild || full.length <= 1400) full
       else {
         val slowest = jsonMap(okQ.sortBy(-_.warm).take(12).map(t => t.name -> t.warm))
-        s"""{"metric":"total","value":$totalStr,"unit":"sec","n_queries":${results.size}$nFailed,"queries":$slowest,"detail":"BENCH_DETAIL.json","sf":"$sfDir"}"""
+        resultLine(totalStr,
+          s""""n_queries":${results.size}$nFailed,"queries":$slowest,"detail":"BENCH_DETAIL.json"""",
+          sfDir, cpus.toInt)
       }
     println(line)
     Console.out.flush()

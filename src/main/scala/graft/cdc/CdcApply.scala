@@ -86,11 +86,15 @@ object CdcApply {
         transform(col("pk_names"), n => element_at(col("data"), n))))
       .otherwise(element_at(col("data"), "id"))
 
-  /** Latest-image-wins ranking shared by the key-derivation fronts: newest
-    * (timestamp, offset) per (database, table, pk) survives unless
-    * tombstoned. */
-  private def latestByPk(keyed: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("database"), col("table"), col("pk"))
+  /** Latest-image-wins ranking shared by the key-derivation fronts and the
+    * streaming sink: newest (timestamp, offset) per (database, table, pk)
+    * survives unless tombstoned. `cluster` leads the window partitioning; it
+    * must be a function of the key (the sink's key-hash `bucket`), so the
+    * ranking is unchanged, and a frame already hash-partitioned on it ranks
+    * without another exchange. No delivery dedup here: byte-identical rows
+    * are interchangeable under `row_number`. */
+  def latestByPk(keyed: DataFrame, cluster: Seq[Column] = Nil): DataFrame = {
+    val w = Window.partitionBy(cluster ++ Seq(col("database"), col("table"), col("pk")): _*)
       .orderBy(col("timestamp").desc, col("offset").desc)
     keyed
       .withColumn("rn", row_number().over(w))

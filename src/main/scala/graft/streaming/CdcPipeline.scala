@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
-import graft.cdc.CanalJson
+import org.apache.hadoop.fs.Path
+import graft.cdc.{CanalJson, CdcApply}
 
 /** The streaming assembly of the CDC engine (SURVEY.md §3.1):
   * source → canal-json parse → validity route → flatten → {event sink,
@@ -161,7 +162,6 @@ object CdcPipeline {
     * dropped partition paths for the caller's audit log. */
   def expireStorePartitions(spark: SparkSession, path: String,
                             keepFrom: java.time.LocalDate): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return Seq.empty
@@ -208,61 +208,89 @@ object CdcPipeline {
     * (latest-by-key is deterministic under duplicate delivery).
     *
     * Incremental by key-hash bucket: state is partitioned by
-    * `bucket = pmod(xxhash64(database, table, pk), nBuckets)`; each batch
-    * reads ONLY the buckets its keys touch (partition-pruned scan) and
-    * dynamic partition overwrite rewrites only those directories. Per-batch
-    * I/O is O(touched state), not O(total state) — the property that keeps a
-    * continuously running apply viable as state grows. The only driver-side
-    * collect is the ≤ nBuckets dirty-bucket ids (metadata, not data). */
+    * `bucket = pmod(xxhash64(database, table, pk), nBuckets)` on the
+    * envelope-declared key ([[CdcApply.envelopePk]]); each batch reads ONLY
+    * the buckets its keys touch and a writer-scoped dynamic partition
+    * overwrite rewrites only those directories (the session conf is left
+    * alone). Per-batch I/O is O(touched state), not O(total state).
+    *
+    * One pass, three Spark jobs per data batch on the persisted batch:
+    *   1. one grouped aggregate yields both the poison-row count (skip-on-
+    *      error, T6 / M4 'error') and the dirty buckets — the only driver-
+    *      side collect, ≤ nBuckets rows of metadata;
+    *   2. the ranking: prior state of the dirty buckets unioned with the
+    *      clean rows, ONE exchange on `bucket`, then the latest-image window
+    *      partitioned by (bucket, database, table, pk), persisted; the job
+    *      collects the surviving buckets. The bucket is a function of the
+    *      key, so the ranking is the batch
+    *      [[CdcApply.materializeEnvelopeKeyed]] ranking;
+    *   3. the write, from the cached ranking. Each task owns whole buckets:
+    *      ONE file per dirty bucket per batch. Dynamic overwrite never
+    *      touches a partition with no output rows, so a dirty bucket whose
+    *      keys were ALL tombstoned (dirty, not surviving) is deleted
+    *      explicitly.
+    * That count holds for the stateful pipeline (behind [[dedupDelivery]]),
+    * where Structured Streaming turns adaptive execution off; with it on,
+    * each shuffle stage runs as a job of its own.
+    * A batch with no clean rows (a no-data batch, or poison only) runs job 1
+    * alone.
+    *
+    * No batch-side delivery dedup (the `distinct` of
+    * [[CdcApply.dedupDelivery]]): byte-identical rows are interchangeable
+    * under `row_number`, so the ranking already collapses them; the
+    * streaming [[dedupDelivery]] upstream is what keeps counters exact.
+    *
+    * Missing vs corrupt state: only a bucket directory that does not exist
+    * means "no prior state". Prior state is read with the known schema (no
+    * footer is sampled up front), so an unreadable or corrupt state file
+    * fails the ranking job: the batch fails loudly
+    * (`("materialize", "error")`) before anything is written, and the
+    * untouched keys of that bucket stay in the store. */
   def materializeSink(events: DataFrame, statePath: String, checkpoint: String,
                       nBuckets: Int = 32): DataStreamWriter[Row] =
     events.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // persist the micro-batch ONCE: the sink runs three actions (error
-        // count, dirty-bucket collect, state write) and an unpersisted batch
-        // re-scans the source for each — 3× the input I/O per batch, and an
-        // input-rows health metric inflated by the same factor
+        // persist the micro-batch ONCE: an unpersisted batch re-scans the
+        // source for each action, and inflates the input-rows health metric
+        // by the same factor
         batch.persist()
         try {
           val spark = batch.sparkSession
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-          // skip-on-error (T6 / M4 'error', index.js:316-332): rows whose
-          // payload fails processing are counted and dropped, and the apply
-          // continues — the reference's per-message try/catch, batched
-          val nErr = batch.filter(CanalJson.processErrorRow(col("data"))).count()
+          val isError = CanalJson.processErrorRow(col("data"))
+          val keyed = batch
+            .withColumn("pk", CdcApply.envelopePk)
+            .withColumn("bucket",
+              pmod(xxhash64(col("database"), col("table"), col("pk")), lit(nBuckets)))
+          val perBucket = keyed.groupBy(col("bucket"))
+            .agg(count(when(isError, 1)).as("errors"), count(when(!isError, 1)).as("clean"))
+            .collect()
+          val nErr = perBucket.map(_.getLong(1)).sum
           if (nErr > 0) PipelineHealth.SinkCounters.inc("materialize", "row_error", nErr)
-          val clean = batch.filter(!CanalJson.processErrorRow(col("data")))
-          // bucket + materialize on the envelope-declared key (pkNames
-          // tuple, id fallback): identical to the old element_at(data, id)
-          // hash on every single-id feed (CdcApplyProps equivalence), and
-          // correct for composite-keyed tables
-          val keyed = clean.withColumn("bucket",
-            pmod(xxhash64(col("database"), col("table"),
-              graft.cdc.CdcApply.envelopePk), lit(nBuckets)))
-          val dirty = keyed.select("bucket").distinct()
-            .collect().map(_.getLong(0)).toSeq
-          val prev =
-            try spark.read.parquet(statePath)
-              .filter(col("bucket").isin(dirty: _*)) // partition-pruned
-            catch { case _: Throwable => spark.emptyDataFrame }
-          val merged =
-            if (prev.isEmpty) keyed
-            else prev.select(keyed.columns.map(col).toSeq: _*).unionByName(keyed)
-          val materialized =
-            graft.cdc.CdcApply.materializeEnvelopeKeyed(merged).persist()
-          materialized
-            .write.mode("overwrite").partitionBy("bucket").parquet(statePath)
-          // dynamic overwrite never touches a partition with no output rows:
-          // a dirty bucket whose keys were ALL tombstoned must be cleared
-          // explicitly or stale state survives the delete
-          val remaining = materialized.select("bucket").distinct()
-            .collect().map(_.getLong(0)).toSet
-          materialized.unpersist()
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            spark.sparkContext.hadoopConfiguration)
-          (dirty.toSet -- remaining).foreach { b =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$statePath/bucket=$b"), true)
+          val dirty = perBucket.filter(_.getLong(2) > 0).map(_.getLong(0)).toSet
+          if (dirty.nonEmpty) {
+            val root = new Path(statePath)
+            val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+            def bucketDir(b: Long) = new Path(root, s"bucket=$b")
+            val clean = keyed.filter(!isError)
+            val prevDirs = dirty.toSeq.sorted.map(bucketDir).filter(fs.exists)
+            val merged =
+              if (prevDirs.isEmpty) clean
+              else clean.unionByName(spark.read.schema(clean.schema)
+                .option("basePath", statePath).parquet(prevDirs.map(_.toString): _*))
+            val materialized = CdcApply.latestByPk(
+              merged.repartition(col("bucket")), Seq(col("bucket"))).persist()
+            try {
+              // ranks once and fills the cache the write then reads; the
+              // write invalidates cached plans over statePath, so this must
+              // come first or it would re-rank from the new files
+              val remaining = materialized.select("bucket").distinct()
+                .collect().map(_.getLong(0)).toSet
+              materialized.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("bucket").parquet(statePath)
+              (dirty -- remaining).foreach(b => fs.delete(bucketDir(b), true))
+            } finally materialized.unpersist()
           }
           PipelineHealth.SinkCounters.inc("materialize", "success")
         } catch {

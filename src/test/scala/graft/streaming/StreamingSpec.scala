@@ -6,6 +6,7 @@ import graft.cdc.CanalJson
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import scala.jdk.CollectionConverters._
 
 /** Structured Streaming assembly (SURVEY.md §3.1): the same canal-json plan
   * runs incrementally over a MemoryStream; windowed counts and routing match
@@ -675,6 +676,183 @@ class StreamingSpec extends SparkSpec {
     val state = spark.read.parquet(s"$tmp/state")
     assert(state.filter($"pk" === "666").count() === 0) // poison never applied
     assert(state.count() === 3)                         // the 3 seed rows survive
+  }
+
+  /** Start `materializeSink` over a MemoryStream of canal-json lines; one
+    * `addData` + `processAllAvailable` is one micro-batch. */
+  private def startSink(statePath: String, ckpt: String, nBuckets: Int,
+                        dedup: Boolean = false)
+      : (MemoryStream[String], org.apache.spark.sql.streaming.StreamingQuery) = {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[String]
+    val raw = mem.toDF()
+      .withColumn("partition", lit(0)).withColumn("offset", xxhash64($"value"))
+    val events = CdcPipeline.events(raw)
+    (mem, CdcPipeline.materializeSink(
+      if (dedup) CdcPipeline.dedupDelivery(events) else events,
+      statePath, ckpt, nBuckets).start())
+  }
+
+  private def feedSink(statePath: String, ckpt: String, nBuckets: Int,
+                       batches: Seq[Seq[String]], dedup: Boolean = false)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val (mem, q) = startSink(statePath, ckpt, nBuckets, dedup)
+    try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+    finally q.stop()
+    q
+  }
+
+  private def partFiles(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
+    val s = java.nio.file.Files.list(dir)
+    try s.iterator().asScala.filter { f =>
+      val n = f.getFileName.toString
+      n.startsWith("part-") && n.endsWith(".parquet")
+    }.toSeq.sorted
+    finally s.close()
+  }
+
+  private def bucketDirs(statePath: String): Seq[java.nio.file.Path] = {
+    val s = java.nio.file.Files.list(java.nio.file.Paths.get(statePath))
+    try s.iterator().asScala
+      .filter(_.getFileName.toString.startsWith("bucket=")).toSeq.sorted
+    finally s.close()
+  }
+
+  private val fixture = CanalJson.fixtureLines.map(_._1)
+
+  test("materialize sink: a corrupt state file fails the batch loudly and drops no state") {
+    // Only a MISSING bucket directory means "no prior state". A state file
+    // whose footer is gone must fail the batch, count a sink error, and
+    // leave the bucket exactly as it was — never merge the batch against
+    // empty state and overwrite the bucket's untouched keys.
+    val tmp = java.nio.file.Files.createTempDirectory("graft_corrupt").toString
+    val state = s"$tmp/state"
+    PipelineHealth.SinkCounters.reset()
+    // nBuckets = 1: every key lives in bucket=0, so the next batch touches it
+    val (mem, q) = startSink(state, s"$tmp/ckpt", nBuckets = 1)
+    try {
+      mem.addData(fixture(0), fixture(1)) // products 1,2,3 + users 1
+      q.processAllAvailable()
+      val dir = java.nio.file.Paths.get(s"$state/bucket=0")
+      // one file per bucket; truncating every part file keeps the check
+      // independent of that layout
+      val originals = partFiles(dir).map(p => p -> java.nio.file.Files.readAllBytes(p))
+      assert(originals.nonEmpty)
+      // drop the footer length and the trailing magic; the stale checksum
+      // sidecar goes too, so the parquet reader itself meets the damage
+      originals.foreach { case (p, bytes) =>
+        java.nio.file.Files.deleteIfExists(dir.resolve(s".${p.getFileName}.crc"))
+        java.nio.file.Files.write(p, bytes.dropRight(8))
+      }
+      mem.addData(fixture(2)) // updates products 1 and 2
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      assert(!q.isActive)
+      val counters = PipelineHealth.SinkCounters.snapshot
+        .map { case (op, st, n) => (op, st) -> n }.toMap
+      assert(counters.get(("materialize", "error")) === Some(1L))
+      // the failed batch committed nothing: the same, still-truncated files
+      assert(partFiles(dir) === originals.map(_._1))
+      originals.foreach { case (p, bytes) =>
+        assert(java.nio.file.Files.size(p) === bytes.length - 8L)
+        java.nio.file.Files.write(p, bytes)
+      }
+      val kept = spark.read.parquet(state)
+        .select($"table", $"pk", element_at($"data", "price"))
+        .as[(String, String, Option[String])].collect().toSet
+      assert(kept === Set(("products", "1", Some("150.00")),
+        ("products", "2", Some("45.50")), ("products", "3", Some("5.99")),
+        ("users", "1", None)))
+    } finally q.stop()
+  }
+
+  test("materialize sink overwrites dynamically without mutating the session conf") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(key)
+    val before = spark.conf.getOption(key)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_conf").toString
+    feedSink(s"$tmp/state", s"$tmp/ckpt", 4,
+      Seq(Seq(fixture(0), fixture(1)), Seq(fixture(3))))
+    assert(spark.conf.getOption(key) === before)
+    // the writer option still scoped the overwrite to the dirty buckets:
+    // batch 2 (orders 10 alone) kept every key of batch 1
+    assert(bucketDirs(s"$tmp/state").size > 1)
+    assert(spark.read.parquet(s"$tmp/state").count() === 5)
+  }
+
+  test("materialize sink deletes a bucket whose keys were all tombstoned") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_tomb").toString
+    val nBuckets = 64
+    def bucketOf(table: String, pk: String): Long =
+      Seq((table, pk)).toDF("table", "pk")
+        .select(pmod(xxhash64(lit("testdb"), $"table", $"pk"), lit(nBuckets)))
+        .as[Long].head()
+    val gone = bucketOf("products", "3")
+    val others = Seq(("products", "1"), ("products", "2"), ("users", "1"))
+    assert(!others.map { case (t, k) => bucketOf(t, k) }.contains(gone),
+      "fixture precondition: products 3 is alone in its bucket")
+    // batch 2 deletes products 3 (fixture(5))
+    feedSink(s"$tmp/state", s"$tmp/ckpt", nBuckets,
+      Seq(Seq(fixture(0), fixture(1)), Seq(fixture(5))))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$tmp/state/bucket=$gone")))
+    val keys = spark.read.parquet(s"$tmp/state").select($"table", $"pk")
+      .as[(String, String)].collect().toSet
+    assert(keys === others.toSet)
+  }
+
+  test("materialize sink leaves exactly one parquet file per bucket") {
+    // the ranking exchange is on the bucket, so one task owns each dirty
+    // bucket and writes it as one file, batch after batch
+    val tmp = java.nio.file.Files.createTempDirectory("graft_files").toString
+    feedSink(s"$tmp/state", s"$tmp/ckpt", 4,
+      Seq(Seq(fixture(0), fixture(1)), Seq(fixture(2), fixture(3), fixture(4)),
+        Seq(fixture(5), fixture(8), fixture(9))))
+    val dirs = bucketDirs(s"$tmp/state")
+    assert(dirs.nonEmpty)
+    dirs.foreach(d => assert(partFiles(d).size === 1, s"$d"))
+  }
+
+  test("materialize sink runs at most 3 Spark jobs per data batch") {
+    // pinned at the measured count: the per-bucket error/dirty aggregate,
+    // the ranking (which also collects the surviving buckets), the write
+    // from the cached ranking — a re-added action fails here. Measured on
+    // the production assembly behind the stateful delivery dedup, where
+    // Structured Streaming runs the batch without adaptive execution (with
+    // it, every shuffle stage would count as a job of its own)
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, String), Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          val qid = p.getProperty("sql.streaming.queryId")
+          val batch = p.getProperty("streaming.sql.batchId")
+          if (qid != null && batch != null) jobs.merge((qid, batch), 1, _ + _)
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val tmp = java.nio.file.Files.createTempDirectory("graft_jobs").toString
+      // fixture lines 0-5 carry their own `es`, so none falls behind the
+      // dedup watermark
+      val q = feedSink(s"$tmp/state", s"$tmp/ckpt", 4,
+        Seq(Seq(fixture(0), fixture(1)), Seq(fixture(2), fixture(3), fixture(4)),
+          Seq(fixture(5))), dedup = true)
+      val data = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId.toString).toSeq
+      assert(data.size === 3)
+      def counts = data.map(b => b -> jobs.getOrDefault((q.id.toString, b), 0)).toMap
+      // the listener bus is asynchronous: wait until every batch is seen
+      // and the counts hold still
+      val deadline = System.currentTimeMillis() + 10000
+      var last = Map.empty[String, Int]
+      while ((counts.values.exists(_ == 0) || counts != last) &&
+             System.currentTimeMillis() < deadline) {
+        last = counts
+        Thread.sleep(200)
+      }
+      assert(counts.values.forall(_ > 0), s"$counts")
+      assert(counts.values.forall(_ <= 3), s"jobs per data batch: $counts")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("M5: terminal query exception is counted by error type") {
