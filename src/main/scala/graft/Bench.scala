@@ -770,10 +770,12 @@ object Bench {
 
   /** The one-line JSON result: the total first, then `body` (the full or
     * compact per-query sections), then the scale factor and the `local[N]`
-    * width the board ran at, so the artifact states its own CPU count. */
+    * width the board ran at, so the artifact states its own CPU count, and
+    * the number of drift-retry forks the run spent. */
   private[graft] def resultLine(totalStr: String, body: String, sfDir: String,
-                                cpus: Int): String =
-    s"""{"metric":"total","value":$totalStr,"unit":"sec",$body,"sf":"$sfDir","cpus":$cpus}"""
+                                cpus: Int, nDriftRetries: Int): String =
+    s"""{"metric":"total","value":$totalStr,"unit":"sec",$body,"sf":"$sfDir","cpus":$cpus,""" +
+      s""""n_drift_retries":$nDriftRetries}"""
 
   private def jsonMap(entries: Seq[(String, Double)]): String =
     entries.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
@@ -971,8 +973,10 @@ object Bench {
         }
         runs + cache + tb
       } else ""
+    val nDriftRetries = runStats.map(_.nDriftRetries).getOrElse(0)
     val full = resultLine(totalStr,
-      s""""queries":$warm,"cold":$cold$runsSection$nFailed""", sfDir, cpus.toInt)
+      s""""queries":$warm,"cold":$cold$runsSection$nFailed""", sfDir, cpus.toInt,
+      nDriftRetries)
     // The driver parses the line from a bounded ~2 KB output tail; a line
     // that outgrows it gets clipped mid-JSON (round 5 lost the total this
     // way). Rounds 5-7 ALSO failed because sbt's forked-run logger
@@ -991,7 +995,7 @@ object Bench {
         val slowest = jsonMap(okQ.sortBy(-_.warm).take(12).map(t => t.name -> t.warm))
         resultLine(totalStr,
           s""""n_queries":${results.size}$nFailed,"queries":$slowest,"detail":"BENCH_DETAIL.json"""",
-          sfDir, cpus.toInt)
+          sfDir, cpus.toInt, nDriftRetries)
       }
     println(line)
     Console.out.flush()

@@ -88,13 +88,12 @@ object CdcApply {
 
   /** Latest-image-wins ranking shared by the key-derivation fronts and the
     * streaming sink: newest (timestamp, offset) per (database, table, pk)
-    * survives unless tombstoned. `cluster` leads the window partitioning; it
-    * must be a function of the key (the sink's key-hash `bucket`), so the
-    * ranking is unchanged, and a frame already hash-partitioned on it ranks
-    * without another exchange. No delivery dedup here: byte-identical rows
-    * are interchangeable under `row_number`. */
-  def latestByPk(keyed: DataFrame, cluster: Seq[Column] = Nil): DataFrame = {
-    val w = Window.partitionBy(cluster ++ Seq(col("database"), col("table"), col("pk")): _*)
+    * survives unless tombstoned. A frame already hash-partitioned on
+    * (database, table, pk) ranks without another exchange. No delivery
+    * dedup here: byte-identical rows are interchangeable under
+    * `row_number`. */
+  def latestByPk(keyed: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("database"), col("table"), col("pk"))
       .orderBy(col("timestamp").desc, col("offset").desc)
     keyed
       .withColumn("rn", row_number().over(w))

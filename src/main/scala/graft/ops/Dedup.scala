@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.tables.BucketMeta
 
 /** Deduplication operators for large-scale training-data pipelines
   * (SURVEY.md §2.7 X1/X2): exact, MinHash-LSH, SimHash, n-gram Jaccard.
@@ -108,7 +109,7 @@ object Dedup {
     * present); fails loudly otherwise. */
   def readDigestIndex(spark: org.apache.spark.sql.SparkSession,
                       indexDir: String): (DataFrame, Int) = {
-    val n = IndexMaintenance.readBucketMeta(spark, indexDir) match {
+    val n = BucketMeta.read(spark, indexDir) match {
       case Some(("shab", n)) => n
       case other => throw new IllegalArgumentException(
         s"readDigestIndex: no shab bucket-count sidecar at $indexDir " +
@@ -648,7 +649,7 @@ object Dedup {
     * round-19+ index (sidecar present); fails loudly otherwise. */
   def readLshBandIndex(spark: org.apache.spark.sql.SparkSession,
                        indexDir: String): (DataFrame, Int) = {
-    val n = IndexMaintenance.readBucketMeta(spark, indexDir) match {
+    val n = BucketMeta.read(spark, indexDir) match {
       case Some(("bkb", n)) => n
       case other => throw new IllegalArgumentException(
         s"readLshBandIndex: no bkb bucket-count sidecar at $indexDir " +
@@ -743,7 +744,7 @@ object Dedup {
       // the number (round-18 ADVICE). A round-18 index (bucketed, no
       // sidecar) predates non-default builds through this path; validate
       // its directories against the default best-effort and proceed.
-      val probeBuckets = IndexMaintenance.readBucketMeta(spark, indexDir) match {
+      val probeBuckets = BucketMeta.read(spark, indexDir) match {
         case Some(("bkb", n)) => n
         case _ =>
           IndexMaintenance.requireBucketMeta(spark, indexDir, "bkb",

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import graft.tables.BucketMeta
 
 /** The shared lifecycle mechanics of this engine's three maintained,
   * directory-partitioned parquet index families — the exact-dedup digest
@@ -31,11 +32,11 @@ import org.apache.spark.sql.functions.col
   * `pmod(hash(key), nBuckets)` — a probe or append computed under a
   * DIFFERENT nBuckets than the build prunes the wrong directories and
   * silently misclassifies. Build therefore records the count in a
-  * [[BucketMetaFile]] sidecar at the index root (underscore-prefixed, so
-  * parquet reads ignore it), and append/probe REQUIRE it to match, failing
-  * loudly on mismatch. A pre-sidecar (round-18) index gets best-effort
-  * validation — every existing partition value must fall in [0, nBuckets)
-  * — and STAYS sidecar-less until an explicit rebuild: best-effort
+  * [[graft.tables.BucketMeta]] sidecar at the index root (underscore-
+  * prefixed, so parquet reads ignore it), and append/probe REQUIRE it to
+  * match, failing loudly on mismatch. A pre-sidecar (round-18) index gets
+  * best-effort validation — every existing partition value must fall in
+  * [0, nBuckets) — and STAYS sidecar-less until an explicit rebuild: best-effort
   * validation cannot prove a smaller-modulus build, so recording its
   * assumed count would certify exactly what it cannot verify (round-19
   * ADVICE). The IVF family's
@@ -44,38 +45,8 @@ import org.apache.spark.sql.functions.col
   * sidecar. */
 private[ops] object IndexMaintenance {
 
-  /** Sidecar recording the modulus families' bucket count, e.g. `bkb=32`.
-    * Underscore prefix keeps it invisible to parquet directory reads. */
-  val BucketMetaFile = "_nbuckets"
-
   private def fsFor(spark: SparkSession, path: org.apache.hadoop.fs.Path) =
     path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Record the index's bucket count (`partCol=nBuckets`) at its root —
-    * written by build, and by append as a legacy upgrade. Overwrites: the
-    * value is the layout's single source of truth. */
-  def writeBucketMeta(spark: SparkSession, dir: String, partCol: String,
-                      nBuckets: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, BucketMetaFile)
-    val out = fsFor(spark, p).create(p, true)
-    try out.write(s"$partCol=$nBuckets".getBytes("UTF-8")) finally out.close()
-  }
-
-  /** The recorded (partCol, nBuckets) of a persisted index, if its build
-    * wrote the sidecar (round 19+). */
-  def readBucketMeta(spark: SparkSession, dir: String): Option[(String, Int)] = {
-    val p = new org.apache.hadoop.fs.Path(dir, BucketMetaFile)
-    val fs = fsFor(spark, p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      txt.trim.split("=") match {
-        case Array(c, n) => n.toIntOption.map(c -> _)
-        case _ => None
-      }
-    }
-  }
 
   /** Enforce the bucket-count contract before an append or probe computes
     * bucket ids under `nBuckets`: a recorded sidecar must match exactly;
@@ -86,7 +57,7 @@ private[ops] object IndexMaintenance {
     * build since round 19 writes it). */
   def requireBucketMeta(spark: SparkSession, dir: String, partCol: String,
                         nBuckets: Int, op: String): Unit =
-    readBucketMeta(spark, dir) match {
+    BucketMeta.read(spark, dir) match {
       case Some((c, n)) =>
         require(c == partCol && n == nBuckets,
           s"$op: index at $dir was built with $c=$n but this call computes " +
@@ -94,20 +65,13 @@ private[ops] object IndexMaintenance {
             "modulus prunes the wrong directories (or appends rows into " +
             "directories later probes never read); pass the recorded count")
       case None =>
-        val root = new org.apache.hadoop.fs.Path(dir)
-        val fs = fsFor(spark, root)
-        if (fs.exists(root)) {
-          val bad = fs.listStatus(root)
-            .filter(d => d.isDirectory &&
-              d.getPath.getName.startsWith(s"$partCol="))
-            .map(_.getPath.getName.stripPrefix(s"$partCol="))
-            .flatMap(_.toLongOption)
-            .filter(v => v < 0 || v >= nBuckets)
-          require(bad.isEmpty,
-            s"$op: index at $dir holds $partCol values ${bad.mkString(",")} " +
-              s"outside [0, $nBuckets) — it was built under a different " +
-              "bucket count than this call assumes")
-        }
+        val bad = BucketMeta.partitionValues(spark, dir, partCol)
+          .flatMap(_.toLongOption)
+          .filter(v => v < 0 || v >= nBuckets)
+        require(bad.isEmpty,
+          s"$op: index at $dir holds $partCol values ${bad.mkString(",")} " +
+            s"outside [0, $nBuckets) — it was built under a different " +
+            "bucket count than this call assumes")
     }
 
   /** The shared persist shape of all three families: write the rows
@@ -134,7 +98,7 @@ private[ops] object IndexMaintenance {
     // creates one — adopting the contract on a legacy index requires an
     // explicit rebuild.
     val hadSidecar = !overwrite && nBuckets.isDefined &&
-      readBucketMeta(spark, dir).isDefined
+      BucketMeta.read(spark, dir).isDefined
     if (!overwrite)
       nBuckets.foreach(requireBucketMeta(spark, dir, partCol, _, "append"))
     val out = if (onePerPartition) rows.repartition(col(partCol)) else rows
@@ -144,7 +108,7 @@ private[ops] object IndexMaintenance {
     // build is the count's source of truth), a sidecar-carrying append
     // re-records the verified-matching count
     if (overwrite || hadSidecar)
-      nBuckets.foreach(writeBucketMeta(spark, dir, partCol, _))
+      nBuckets.foreach(BucketMeta.write(spark, dir, partCol, _))
   }
 
   /** The shared bounded pruned probe: collect the batch's DISTINCT bucket

@@ -285,14 +285,15 @@ object CdcQueries {
       val events = CanalJson.events(CdcPipeline.fileSource(s, in.toString))
       // 32 shuffle partitions on an 11-line fixture is pure per-task
       // overhead in the sink's window/agg actions — narrow for the
-      // streaming section and restore after stop (the p27 rule).
+      // streaming section and restore after stop (the p27 rule); the sink's
+      // fresh store takes that one partition as its bucket count.
       // noDataBatches stays ON: the health surface reports trigger gauges
       // from the listener, and suppressing scheduled triggers would thin
       // the very surface the entry measures
       val prevConf = CensusConf.narrow(s, noDataBatches = true)
       try {
         val q = CdcPipeline.materializeSink(events.coalesce(1),
-          s"$tmp/state", s"$tmp/ckpt", nBuckets = 4).start()
+          s"$tmp/state", s"$tmp/ckpt").start()
         q.processAllAvailable()
         q.stop()
       } finally CensusConf.restore(s, prevConf)

@@ -4,8 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
+import java.io.FileNotFoundException
 import graft.cdc.{CanalJson, CdcApply}
+import graft.tables.BucketMeta
 
 /** The streaming assembly of the CDC engine (SURVEY.md §3.1):
   * source → canal-json parse → validity route → flatten → {event sink,
@@ -207,47 +209,80 @@ object CdcPipeline {
     * latest image per key into a parquet state dir. The apply is idempotent
     * (latest-by-key is deterministic under duplicate delivery).
     *
-    * Incremental by key-hash bucket: state is partitioned by
-    * `bucket = pmod(xxhash64(database, table, pk), nBuckets)` on the
-    * envelope-declared key ([[CdcApply.envelopePk]]); each batch reads ONLY
-    * the buckets its keys touch and a writer-scoped dynamic partition
-    * overwrite rewrites only those directories (the session conf is left
-    * alone). Per-batch I/O is O(touched state), not O(total state).
+    * Incremental by key-hash bucket: state is partitioned by the int
+    * `bucket = pmod(hash(database, table, pk), n)` on the envelope-declared
+    * key ([[CdcApply.envelopePk]]); each batch reads ONLY the buckets its
+    * keys touch and a writer-scoped dynamic partition overwrite rewrites
+    * only those directories (the session conf is left alone). Per-batch I/O
+    * is the size of the touched buckets, so with few buckets a batch of
+    * more than a few keys rewrites the whole store.
     *
-    * One pass, three Spark jobs per data batch on the persisted batch:
+    * Layout identity: `hash` is the Murmur3 expression `HashPartitioning`
+    * assigns shuffle partitions with, so the ranking exchange
+    * `repartition(n, database, table, pk)` sends bucket i to shuffle
+    * partition i. Each write task holds exactly one bucket and writes it as
+    * ONE file, and the window ranks on that partitioning with no second
+    * exchange.
+    *
+    * Two Spark jobs per data batch on the persisted batch:
     *   1. one grouped aggregate yields both the poison-row count (skip-on-
     *      error, T6 / M4 'error') and the dirty buckets — the only driver-
-    *      side collect, ≤ nBuckets rows of metadata;
-    *   2. the ranking: prior state of the dirty buckets unioned with the
-    *      clean rows, ONE exchange on `bucket`, then the latest-image window
-    *      partitioned by (bucket, database, table, pk), persisted; the job
-    *      collects the surviving buckets. The bucket is a function of the
-    *      key, so the ranking is the batch
-    *      [[CdcApply.materializeEnvelopeKeyed]] ranking;
-    *   3. the write, from the cached ranking. Each task owns whole buckets:
-    *      ONE file per dirty bucket per batch. Dynamic overwrite never
-    *      touches a partition with no output rows, so a dirty bucket whose
-    *      keys were ALL tombstoned (dirty, not surviving) is deleted
-    *      explicitly.
+    *      side collect, ≤ n rows of metadata;
+    *   2. read the dirty buckets' prior state, union the clean rows, rank
+    *      with [[CdcApply.latestByPk]] (the batch
+    *      [[CdcApply.materializeEnvelopeKeyed]] ranking: the bucket is a
+    *      function of the key) and write.
     * That count holds for the stateful pipeline (behind [[dedupDelivery]]),
     * where Structured Streaming turns adaptive execution off; with it on,
-    * each shuffle stage runs as a job of its own.
-    * A batch with no clean rows (a no-data batch, or poison only) runs job 1
-    * alone.
+    * the shuffle stage runs as a job of its own. A batch with no clean rows
+    * (a no-data batch, or poison only) runs job 1 alone.
+    *
+    * Tombstone-only buckets: dynamic overwrite never touches a partition
+    * with no output rows, so a dirty bucket whose keys were all deleted
+    * would keep its old files. Each dirty bucket directory that exists is
+    * listed before the write; after it, a directory whose file names did
+    * not change got no output and is deleted. Replay: a crash between the
+    * overwrite commit and that delete replays the batch; the bucket still
+    * holds its unchanged old files, the replay re-ranks it to no output
+    * again and deletes it, and the overwritten buckets re-rank to
+    * themselves, so the store converges.
+    *
+    * The bucket count `n` is a property of the store, recorded once as
+    * `bucket=n` in its [[BucketMeta]] sidecar (`_nbuckets` at the store's
+    * root, hidden from `spark.read.parquet(statePath)`). The rules, checked
+    * before anything is written:
+    *   - sidecar present: it is authoritative, whatever the session's
+    *     parallelism;
+    *   - absent and no `bucket=` directory: a new store takes the batch
+    *     session's `spark.sql.shuffle.partitions`, written to the sidecar
+    *     first;
+    *   - absent but `bucket=` directories exist: a store of an older layout,
+    *     bucketed by another hash — the batch fails;
+    *   - unreadable, not a positive count, or recorded for another
+    *     partition column: the batch fails.
+    * Why the session's parallelism and not a fixed, finer count: a micro-
+    * batch of k keys dirties about n·(1 − (1 − 1/n)^k) buckets, and a live
+    * feed's batches grow until they absorb the feed's rate over one batch
+    * duration (30–110 rows per data batch on `cdc_trickle`), so most of
+    * 32 buckets are dirty too (~60 % at 30 keys) and they only add files
+    * and tasks. Measured on 4 vCPU with perfbench, median p50 latency:
+    * 4 buckets 917 ms vs 32 buckets 1574 ms on `cdc_trickle`; with the
+    * store pre-seeded to 134 k keys (9–10 MB), 2303 ms vs 3325 ms.
+    *
+    * Missing vs corrupt vs old-layout state: only a bucket directory that
+    * does not exist means "no prior state". Prior state is read with the
+    * known schema (no footer is sampled up front), so an unreadable or
+    * corrupt state file fails the write job before its commit and the
+    * untouched keys of that bucket stay in the store. An old-layout store
+    * fails before any job runs. Every failure is loud and counted
+    * (`("materialize", "error")`).
     *
     * No batch-side delivery dedup (the `distinct` of
     * [[CdcApply.dedupDelivery]]): byte-identical rows are interchangeable
     * under `row_number`, so the ranking already collapses them; the
-    * streaming [[dedupDelivery]] upstream is what keeps counters exact.
-    *
-    * Missing vs corrupt state: only a bucket directory that does not exist
-    * means "no prior state". Prior state is read with the known schema (no
-    * footer is sampled up front), so an unreadable or corrupt state file
-    * fails the ranking job: the batch fails loudly
-    * (`("materialize", "error")`) before anything is written, and the
-    * untouched keys of that bucket stay in the store. */
-  def materializeSink(events: DataFrame, statePath: String, checkpoint: String,
-                      nBuckets: Int = 32): DataStreamWriter[Row] =
+    * streaming [[dedupDelivery]] upstream is what keeps counters exact. */
+  def materializeSink(events: DataFrame, statePath: String,
+                      checkpoint: String): DataStreamWriter[Row] =
     events.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -257,40 +292,37 @@ object CdcPipeline {
         batch.persist()
         try {
           val spark = batch.sparkSession
+          val root = new Path(statePath)
+          val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+          val n = storeBuckets(spark, statePath,
+            spark.conf.get("spark.sql.shuffle.partitions").toInt)
+          val key = Seq(col("database"), col("table"), col("pk"))
           val isError = CanalJson.processErrorRow(col("data"))
           val keyed = batch
             .withColumn("pk", CdcApply.envelopePk)
-            .withColumn("bucket",
-              pmod(xxhash64(col("database"), col("table"), col("pk")), lit(nBuckets)))
+            .withColumn("bucket", pmod(hash(key: _*), lit(n)))
           val perBucket = keyed.groupBy(col("bucket"))
             .agg(count(when(isError, 1)).as("errors"), count(when(!isError, 1)).as("clean"))
             .collect()
           val nErr = perBucket.map(_.getLong(1)).sum
           if (nErr > 0) PipelineHealth.SinkCounters.inc("materialize", "row_error", nErr)
-          val dirty = perBucket.filter(_.getLong(2) > 0).map(_.getLong(0)).toSet
+          val dirty = perBucket.filter(_.getLong(2) > 0).map(_.getInt(0)).sorted
           if (dirty.nonEmpty) {
-            val root = new Path(statePath)
-            val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-            def bucketDir(b: Long) = new Path(root, s"bucket=$b")
             val clean = keyed.filter(!isError)
-            val prevDirs = dirty.toSeq.sorted.map(bucketDir).filter(fs.exists)
+            // the dirty buckets that hold state, with their files before the write
+            val before = dirty.toSeq.map(b => new Path(root, s"bucket=$b"))
+              .flatMap(d => fileNames(fs, d).map(d -> _))
             val merged =
-              if (prevDirs.isEmpty) clean
+              if (before.isEmpty) clean
               else clean.unionByName(spark.read.schema(clean.schema)
-                .option("basePath", statePath).parquet(prevDirs.map(_.toString): _*))
-            val materialized = CdcApply.latestByPk(
-              merged.repartition(col("bucket")), Seq(col("bucket"))).persist()
-            try {
-              // ranks once and fills the cache the write then reads; the
-              // write invalidates cached plans over statePath, so this must
-              // come first or it would re-rank from the new files
-              val remaining = materialized.select("bucket").distinct()
-                .collect().map(_.getLong(0)).toSet
-              materialized.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket").parquet(statePath)
-              (dirty -- remaining).foreach(b => fs.delete(bucketDir(b), true))
-            } finally materialized.unpersist()
+                .option("basePath", statePath).parquet(before.map(_._1.toString): _*))
+            CdcApply.latestByPk(merged.repartition(n, key: _*))
+              .write.mode("overwrite")
+              .option("partitionOverwriteMode", "dynamic")
+              .partitionBy("bucket").parquet(statePath)
+            before.foreach { case (d, names) =>
+              if (fileNames(fs, d).contains(names)) fs.delete(d, true)
+            }
           }
           PipelineHealth.SinkCounters.inc("materialize", "success")
         } catch {
@@ -300,4 +332,26 @@ object CdcPipeline {
         } finally batch.unpersist()
         ()
       }
+
+  /** The names of the files in `dir`, or None if it does not exist. */
+  private def fileNames(fs: FileSystem, dir: Path): Option[Set[String]] =
+    try Some(fs.listStatus(dir).map(_.getPath.getName).toSet)
+    catch { case _: FileNotFoundException => None }
+
+  /** The store's bucket count, from its [[BucketMeta]] sidecar by the
+    * rules in [[materializeSink]]; a new store records `newStore`. */
+  private def storeBuckets(spark: SparkSession, statePath: String, newStore: Int): Int =
+    BucketMeta.read(spark, statePath) match {
+      case Some(("bucket", n)) => n
+      case Some((c, _)) => throw new IllegalStateException(
+        s"$statePath/${BucketMeta.File} records $c buckets, not the sink's bucket")
+      case None =>
+        if (BucketMeta.partitionValues(spark, statePath, "bucket").nonEmpty)
+          throw new IllegalStateException(
+            s"$statePath has bucket= directories but no ${BucketMeta.File} sidecar: a " +
+              "store of an older layout, bucketed by another hash; replay the feed " +
+              "into a new state path")
+        BucketMeta.write(spark, statePath, "bucket", newStore)
+        newStore
+    }
 }

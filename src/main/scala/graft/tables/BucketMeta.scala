@@ -1,0 +1,66 @@
+package graft.tables
+
+import java.io.{FileNotFoundException, IOException}
+import java.nio.charset.StandardCharsets
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
+
+/** The bucket-count sidecar of a directory-partitioned parquet store: a
+  * hidden file at the store's root holding `partCol=n`, the modulus its
+  * `partCol=` directories were computed under. The leading `_` keeps it out
+  * of `spark.read.parquet(dir)`.
+  *
+  * Two kinds of store record one: the maintained index families
+  * ([[graft.ops.IndexMaintenance]]) and the CDC materialize sink
+  * ([[graft.streaming.CdcPipeline.materializeSink]]). The format and its
+  * reading are shared here; what a store WITHOUT a sidecar means is each
+  * owner's rule (a pre-sidecar index is validated best-effort, a
+  * pre-sidecar sink store was bucketed by another hash and is refused). */
+object BucketMeta {
+
+  val File = "_nbuckets"
+
+  private def fsFor(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Record `partCol=n` at `dir`, replacing any earlier value. The value is
+    * written to a temporary file and renamed into place, so a reader never
+    * sees a partial sidecar. */
+  def write(spark: SparkSession, dir: String, partCol: String, n: Int): Unit = {
+    val p = new Path(dir, File)
+    val tmp = new Path(dir, File + ".tmp")
+    val fs = fsFor(spark, p)
+    val out = fs.create(tmp, true)
+    try out.write(s"$partCol=$n".getBytes(StandardCharsets.UTF_8)) finally out.close()
+    // a file system whose rename does not replace (HDFS) needs the old one gone
+    if (!fs.rename(tmp, p) && !(fs.delete(p, false) && fs.rename(tmp, p)))
+      throw new IOException(s"could not write $p")
+  }
+
+  /** The recorded (partCol, n) at `dir`, or None if it has no sidecar.
+    * Content that is not `partCol=n` with a positive `n` throws: a damaged
+    * sidecar is not a missing one. */
+  def read(spark: SparkSession, dir: String): Option[(String, Int)] = {
+    val p = new Path(dir, File)
+    val text =
+      try {
+        val in = fsFor(spark, p).open(p)
+        try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+      } catch { case _: FileNotFoundException => return None }
+    text.trim.split("=") match {
+      case Array(c, n) if c.nonEmpty && n.toIntOption.exists(_ > 0) => Some(c -> n.toInt)
+      case _ => throw new IllegalStateException(
+        s"$p must hold partCol=<positive bucket count>, found '${text.take(40)}'")
+    }
+  }
+
+  /** The values of the `partCol=` directories directly under `dir`; empty
+    * if `dir` does not exist. */
+  def partitionValues(spark: SparkSession, dir: String, partCol: String): Seq[String] = {
+    val root = new Path(dir)
+    try fsFor(spark, root).listStatus(root).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
+      .map(_.getPath.getName.stripPrefix(s"$partCol="))
+    catch { case _: FileNotFoundException => Nil }
+  }
+}

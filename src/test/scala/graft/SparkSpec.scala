@@ -21,4 +21,14 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Run `body` with the session's `spark.sql.shuffle.partitions` at `n`
+    * (the bucket count a new `CdcPipeline.materializeSink` store records),
+    * restoring the previous value after. */
+  def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = session.conf.get(key)
+    session.conf.set(key, n.toLong)
+    try body finally session.conf.set(key, prev)
+  }
 }

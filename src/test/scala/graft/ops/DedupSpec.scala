@@ -746,7 +746,7 @@ class DedupSpec extends SparkSpec {
       val fs = new org.apache.hadoop.fs.Path(legacy)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(legacy,
-        IndexMaintenance.BucketMetaFile), false)
+        graft.tables.BucketMeta.File), false)
       val e3 = intercept[IllegalArgumentException] {
         Dedup.appendLshBandIndex(docs.filter($"doc_id" === 5L), "text",
           "doc_id", legacy, nBuckets = 8)
@@ -761,7 +761,7 @@ class DedupSpec extends SparkSpec {
       // until an explicit rebuild (round-19 ADVICE)
       Dedup.appendLshBandIndex(docs.filter($"doc_id" === 5L), "text",
         "doc_id", legacy) // default nBuckets = 32, matches the 32 build
-      assert(IndexMaintenance.readBucketMeta(spark, legacy).isEmpty,
+      assert(graft.tables.BucketMeta.read(spark, legacy).isEmpty,
         "append minted a sidecar from best-effort-only validation")
       intercept[IllegalArgumentException](Dedup.readLshBandIndex(spark, legacy))
       Seq(band, sha, legacy).foreach(d =>

@@ -686,4 +686,32 @@ class SimilaritySpec extends SparkSpec {
     }
     ()
   }
+  test("packed-long argmin domain guard: negative d2 or cid fails loudly; " +
+    "appendIvfIndexInt rejects negative centroid ids") {
+    // a negative cid borrows from the d2 bits of d2 * 2^16 + cid, so the
+    // unpacked code is silently wrong — it must raise instead, through the
+    // public encoder as well as at the packing itself
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+    def raisesDomainError(body: => Any): Unit = {
+      val e = intercept[Exception] { body }
+      assert(msgs(e).exists(_.contains("packedArgmin")),
+        s"expected the packedArgmin domain error, got: ${msgs(e).take(2)}")
+    }
+    val corpus = Seq((100L, Seq(0L, 0L))).toDF("vec_id", "mv")
+    val cb = Seq((0, -1L, Seq(0L, 0L)), (0, 0L, Seq(5L, 5L))).toDF("j", "cid", "bv")
+    raisesDomainError(Similarity.pqEncodeInt(corpus, cb, mSub = 1, dsub = 2).collect())
+    // no squared distance is negative; the guard still rejects one rather
+    // than trust the producer
+    Seq((-1L, 0L), (0L, -1L)).foreach { case (d2, cid) =>
+      raisesDomainError(Seq((1L, d2, cid)).toDF("g", "d2", "cid").groupBy($"g")
+        .agg(Similarity.packedArgmin($"d2", $"cid")).collect())
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_neg").resolve("idx")
+    val m = Seq((0L, Seq(1L, 1L))).toDF("vec_id", "embedding")
+    intercept[IllegalArgumentException] {
+      Similarity.appendIvfIndexInt(spark, m, Array((-1L, Array(0L, 0L))), dir.toString)
+    }
+    assert(!java.nio.file.Files.exists(dir), "a rejected append writes nothing")
+  }
 }

@@ -85,24 +85,27 @@ object MaterializeSinkProps extends Properties("MaterializeSink") {
 
   property("sink store after K micro-batches == materializeEnvelopeKeyed over the feed") =
     // no shrinking: every trial is a streaming run of its own
-    forAllNoShrink(genFeed, Gen.oneOf(1, 4)) { (feed, nBuckets) =>
+    // the parallelism is the new store's bucket count
+    forAllNoShrink(genFeed, Gen.oneOf(1, 4)) { (feed, parallelism) =>
       import spark.implicits._
       implicit val sqlCtx = spark.sqlContext
       val tmp = java.nio.file.Files.createTempDirectory("graft_sink_prop").toString
       val mem = MemoryStream[String]
       val raw = mem.toDF()
         .withColumn("partition", lit(0)).withColumn("offset", xxhash64(col("value")))
-      val q = CdcPipeline.materializeSink(CdcPipeline.events(raw),
-        s"$tmp/state", s"$tmp/ckpt", nBuckets).start()
-      try feed.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-      finally q.stop()
+      graft.SparkSpec.withShufflePartitions(parallelism) {
+        val q = CdcPipeline.materializeSink(CdcPipeline.events(raw),
+          s"$tmp/state", s"$tmp/ckpt").start()
+        try feed.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+        finally q.stop()
+      }
       val batchRaw = feed.flatten.toDF("value")
         .withColumn("partition", lit(0)).withColumn("offset", xxhash64(col("value")))
       val expected = CdcApply.materializeEnvelopeKeyed(
         CanalJson.events(batchRaw).filter(!CanalJson.processErrorRow(col("data"))))
       val got = rows(spark.read.parquet(s"$tmp/state"))
       val want = rows(expected)
-      (got == want) :| (s"nBuckets=$nBuckets, feed:\n" +
+      (got == want) :| (s"parallelism=$parallelism, feed:\n" +
         feed.map(_.mkString("\n")).mkString("\n--\n") +
         s"\nonly in the sink: ${got.diff(want)}\nonly in the batch: ${want.diff(got)}")
     }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 import graft.SparkSpec
+import graft.SparkSpec.withShufflePartitions
 import graft.cdc.CanalJson
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -548,7 +549,7 @@ class StreamingSpec extends SparkSpec {
     val raw = mem.toDF()
       .withColumn("partition", lit(0)).withColumn("offset", xxhash64($"value"))
     val q = CdcPipeline.materializeSink(CdcPipeline.events(raw),
-      s"$tmp/state", s"$tmp/ckpt", nBuckets = 4).start()
+      s"$tmp/state", s"$tmp/ckpt").start()
     val lines = CanalJson.fixtureLines.map(_._1)
     mem.addData(lines(0), lines(1)); q.processAllAvailable()          // seed inserts
     mem.addData(lines(2), lines(3), lines(4)); q.processAllAvailable() // updates
@@ -591,7 +592,7 @@ class StreamingSpec extends SparkSpec {
     val raw = mem.toDF()
       .withColumn("partition", lit(0)).withColumn("offset", xxhash64($"value"))
     val q = CdcPipeline.materializeSink(CdcPipeline.events(raw),
-      s"$tmp/state", s"$tmp/ckpt", nBuckets = 4).start()
+      s"$tmp/state", s"$tmp/ckpt").start()
     def l(op: String, lno: Int, qty: Int, es: Long) =
       s"""{"data":[{"order_id":"1","line_no":"$lno","qty":"$qty"}],"old":null,"type":"$op","table":"t","database":"d","es":$es,"isDdl":false,"pkNames":["order_id","line_no"]}"""
     mem.addData(l("INSERT", 1, 5, 1704067200000L), l("INSERT", 2, 7, 1704067200001L))
@@ -637,7 +638,7 @@ class StreamingSpec extends SparkSpec {
     val raw = mem.toDF()
       .withColumn("partition", lit(0)).withColumn("offset", xxhash64($"value"))
     val q = CdcPipeline.materializeSink(DebeziumJson.events(raw),
-      s"$tmp/state", s"$tmp/ckpt", nBuckets = 4).start()
+      s"$tmp/state", s"$tmp/ckpt").start()
     mem.addData(b1: _*); q.processAllAvailable()
     mem.addData(b2: _*); q.processAllAvailable()
     q.stop()
@@ -664,7 +665,7 @@ class StreamingSpec extends SparkSpec {
     val raw = mem.toDF()
       .withColumn("partition", lit(0)).withColumn("offset", xxhash64($"value"))
     val q = CdcPipeline.materializeSink(CdcPipeline.events(raw),
-      s"$tmp/state", s"$tmp/ckpt", nBuckets = 4).start()
+      s"$tmp/state", s"$tmp/ckpt").start()
     val lines = CanalJson.fixtureLines.map(_._1)
     mem.addData(lines(0), CanalJson.poisonLine) // clean seed + poison in one batch
     q.processAllAvailable()                     // must NOT throw (skip-on-error)
@@ -680,7 +681,7 @@ class StreamingSpec extends SparkSpec {
 
   /** Start `materializeSink` over a MemoryStream of canal-json lines; one
     * `addData` + `processAllAvailable` is one micro-batch. */
-  private def startSink(statePath: String, ckpt: String, nBuckets: Int,
+  private def startSink(statePath: String, ckpt: String,
                         dedup: Boolean = false)
       : (MemoryStream[String], org.apache.spark.sql.streaming.StreamingQuery) = {
     implicit val sqlCtx = spark.sqlContext
@@ -690,13 +691,13 @@ class StreamingSpec extends SparkSpec {
     val events = CdcPipeline.events(raw)
     (mem, CdcPipeline.materializeSink(
       if (dedup) CdcPipeline.dedupDelivery(events) else events,
-      statePath, ckpt, nBuckets).start())
+      statePath, ckpt).start())
   }
 
-  private def feedSink(statePath: String, ckpt: String, nBuckets: Int,
+  private def feedSink(statePath: String, ckpt: String,
                        batches: Seq[Seq[String]], dedup: Boolean = false)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val (mem, q) = startSink(statePath, ckpt, nBuckets, dedup)
+    val (mem, q) = startSink(statePath, ckpt, dedup)
     try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
     finally q.stop()
     q
@@ -728,8 +729,9 @@ class StreamingSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft_corrupt").toString
     val state = s"$tmp/state"
     PipelineHealth.SinkCounters.reset()
-    // nBuckets = 1: every key lives in bucket=0, so the next batch touches it
-    val (mem, q) = startSink(state, s"$tmp/ckpt", nBuckets = 1)
+    // one shuffle partition: the new store records one bucket, every key
+    // lives in bucket=0, so the next batch touches it
+    val (mem, q) = withShufflePartitions(1)(startSink(state, s"$tmp/ckpt"))
     try {
       mem.addData(fixture(0), fixture(1)) // products 1,2,3 + users 1
       q.processAllAvailable()
@@ -772,7 +774,7 @@ class StreamingSpec extends SparkSpec {
     spark.conf.unset(key)
     val before = spark.conf.getOption(key)
     val tmp = java.nio.file.Files.createTempDirectory("graft_conf").toString
-    feedSink(s"$tmp/state", s"$tmp/ckpt", 4,
+    feedSink(s"$tmp/state", s"$tmp/ckpt",
       Seq(Seq(fixture(0), fixture(1)), Seq(fixture(3))))
     assert(spark.conf.getOption(key) === before)
     // the writer option still scoped the overwrite to the dirty buckets:
@@ -781,20 +783,22 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$tmp/state").count() === 5)
   }
 
+  /** The sink bucket of a fixture key (database `testdb`) in an n-bucket store. */
+  private def sinkBucket(table: String, pk: String, n: Int): Int =
+    Seq((table, pk)).toDF("table", "pk")
+      .select(pmod(hash(lit("testdb"), $"table", $"pk"), lit(n)))
+      .as[Int].head()
+
   test("materialize sink deletes a bucket whose keys were all tombstoned") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_tomb").toString
-    val nBuckets = 64
-    def bucketOf(table: String, pk: String): Long =
-      Seq((table, pk)).toDF("table", "pk")
-        .select(pmod(xxhash64(lit("testdb"), $"table", $"pk"), lit(nBuckets)))
-        .as[Long].head()
-    val gone = bucketOf("products", "3")
+    val n = 64
+    val gone = sinkBucket("products", "3", n)
     val others = Seq(("products", "1"), ("products", "2"), ("users", "1"))
-    assert(!others.map { case (t, k) => bucketOf(t, k) }.contains(gone),
+    assert(!others.map { case (t, k) => sinkBucket(t, k, n) }.contains(gone),
       "fixture precondition: products 3 is alone in its bucket")
     // batch 2 deletes products 3 (fixture(5))
-    feedSink(s"$tmp/state", s"$tmp/ckpt", nBuckets,
-      Seq(Seq(fixture(0), fixture(1)), Seq(fixture(5))))
+    withShufflePartitions(n)(feedSink(s"$tmp/state", s"$tmp/ckpt",
+      Seq(Seq(fixture(0), fixture(1)), Seq(fixture(5)))))
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$tmp/state/bucket=$gone")))
     val keys = spark.read.parquet(s"$tmp/state").select($"table", $"pk")
       .as[(String, String)].collect().toSet
@@ -802,10 +806,10 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("materialize sink leaves exactly one parquet file per bucket") {
-    // the ranking exchange is on the bucket, so one task owns each dirty
-    // bucket and writes it as one file, batch after batch
+    // the ranking exchange puts each dirty bucket in a task of its own,
+    // which writes it as one file, batch after batch
     val tmp = java.nio.file.Files.createTempDirectory("graft_files").toString
-    feedSink(s"$tmp/state", s"$tmp/ckpt", 4,
+    feedSink(s"$tmp/state", s"$tmp/ckpt",
       Seq(Seq(fixture(0), fixture(1)), Seq(fixture(2), fixture(3), fixture(4)),
         Seq(fixture(5), fixture(8), fixture(9))))
     val dirs = bucketDirs(s"$tmp/state")
@@ -813,10 +817,10 @@ class StreamingSpec extends SparkSpec {
     dirs.foreach(d => assert(partFiles(d).size === 1, s"$d"))
   }
 
-  test("materialize sink runs at most 3 Spark jobs per data batch") {
+  test("materialize sink runs at most 2 Spark jobs per data batch") {
     // pinned at the measured count: the per-bucket error/dirty aggregate,
-    // the ranking (which also collects the surviving buckets), the write
-    // from the cached ranking — a re-added action fails here. Measured on
+    // then one job that reads the prior state, ranks and writes — a
+    // re-added action fails here. Measured on
     // the production assembly behind the stateful delivery dedup, where
     // Structured Streaming runs the batch without adaptive execution (with
     // it, every shuffle stage would count as a job of its own)
@@ -835,7 +839,7 @@ class StreamingSpec extends SparkSpec {
       val tmp = java.nio.file.Files.createTempDirectory("graft_jobs").toString
       // fixture lines 0-5 carry their own `es`, so none falls behind the
       // dedup watermark
-      val q = feedSink(s"$tmp/state", s"$tmp/ckpt", 4,
+      val q = feedSink(s"$tmp/state", s"$tmp/ckpt",
         Seq(Seq(fixture(0), fixture(1)), Seq(fixture(2), fixture(3), fixture(4)),
           Seq(fixture(5))), dedup = true)
       val data = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId.toString).toSeq
@@ -851,8 +855,184 @@ class StreamingSpec extends SparkSpec {
         Thread.sleep(200)
       }
       assert(counts.values.forall(_ > 0), s"$counts")
-      assert(counts.values.forall(_ <= 3), s"jobs per data batch: $counts")
+      assert(counts.values.forall(_ <= 2), s"jobs per data batch: $counts")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("sink layout identity: repartition(n, database, table, pk) puts row " +
+    "pmod(hash(database, table, pk), n) in shuffle partition of that number") {
+    // the invariant behind one file per write task: the sink's bucket
+    // expression is the one HashPartitioning assigns partitions with, so
+    // the ranking exchange hands write task i exactly bucket i
+    val rnd = new scala.util.Random(11)
+    val lines = (0 until 400).map { i =>
+      val (data, pkNames) =
+        if (rnd.nextBoolean())
+          (s"""{"order_id":"${rnd.nextInt(1000)}","line_no":"${rnd.nextInt(9)}"}""",
+            """["order_id","line_no"]""")
+        else (s"""{"id":"${rnd.nextInt(100000)}"}""", if (rnd.nextBoolean()) """["id"]""" else "null")
+      s"""{"data":[$data],"old":null,"type":"INSERT","table":"t${rnd.nextInt(5)}",""" +
+        s""""database":"db${rnd.nextInt(3)}","es":${1704067200000L + i},"isDdl":false,""" +
+        s""""pkNames":$pkNames}"""
+    }
+    val keys = CanalJson.events(lines.toDF("value")
+        .withColumn("partition", lit(0)).withColumn("offset", xxhash64($"value")))
+      .select($"database", $"table", graft.cdc.CdcApply.envelopePk.as("pk"))
+    assert(keys.filter($"pk".contains("\u0001")).count() > 0, "composite keys generated")
+    Seq(1, 4, 7, 32).foreach { n =>
+      val misplaced = keys.repartition(n, $"database", $"table", $"pk")
+        .filter(spark_partition_id() =!= pmod(hash($"database", $"table", $"pk"), lit(n)))
+        .count()
+      assert(misplaced === 0, s"n = $n")
+    }
+    // the sink: every row sits in its key's bucket, and bucket i is one
+    // file written by write task i
+    val tmp = java.nio.file.Files.createTempDirectory("graft_identity").toString
+    withShufflePartitions(7)(feedSink(s"$tmp/state", s"$tmp/ckpt",
+      Seq(lines.take(200), lines.drop(200))))
+    val dirs = bucketDirs(s"$tmp/state")
+    assert(dirs.size === 7)
+    dirs.foreach { d =>
+      val b = d.getFileName.toString.stripPrefix("bucket=").toInt
+      assert(partFiles(d).map(_.getFileName.toString.take(10)) === Seq(f"part-$b%05d"), s"$d")
+    }
+    val state = spark.read.parquet(s"$tmp/state")
+    assert(state.schema("bucket").dataType === org.apache.spark.sql.types.IntegerType)
+    assert(state.filter($"bucket" =!= pmod(hash($"database", $"table", $"pk"), lit(7)))
+      .count() === 0)
+  }
+
+  private def bucketMarker(statePath: String): Option[(String, Int)] =
+    graft.tables.BucketMeta.read(spark, statePath)
+
+  test("materialize sink store keeps its recorded bucket count when restarted " +
+    "under another parallelism, and equals the uninterrupted run") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_restart").toString
+    val in = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
+    def writeFile(name: String, ls: Seq[String]): Unit = {
+      java.nio.file.Files.write(in.resolve(name), ls.mkString("\n").getBytes("UTF-8"))
+      ()
+    }
+    def run(statePath: String, ckpt: String, n: Int): Unit = withShufflePartitions(n) {
+      val q = CdcPipeline.materializeSink(
+        CdcPipeline.events(CdcPipeline.fileSource(spark, in.toString)), statePath, ckpt).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    // `timestamp` is left out: the missing-es fixture line takes the
+    // processing-time fallback, which differs per run by design
+    def rows(path: String) = spark.read.parquet(path)
+      .select($"database", $"table", $"pk", $"op", to_json($"data"), $"bucket")
+      .as[(String, String, String, String, String, Int)].collect().toSet
+    writeFile("f1.jsonl", fixture.take(5))
+    run(s"$tmp/state", s"$tmp/ckpt", 4)
+    writeFile("f2.jsonl", fixture.drop(5))
+    run(s"$tmp/state", s"$tmp/ckpt", 7)      // restart from the same checkpoint
+    run(s"$tmp/control", s"$tmp/ckptC", 4)   // uninterrupted control
+    val got = rows(s"$tmp/state")
+    assert(got === rows(s"$tmp/control"))
+    assert(got.size === 5)
+    assert(bucketMarker(s"$tmp/state") === Some(("bucket", 4)))
+    // a full replay under 7 partitions with a fresh checkpoint: the marker
+    // still keeps the store at 4 buckets
+    run(s"$tmp/state", s"$tmp/ckptR", 7)
+    assert(rows(s"$tmp/state") === got)
+    assert(bucketMarker(s"$tmp/state") === Some(("bucket", 4)))
+    assert(bucketDirs(s"$tmp/state").forall(
+      _.getFileName.toString.stripPrefix("bucket=").toInt < 4))
+  }
+
+  test("materialize sink fails a store of the old layout or with a bad marker " +
+    "on its first batch, writes nothing and counts the error") {
+    def tree(root: String): Seq[(String, Long)] = {
+      val p = java.nio.file.Paths.get(root)
+      val s = java.nio.file.Files.walk(p)
+      try s.iterator().asScala.map(f => (p.relativize(f).toString,
+        if (java.nio.file.Files.isRegularFile(f)) java.nio.file.Files.size(f) else -1L))
+        .toSeq.sorted
+      finally s.close()
+    }
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+    def marker(text: String)(st: String): Unit = {
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(st))
+      java.nio.file.Files.write(java.nio.file.Paths.get(st, graft.tables.BucketMeta.File),
+        text.getBytes("UTF-8"))
+      ()
+    }
+    val cases: Seq[(String, String => Unit)] = Seq(
+      // bucket= directories of the old xxhash64 layout, no marker
+      "old layout" -> { st =>
+        Seq(("testdb", "products", "1")).toDF("database", "table", "pk")
+          .write.parquet(s"$st/bucket=5") },
+      "non-numeric marker" -> marker("bucket=four"),
+      "zero buckets" -> marker("bucket=0"),
+      "another partition column" -> marker("shab=4"))
+    cases.foreach { case (what, setUp) =>
+      val tmp = java.nio.file.Files.createTempDirectory("graft_layout").toString
+      val state = s"$tmp/state"
+      setUp(state)
+      val before = tree(state)
+      PipelineHealth.SinkCounters.reset()
+      val (mem, q) = startSink(state, s"$tmp/ckpt")
+      try {
+        mem.addData(fixture(0), fixture(1))
+        val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          q.processAllAvailable()
+        }
+        assert(msgs(e).exists(_.contains(graft.tables.BucketMeta.File)),
+          s"$what: ${msgs(e).take(2)}")
+      } finally q.stop()
+      val counters = PipelineHealth.SinkCounters.snapshot
+        .map { case (op, st, n) => (op, st) -> n }.toMap
+      assert(counters.get(("materialize", "error")) === Some(1L), what)
+      assert(counters.get(("materialize", "success")) === None, what)
+      assert(tree(state) === before, s"$what: the store must be untouched")
+    }
+  }
+
+  test("materialize sink: re-applying the same input with a fresh checkpoint " +
+    "leaves the store unchanged, a tombstone-only bucket included") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_reapply").toString
+    val state = s"$tmp/state"
+    val n = 64
+    val gone = sinkBucket("products", "3", n)
+    val goneDir = java.nio.file.Paths.get(s"$state/bucket=$gone")
+    val saved = java.nio.file.Paths.get(s"$tmp/saved")
+    def copyDir(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
+      java.nio.file.Files.createDirectories(to)
+      partFiles(from).foreach(f => java.nio.file.Files.copy(f, to.resolve(f.getFileName)))
+    }
+    def snapshot() = (
+      spark.read.parquet(state)
+        .select($"database", $"table", $"pk", $"op", to_json($"data"),
+          unix_micros($"timestamp"), $"offset", $"bucket")
+        .as[(String, String, String, String, String, Long, Long, Int)].collect().toSet,
+      bucketDirs(state).map(_.getFileName.toString),
+      bucketMarker(state))
+    // fixture lines 0, 1 and 5 carry their own `es`: the re-applied rows
+    // are identical to the first ones; batch 2 deletes products 3, alone
+    // in its bucket
+    val batches = Seq(Seq(fixture(0), fixture(1)), Seq(fixture(5)))
+    withShufflePartitions(n) {
+      val (mem, q) = startSink(state, s"$tmp/ckpt1")
+      try {
+        mem.addData(batches(0): _*); q.processAllAvailable()
+        copyDir(goneDir, saved)
+        mem.addData(batches(1): _*); q.processAllAvailable()
+      } finally q.stop()
+    }
+    val first = snapshot()
+    assert(!java.nio.file.Files.exists(goneDir))
+    assert(first._1.size === 3)
+    // full re-apply (at-least-once worst case) under the session default
+    feedSink(state, s"$tmp/ckpt2", batches)
+    assert(snapshot() === first)
+    // the crash window: batch 2's overwrite committed, the delete of its
+    // tombstone-only bucket did not; the replayed batch deletes it
+    copyDir(saved, goneDir)
+    assert(spark.read.parquet(state).count() === 4)
+    feedSink(state, s"$tmp/ckpt3", batches.drop(1))
+    assert(snapshot() === first)
   }
 
   test("M5: terminal query exception is counted by error type") {
@@ -1346,7 +1526,7 @@ class StreamingSpec extends SparkSpec {
     def runPipeline(statePath: String, ckpt: String): Unit = {
       val q = CdcPipeline.materializeSink(
         CdcPipeline.events(CdcPipeline.fileSource(spark, in.toString)),
-        statePath, ckpt, nBuckets = 4).start()
+        statePath, ckpt).start()
       q.processAllAvailable()
       q.stop()
     }
