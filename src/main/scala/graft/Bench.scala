@@ -174,16 +174,6 @@ object Bench {
                         prior: Map[String, Double]): Seq[Timing] = {
     val spark = EngineSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Measurement-harness-only knob (never set by the driver): session
-    // confs as `k=v;k2=v2`, applied before any timed run — lets a FORKED
-    // interleaved A/B toggle operator variants (e.g. graft.x10.probe=full)
-    // in the board regime, not just BenchScratch's one-JVM loop.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => spark.conf.set(k, v)
-        case _ => ()
-      }
-    })
     // Warm the shared machinery (parquet reader, codegen compiler, shuffle,
     // noop sink) before the first measured query: a cold JVM otherwise bills
     // ~3-4 s of one-time class loading to whichever query runs first — which
@@ -207,8 +197,7 @@ object Bench {
     // artifact. Steady-state family total in the same A/B: 9.5-9.9 s
     // calm (r17's 12.77 s board number was tail-of-run machine drift —
     // the A/B's own late reps degraded to 12.5/15.0 s with NO variable
-    // changed). Parent sets the env only for the census group;
-    // SPARK_GRAFT_STREAM_PREWARM=0 disables for A/B.
+    // changed). Parent sets the env only for the census group.
     if (sys.env.get("SPARK_GRAFT_STREAM_PREWARM").contains("1")) {
       try {
         import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -396,10 +385,8 @@ object Bench {
     pb.environment().put("SPARK_GRAFT_FORKED", "1")
     if (singleRun) pb.environment().put("SPARK_GRAFT_SINGLE_RUN", "1")
     // the census fork (and a census member's private re-fork) drains a
-    // throwaway stream before timing, unless the caller A/Bs it off
-    if (streamPrewarm &&
-        !sys.env.get("SPARK_GRAFT_STREAM_PREWARM").contains("0"))
-      pb.environment().put("SPARK_GRAFT_STREAM_PREWARM", "1")
+    // throwaway stream before timing
+    if (streamPrewarm) pb.environment().put("SPARK_GRAFT_STREAM_PREWARM", "1")
     // per-name prior map, `name=warm` pairs — a batch child needs each
     // member's own baseline for the >1.5x tie-break trigger
     val priorPairs = group.flatMap(n => prior.get(n).map(p => s"$n=$p"))

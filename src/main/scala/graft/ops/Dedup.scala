@@ -1573,74 +1573,42 @@ object Dedup {
          |  CASE WHEN i = 0 THEN $strCol
          |       ELSE concat(substring($strCol, 1, i - 1), substring($strCol, i + 1)) END)
          |""".stripMargin)
-    // dedup BEFORE the confirm in BOTH forms: a candidate pair surfaces
-    // once per shared variant key — up to L+2 times for a true pair, and
-    // repeatedly for the distance-2 impostors the neighborhood admits —
-    // so confirming first multiplies the levenshtein work by that
-    // key-overlap factor. Measured at sf0.1: confirm-first 5.13 s vs
-    // dedup-first 2.87 s.
+    // dedup BEFORE the confirm: a candidate pair surfaces once per shared
+    // variant key — up to L+2 times for a true pair, and repeatedly for
+    // the distance-2 impostors the neighborhood admits — so confirming
+    // first multiplies the levenshtein work by that key-overlap factor.
+    // Measured at sf0.1: confirm-first 5.13 s vs dedup-first 2.87 s.
     //
-    // Two physical forms, same result set:
-    //   - "rejoin" (DEFAULT, round 20): dedup the BARE id pair (narrow
-    //     exchange, hash aggregate with map-side partials) and re-attach
-    //     the strings to the ~|distinct pairs| survivors via two (id, s)
-    //     lookup joins;
-    //   - "carry" (`graft.editdist.impl=carry`, the pre-round-20 shape):
-    //     the strings ride through the pair dedup, so dropDuplicates
-    //     plants first(string) aggregates whose immutable buffers force a
-    //     SortAggregate pair, but the confirm needs no joins afterwards.
-    // Round-21 adjudication (round-20 verdict #1 — the driver had
-    // measured rejoin 2.76 → 3.65 s at 32 cores, the round's one flagged
-    // regression, while the builder's claimed win was inside the noise
-    // band): a 6v6 interleaved board-regime A/B at sf0.1 (forked
-    // min-of-2, arms alternated within one session, order swapped
-    // half-way) measured rejoin [2.86, 2.99, 3.05, 3.12, 2.98, 3.03]
-    // (median 3.01) vs carry [3.27, 3.12, 2.60, 3.19, 3.03, 3.38]
-    // (median 3.16) — rejoin won 5 of 6 interleaved pairs with the
-    // tighter spread, so it stays the default; both forms' steady state
-    // on this box is ~2.9-3.1 s, which adjudicates the driver's 3.65 s
-    // as a drifted machine draw (its same-run vector started at 3.5+ s),
-    // now re-measurable by the budget-gated drift retry. The carry twin
-    // stays conf-reachable for re-adjudication. (All-columns distinct()
-    // was a third form, rejected in r20: 4.45 s vs 3.40 — hashing 2
-    // strings per candidate row lost to sorting 2 longs.)
-    val rejoin = !df.sparkSession.conf
-      .getOption("graft.editdist.impl").contains("carry")
-    if (rejoin) {
-      val keyed = df
-        .select(col(idCol).as("id"),
-          explode(array_distinct(variants)).as("variant"))
-        .select(col("id"), xxhash64(col("variant")).as("variant_h"))
-      val a = keyed.select(col("variant_h"), col("id").as("id_a"))
-      val b = keyed.select(col("variant_h"), col("id").as("id_b"))
-      // the (id, s) lookup the confirm re-attaches strings from — a plain
-      // re-scan of the input, no explode. Precondition (round-20 ADVICE):
-      // idCol must be unique in df — a duplicate id would fan out each
-      // re-attach join and emit duplicate pairs (the carry form emits
-      // each pair once regardless). The sole in-repo caller keys by the
-      // unique c_custkey.
-      val names = df.select(col(idCol).as("id"), col(strCol).as("s"))
-      a.join(b, Seq("variant_h"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"))
-        .dropDuplicates("id_a", "id_b")
-        .join(names.select(col("id").as("id_a"), col("s").as("s_a")), Seq("id_a"))
-        .join(names.select(col("id").as("id_b"), col("s").as("s_b")), Seq("id_b"))
-        .filter(levenshtein(col("s_a"), col("s_b")) === 1)
-        .select("id_a", "id_b")
-    } else {
-      val keyed = df
-        .select(col(idCol).as("id"), col(strCol).as("s"),
-          explode(array_distinct(variants)).as("variant"))
-        .select(col("id"), col("s"), xxhash64(col("variant")).as("variant_h"))
-      val a = keyed.select(col("variant_h"), col("id").as("id_a"), col("s").as("s_a"))
-      val b = keyed.select(col("variant_h"), col("id").as("id_b"), col("s").as("s_b"))
-      a.join(b, Seq("variant_h"))
-        .filter(col("id_a") < col("id_b"))
-        .dropDuplicates("id_a", "id_b")
-        .filter(levenshtein(col("s_a"), col("s_b")) === 1)
-        .select("id_a", "id_b")
-    }
+    // The dedup runs on the BARE id pair (narrow exchange, hash aggregate
+    // with map-side partials) and re-attaches the strings to the
+    // ~|distinct pairs| survivors via two (id, s) lookup joins. Carrying
+    // the strings through the dedup instead plants first(string)
+    // aggregates whose immutable buffers force a SortAggregate pair; a 6v6
+    // interleaved board-regime A/B at sf0.1 (round 21) measured this form
+    // at median 3.01 s vs 3.16 s for the carry form, winning 5 of 6 pairs
+    // with the tighter spread. (All-columns distinct() lost in r20: 4.45 s
+    // vs 3.40 — hashing 2 strings per candidate row lost to sorting 2
+    // longs.)
+    val keyed = df
+      .select(col(idCol).as("id"),
+        explode(array_distinct(variants)).as("variant"))
+      .select(col("id"), xxhash64(col("variant")).as("variant_h"))
+    val a = keyed.select(col("variant_h"), col("id").as("id_a"))
+    val b = keyed.select(col("variant_h"), col("id").as("id_b"))
+    // the (id, s) lookup the confirm re-attaches strings from — a plain
+    // re-scan of the input, no explode. Precondition (round-20 ADVICE):
+    // idCol must be unique in df — a duplicate id would fan out each
+    // re-attach join and emit duplicate pairs. The sole in-repo caller
+    // keys by the unique c_custkey.
+    val names = df.select(col(idCol).as("id"), col(strCol).as("s"))
+    a.join(b, Seq("variant_h"))
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"))
+      .dropDuplicates("id_a", "id_b")
+      .join(names.select(col("id").as("id_a"), col("s").as("s_a")), Seq("id_a"))
+      .join(names.select(col("id").as("id_b"), col("s").as("s_b")), Seq("id_b"))
+      .filter(levenshtein(col("s_a"), col("s_b")) === 1)
+      .select("id_a", "id_b")
   }
 
   /** X2g — WINNOWING document fingerprints (Schleimer–Wilkerson–Aiken, the
@@ -1692,7 +1660,7 @@ object Dedup {
     * Round 16 made the Expression's hot loop allocation-free (60-bit long
     * per gram instead of a 15-char String, long window minima, hex-format
     * only the selected survivors). Measured result: a NULL — interleaved
-    * static-call timing on 200 × 100 KB docs (WinnowScratch) gave 3.2-3.4 s
+    * static-call timing on 200 × 100 KB docs gave 3.2-3.4 s
     * for both the long and the String loop; the md5 hashing (~6M grams/s
     * single-threaded) dominates and the per-gram String was JIT/GC noise.
     * The long form is kept anyway: zero garbage under concurrent executor
@@ -1727,14 +1695,14 @@ object Dedup {
                                             idCol: String, k: Int, w: Int): DataFrame = {
     require(k >= 2 && w >= 2, "need k >= 2 and w >= 2")
     // Gram extraction = substring + md5 in ONE codegen'd generate+project
-    // stage. Three shapes were measured at sf0.1 in round 14 (WinnowScratch
-    // + solo forks) and this one won them; round 15's per-doc
+    // stage. Three shapes were measured at sf0.1 in round 14 (static
+    // calls + solo forks) and this one won them; round 15's per-doc
     // WinnowSelect Expression (the byte-offset escape hatch this comment
     // used to defer) then beat it 2.8x interleaved (1.2 vs 3.4 s median,
     // identical hashes) and is now the default — this SQL form remains as
     // the cross-validation twin. On the long-doc regime the gap is
     // asymptotic, not constant: 200 docs × ~100 KB measure ~0.5 s (expr)
-    // vs 156-217 s (this form) in the same session — WinnowScratch — the
+    // vs 156-217 s (this form) in the same session — the
     // O(len²) substring head-rescan plus the 20M-gram shuffle vs one
     // O(len·k) byte pass. The round-14 ranking, kept for the record:
     //   - this form: the explode and the hash projection fuse inside

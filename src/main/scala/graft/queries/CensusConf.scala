@@ -18,15 +18,16 @@ import org.apache.spark.sql.SparkSession
   * commit costs dwarf any benefit when per-query state is a few hundred
   * keys — RocksDB earns its keep only when state outgrows executor heap.
   *
-  * `noDataBatches = true` keeps no-data batches ON — REQUIRED for any entry
-  * whose results ride a state timeout (p28: the event-time staleness
-  * timeout fires in the no-data batch after the horizon tick advances the
-  * watermark; disabling it deadlocks the drain loop).
+  * `noDataBatches = false` turns no-data batches OFF. Entries whose
+  * results ride a state timeout or watermark eviction (p28, p32) run that
+  * way too: since round 15 they drive the timeout batch with an explicit
+  * sentinel tick instead of the scheduler's no-data batch. Only the health
+  * pipeline (CdcQueries `runHealthPipeline`) keeps them on, because its
+  * surface reports the scheduler's trigger gauges.
   *
   * This is per-entry bench tuning of the EMBEDDED census fixtures, not a
   * production default: a real deployment sizes shuffle partitions to its
   * ingest rate and leaves no-data batches on for timely eviction/timeouts.
-  * Override the partition count with the `graft.census.shuffle` conf.
   */
 object CensusConf {
   /** Previous session values to hand back to [[restore]], plus the tmpfs
@@ -55,8 +56,7 @@ object CensusConf {
       s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled"),
       s.conf.getOption("spark.sql.streaming.checkpointLocation"),
       mkShmCkptDir())
-    s.conf.set("spark.sql.shuffle.partitions",
-      s.conf.getOption("graft.census.shuffle").getOrElse("1"))
+    s.conf.set("spark.sql.shuffle.partitions", "1")
     if (!noDataBatches)
       s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     prev.ckptDir.foreach(d =>

@@ -430,34 +430,21 @@ object CurationQueries {
       .select(col("id"), col("shingle"))
     // the standing band index is the BUCKETED persisted layout: the probe
     // reads only the batch's colliding bkb partitions (plan-asserted in
-    // CurationSpec), never the whole index. `graft.x10.probe=full` keeps
-    // the full-scan frame form as the interleaved A/B twin (BenchScratch).
-    if (delta.sparkSession.conf.getOption("graft.x10.probe").contains("full"))
-      Dedup.lshDiscoverVerifiedPairs(st.bandIdx.drop("bkb"),
-          st.shingleIdx.drop("idb"),
-          deltaSh, bands = 8, rowsPerBand = 2, minJaccard = 0.3)
-        .select(col("id_a"), col("id_b"))
-    else {
-      // MEASURED DEFAULT (round 18, four interleaved A/B sessions at
-      // sf0.1): each bucket-collect is a ~0.2-0.3 s FIXED job barrier at
-      // this SF, where probes touch every bucket and pruning saves no
-      // bytes (full < band-pruned < band+shingle-pruned by one barrier
-      // each; medians 5.63 / 5.88 / 6.05 in the cleanest session). The
-      // band-index pruning stays WIRED — it is the round-17 #1
-      // deliverable, plan-asserted, and the probe that pays off first as
-      // the corpus/batch ratio grows; the id-bucketed VERIFICATION
-      // pruning is conf-gated OFF by default (`graft.x10.shingleprune=1`
-      // wires it in) because its payoff regime — candidate sets small
-      // against the bucket count — is further out. Layout and operator
-      // are spec-pinned either way (DedupSpec/CurationSpec).
-      val shingleSide =
-        if (delta.sparkSession.conf.getOption("graft.x10.shingleprune")
-            .contains("1")) st.shingleIdx
-        else st.shingleIdx.drop("idb")
-      Dedup.lshDiscoverVerifiedPairsBucketed(st.bandIdx, shingleSide,
-          deltaSh, bands = 8, rowsPerBand = 2, minJaccard = 0.3)
-        .select(col("id_a"), col("id_b"))
-    }
+    // CurationSpec), never the whole index. Round 18 measured (four
+    // interleaved A/B sessions at sf0.1) each bucket-collect as a
+    // ~0.2-0.3 s FIXED job barrier at this SF, where probes touch every
+    // bucket and pruning saves no bytes (full scan < band-pruned <
+    // band+shingle-pruned by one barrier each; medians 5.63 / 5.88 / 6.05
+    // in the cleanest session). The band-index pruning stays — it is the
+    // round-17 #1 deliverable, plan-asserted, and the probe that pays off
+    // first as the corpus/batch ratio grows. The id-bucketed VERIFICATION
+    // pruning stays off here (the shingle side drops `idb`): its payoff
+    // regime — candidate sets small against the bucket count — is further
+    // out. The operator keeps it and DedupSpec pins it.
+    Dedup.lshDiscoverVerifiedPairsBucketed(st.bandIdx,
+        st.shingleIdx.drop("idb"),
+        deltaSh, bands = 8, rowsPerBand = 2, minJaccard = 0.3)
+      .select(col("id_a"), col("id_b"))
   }
 
   /** The pure increment over explicit state frames — see
@@ -498,8 +485,9 @@ object CurationQueries {
     // id spaces are DISJOINT (delta ids sit above standing ids — the same
     // invariant the min-id-per-sha exact gate in stage 1 relies on), so
     // each endpoint matches at most one lookup row and the left joins can
-    // never fan out; CurationSpec pins the merge mechanics on a crafted
-    // fixture either way. Halves the join count on the pair-contraction
+    // never fan out. CurationSpec asserts that disjointness on the x10
+    // standing-state and night-one fixtures, and pins the merge mechanics
+    // on a crafted fixture. Halves the join count on the pair-contraction
     // path: 4 joins → 2.
     val repType = reps.schema("rep").dataType
     val lookup = reps.select($"doc_id", $"rep")
@@ -785,8 +773,8 @@ object CurationQueries {
     *
     * Round-19 adjudication of the r18 board warms (7.25 s here / 6.35 s
     * x10_state_reps, 1.48-1.50x prior — just under the then-1.5x retry
-    * bar): a fresh-session interleaved fork A/B against the
-    * `graft.x10.probe=full` twin in the BOARD regime (one JVM per fork,
+    * bar): a fresh-session interleaved fork A/B against the full-scan
+    * probe form in the BOARD regime (one JVM per fork,
     * min-of-2, 3 reps each) measured pruned [6.47, 6.27, 6.90] vs full
     * [6.91, 8.46, 5.58] for this entry and pruned [5.68, 6.27, 5.49] vs
     * full [5.67, 5.31, 5.28] for the reps entry, parent-mode board run

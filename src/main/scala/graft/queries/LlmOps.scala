@@ -485,8 +485,7 @@ object LlmOps {
     * [[FixtureCache]] under `gtName` (shared by the three float-ANN
     * entries, which annotate against the SAME slice); the measured body
     * stays the approximate serving path plus the recall join. Round 17's
-    * adjudication (see [[spineRecallRows]]) kept this two-pass shape as
-    * the default; `graft.x3.assembly=fold` selects the one-pass fold. */
+    * adjudication (see [[spineRecallRows]]) kept this two-pass shape. */
   /** The shared exact-ground-truth fixture of the float-ANN entries — a
     * pure function of (corpus, query slice, k), run-level cached. */
   private def cachedGt(s: SparkSession, dir: String, gtName: String,
@@ -506,40 +505,19 @@ object LlmOps {
       .groupBy(col("query_id"))
       .agg(expr(s"sum(coalesce(in_exact, 0)) * 1000 DIV $k").as(name))
 
-  /** Assembly of the float-ANN evidence rows, ADJUDICATED round 17 (the
-    * round-16 verdict #2 directive): interleaved same-session A/B at
-    * sf0.1 (BenchScratch, 5 sessions × 3 rounds, hash-identical outputs)
-    * measured the round-16 TWO-PASS shape (recall join onto the
-    * checkpointed serve, then the sentinel-spine outer join) and a
-    * ONE-PASS fold (spine as the base, serve rows joining once) within
-    * 0.05–0.4 s of each other, the two-pass marginally ahead in most
-    * sessions — and BOTH at r14-level warms in calm sessions (pq
-    * 1.75–1.92 s vs the 1.69 s r14 self, lsh 1.36 s vs 1.74), so the
-    * r16 standing (3.14 / 2.21 s) was the documented cross-session drift
-    * class, not code. A stage breakdown (X3CostScratch) attributes the
-    * wall to the serves + fixed overheads, not the evidence assembly.
-    * Two variants measured and REJECTED: checkpoint-free double
-    * evaluation of the serve (3.06 vs 2.51 s — two windows + a re-rank
-    * join paid twice lose to one barrier; the opposite of the integer
-    * trained-ANN trade, so round-10 ADVICE still stands for this family)
-    * and a GT-derived spine (time-equal, +1 audited exchange for its
-    * distinct). Default stays the two-pass shape;
-    * `graft.x3.assembly=fold` selects the fold for A/B. */
+  /** Assembly of the float-ANN evidence rows: the recall join onto the
+    * checkpointed serve, then the sentinel-spine outer join. Round 17
+    * measured a one-pass fold (spine as the base, serve rows joining once)
+    * hash-identical and within 0.05–0.4 s of this two-pass shape at sf0.1,
+    * the two-pass marginally ahead in most sessions; a stage breakdown put
+    * the wall in the serves and fixed overheads, not the assembly.
+    * Checkpoint-free double evaluation of the serve lost (3.06 vs 2.51 s)
+    * and a GT-derived spine cost +1 audited exchange for its distinct. */
   private def spineRecallRows(s: SparkSession, dir: String, gtName: String,
                               approx: DataFrame, queries: DataFrame,
                               corpus: DataFrame, k: Int): DataFrame =
-    if (s.conf.getOption("graft.x3.assembly").contains("fold")) {
-      val a = approx.localCheckpoint(true)
-      val gt = cachedGt(s, dir, gtName, queries, corpus, k)
-      queries.select(col("vec_id").as("query_id")).localCheckpoint(true)
-        .join(broadcast(recallAggOf(a, gt, k, "recall_pm")),
-          Seq("query_id"), "left")
-        .join(broadcast(a), Seq("query_id"), "left")
-        .na.fill(Map("rank" -> -1, "neighbor_id" -> -1L,
-          "sim" -> 0.0, "recall_pm" -> 0L))
-    } else
-      withQuerySpine(queries,
-        withRecallPm(s, dir, gtName, approx, queries, corpus, k))
+    withQuerySpine(queries,
+      withRecallPm(s, dir, gtName, approx, queries, corpus, k))
 
   private def withRecallPm(s: SparkSession, dir: String, gtName: String,
                            approx: DataFrame, queries: DataFrame,
@@ -1014,7 +992,7 @@ object LlmOps {
     * corpus, trained PQ's win is QUANTIZATION ERROR — so this entry runs
     * on the REAL near-isotropic corpus, the regime where codebook quality
     * is the whole game (on the tight-cluster corpus ADC ties swamp the
-    * signal; measured in PqTrainScratch). Pure-ADC recall (no exact
+    * signal). Pure-ADC recall (no exact
     * re-rank — the float x3_ann_pq keeps that) with the seed baseline
     * alongside: trained 300 vs seed 200 per-mille at sf0.01, the honest
     * Lloyd-win evidence, avg-floor spec-pinned in SimilaritySpec. Query
@@ -1049,15 +1027,8 @@ object LlmOps {
     // from raw data regardless). The SEED arm keeps its live encode: the
     // full encode mechanics stay live-measured in-entry, and the seed
     // codebook is not a model anyone would persist.
-    // `graft.x3.pqserve=live` restores the round-16 both-arms-live shape
-    // for A/B (hash-identical; BenchScratch pins it).
-    val trained =
-      if (s.conf.getOption("graft.x3.pqserve").contains("live"))
-        Similarity.pqServeInt(queries, m, cachedTrainedPqCb(s, dir),
-          mSub = 16, dsub = 4, k = 5)
-      else
-        Similarity.pqServeIntFromCodes(queries, cachedTrainedPqCodes(s, dir),
-          cachedTrainedPqCb(s, dir), dsub = 4, k = 5)
+    val trained = Similarity.pqServeIntFromCodes(queries,
+      cachedTrainedPqCodes(s, dir), cachedTrainedPqCb(s, dir), dsub = 4, k = 5)
     val seeded = Similarity.pqServeInt(queries, m, seedCb, mSub = 16,
       dsub = 4, k = 5)
     annotatedTrainedRows(queries, trained, seeded, cachedGtInt100(s, dir),
@@ -1817,8 +1788,8 @@ object LlmOps {
   /** X2g' — the winnowing census of [[x2_winnow]] over the ≥100 KB
     * [[longDocs]] regime — the asymptotic case the
     * [[graft.functions.WinnowSelect]] Expression exists for (the windowed
-    * SQL twin is O(len²) per doc here: 0.5 vs 156-217 s on this shape,
-    * WinnowScratch). The md5 selection replays in the oracle regardless of
+    * SQL twin is O(len²) per doc here: 0.5 vs 156-217 s on this shape).
+    * The md5 selection replays in the oracle regardless of
     * document length; the oracle sidesteps ITS own long-string cliff by
     * hashing grams inside 4 KB overlapping segments (50× over the naive
     * lateral unnest, value-identical). */
@@ -2490,8 +2461,7 @@ object LlmOps {
     * round 17 closed it for IVF.
     *
     * Round-21 adjudication of the r20 board drift (3.87 → 4.23 s driver,
-    * 0.915x — round-20 verdict #4). Measured split (LshCompactSplitScratch,
-    * warm reps at sf0.1): file-cycle barriers ~2.1 s (build 0.8-1.4 +
+    * 0.915x — round-20 verdict #4). Measured split (warm reps at sf0.1): file-cycle barriers ~2.1 s (build 0.8-1.4 +
     * append 0.7-0.8 + compact 0.4-0.6 + sidecar reads 0.14 — on the clock
     * BY DESIGN, this is the maintenance-cycle entry) vs classify legs
     * ~2.1-2.3 s (1.0-1.3 s each). Interleaved cross-tree A/B of the

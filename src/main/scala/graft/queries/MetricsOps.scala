@@ -698,14 +698,12 @@ object MetricsOps {
     val tMem = MemoryStream[Alerts.MetricPoint]
     // Timeout-batch choreography (the p32 round-15 trim applied to the
     // flatMapGroupsWithState timeout): event-time timeouts fire in ANY
-    // batch whose watermark passed the deadline, so the default drives the
-    // STALE batch with an explicit second sentinel instead of leaving it to
-    // the scheduler's no-data batches — which also fire one useless no-data
-    // batch after the half-0 watermark advance. `graft.p28.evict=nodata`
-    // keeps the scheduler-driven path. The sustained query has no watermark
-    // (NoTimeout) and is unaffected either way.
-    val tickEvict = s.conf.getOption("graft.p28.evict").forall(_ == "tick")
-    val prevConf = CensusConf.narrow(s, noDataBatches = !tickEvict)
+    // batch whose watermark passed the deadline, so an explicit second
+    // sentinel drives the STALE batch and no-data batches stay off — the
+    // scheduler-driven form also fires one useless no-data batch after the
+    // half-0 watermark advance. The sustained query has no watermark
+    // (NoTimeout) and is unaffected.
+    val prevConf = CensusConf.narrow(s, noDataBatches = false)
     try {
       val sq = Alerts.sustainedThreshold(sMem.toDS(), threshold = 1.0,
           forDurationMs = forDurationMs)
@@ -747,20 +745,16 @@ object MetricsOps {
           tMem.addData(tick)
           tq.processAllAvailable()
         }
-        if (tickEvict) {
-          // the timeout batch, run explicitly: it executes under the
-          // post-horizon watermark the tick batch committed, so every real
-          // key's deadline has passed and STALE fires inside it
-          tMem.addData(Alerts.MetricPoint("__tick",
-            new java.sql.Timestamp(horizon + 86400000L), 0.0))
-          tq.processAllAvailable()
-        }
-        // with scheduler-driven eviction the timeout batch is TRIGGERED by
-        // the tick batch's watermark advance and can commit after
-        // processAllAvailable returns — drain until every real key's STALE
-        // landed (the runHealthPipeline deadline pattern: fail loudly,
-        // never proceed on a partial sink); under tick eviction this is a
-        // cheap pass-through safety net
+        // the timeout batch, run explicitly: it executes under the
+        // post-horizon watermark the tick batch committed, so every real
+        // key's deadline has passed and STALE fires inside it
+        tMem.addData(Alerts.MetricPoint("__tick",
+          new java.sql.Timestamp(horizon + 86400000L), 0.0))
+        tq.processAllAvailable()
+        // drain until every real key's STALE landed (the runHealthPipeline
+        // deadline pattern: fail loudly, never proceed on a partial sink);
+        // after the explicit timeout batch this is a cheap pass-through
+        // safety net
         val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
         def staleKeys() = s.table(s"p28t_$tag")
           .filter($"key" =!= "__tick").select($"key").distinct().count()
@@ -931,17 +925,15 @@ object MetricsOps {
     val opDf = opM.toDS().toDF("op_key", "op_id", "op_ts")
       .withWatermark("op_ts", "0 seconds")
     // Eviction choreography (round-15 trim, interleaved A/B in one session,
-    // identical hashes): the default drives the null-extension batch with an
-    // EXPLICIT second sentinel tick instead of leaving it to the scheduler's
-    // no-data batches — noDataBatches=true costs one useless no-data batch
-    // after EACH watermark advance (~1 micro-batch of stream-stream join
-    // machinery each, the entry's dominant cost), while the explicit tick
-    // pays exactly one: batch 3 runs under the watermark committed at the
-    // end of batch 2 (past the horizon), so every real error's state is
-    // evicted — and null-extended — deterministically inside it.
-    // `graft.p32.evict=nodata` keeps the old scheduler-driven path.
-    val tickEvict = s.conf.getOption("graft.p32.evict").forall(_ == "tick")
-    val prevConf = CensusConf.narrow(s, noDataBatches = !tickEvict)
+    // identical hashes): an EXPLICIT second sentinel tick drives the
+    // null-extension batch and no-data batches stay off — they cost one
+    // useless no-data batch after EACH watermark advance (~1 micro-batch of
+    // stream-stream join machinery each, the entry's dominant cost), while
+    // the explicit tick pays exactly one: batch 3 runs under the watermark
+    // committed at the end of batch 2 (past the horizon), so every real
+    // error's state is evicted — and null-extended — deterministically
+    // inside it.
+    val prevConf = CensusConf.narrow(s, noDataBatches = false)
     try {
       val q = CdcPipeline.intervalCorrelate(errDf, opDf,
           leftKey = "err_key", rightKey = "op_key",
@@ -957,7 +949,7 @@ object MetricsOps {
         // minimum — over every real error's eviction point. It RIDES the
         // second half-batch (the watermark is computed from the batch max
         // at batch END either way, so eviction still lands in the trailing
-        // no-data batch) — one fewer micro-batch round per stream than a
+        // eviction batch) — one fewer micro-batch round per stream than a
         // standalone tick batch.
         val horizon = slice.map(_._3).max + lookbackUs + 3600L * 1000000L
         val tick = KeyedEvent(-1L, -1L, usToTs(horizon))
@@ -973,17 +965,14 @@ object MetricsOps {
           if (errs.nonEmpty) errM.addData(errs.toIndexedSeq: _*)
           q.processAllAvailable()
         }
-        if (tickEvict) {
-          // batch 3 — the eviction batch: any sentinel data works (filtered
-          // from the census by key); what matters is that a batch RUNS under
-          // the post-horizon watermark batch 2 committed
-          val tick2 = KeyedEvent(-1L, -2L, usToTs(horizon + 3600L * 1000000L))
-          opM.addData(tick2); errM.addData(tick2)
-          q.processAllAvailable()
-        }
-        // eviction can commit after processAllAvailable returns (the p28
-        // drain rationale): wait until every expected unmatched error's
-        // null row landed — fail loudly, never census a partial sink
+        // batch 3 — the eviction batch: any sentinel data works (filtered
+        // from the census by key); what matters is that a batch RUNS under
+        // the post-horizon watermark batch 2 committed
+        val tick2 = KeyedEvent(-1L, -2L, usToTs(horizon + 3600L * 1000000L))
+        opM.addData(tick2); errM.addData(tick2)
+        q.processAllAvailable()
+        // safety net (the p28 drain): wait until every expected unmatched
+        // error's null row landed — fail loudly, never census a partial sink
         val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
         def unmatched() = s.table(s"p32_$tag")
           .filter($"err_key" =!= -1L && $"op_us".isNull).count()

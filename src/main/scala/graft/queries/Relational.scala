@@ -87,7 +87,11 @@ object Relational {
   }
 
   /** TPC-H Q5-shaped 6-way star join: one big fact chain with every dim
-    * broadcast; revenue per nation within one region. */
+    * broadcast; revenue per nation within one region. Revenue is summed
+    * exactly as cents × discount-points (bigint, 1e-4 units) and rounded
+    * HALF_UP to cents once: a double sum can land on an exact `.xx5` tie
+    * (NATION_17 on a generated sf0.01 table set sums to 4473274.9750),
+    * which Spark and DuckDB round differently. The oracle mirrors it. */
   def q5_multi_join(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     customer(s, dir)
@@ -99,8 +103,12 @@ object Relational {
       .join(broadcast(region(s, dir)), $"n_regionkey" === $"r_regionkey")
       .filter($"r_name" === "ASIA")
       .groupBy($"n_name")
-      .agg(round(sum($"l_extendedprice" * (lit(1.0) - $"l_discount")), 2).as("revenue"),
+      .agg(sum(round($"l_extendedprice" * 100).cast("bigint") *
+             round((lit(1.0) - $"l_discount") * 100).cast("bigint")).as("rev_e4"),
            count(lit(1)).as("n_items"))
+      .select($"n_name",
+        (expr("(rev_e4 + 50) div 100").cast("double") / 100.0).as("revenue"),
+        $"n_items")
       .orderBy($"n_name")
   }
 
@@ -172,33 +180,18 @@ object Relational {
     // measured-evidence columns; the production plan keeps the sketch
     // alone, one narrow shuffle either way.
     //
-    // Bench baseline note (round-18 verdict #4, evidence moved here from
-    // commit ca8069b): this is the only shared entry above 1.5x its r7
-    // warm (0.72 -> ~1.4 s) BECAUSE the body grew since r7 — the r7 form
-    // was the two approx aggregates alone; the exact-NDV evidence arm
-    // (the distinct-triples first level + exact counts + *_err_ppm
-    // columns) was added in round 9 and is the measured driver of the
-    // delta: an interleaved A/B at sf0.1 (graft.q10.evidence=0 keeps the
-    // production shape — approx_count_distinct straight over the stacked
-    // pairs, no distinct level; BenchScratch q10 variant) measured
-    // medians of 2.03 s with evidence vs 1.17 s sketch-only — the
-    // evidence arm is ~40-45% of the wall, the size of the r7→today gap
-    // (0.72 → ~1.4 s board warm). The evidence arm stays: the
-    // driver artifact showing the ACHIEVED error per flag is the round-9
-    // contract, and the production economics are documented rather than
-    // silently billed.
-    if (s.conf.getOption("graft.q10.evidence").contains("0"))
-      return lineitem(s, dir)
-        .select($"l_returnflag", explode(array(
-          struct(lit("orders").as("which"), $"l_orderkey".as("v")),
-          struct(lit("parts").as("which"), $"l_partkey".as("v")))).as("wv"))
-        .filter($"wv.v".isNotNull)
-        .groupBy($"l_returnflag", $"wv.which".as("which"))
-        .agg(approx_count_distinct($"wv.v").as("approx"))
-        .groupBy($"l_returnflag")
-        .agg(max(when($"which" === "orders", $"approx")).as("approx_orders"),
-          max(when($"which" === "parts", $"approx")).as("approx_parts"))
-        .orderBy($"l_returnflag")
+    // Bench baseline note (round-18 verdict #4): this is the only shared
+    // entry above 1.5x its r7 warm (0.72 -> ~1.4 s) BECAUSE the body grew
+    // since r7 — the r7 form was the two approx aggregates alone; the
+    // exact-NDV evidence arm (the distinct-triples first level + exact
+    // counts + *_err_ppm columns) was added in round 9 and is the measured
+    // cause of the delta: an interleaved A/B at sf0.1 against the
+    // sketch-only shape (approx_count_distinct straight over the stacked
+    // pairs, no distinct level) measured medians of 2.03 s with evidence
+    // vs 1.17 s sketch-only — the evidence arm is ~40-45% of the wall. The
+    // evidence arm stays: the output artifact showing the ACHIEVED error
+    // per flag is the round-9 contract, and the production economics are
+    // documented rather than silently billed.
     val stacked = lineitem(s, dir)
       .select($"l_returnflag", explode(array(
         struct(lit("orders").as("which"), $"l_orderkey".as("v")),
@@ -1234,7 +1227,9 @@ object Relational {
         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
     "q5_multi_join" ->
       """SELECT n_name,
-        |  round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue,
+        |  CAST((CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
+        |    * CAST(round((1.0 - l_discount) * 100) AS BIGINT)) AS BIGINT) + 50) // 100
+        |    AS DOUBLE) / 100.0 AS revenue,
         |  count(*) AS n_items
         |FROM customer
         |JOIN orders ON c_custkey = o_custkey

@@ -1,10 +1,12 @@
 package graft
 
 /** Throwaway board-wide plan smell sweep: build every registered entry on
-  * sf0.001 and flag plans with many exchanges or repeated scans of one
+  * sf0.001 and flag plans with many exchanges, repeated scans of one
   * parquet file (the multi-branch re-scan pathology the maintainSums audit
-  * caught). Build-only — streaming census builders do execute, so this
-  * takes about as long as RegistrationSpec.
+  * caught), or any SortAggregate / ObjectHashAggregate (usually a
+  * dropDuplicates/first() whose buffer type HashAggregate cannot hold).
+  * Build-only — streaming census builders do execute, so this takes about
+  * as long as RegistrationSpec.
   * `sbt "Test/runMain graft.PlanAuditScratch [minExchanges]"`. */
 object PlanAuditScratch {
   def main(args: Array[String]): Unit = {
@@ -15,18 +17,22 @@ object PlanAuditScratch {
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       try {
         val p = fn(spark, dir).queryExecution.executedPlan.toString
-        // count only real shuffle exchanges: a line's node name starts at
-        // its first letter (after the tree-drawing prefix), so
-        // ReusedExchange / BroadcastExchange — healthy reuse and broadcast,
-        // not shuffles — don't inflate the smell score
-        val nEx = p.linesIterator.count(
-          _.dropWhile(!_.isLetter).startsWith("Exchange"))
+        // count nodes by name: a line's node name starts at its first
+        // letter (after the tree-drawing prefix), so only real shuffle
+        // exchanges count — ReusedExchange / BroadcastExchange are healthy
+        // reuse and broadcast, not shuffles
+        def count(prefix: String) = p.linesIterator.count(
+          _.dropWhile(!_.isLetter).startsWith(prefix))
+        val nEx = count("Exchange")
+        val sortAgg = count("SortAggregate")
+        val objHashAgg = count("ObjectHashAggregate")
         // repeated scans of the same file set = same table scanned k times
         val scans = p.linesIterator.filter(_.contains("Scan parquet"))
           .map(_.trim.take(120)).toSeq
         val dupScan = scans.groupBy(identity).values.map(_.size).maxOption.getOrElse(0)
-        if (nEx >= minEx || dupScan >= 3)
-          Some(f"$name%-28s exchanges=$nEx%2d maxSameScan=$dupScan%d")
+        if (nEx >= minEx || dupScan >= 3 || sortAgg > 0 || objHashAgg > 0)
+          Some(f"$name%-28s exchanges=$nEx%2d maxSameScan=$dupScan%d " +
+            f"sortAgg=$sortAgg%2d objHashAgg=$objHashAgg%2d")
         else None
       } catch { case e: Throwable => Some(s"$name BUILD-FAIL ${e.getClass.getSimpleName}") }
     }

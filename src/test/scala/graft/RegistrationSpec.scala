@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** The registration gate (round-12 postmortem): `cdc_dedup_stream` landed in
   * the driver map with an analysis-time `UNRESOLVED_COLUMN` because nothing
   * forced a registered builder to ever run before the snapshot commit. This
@@ -48,6 +50,25 @@ class RegistrationSpec extends SparkSpec {
     assert(SparkEntry.queries.size === oracled + declared.size,
       s"board tally drifted: ${SparkEntry.queries.size} registered != " +
         s"$oracled oracled + ${declared.size} declared rows-only")
+  }
+
+  test("main source reads exactly the three cross-validation conf switches") {
+    // Every `graft.*` session conf in main is a second code path. The three
+    // kept ones are the reference twins specs compare against (DedupSpec,
+    // ApproxSpec); a new one must either earn a spec or not land. Literals
+    // with a capitalized segment name a class (`"graft.Bench"`), not a key.
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+    val literal = "\"graft\\.([^\"]*)\"".r
+    val files = java.nio.file.Files.walk(root)
+    val keys = try files.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(f => literal.findAllMatchIn(
+        new String(java.nio.file.Files.readAllBytes(f), "UTF-8")).map(_.group(1)))
+      .filterNot(_.split('.').exists(_.headOption.exists(_.isUpper)))
+      .toSet
+    finally files.close()
+    assert(keys === Set("simhash.impl", "winnow.impl", "x3.spine"))
   }
 
   test("no duplicate names across module query maps") {

@@ -295,6 +295,29 @@ class CurationSpec extends SparkSpec {
         "family or the fixture, do NOT chase the census hash downstream.")
   }
 
+  test("x10 contraction lookup cannot fan out: the standing reps' doc_ids " +
+    "and the delta's exact-kept ids are disjoint on the standing-state and " +
+    "night-one fixtures (incrementalMergeState's unioned lookup)") {
+    CurationQueries.prewarmFixtures(spark, dir)
+    val delta = docs.crossJoin(CurationQueries.x10Threshold(spark, dir))
+      .filter($"doc_id" >= $"thr").select($"doc_id", $"lang", $"text")
+    Seq("standing" -> CurationQueries.x10StandingState(spark, dir),
+        "night-one" -> CurationQueries.x10NightOneState(spark, dir))
+      .foreach { case (label, st) =>
+        val (kept, _) = CurationQueries.incrementalMergeState(st.digests,
+          st.reps, CurationQueries.discoverTouching(st, delta), delta)
+        val keptIds = kept.select($"doc_id")
+        assert(keptIds.count() > 0 && st.reps.count() > 0,
+          s"$label: empty side, the check would be vacuous")
+        val shared = st.reps.select($"doc_id").intersect(keptIds)
+          .as[Long].collect()
+        assert(shared.isEmpty,
+          s"$label: reps and delta exact-kept ids overlap on " +
+            s"${shared.sorted.take(10).mkString(",")} — the unioned " +
+            "contraction lookup would fan out")
+      }
+  }
+
   test("x10_pipeline_incremental plan discovers pairs instead of scanning " +
     "the full-corpus pair fixture (round-16 verdict #3)") {
     spark.catalog.clearCache()
