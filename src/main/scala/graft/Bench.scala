@@ -11,65 +11,37 @@ import scala.jdk.CollectionConverters._
   * query through JIT/code-cache state — whole-stage codegen loads fresh
   * classes per query, profiles invalidate, and hot library methods
   * (Jackson, regex) deopt — which made same-code queries swing 10-30x
-  * between runs (round 5). But ONE fork PER query stopped fitting the
-  * driver's wall-clock budget once the board passed ~200 entries: each fork
-  * pays ~11 s of JVM boot + session init + machinery prewarm, so 209 forks
-  * burn ~40 minutes on overhead alone — round 13's bench was timeout-killed
-  * with zero numbers out (BENCH_r13 rc 124). The round-5 coupling problem
-  * was about expensive queries amplifying each other, not sub-2 s ones, so
-  * the grouping is now tiered:
-  *   - entries that start Structured Streaming queries (census fixtures,
-  *     health pipeline) or whose committed prior warm exceeds
-  *     SPARK_GRAFT_ISOLATE_CUTOFF_S (default 4 s) keep a PRIVATE fork;
-  *   - everything else runs in shared-fork BATCHES of SPARK_GRAFT_BATCH
-  *     (default 24) queries, paying the fixed fork cost once per batch.
+  * between runs. One fork per query does not fit the wall-clock budget at
+  * ~200 entries (each fork pays ~11 s of JVM boot + session init), so the
+  * grouping is tiered:
+  *   - the census family's stream entries share ONE fork, amortizing the
+  *     one-time streaming machinery the way batches amortize boot;
+  *   - the other stream entries and every entry whose committed prior warm
+  *     exceeds [[IsolateCutoffS]] get a PRIVATE fork;
+  *   - everything else runs in shared-fork batches of [[BatchSize]], in
+  *     descending prior order (entries without a prior first).
   * JVM + session startup stays OUT of the measurement either way (the child
-  * times only the query), and an entry missing from a batch child's output
+  * times only the query). An entry missing from a batch child's output
   * (child crash, or a genuine query failure) is retried once in a private
-  * fork before being recorded as failed — a batch-mate's OOM can't take
-  * innocent entries down with it. A batched entry whose number comes back
-  * DRIFTED (warm > 1.5× the committed prior, or monotonically degrading
-  * runs — the shared-JVM GC-interaction signature round 14 measured on
-  * cdc_join_maintain, [3.60, 7.87, 16.59] s on unchanged code) is
-  * re-measured in a private fork; the detail records both numbers
-  * (`batch_warm` + the clean fork's `warm`), and under budget contention
-  * the retries are spent MOST-EXPENSIVE-FIRST (round-19 verdict #1b).
-  * Entries over 4 s that land above their heavy ratio vs prior (1.2× for
-  * isolated forks — calibrated by two rounds of x10 near-misses just under
-  * the wider triggers — 1.35× for shared-JVM members) get a retry
-  * UNCONDITIONALLY from a separate heavy budget, whichever regime they ran
-  * in: round-18 verdict #1 added it for isolated forks, and round-19
-  * verdict #1a extended it to batched/census entries after x9_keepers —
-  * batched because isolation keys off its small PRIOR warm — kept a
-  * 13.9×-prior stall number that neither retry path could reach.
+  * fork before being recorded as failed, so a batch-mate's crash cannot fail
+  * innocent entries.
   *
-  * Budget telemetry: the parent logs cumulative wall clock after every fork
-  * so an overrun is visible in the driver log BEFORE the kill. Remaining
-  * children switch to single-run mode (skip the warm rerun; warm = the one
-  * measured run, marked `tiebreak: "single_run"` in the detail artifact)
-  * only when a PROJECTION says the run would otherwise overrun
-  * SPARK_GRAFT_BUDGET_S (default 2100 s): every remaining fork is priced
-  * at boot + ~2.2x its members' committed priors, a 1.25 safety factor on
-  * top — round-20 verdict #2 replaced the previous fixed wall>60% trigger,
-  * which pushed the driver's 32-core run into austerity (and denied every
-  * queued drift retry) while ~800 s of genuine headroom remained. Retry
-  * spending (batch-drift and heavy) is likewise gated on the ACTUAL
-  * remaining budget at spend time, never on the austerity mode bit.
-  * Round-16 hardening: batches run in DESCENDING prior_warm order so a
-  * genuine budget squeeze lands on the cheap fork-boot-dominated tail, a
-  * single run that exceeds 1.5x its committed prior still earns one rescue
-  * run (`single_run+gt_1.5x_prior`), and the detail header counts the
-  * degraded entries (`n_single_run`) so the artifact declares its own
-  * blind spots.
+  * Measurement ([[measure]]): every entry runs [[Runs]] times in its fork;
+  * `cold` is run 1 and `warm` the min of the runs. The rule is the same for
+  * every entry and never looks at the prior, so no entry gets extra draws
+  * because it landed slow. One degraded mode: remaining forks run each entry
+  * ONCE (`tiebreak: "single_run"`, counted in `n_single_run`) when a
+  * projection over the remaining forks' committed priors says the full
+  * policy would overrun SPARK_GRAFT_BUDGET_S (default 2100 s), or once the
+  * wall clock is past 90% of it ([[singleRunFrom]]).
   *
   * Truncation posture: the driver captures a BOUNDED TAIL of process output
   * (~2 KB) and parses the JSON line out of it — at ~100 queries the full
-  * per-query map no longer fits, and round 5's total was clipped away with
-  * the line's head. So the full per-query detail ({cold, warm} seconds) is
-  * always written to a file (SPARK_GRAFT_DETAIL, default BENCH_DETAIL.json
-  * in the working directory), and the stdout line adapts: the complete map
-  * when it fits comfortably inside the tail, otherwise a compact total-first
-  * line carrying only the slowest queries plus a pointer to the detail file.
+  * per-query map no longer fits. So the full per-query detail is always
+  * written to a file (SPARK_GRAFT_DETAIL, default BENCH_DETAIL.json in the
+  * working directory), and the stdout line adapts: the complete map when it
+  * fits comfortably inside the tail, otherwise a compact total-first line
+  * carrying only the slowest queries plus a pointer to the detail file.
   *
   * Escape hatches: SPARK_GRAFT_NO_FORK=1 runs everything inline (fast local
   * iteration), SPARK_GRAFT_ONLY=a,b,c limits the query set in either mode.
@@ -82,68 +54,105 @@ object Bench {
   /** Entries whose BUILDERS start Structured Streaming queries (MemoryStream
     * census feeds, the health pipeline's file-source sink): state-store
     * maintenance threads and listener-bus traffic outlive stop(), so these
-    * keep a private JVM regardless of their prior warm time. Shared with
-    * PlanAuditSpec, which skips them (their returned census frame is a tiny
-    * local/parquet read; the interesting plans are the micro-batch ones,
-    * pinned in StreamingSpec) so the audit doesn't re-run the stream drains
+    * never share a fork with batch entries. Shared with PlanAuditSpec, which
+    * skips them (their returned census frame is a tiny local/parquet read;
+    * the interesting plans are the micro-batch ones, pinned in
+    * StreamingSpec) so the audit doesn't re-run the stream drains
     * RegistrationSpec already pays for. */
   private[graft] val streamEntries: Set[String] = Set(
     "cdc_health_counts", "cdc_health_surface", "cdc_dedup_stream",
     "p27_journey_ordered", "p28_alert_stream", "p29_stream_correlate",
     "p32_stream_outer")
-  // x2_winnow left the static-isolate set in round 15: the per-doc
-  // WinnowSelect Expression removed the 1.4M-gram window passes whose GC
-  // interaction degraded it in shared JVMs (r14: 4.5 s solo, 7-20 s
-  // batched); at ~1.2 s it batches fine, the prior-warm cutoff still
-  // isolates it while its committed prior is stale, and the batch-drift
-  // retry defends the first shared-batch round either way.
 
-  /** The subset whose builders genuinely run streams (PlanAuditSpec's skip
-    * list — identical to [[streamEntries]] since x2_winnow left the set). */
-  private[graft] val streamBuilderEntries: Set[String] = streamEntries
-
-  /** The census FAMILY — the stream entries that share one bench fork
-    * (round-15 verdict #5). An EXPLICIT named set, not a name-prefix
-    * filter over [[streamEntries]]: a future p-prefixed stream entry that
-    * is NOT part of the census family must keep its private fork instead
-    * of being silently pulled into the shared JVM (round-16 ADVICE). */
+  /** The census FAMILY — the stream entries that share one bench fork. An
+    * EXPLICIT named set, not a name-prefix filter over [[streamEntries]]: a
+    * future p-prefixed stream entry that is NOT part of the census family
+    * must keep its private fork instead of being silently pulled into the
+    * shared JVM. */
   private[graft] val censusFamily: Set[String] = Set(
     "p27_journey_ordered", "p28_alert_stream", "p29_stream_correlate",
     "p32_stream_outer")
   require(censusFamily.subsetOf(streamEntries),
     "censusFamily must be a subset of streamEntries")
 
-  /** One measurement: cold = first (fork-fresh) run, warm = steady-state
-    * plan cost (min of first and second run; see [[runInline]]). A query
-    * that THROWS is carried with `failed = true` — its elapsed time is a
-    * fail-fast artifact, not a measurement, so it is excluded from the
-    * total and surfaced via `n_failed` (round 6 had 37 broken queries
-    * masquerade as 0.1 s "speedups" because failures were swallowed). */
-  private final case class Timing(name: String, cold: Double, warm: Double,
-                                  failed: Boolean = false,
-                                  runs: Seq[Double] = Nil,
-                                  cacheHit: Option[Boolean] = None,
-                                  prior: Option[Double] = None,
-                                  tiebreak: Option[String] = None,
-                                  batchWarm: Option[Double] = None,
-                                  soloWarm: Option[Double] = None,
-                                  otherForkWarm: Option[Double] = None,
-                                  censusPos: Option[Int] = None)
+  /** Timed runs per entry (1 in single-run mode). */
+  private val Runs = 3
+  /** Entries whose committed prior warm exceeds this get a private fork. */
+  private val IsolateCutoffS = 4.0
+  /** Entries per shared batch fork. */
+  private val BatchSize = 24
+  /** Nominal fixed cost of one child fork (JVM boot + session init +
+    * machinery prewarm), measured ~10-12 s and priced at the high end so the
+    * projection errs toward caution. */
+  private val ForkBootS = 12.0
+  /** `stall: true` marks an entry whose runs span more than StallRatio x AND
+    * more than StallMinSpreadS seconds (so a tiny entry's cold-vs-warm
+    * codegen gap can't masquerade as a machine stall). */
+  private val StallRatio = 5.0
+  private val StallMinSpreadS = 2.0
+
+  /** One measurement: cold = run 1, warm = min of runs (see [[measure]]). A
+    * query that THROWS is carried with `failed = true` — its elapsed time is
+    * a fail-fast artifact, not a measurement, so it is excluded from the
+    * total and surfaced via `n_failed`. `prior` is attached by the parent
+    * (children never see priors). */
+  private[graft] final case class Timing(name: String, cold: Double, warm: Double,
+                                         failed: Boolean = false,
+                                         runs: Seq[Double] = Nil,
+                                         cacheHit: Option[Boolean] = None,
+                                         prior: Option[Double] = None,
+                                         tiebreak: Option[String] = None,
+                                         censusPos: Option[Int] = None)
+
+  /** The measurement policy for one entry. `run` executes the entry once and
+    * returns (elapsed seconds, succeeded). Run 1 is always taken; a failing
+    * run 1 marks the entry failed. Otherwise up to [[Runs]] - 1 more runs
+    * follow (none in single-run mode), stopping at the first failing one,
+    * whose time is dropped: the successful runs stand. */
+  private[graft] def measure(name: String, singleRun: Boolean)(
+      run: () => (Double, Boolean)): Timing = {
+    val (t1, ok1) = run()
+    if (!ok1) Timing(name, t1, t1, failed = true, runs = Seq(t1))
+    else {
+      val more = if (singleRun) 0 else Runs - 1
+      val runs = t1 +: Iterator.continually(run()).take(more)
+        .takeWhile(_._2).map(_._1).toSeq
+      Timing(name, t1, runs.min, runs = runs,
+        tiebreak = if (singleRun) Some("single_run") else None)
+    }
+  }
+
+  /** Whether the remaining forks run single-run: the wall clock plus the
+    * projected cost of the remaining forks (x1.25 safety) would overrun the
+    * budget, or — the backstop for late, unpriced expensive entries — the
+    * wall clock alone is past 90% of it. */
+  private[graft] def singleRunFrom(wallS: Double, projectedS: Double,
+                                   budgetS: Double): Boolean =
+    wallS + 1.25 * projectedS > budgetS || wallS > 0.9 * budgetS
+
+  /** Median of warm / prior_warm over the non-failed entries that have a
+    * prior: the board's per-entry drift against the committed round, immune
+    * to the few expensive entries that dominate the total. */
+  private[graft] def medianPriorRatio(results: Seq[Timing]): Option[Double] = {
+    val ratios = results.filter(!_.failed).flatMap(t =>
+      t.prior.filter(_ > 0).map(t.warm / _)).sorted
+    val n = ratios.size
+    if (n == 0) None
+    else if (n % 2 == 1) Some(ratios(n / 2))
+    else Some((ratios(n / 2 - 1) + ratios(n / 2)) / 2)
+  }
 
   /** Prior-round warm seconds per query, parsed from the COMMITTED
     * BENCH_DETAIL.json — `git show HEAD:` first, so a second bench run in
     * the same session still compares against the committed round baseline
-    * (not its own first run's numbers — round-10 ADVICE); the on-disk file
-    * is the fallback when git is unavailable. Feeds two defenses: a query
-    * whose warm time exceeds its prior by >1.5× gets an extra tie-break
-    * run (cross-session machine swing), and the prior lands next to the
-    * new number in the detail artifact so a verdict can separate "code
-    * regression" from "session noise" without a builder-side control run
-    * (round-9 verdict #7). */
+    * (not its own first run's numbers); the on-disk file is the fallback
+    * when git is unavailable. Priors order the forks, price the budget
+    * projection and land next to the new number in the detail artifact, so
+    * a verdict can separate "code regression" from "session noise". */
   private def readPriorWarm(path: String): Map[String, Double] = {
     def parse(txt: String): Map[String, Double] =
       // [^{}] so the `"queries": {` wrapper line can never swallow the
-      // first entry's warm into a bogus 'queries' key (round-10 ADVICE)
+      // first entry's warm into a bogus 'queries' key
       "\"([A-Za-z0-9_]+)\": \\{[^{}]*\"warm\": ([0-9.]+)".r
         .findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
     val committed =
@@ -152,7 +161,6 @@ object Bench {
         // a ./-prefixed basename (HEAD:./f is cwd-relative under -C, while a
         // bare HEAD:f is repo-root-relative) — so the lookup works no matter
         // where the JVM was launched from or how nested the detail path is
-        // (round-11 ADVICE #3)
         val abs = java.nio.file.Paths.get(path).toAbsolutePath.normalize
         val p = new ProcessBuilder("git", "-C", abs.getParent.toString,
           "show", s"HEAD:./${abs.getFileName}").start()
@@ -171,194 +179,41 @@ object Bench {
   }
 
   private def runInline(names: Seq[String], sfDir: String, cpus: String,
-                        prior: Map[String, Double]): Seq[Timing] = {
+                        singleRun: Boolean): Seq[Timing] = {
     val spark = EngineSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the shared machinery (parquet reader, codegen compiler, shuffle,
     // noop sink) before the first measured query: a cold JVM otherwise bills
     // ~3-4 s of one-time class loading to whichever query runs first — which
-    // in forked mode is EVERY query.
+    // in forked mode is every fork's first query.
     try spark.read.parquet(s"$sfDir/nation.parquet")
       .groupBy("n_regionkey").count()
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
-    // Census-fork streaming prewarm (round-16 verdict #6): drain a
-    // throwaway two-batch stateful MemoryStream before any timed entry so
-    // one-time streaming machinery bills to the fork, not a member.
-    // Round-18 re-adjudication (the interleaved A/B round-17 demanded):
-    // 8 census forks in ONE session, prewarm-on/off crossed with family
-    // order (alpha vs reversed), sf0.1 — prewarm on vs off moved member
-    // warms by <= ~0.1 s BOTH orders, while the FIRST-position member ran
-    // ~0.3-1.0 s above its steady state regardless of which member was
-    // first. So this drain does NOT cover the residual first-entry cost
-    // (stream-plan codegen and state-store init are per-QUERY-shape, not
-    // per-JVM); it stays because it is cheap and harmless, and the honest
-    // accounting is the per-member `census_pos` field in the detail
-    // artifact. Steady-state family total in the same A/B: 9.5-9.9 s
-    // calm (r17's 12.77 s board number was tail-of-run machine drift —
-    // the A/B's own late reps degraded to 12.5/15.0 s with NO variable
-    // changed). Parent sets the env only for the census group.
-    if (sys.env.get("SPARK_GRAFT_STREAM_PREWARM").contains("1")) {
-      try {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import spark.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-        val ck = java.nio.file.Files.createTempDirectory("graft_prewarm_ck")
-        val ms = MemoryStream[Long]
-        ms.addData(1L, 2L, 3L)
-        val q = ms.toDF()
-          .groupBy((org.apache.spark.sql.functions.col("value") % 2).as("k"))
-          .count()
-          .writeStream.outputMode("complete").format("noop")
-          .option("checkpointLocation", ck.toString)
-          .start()
-        // stop() in a finally: a prewarm hiccup must not leave a live
-        // StreamingQuery (micro-batch thread, listener traffic) running
-        // through the fork's TIMED entries — the pollution this prewarm
-        // exists to prevent. The throwaway checkpoint dir goes with it.
-        try {
-          q.processAllAvailable()
-          ms.addData(4L, 5L)
-          q.processAllAvailable()
-        } finally {
-          try q.stop() catch { case _: Throwable => () }
-          org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
-          ()
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] stream prewarm failed: ${e.getMessage}")
-      }
-    }
-    // In a freshly forked child the first execution of a query carries its
-    // one-time costs — codegen compile, JIT warmup of the expression path,
-    // library class-init (Jackson, regex) — which in the old shared-JVM bench
-    // were amortized across 70 queries. Measure STEADY-STATE plan cost the
-    // standard way: run the query once as warmup, then measure a second run,
-    // and keep the faster of the two (defensive against a GC pause landing in
-    // either). The rerun is skipped when the first run is already expensive
-    // (> warmCutoff) so one slow query can't double the bench wall time —
-    // at that magnitude the one-time costs are noise anyway.
-    val warmCutoff = sys.env.getOrElse("SPARK_GRAFT_WARM_CUTOFF_S", "90").toDouble
-    // the heavy-entry threshold, shared with the fork-level retry in
-    // [[runForked]] (round-19 ADVICE: the in-JVM trigger hardcoded 4 s, so
-    // overriding the env var desynchronized the two tiers of one policy)
-    val heavyWarmS =
-      sys.env.getOrElse("SPARK_GRAFT_HEAVY_RETRY_WARM_S", "4").toDouble
-    // Returns (elapsed seconds, succeeded). A failure's elapsed time is
-    // fail-fast noise — the caller marks the Timing failed instead of
-    // recording it as a measurement.
-    def runOnce(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          false
-        }
-      // Release anything the query pinned (persist/localCheckpoint inside
-      // operators like the LSH signature materialization): leaked blocks
-      // would GC-thrash (and warm-start) the next run.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      ((System.nanoTime() - t0) / 1e9, ok)
-    }
-    // Budget-overrun degradation (parent sets this for late children): one
-    // measured run per query, no warm rerun. Warm == cold then — noisier,
-    // but every entry still carries a genuine measurement instead of the
-    // whole artifact dying at the driver's timeout.
-    val singleRun = sys.env.get("SPARK_GRAFT_SINGLE_RUN").contains("1")
     val results = names.map { name =>
       val fn = SparkEntry.queries(name)
       graft.queries.FixtureCache.clearReport()
-      // OPT-IN batch hygiene (SPARK_GRAFT_GC_BETWEEN=1): collect a
-      // batch-mate's garbage before the next entry's timed runs. A/B at
-      // sf0.1: it fixed the small entries (m1/m2 0.83/0.92 -> 0.25/0.36 s)
-      // but the BOARD median drifted +12% in the same run — System.gc()
-      // under G1 is a full STW collection that resets the adaptive region
-      // sizing the following timed run then pays to rebuild. Off by
-      // default; the isolate set handles the GC-sensitive heavy entries
-      // instead.
-      if (names.size > 1 &&
-          sys.env.get("SPARK_GRAFT_GC_BETWEEN").contains("1")) System.gc()
-      val (t1, ok1) = runOnce(name, fn)
-      if (!ok1) Timing(name, t1, t1, failed = true, runs = Seq(t1))
-      else if (singleRun) {
-        val priorWarm = prior.get(name)
-        // Budget austerity must not record an obvious fork-boot artifact
-        // as warm (round-16 verdict #1b: 51 entries carried cold-as-warm
-        // while 610 s of budget sat unused): a single run that exceeds
-        // 1.5x the committed prior still earns ONE rescue run — spend the
-        // remaining budget on adjudication, not blanket austerity. Cheap
-        // entries (where the cold/warm gap is proportionally largest) are
-        // exactly the ones this fires for, and their rescue run is cheap.
-        if (priorWarm.exists(p => t1 > p * 1.5) && t1 <= warmCutoff) {
-          val (t2, ok2) = runOnce(name, fn)
-          val runs = if (ok2) Seq(t1, t2) else Seq(t1)
-          System.err.println(f"[bench] $name%-24s ${runs.min}%9.3f s  " +
-            f"(single-run mode, >1.5x prior ${priorWarm.get}%.3f s rescue)")
-          Timing(name, t1, runs.min, runs = runs, prior = priorWarm,
-            tiebreak = Some("single_run+gt_1.5x_prior"))
-        } else {
-          System.err.println(f"[bench] $name%-24s $t1%9.3f s  (single-run mode)")
-          Timing(name, t1, t1, runs = Seq(t1), prior = priorWarm,
-            tiebreak = Some("single_run"))
-        }
-      } else {
-        // Variance defense (round-8 verdict #2): a warm run that fails to
-        // beat the cold run is the signature of a machine-state artifact
-        // (cold carries codegen+JIT, so warm < cold is the expected shape;
-        // r8's three cold==warm outliers were all transient slowness that a
-        // single min-of-2 couldn't shake). Tie-break with a THIRD run in
-        // exactly that case — cheap, because it only fires on anomalies —
-        // and surface every raw run time so drift is diagnosable from the
-        // artifact alone (BENCH_DETAIL.json `runs`).
-        // Which tie-breaks fired is recorded per query (round-10 verdict
-        // #7): a future verdict can tell "third run confirmed a regression"
-        // from "third run rescued noise" straight from the artifact.
-        var reasons = List.empty[String]
-        val runs0: Seq[Double] =
-          if (t1 > warmCutoff) Seq(t1)
-          else {
-            val (t2, ok2) = runOnce(name, fn)
-            if (!ok2) Seq(t1) // flaky rerun: keep the good run
-            else if (t2 < t1) Seq(t1, t2)
-            else {
-              reasons :+= "warm_ge_cold"
-              val (t3, ok3) = runOnce(name, fn)
-              if (ok3) Seq(t1, t2, t3) else Seq(t1, t2)
-            }
+      val t = measure(name, singleRun) { () =>
+        val t0 = System.nanoTime()
+        val ok =
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+            false
           }
-        // Second tie-break trigger (round-9 verdict #7): a warm time >1.5×
-        // the COMMITTED prior round's warm is either a code regression or a
-        // session artifact — one extra run adjudicates cheaply (a genuine
-        // regression stays slow; transient machine state usually shakes
-        // out), and the artifact records both numbers either way.
-        val priorWarm = prior.get(name)
-        // heavy entries (> the fork-level retry threshold, same env knob so
-        // the two tiers of the policy can't desynchronize — round-19
-        // ADVICE) adjudicate at a tighter ratio than 1.5x (round-18
-        // verdict #1: 1.477-1.498x landings slipped under the 1.5x bar):
-        // 1.2x when this JVM runs a single entry (an isolated fork or a
-        // private re-fork, where the extra in-JVM run is the cheapest
-        // possible adjudication — round-19 verdict #3: x10_state_reps
-        // near-missed the 1.35x trigger two rounds running, by <=0.1),
-        // 1.35x in shared batches
-        val heavyRatio = if (names.size == 1) 1.2 else 1.35
-        val runs: Seq[Double] =
-          if (priorWarm.exists(p => runs0.min > p * 1.5 ||
-                (runs0.min > heavyWarmS && runs0.min > p * heavyRatio)) &&
-              runs0.min <= warmCutoff && runs0.size > 1) {
-            reasons :+= "gt_1.5x_prior"
-            val (t4, ok4) = runOnce(name, fn)
-            if (ok4) runs0 :+ t4 else runs0
-          } else runs0
-        val sec = runs.min
-        val report = graft.queries.FixtureCache.lookupReport
-        val hit = if (report.isEmpty) None else Some(report.values.forall(identity))
-        System.err.println(f"[bench] $name%-24s $sec%9.3f s  (cold ${t1}%.3f s)")
-        Timing(name, t1, sec, runs = runs, cacheHit = hit, prior = priorWarm,
-          tiebreak = if (reasons.isEmpty) None else Some(reasons.mkString("+")))
+        // Release anything the query pinned (persist/localCheckpoint inside
+        // operators like the LSH signature materialization): leaked blocks
+        // would GC-thrash (and warm-start) the next run.
+        spark.catalog.clearCache()
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        ((System.nanoTime() - t0) / 1e9, ok)
       }
+      val report = graft.queries.FixtureCache.lookupReport
+      val hit = if (report.isEmpty) None else Some(report.values.forall(identity))
+      if (!t.failed)
+        System.err.println(f"[bench] $name%-24s ${t.warm}%9.3f s  (cold ${t.cold}%.3f s" +
+          (if (singleRun) ", single-run mode)" else ")"))
+      t.copy(cacheHit = hit)
     }
     spark.stop()
     results
@@ -372,9 +227,7 @@ object Bench {
     * PARENT's final line). A query absent from the child's `queries` map
     * (child crash, or the query threw) comes back as a failed Timing; the
     * caller decides whether to retry it in a private fork. */
-  private def forkGroup(group: Seq[String], prior: Map[String, Double],
-                        singleRun: Boolean,
-                        streamPrewarm: Boolean = false): Seq[Timing] = {
+  private def forkGroup(group: Seq[String], singleRun: Boolean): Seq[Timing] = {
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.toSeq
@@ -384,14 +237,6 @@ object Bench {
     pb.environment().put("SPARK_GRAFT_ONLY", group.mkString(","))
     pb.environment().put("SPARK_GRAFT_FORKED", "1")
     if (singleRun) pb.environment().put("SPARK_GRAFT_SINGLE_RUN", "1")
-    // the census fork (and a census member's private re-fork) drains a
-    // throwaway stream before timing
-    if (streamPrewarm) pb.environment().put("SPARK_GRAFT_STREAM_PREWARM", "1")
-    // per-name prior map, `name=warm` pairs — a batch child needs each
-    // member's own baseline for the >1.5x tie-break trigger
-    val priorPairs = group.flatMap(n => prior.get(n).map(p => s"$n=$p"))
-    if (priorPairs.nonEmpty)
-      pb.environment().put("SPARK_GRAFT_PRIOR_WARM", priorPairs.mkString(","))
     pb.redirectError(ProcessBuilder.Redirect.INHERIT)
     val t0 = System.nanoTime()
     val proc = pb.start()
@@ -424,15 +269,15 @@ object Bench {
         case Some(warm) =>
           val t = Timing(name, coldMap.getOrElse(name, warm), warm,
             runs = runsMap.getOrElse(name, Nil), cacheHit = cacheMap.get(name),
-            prior = prior.get(name), tiebreak = tbMap.get(name))
+            tiebreak = tbMap.get(name))
           System.err.println(
             f"[bench] $name%-24s ${t.warm}%9.3f s  (batch ${group.size}, wall ${wall}%.1f s)")
           t
         case None =>
           // The child excludes a failed query from its "queries" map and
           // sets n_failed; a missing entry (or dead child) is therefore a
-          // FAILURE, not a wall-clock measurement (round 6's silent-swallow
-          // lesson). The caller retries batch members in a private fork.
+          // FAILURE, not a wall-clock measurement. The caller retries batch
+          // members in a private fork.
           System.err.println(
             s"[bench] $name MISSING from child output (rc=$rc, batch ${group.size})")
           Timing(name, wall, wall, failed = true)
@@ -440,329 +285,97 @@ object Bench {
     }
   }
 
-  /** Nominal fixed cost of one child fork (JVM boot + session init +
-    * machinery prewarm) — the planning constant the austerity projection
-    * and the retry-headroom checks price forks with. Measured ~10-12 s on
-    * this class of box across rounds 13-20; priced at the high end so
-    * projections err toward caution. */
-  private val forkBootS = 12.0
-
-  /** Headroom telemetry captured by [[runForked]] for the detail header
-    * (round-14 verdict #5): r13 died at the driver's wall clock with zero
-    * warning; the header now records how much margin the run had left so
-    * the judge/driver can watch it shrink as the board grows. */
+  /** Headroom telemetry captured by [[runForked]] for the detail header, so
+    * the artifact records how much margin the run had left. */
   private final case class RunStats(wallS: Double, budgetS: Double,
                                     nIsolated: Int, nBatched: Int,
-                                    nCensusShared: Int, nDriftRetries: Int,
-                                    nHeavyRetries: Int, nSingleRun: Int)
+                                    nCensusShared: Int)
   private var runStats: Option[RunStats] = None
 
-  /** Tiered forked execution: isolated (streaming / heavy) entries one fork
-    * each FIRST (freshest machine state), then the shared-fork batches of
-    * small entries; entries missing from a batch child are retried once in
-    * a private fork, and batched entries whose numbers look drifted are
-    * re-measured in one. Logs cumulative wall clock after every fork and
-    * downgrades to single-run mode past 60% of the wall-clock budget. */
+  /** Tiered forked execution (see the object doc): the census fork first,
+    * then the private forks, then the shared batches; entries missing from
+    * a batch child are retried once in a private fork. Logs cumulative wall
+    * clock after every fork and switches the remaining forks to single-run
+    * mode per [[singleRunFrom]]. */
   private def runForked(names: Seq[String],
                         prior: Map[String, Double]): Seq[Timing] = {
-    val streamEntries = Bench.streamEntries
-    val isolateCutoff =
-      sys.env.getOrElse("SPARK_GRAFT_ISOLATE_CUTOFF_S", "4").toDouble
-    val batchSize =
-      math.max(1, sys.env.getOrElse("SPARK_GRAFT_BATCH", "24").toInt)
     val budgetS =
       sys.env.getOrElse("SPARK_GRAFT_BUDGET_S", "2100").toDouble
-    val (solo0, small) = names.partition(n =>
-      streamEntries(n) || prior.get(n).exists(_ > isolateCutoff))
-    // The four p-census stream entries share ONE fork (round-15 verdict #5):
-    // the per-fork cost they were each paying solo is the one-time streaming
-    // machinery (state-store provider init, listener bus, stream-plan
-    // codegen), which a shared JVM amortizes exactly like the 24-entry
-    // batches amortize boot — measured at sf0.1 the family fell 10.3 -> 8.9 s
-    // and p32 3.7 -> 2.9 s with per-entry warms still min-of-own-runs; the
-    // drift retry still re-forks any member that comes back polluted.
-    // SPARK_GRAFT_CENSUS_GROUP=0 restores one-fork-each. The family is the
-    // EXPLICIT [[censusFamily]] set (asserted a subset of streamEntries) —
-    // see its doc for why a name-prefix filter was retired.
-    val censusSet = Bench.censusFamily
-    val groupCensus =
-      sys.env.getOrElse("SPARK_GRAFT_CENSUS_GROUP", "1") == "1"
-    val (census, solo) = solo0.partition(n => groupCensus && censusSet(n))
-    // isolated (streaming/heavy) entries run FIRST: their numbers carry the
-    // most signal and the machine is freshest before ~200 batched entries
-    // have churned page cache and JIT state (r14: tail-position isolated
-    // forks measured up to 2x their calm-state times)
-    //
-    // Shared-fork batches are ordered by DESCENDING committed prior_warm
-    // (round-16 verdict #1a): if the 60%-budget single-run switch trips,
-    // it lands on the CHEAP fork-boot-dominated tail — which loses the
-    // least wall-clock under single-run and whose cold-as-warm artifact
-    // the >1.5x-prior rescue run (see runInline) then adjudicates —
-    // instead of starving expensive entries of their warm rerun. Entries
-    // with no committed prior (new this round) sort FIRST: they need the
-    // clean two-run regime most.
-    val smallOrdered = small.sortBy(n => -prior.getOrElse(n, Double.MaxValue))
-    val soloOrdered = solo.sortBy(n => -prior.getOrElse(n, Double.MaxValue))
-    // second element: this group gets the streaming-machinery prewarm
-    // (the census family's shared fork — see runInline)
+    val (private0, small) = names.partition(n =>
+      streamEntries(n) || prior.get(n).exists(_ > IsolateCutoffS))
+    val (census, solo) = private0.partition(censusFamily)
+    // Descending committed prior: the most informative forks run on the
+    // freshest machine state, and a budget squeeze lands on the cheap
+    // fork-boot-dominated tail. Entries with no prior (new this round) sort
+    // first.
+    def byPrior(ns: Seq[String]) = ns.sortBy(n => -prior.getOrElse(n, Double.MaxValue))
+    // second element: the census family's shared fork (members carry their
+    // run position in it)
     val groups: Seq[(Seq[String], Boolean)] =
       (if (census.nonEmpty) Seq((census.sorted, true)) else Nil) ++
-        soloOrdered.map(n => (Seq(n), false)) ++
-        smallOrdered.grouped(batchSize).map((_, false)).toSeq
+        byPrior(solo).map(n => (Seq(n), false)) ++
+        byPrior(small).grouped(BatchSize).map((_, false)).toSeq
     System.err.println(f"[bench] plan: ${small.size} entries in " +
-      f"${small.grouped(batchSize).size} batches of <=$batchSize + " +
+      f"${small.grouped(BatchSize).size} batches of <=$BatchSize + " +
       f"${solo.size} isolated forks + ${census.size} census-family shared; " +
       f"budget $budgetS%.0f s")
     val t0 = System.nanoTime()
     var singleRun = false
     val buf = scala.collection.mutable.ArrayBuffer.empty[Timing]
     var done = 0
-    // Shared-batch drift defense (round-14 verdict #1): a batched entry can
-    // come back polluted by its JVM-mates — r14 recorded cdc_join_maintain
-    // runs [3.60, 7.87, 16.59] (monotone degradation, unchanged code) and
-    // x2_minhash_lsh [5.10, 2.23, 1.70] vs a 1.06 s prior. Either signature
-    // triggers ONE private-fork re-measure in the SAME run; the detail
-    // artifact records both numbers (`warm` = the cleaner min, `batch_warm`
-    // = the shared-JVM one) so drift is adjudicable from the artifact.
-    // Capped (default 16 retries/run, ~11 s fork cost each). The cap was 8
-    // through round 20; with retry spending now gated on ACTUAL remaining
-    // budget (round-20 verdict #2) the cap is a runaway backstop, not the
-    // budget itself, and a fully-drifted session — a round-21 run measured
-    // a uniform 1.2x late-session inflation that queued 19 candidates —
-    // deserves more than 8 adjudications when the wall clock can pay for
-    // them (16 retries ≈ 220 s, inside any run's 0.95x-budget gate).
-    val driftRetryCap =
-      sys.env.getOrElse("SPARK_GRAFT_DRIFT_RETRIES", "16").toInt
-    var driftRetries = 0
-    // Heavy-entry mandatory retry (round-18 verdict #1): the board's two
-    // most expensive entries landed at 1.477-1.498x their prior — a hair
-    // UNDER the 1.5x trigger — so the board kept possibly-drifted numbers
-    // for exactly the rows where a retry matters most. Entries whose warm
-    // exceeds 4 s AND 1.35x their committed prior now ALWAYS earn a
-    // private re-fork (isolated/solo entries included — they previously
-    // had no retry path at all), the one place where ~11 s of fork cost is
-    // always cheaper than a drifted multi-second number feeding next
-    // round's prior_warm.
-    // Round-19 drift-band adjudication (the r18 watch list): the six small
-    // regressions flagged at 1.41-1.49x their r17 warms (q42_window_funnel,
-    // p10_sessions, cdc_message_status, cdc_wire_latest, q21_array_fns,
-    // x1_span_removal) were re-measured in fresh-session board-regime
-    // batches: p10_sessions and q21_array_fns landed AT their r17 warms
-    // (0.71/0.22 s — pure drift), and q42_window_funnel swung 2.50 -> 1.31 s
-    // between same-session reps on unchanged code — the 30-60% late-session
-    // drift signature, not regressions. Plans untouched; the 1.5x batch
-    // retry remains their defense.
-    val heavyRetryWarmS =
-      sys.env.getOrElse("SPARK_GRAFT_HEAVY_RETRY_WARM_S", "4").toDouble
-    // heavy retries draw from their OWN budget: "mandatory" must not be
-    // starvable by a run that already spent the batch-drift cap on cheap
-    // entries (the board has <10 entries over 4 s; 6 retries is ample)
-    val heavyRetryCap =
-      sys.env.getOrElse("SPARK_GRAFT_HEAVY_RETRIES", "6").toInt
-    var heavyRetries = 0
-    // Ratio calibration (round-19 verdict #3): an ISOLATED entry's heavy
-    // retry fires at 1.2x prior — the x10 heavy entries near-missed the
-    // previous 1.35x trigger two rounds running (1.477-1.498x in r18 where
-    // the trigger was 1.5x, 1.26x in r19 under 1.35x), each time by less
-    // than the trigger's own margin, leaving possibly-drifted multi-second
-    // warms to feed the next round's prior. Batched and census-shared
-    // members keep 1.35x: their numbers also carry the 1.5x/monotone
-    // batch-drift defenses, and the shared-JVM regime has more benign
-    // sub-1.35x spread.
-    def heavyDrifted(t: Timing, isolated: Boolean): Boolean =
-      t.warm > heavyRetryWarmS &&
-        t.prior.exists(p => t.warm > p * (if (isolated) 1.2 else 1.35))
-    def drifted(t: Timing): Boolean = {
-      val vsPrior = t.prior.exists(p => t.warm > p * 1.5) && t.warm > 0.5
-      // the monotone branch carries the same 0.5 s absolute floor as
-      // vsPrior PLUS a relative-spread floor (last run > 1.2x the first):
-      // a fast entry's tiny monotone jitter ([0.10, 0.11, 0.12]) must not
-      // spend an ~11 s private-fork retry out of the drift budget
-      val monotone = t.runs.size >= 3 && t.warm > 0.5 &&
-        t.runs.last > t.runs.head * 1.2 &&
-        t.runs.sliding(2).forall(p => p(1) > p(0))
-      vsPrior || monotone
-    }
-    // Batch-drift candidates queue here and the shared budget is spent
-    // MOST-EXPENSIVE-FIRST after the measuring pass (round-19 verdict #1b:
-    // the old first-come spend let eight 1.3-2.5 s entries exhaust the cap
-    // before the board's 11.94 s worst case arrived in batch order).
-    val deferredDrift =
-      scala.collection.mutable.ArrayBuffer.empty[(Timing, Boolean)]
-    groups.zipWithIndex.foreach { case ((g, prewarm), gi) =>
-      val first0 = forkGroup(g, prior, singleRun, prewarm)
-      // census-family members carry their RUN POSITION in the shared fork:
-      // an interleaved prewarm-on/off x order-permutation A/B (round-18, 8
-      // forks, sf0.1) measured the first-position member ~0.3-1.0 s above
-      // its steady state REGARDLESS of which member runs first, while the
-      // throwaway-stream prewarm moved nothing (on vs off within +-0.1 s) -
-      // so the residual one-time cost is attributed per-member here
-      // instead of pretending the prewarm absorbs it
-      val first = if (prewarm)
-        first0.map(t => t.copy(censusPos = Some(g.indexOf(t.name) + 1)))
-      else first0
-      val (missing, ok0) = first.partition(_.failed)
-      val ok = ok0.map { t =>
-        // The HEAVY condition is mandatory for ANY entry — isolated,
-        // census-shared, AND batched (round-19 verdict #1a: requiring
-        // g.size == 1 here left x9_keepers, batched because isolation keys
-        // off its 0.86 s PRIOR warm, unreachable by both retry paths while
-        // it carried an 11.94 s stall number). It draws from the heavy
-        // budget and stamps heavy_drift; a batched entry's displaced
-        // shared-JVM number rides as batch_warm exactly as the batch_drift
-        // path records it, an isolated/census entry's as other_fork_warm.
-        // A retry is gated on REAL remaining budget (can this ~boot +
-        // 2 runs fork still fit?), not on the austerity flag: the r20
-        // driver run denied every queued retry "because single-run"
-        // while ~800 s of budget sat unused (round-20 verdict #2). The
-        // retry fork itself always gets the full two-run regime — it
-        // exists to adjudicate, so starving it of the warm rerun would
-        // buy a cheaper but weaker number.
-        val heavyCase = heavyDrifted(t, isolated = g.size == 1)
-        def retryHeadroom(warm: Double): Boolean =
-          (System.nanoTime() - t0) / 1e9 + forkBootS + 2.2 * warm <
-            budgetS * 0.95
-        if (heavyCase && heavyRetries < heavyRetryCap &&
-            retryHeadroom(t.warm)) {
-          heavyRetries += 1
-          System.err.println(f"[bench] ${t.name} heavy warm ${t.warm}%.3f s " +
-            s"looks drifted (prior ${t.prior.getOrElse(-1.0)}, runs " +
-            s"${t.runs.mkString("[", ",", "]")}); re-measuring in a private fork")
-          forkGroup(Seq(t.name), prior, singleRun = false, prewarm).headOption match {
-            case Some(solo) if !solo.failed && solo.warm <= t.warm =>
-              // adopt the clean fork; the displaced number rides along
-              if (g.size > 1)
-                solo.copy(batchWarm = Some(t.warm),
-                  tiebreak = Some((solo.tiebreak.toSeq :+ "heavy_drift")
-                    .mkString("+")))
-              else
-                solo.copy(otherForkWarm = Some(t.warm),
-                  tiebreak = Some((solo.tiebreak.toSeq :+ "heavy_drift")
-                    .mkString("+")))
-            case Some(solo) if !solo.failed =>
-              // the private re-fork CONFIRMED the first number (came back
-              // slower): keep the first measurement, record the retry
-              // evidence instead of discarding it — warm/cold/runs still
-              // describe the first fork here
-              t.copy(otherForkWarm = Some(solo.warm),
-                tiebreak = Some((t.tiebreak.toSeq :+ "heavy_drift_confirmed")
-                  .mkString("+")))
-            case _ => t // retry fork died: keep the first measurement
-          }
-        } else if (g.size > 1 && drifted(t)) {
-          // batched entry with a drift signature: queue it for the shared
-          // budget's most-expensive-first pass after the loop (a heavy
-          // entry only lands here when the heavy budget is spent — the
-          // drift budget is then its fallback, as before round 19).
-          // Queued even when this entry ran in austerity single-run mode:
-          // whether the retry can afford to run is decided AT SPEND TIME
-          // from the actual remaining budget, not pre-denied here.
-          deferredDrift += ((t, prewarm)); t
-        } else t
-      }
+    groups.zipWithIndex.foreach { case ((g, isCensus), gi) =>
+      val first = forkGroup(g, singleRun)
+      // the first member of the census fork pays the residual one-time
+      // streaming cost (~0.3-1.0 s): adjudicate a census regression against
+      // its position before suspecting the plan
+      val (missing, ok) = first.map(t =>
+        if (isCensus) t.copy(censusPos = Some(g.indexOf(t.name) + 1)) else t)
+        .partition(_.failed)
       buf ++= ok
-      // retry pass: a batch-mate's crash or a transient failure must not
-      // condemn an entry without giving it a clean private JVM once
+      // a batch-mate's crash or a transient failure must not condemn an
+      // entry without giving it a clean private JVM once
       buf ++= (if (g.size > 1 && missing.nonEmpty) {
         System.err.println(s"[bench] retrying ${missing.size} missing " +
           s"entries individually: ${missing.map(_.name).mkString(",")}")
-        missing.flatMap(t => forkGroup(Seq(t.name), prior, singleRun, prewarm))
+        missing.flatMap(t => forkGroup(Seq(t.name), singleRun))
       } else missing)
       done += g.size
       val wall = (System.nanoTime() - t0) / 1e9
       System.err.println(
         f"[bench] cumulative wall $wall%.1f s after $done/${names.size} entries")
-      // Austerity switch (round-20 verdict #2): the old FIXED trigger
-      // (wall > 60% of budget) fired on the driver's 32-core run while
-      // ~800 s of genuine headroom remained — 10 tail entries kept
-      // flagged-drifted single-run numbers that inflated the board by
-      // ~5-8 s. Switch on a PROJECTION instead: price every remaining
-      // fork (boot + ~2.2x each member's committed prior + slop for
-      // tie-break runs), apply a 1.25 safety factor, and degrade only
-      // when the projected finish would actually overrun the budget.
-      // Entries with no prior are priced at 1 s (they sort first, so the
-      // projection over them matters least by the time wall is large).
       if (!singleRun) {
+        // each remaining fork: boot + its members' runs, priced at cold
+        // ~1.2x warm plus two warm runs; entries with no prior at 1 s
         val projected = groups.drop(gi + 1).map { case (rg, _) =>
-          forkBootS + rg.map(n => 2.2 * prior.getOrElse(n, 1.0) + 0.3).sum
+          ForkBootS + rg.map(n => 3.2 * prior.getOrElse(n, 1.0) + 0.3).sum
         }.sum
-        if (wall + 1.25 * projected > budgetS) {
+        if (singleRunFrom(wall, projected, budgetS)) {
           singleRun = true
-          System.err.println(f"[bench] wall $wall%.1f s + projected " +
-            f"${projected}%.1f s (x1.25) exceeds budget $budgetS%.0f s - " +
+          System.err.println(f"[bench] wall $wall%.1f s, projected " +
+            f"$projected%.1f s (x1.25), budget $budgetS%.0f s - " +
             "remaining forks switch to single-run mode")
         }
       }
     }
-    // Spend the shared batch-drift budget MOST-EXPENSIVE-FIRST over the
-    // queued candidates (round-19 verdict #1b): the entries where a
-    // drifted number costs the board most adjudicate first, and only then
-    // the cheap tail — under contention the 11.94 s case wins the budget
-    // over the 1.3 s ones instead of losing it to batch arrival order.
-    val driftRetried = scala.collection.mutable.Map.empty[String, Timing]
-    val driftQueue = deferredDrift.sortBy { case (t, _) => -t.warm }
-    driftQueue.foreach { case (t, prewarm) =>
-      // Spend gated on the ACTUAL remaining budget, not the austerity
-      // flag (round-20 verdict #2: the r20 driver run printed "drift
-      // budget is spent (0/8 used, singleRun=true)" for 10 tail entries —
-      // a misleading message for a retry denied by a mode bit while the
-      // budget had ~800 s of real headroom). Each message now names the
-      // true reason: cap exhausted vs no wall-clock headroom.
-      val wallNow = (System.nanoTime() - t0) / 1e9
-      val retryCost = forkBootS + 2.2 * t.warm
-      if (driftRetries >= driftRetryCap) {
-        System.err.println(f"[bench] ${t.name} batch warm ${t.warm}%.3f s " +
-          "looks drifted but the drift retry cap is spent " +
-          s"(${driftRetries}/$driftRetryCap used)")
-      } else if (wallNow + retryCost > budgetS * 0.95) {
-        System.err.println(f"[bench] ${t.name} batch warm ${t.warm}%.3f s " +
-          f"looks drifted but wall $wallNow%.1f s leaves no headroom for " +
-          f"a ~$retryCost%.0f s retry inside budget $budgetS%.0f s")
-      } else {
-        driftRetries += 1
-        System.err.println(f"[bench] ${t.name} batch warm ${t.warm}%.3f s " +
-          s"looks drifted (prior ${t.prior.getOrElse(-1.0)}, runs " +
-          s"${t.runs.mkString("[", ",", "]")}); re-measuring in a private fork")
-        forkGroup(Seq(t.name), prior, singleRun = false, prewarm).headOption match {
-          case Some(solo) if !solo.failed && solo.warm <= t.warm =>
-            // adopt the clean fork; the polluted shared-JVM number rides
-            // along as batch_warm
-            driftRetried(t.name) = solo.copy(batchWarm = Some(t.warm),
-              tiebreak = Some((solo.tiebreak.toSeq :+ "batch_drift")
-                .mkString("+")))
-          case Some(solo) if !solo.failed =>
-            // the fork CONFIRMED the batch number: keep it, record the
-            // fork's warm as the retry evidence
-            driftRetried(t.name) = t.copy(soloWarm = Some(solo.warm),
-              tiebreak = Some((t.tiebreak.toSeq :+ "batch_drift_confirmed")
-                .mkString("+")))
-          case _ => () // retry fork died: keep the first measurement
-        }
-      }
-    }
-    // the artifact declares its own blind spots (round-16 verdict #1c):
-    // how many entries were measured in the degraded single-run regime
-    // (a rescued entry — single_run+gt_1.5x_prior — counts too: its warm
-    // is min-of-2 but still came from the austerity window)
-    val finalTimings = buf.map(t => driftRetried.getOrElse(t.name, t))
-    val nSingleRun =
-      finalTimings.count(_.tiebreak.exists(_.contains("single_run")))
     runStats = Some(RunStats((System.nanoTime() - t0) / 1e9, budgetS,
-      solo.size, small.size, census.size, driftRetries, heavyRetries,
-      nSingleRun))
+      solo.size, small.size, census.size))
     // restore the caller's name order so the artifact stays diff-stable
-    val byName = finalTimings.map(t => t.name -> t).toMap
+    val byName = buf.map(t => t.name -> t).toMap
     names.map(byName)
   }
 
   /** The one-line JSON result: the total first, then `body` (the full or
-    * compact per-query sections), then the scale factor and the `local[N]`
-    * width the board ran at, so the artifact states its own CPU count, and
-    * the number of drift-retry forks the run spent. */
+    * compact per-query sections), then the scale factor, the `local[N]`
+    * width the board ran at, `n_drift_retries` (always 0 — the key stays
+    * for readers of older boards) and the median per-entry warm/prior ratio
+    * (`null` without priors). */
   private[graft] def resultLine(totalStr: String, body: String, sfDir: String,
-                                cpus: Int, nDriftRetries: Int): String =
+                                cpus: Int, priorRatio: Option[Double]): String =
     s"""{"metric":"total","value":$totalStr,"unit":"sec",$body,"sf":"$sfDir","cpus":$cpus,""" +
-      s""""n_drift_retries":$nDriftRetries}"""
+      s""""n_drift_retries":0,"median_prior_ratio":${ratioJson(priorRatio)}}"""
+
+  private def ratioJson(r: Option[Double]): String =
+    r.map(v => f"$v%.3f").getOrElse("null")
 
   private def jsonMap(entries: Seq[(String, Double)]): String =
     entries.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
@@ -771,65 +384,33 @@ object Bench {
   /** Full per-query record — the artifact the bounded tail cannot clip. */
   private def writeDetail(path: String, results: Seq[Timing],
                           total: Double, sfDir: String): Unit = {
-    // Stall self-declaration (round-19 verdict #4): r19's artifact forced
-    // the judge to infer machine stalls from raw run vectors (a 53.7 s
-    // run-2 on a 3.9 s entry). An entry whose observed numbers — its own
-    // runs plus any displaced/retry-fork warms — span more than
-    // STALL_RATIO x (default 5x) AND more than MIN_SPREAD seconds
-    // (default 2 s, so a tiny entry's cold-vs-warm codegen gap can't
-    // masquerade as a machine stall) carries `stall: true`, and the header
-    // counts them, the same self-identification n_single_run gives the
-    // austerity regime.
-    val stallRatio = sys.env.getOrElse("SPARK_GRAFT_STALL_RATIO", "5").toDouble
-    val stallSpreadS =
-      sys.env.getOrElse("SPARK_GRAFT_STALL_MIN_SPREAD_S", "2").toDouble
-    def stalled(t: Timing): Boolean = {
-      val vals = t.runs ++ t.batchWarm.toSeq ++ t.soloWarm.toSeq ++
-        t.otherForkWarm.toSeq
-      vals.size >= 2 && vals.min > 0 &&
-        vals.max > vals.min * stallRatio && vals.max - vals.min > stallSpreadS
-    }
-    val nStalled = results.count(t => !t.failed && stalled(t))
+    def stalled(t: Timing): Boolean =
+      !t.failed && t.runs.size >= 2 && t.runs.min > 0 &&
+        t.runs.max > t.runs.min * StallRatio &&
+        t.runs.max - t.runs.min > StallMinSpreadS
+    val nStalled = results.count(stalled)
+    val nSingleRun = results.count(_.tiebreak.contains("single_run"))
     val rows = results.map { t =>
       val runs = t.runs.map(v => f"$v%.3f").mkString("[", ", ", "]")
       val cache = t.cacheHit.map(h => s""", "cache_hit": $h""").getOrElse("")
       val prior = t.prior.map(p => f""", "prior_warm": $p%.3f""").getOrElse("")
-      // which run index the warm number came from + why extra runs fired
-      // (round-10 verdict #7: adjudicate confirmed-regression vs rescued-
-      // noise from the artifact alone)
       val taken = if (t.runs.isEmpty) ""
         else s""", "run_taken": ${t.runs.indexOf(t.runs.min) + 1}"""
       val tb = t.tiebreak.map(r => s""", "tiebreak": "$r"""").getOrElse("")
-      // batch_warm = the polluted shared-JVM number an in-run drift retry
-      // replaced (warm/cold/runs then describe the clean private fork);
-      // solo_warm = the private fork's number when the retry CONFIRMED the
-      // batch measurement instead (warm/cold/runs stay the batch numbers)
-      // other_fork_warm = the evidence number from a HEAVY entry's
-      // mandatory drift re-fork (warm>4s and >1.35x prior — round-18
-      // verdict #1): the displaced first-fork warm when the retry was
-      // adopted (tiebreak: heavy_drift), or the retry fork's warm when the
-      // first number was confirmed (tiebreak: heavy_drift_confirmed)
-      val bw = t.batchWarm.map(b => f""", "batch_warm": $b%.3f""").getOrElse("") +
-        t.soloWarm.map(v => f""", "solo_warm": $v%.3f""").getOrElse("") +
-        t.otherForkWarm.map(v => f""", "other_fork_warm": $v%.3f""").getOrElse("")
-      // position in the census family's shared fork (1 = first): the
-      // first-position member pays the residual one-time streaming cost
-      // (~0.3-1.0 s, round-18 interleaved A/B) - adjudicate a census
-      // regression against its position before suspecting the plan
       val cp = t.censusPos.map(x => s""", "census_pos": $x""").getOrElse("")
-      // the in-run stall flag — see `stalled` above
-      val st = if (!t.failed && stalled(t)) s""", "stall": true""" else ""
+      val st = if (stalled(t)) s""", "stall": true""" else ""
       if (t.failed)
         f"""  "${t.name}": {"failed": true, "elapsed": ${t.warm}%.3f, "runs": $runs}"""
       else
-        f"""  "${t.name}": {"cold": ${t.cold}%.3f, "warm": ${t.warm}%.3f, "runs": $runs$taken$tb$bw$cp$st$cache$prior}"""
+        f"""  "${t.name}": {"cold": ${t.cold}%.3f, "warm": ${t.warm}%.3f, "runs": $runs$taken$tb$cp$st$cache$prior}"""
     }
     val header = runStats.map(s =>
-      f""" "wall_s": ${s.wallS}%.1f, "budget_s": ${s.budgetS}%.0f, "headroom_s": ${s.budgetS - s.wallS}%.1f, "n_isolated": ${s.nIsolated}, "n_batched": ${s.nBatched}, "n_census_shared": ${s.nCensusShared}, "n_drift_retries": ${s.nDriftRetries}, "n_heavy_retries": ${s.nHeavyRetries}, "n_single_run": ${s.nSingleRun}, "n_stalled": $nStalled,
+      f""" "wall_s": ${s.wallS}%.1f, "budget_s": ${s.budgetS}%.0f, "headroom_s": ${s.budgetS - s.wallS}%.1f, "n_isolated": ${s.nIsolated}, "n_batched": ${s.nBatched}, "n_census_shared": ${s.nCensusShared}, "n_single_run": $nSingleRun, "n_stalled": $nStalled,
          |""".stripMargin).getOrElse("")
     val json =
       f"""{"metric": "total", "value": $total%.3f, "unit": "sec",
-         |$header "methodology": "tiered forked JVMs: streaming/heavy entries get a private fork (the four p-census stream entries share ONE fork, amortizing the one-time streaming machinery the same way batches amortize boot), the rest run in shared-fork batches (default 24/JVM) so ~11 s of fork overhead is paid per batch, not per query; within a JVM warm = min of runs (run_taken = its 1-based index), cold = first run; a 3rd run tie-breaks when run2 >= run1 (tiebreak: warm_ge_cold), and one more when warm > 1.5x prior_warm, the committed prior round's warm, or > 1.35x prior for entries over 4 s (tiebreak: gt_1.5x_prior); a batched entry whose warm still exceeds 1.5x prior_warm or whose runs degrade monotonically queues for the shared drift budget, which is spent MOST-EXPENSIVE-FIRST after the measuring pass — under contention the board's worst drifted number wins the budget instead of losing it to batch arrival order (tiebreak: batch_drift when the clean private fork is adopted, its displaced shared-JVM number kept as batch_warm; tiebreak: batch_drift_confirmed when the fork came back slower, the batch numbers kept and the fork's warm recorded as solo_warm); any entry — isolated, census-shared, AND batched — whose warm exceeds 4 s AND its heavy ratio vs prior_warm (1.2x for isolated entries, whose two prior rounds of near-misses calibrated the trigger; 1.35x for shared-JVM members, which also carry the batch-drift defenses) earns a MANDATORY private re-fork from its OWN budget (tiebreak: heavy_drift when the retry is adopted — the displaced number rides as batch_warm for a shared-JVM first measurement, other_fork_warm for a private one; heavy_drift_confirmed when the first number stands, the retry fork's warm as other_fork_warm) so the board's most expensive rows can never keep an unadjudicated drifted number, whichever regime they ran in; batches are ordered by DESCENDING prior_warm (new entries first) so a budget squeeze lands on the cheap tail; remaining entries run once (tiebreak: single_run; n_single_run in this header counts them) only when a projection — boot + ~2.2x committed priors per remaining fork, x1.25 safety — says two-run mode would overrun the wall budget (the round-20 fixed 60%% trigger degraded runs that had hundreds of seconds of real headroom), a single run exceeding 1.5x prior_warm still earns one rescue run (tiebreak: single_run+gt_1.5x_prior, warm = min of the two) so austerity never records an obvious fork-boot artifact as warm, and retry spending is gated on the budget actually remaining at spend time, not on the austerity bit; stall: true marks an entry whose observed numbers (runs + displaced/retry warms) span >5x AND >2 s — an in-run machine stall self-identified in the artifact (n_stalled counts them) instead of left for the reader to infer from run vectors; cache_hit = this run served every FixtureCache lookup from the persisted parquet; census_pos = the member's run position inside the census family's shared fork (position 1 carries ~0.3-1.0 s of residual one-time streaming cost — round-18 interleaved A/B — so adjudicate a census regression against its position first); raw per-run times in `runs`",
+         |$header "median_prior_ratio": ${ratioJson(medianPriorRatio(results))},
+         | "methodology": "forked JVMs: the four census stream entries share one fork, the other stream entries and entries whose prior_warm exceeds 4 s get a private fork, the rest run in shared forks of 24 in descending prior_warm order; every entry runs 3 times in its fork, cold = run 1, warm = min of the runs (run_taken = its 1-based index); when the wall clock plus the projected cost of the remaining forks (x1.25) would overrun budget_s, or the wall clock passes 90%% of it, the remaining forks run each entry once (tiebreak: single_run, counted in n_single_run); an entry missing from a batch fork's output is retried once in a private fork before it counts as failed; stall: true marks runs spanning >5x and >2 s; prior_warm = the committed board's warm, median_prior_ratio = the median of warm / prior_warm; cache_hit = every FixtureCache lookup was served from the persisted parquet; census_pos = the member's position in the census fork; raw per-run times in runs",
          | "sf": "$sfDir",
          | "queries": {
          |${rows.mkString(",\n")}
@@ -845,32 +426,15 @@ object Bench {
     // Optional comma-separated subset for local iteration, e.g.
     //   SPARK_GRAFT_ONLY=q4_join_shuffle,q8_outer_join
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val names0 = SparkEntry.queries.keys.toSeq.sorted
+    val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    // SPARK_GRAFT_ORDER=a,b,c runs the listed entries FIRST in that order
-    // (rest keep their sorted order) — the census-family ordering
-    // permutation knob for interleaved drift A/Bs (round-17 verdict #2);
-    // measurement-harness only, never set by the driver
-    val names = sys.env.get("SPARK_GRAFT_ORDER") match {
-      case Some(o) =>
-        val want = o.split(",").toSeq.filter(names0.contains)
-        want ++ names0.filterNot(want.toSet)
-      case None => names0
-    }
     val isChild = sys.env.get("SPARK_GRAFT_FORKED").contains("1")
     val inline = isChild || sys.env.get("SPARK_GRAFT_NO_FORK").contains("1")
     val detail = sys.env.getOrElse("SPARK_GRAFT_DETAIL", "BENCH_DETAIL.json")
-    // Prior-round warm baseline: a child gets its queries' priors via env
-    // from the parent (`name=warm` pairs); the parent reads the committed
-    // detail file BEFORE this run overwrites it.
+    // Prior-round warm baseline, read by the parent from the committed
+    // detail file BEFORE this run overwrites it; children never need it.
     val prior: Map[String, Double] =
-      if (isChild)
-        sys.env.get("SPARK_GRAFT_PRIOR_WARM").map(_.split(",").toSeq.flatMap {
-          pair => pair.split("=") match {
-            case Array(n, v) => v.toDoubleOption.map(n -> _)
-            case _ => None
-          }
-        }.toMap).getOrElse(Map.empty)
+      if (isChild) Map.empty
       else readPriorWarm(sys.env.getOrElse("SPARK_GRAFT_PRIOR_DETAIL", detail))
     // Queries whose children read the run-level fixture caches: the cdc
     // family, the apply/materialize (w*) entries, the snapshot roundtrip,
@@ -921,8 +485,11 @@ object Bench {
       }
       pw.stop()
     }
-    val results = if (inline) runInline(names, sfDir, cpus, prior)
-                  else runForked(names, prior)
+    val measured =
+      if (inline)
+        runInline(names, sfDir, cpus, sys.env.get("SPARK_GRAFT_SINGLE_RUN").contains("1"))
+      else runForked(names, prior)
+    val results = measured.map(t => t.copy(prior = prior.get(t.name)))
     val (failedQ, okQ) = results.partition(_.failed)
     // Total covers only genuine measurements; failed queries are named on
     // stderr and counted in the JSON line so a broken query can never again
@@ -941,8 +508,8 @@ object Bench {
     val warm = jsonMap(okQ.map(t => t.name -> t.warm))
     val cold = jsonMap(okQ.map(t => t.name -> t.cold))
     val nFailed = s""","n_failed":${failedQ.size}"""
-    // A child's one-query line also carries the raw run times, which the
-    // parent extracts into the detail artifact (variance diagnosability).
+    // A child's line also carries the raw run times, cache hits and the
+    // single-run tag, which the parent extracts into the detail artifact.
     val runsSection =
       if (isChild) {
         val runs = "," + "\"runs\":" + okQ.map(t =>
@@ -960,29 +527,26 @@ object Bench {
         }
         runs + cache + tb
       } else ""
-    val nDriftRetries = runStats.map(_.nDriftRetries).getOrElse(0)
+    val priorRatio = medianPriorRatio(results)
     val full = resultLine(totalStr,
       s""""queries":$warm,"cold":$cold$runsSection$nFailed""", sfDir, cpus.toInt,
-      nDriftRetries)
+      priorRatio)
     // The driver parses the line from a bounded ~2 KB output tail; a line
-    // that outgrows it gets clipped mid-JSON (round 5 lost the total this
-    // way). Rounds 5-7 ALSO failed because sbt's forked-run logger
-    // decorated the line with an "[info] " prefix and appended a
-    // "[success]" banner after it — fixed in build.sbt (outputStrategy :=
-    // StdoutOutput, showSuccess := false) so this println reaches the
-    // driver verbatim as the last stdout line. The compact fallback
-    // keeps the key name "queries" and truncates it to the slowest entries
-    // that fit; full detail always lands in BENCH_DETAIL.json.
-    // A child always prints the full line: the PARENT reads its entire
-    // stdout (no bounded tail there) and needs every batch member's
-    // sections; only the parent's own final line is tail-bounded.
+    // that outgrows it gets clipped mid-JSON. sbt's forked-run logger must
+    // not decorate it either (build.sbt: outputStrategy := StdoutOutput,
+    // showSuccess := false), so this println reaches the driver verbatim as
+    // the last stdout line. The compact fallback keeps the key name
+    // "queries" and truncates it to the slowest entries that fit; full
+    // detail always lands in BENCH_DETAIL.json. A child always prints the
+    // full line: the PARENT reads its entire stdout and needs every batch
+    // member's sections; only the parent's own final line is tail-bounded.
     val line =
       if (isChild || full.length <= 1400) full
       else {
         val slowest = jsonMap(okQ.sortBy(-_.warm).take(12).map(t => t.name -> t.warm))
         resultLine(totalStr,
           s""""n_queries":${results.size}$nFailed,"queries":$slowest,"detail":"BENCH_DETAIL.json"""",
-          sfDir, cpus.toInt, nDriftRetries)
+          sfDir, cpus.toInt, priorRatio)
       }
     println(line)
     Console.out.flush()

@@ -3,20 +3,81 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench's one-line JSON result is parsed by other tools: keys are only
-  * ever added, never renamed or reordered. */
+  * ever added, never renamed or reordered. The measurement policy is pinned
+  * against a fake runner. */
 class BenchSpec extends AnyFunSuite {
 
   test("result line keeps every existing key in place and states its cpus") {
     val full = Bench.resultLine("12.345",
-      """"queries":{"q1":1.000},"cold":{"q1":2.000},"n_failed":0""", "/data/sf0.1", 8, 3)
+      """"queries":{"q1":1.000},"cold":{"q1":2.000},"n_failed":0""", "/data/sf0.1", 8,
+      Some(1.0234))
     assert(full === """{"metric":"total","value":12.345,"unit":"sec",""" +
       """"queries":{"q1":1.000},"cold":{"q1":2.000},"n_failed":0,""" +
-      """"sf":"/data/sf0.1","cpus":8,"n_drift_retries":3}""")
+      """"sf":"/data/sf0.1","cpus":8,"n_drift_retries":0,"median_prior_ratio":1.023}""")
     val compact = Bench.resultLine("12.345",
       """"n_queries":236,"n_failed":0,"queries":{"q1":1.000},"detail":"BENCH_DETAIL.json"""",
-      "/data/sf0.1", 32, 0)
+      "/data/sf0.1", 32, None)
     assert(compact.startsWith("""{"metric":"total","value":12.345,"unit":"sec","n_queries":236,"""))
     assert(compact.endsWith(
-      """"detail":"BENCH_DETAIL.json","sf":"/data/sf0.1","cpus":32,"n_drift_retries":0}"""))
+      """"detail":"BENCH_DETAIL.json","sf":"/data/sf0.1","cpus":32,"n_drift_retries":0,""" +
+        """"median_prior_ratio":null}"""))
+  }
+
+  /** A runner that replays `results` in order and counts its calls. */
+  private final class FakeRunner(results: (Double, Boolean)*) {
+    private val it = results.iterator
+    var calls = 0
+    def apply(): (Double, Boolean) = { calls += 1; it.next() }
+  }
+
+  test("a healthy entry takes exactly three runs: cold = run 1, warm = min") {
+    val r = new FakeRunner((2.0, true), (0.9, true), (1.1, true), (0.1, true))
+    val t = Bench.measure("q", singleRun = false)(() => r())
+    assert(r.calls === 3)
+    assert(t.runs === Seq(2.0, 0.9, 1.1))
+    assert(t.cold === 2.0 && t.warm === 0.9 && !t.failed && t.tiebreak.isEmpty)
+  }
+
+  test("a failing run 1 fails the entry and takes no further runs") {
+    val r = new FakeRunner((0.3, false), (1.0, true), (1.0, true))
+    val t = Bench.measure("q", singleRun = false)(() => r())
+    assert(r.calls === 1)
+    assert(t.failed && t.runs === Seq(0.3))
+  }
+
+  test("a failing later run keeps the successful runs") {
+    val r = new FakeRunner((2.0, true), (1.5, true), (0.1, false))
+    val t = Bench.measure("q", singleRun = false)(() => r())
+    assert(r.calls === 3)
+    assert(!t.failed && t.runs === Seq(2.0, 1.5) && t.warm === 1.5 && t.cold === 2.0)
+  }
+
+  test("single-run mode takes one run, tagged single_run") {
+    val r = new FakeRunner((2.0, true), (1.0, true), (1.0, true))
+    val t = Bench.measure("q", singleRun = true)(() => r())
+    assert(r.calls === 1)
+    assert(t.runs === Seq(2.0) && t.warm === 2.0 && t.tiebreak === Some("single_run"))
+  }
+
+  test("past 90% of the budget the remaining forks run single-run, whatever the projection") {
+    assert(Bench.singleRunFrom(wallS = 0.91 * 2100, projectedS = 0.0, budgetS = 2100))
+    assert(!Bench.singleRunFrom(wallS = 0.89 * 2100, projectedS = 0.0, budgetS = 2100))
+    // the projection alone still trips it early: 100 + 1.25 * 1700 > 2100
+    assert(Bench.singleRunFrom(wallS = 100, projectedS = 1700, budgetS = 2100))
+    assert(!Bench.singleRunFrom(wallS = 100, projectedS = 1000, budgetS = 2100))
+  }
+
+  test("median_prior_ratio skips failed and no-prior entries") {
+    def ok(n: String, warm: Double, prior: Option[Double]) =
+      Bench.Timing(n, warm, warm, runs = Seq(warm), prior = prior)
+    val results = Seq(
+      ok("a", 1.0, Some(1.0)),   // 1.0
+      ok("b", 3.0, Some(1.0)),   // 3.0
+      ok("c", 1.0, Some(2.0)),   // 0.5
+      ok("d", 50.0, None),       // no prior: skipped
+      Bench.Timing("e", 90.0, 90.0, failed = true, prior = Some(1.0))) // failed: skipped
+    assert(Bench.medianPriorRatio(results) === Some(1.0))
+    assert(Bench.medianPriorRatio(results :+ ok("f", 4.0, Some(1.0))) === Some(2.0))
+    assert(Bench.medianPriorRatio(results.filter(_.prior.isEmpty)) === None)
   }
 }

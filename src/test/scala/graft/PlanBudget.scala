@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   * sf0.001 tables, which is deterministic given the committed testdata and
   * session conf; fixture-backed entries always plan against the fixture's
   * persisted parquet (FixtureCache materializes during build), so warm and
-  * cold sessions produce the same shape. [[Bench.streamBuilderEntries]] are
+  * cold sessions produce the same shape. [[Bench.streamEntries]] are
   * skipped — their builders drain streaming censuses (already paid once in
   * RegistrationSpec) and their returned frame is a tiny census read whose
   * shape is pinned where it matters, in StreamingSpec.
@@ -62,7 +62,7 @@ object PlanBudget {
             dir: String = "/root/testdata/sf0.001"): Map[String, Counts] = {
     spark.catalog.clearCache()
     SparkEntry.queries.toSeq
-      .filterNot { case (name, _) => Bench.streamBuilderEntries(name) }
+      .filterNot { case (name, _) => Bench.streamEntries(name) }
       .map { case (name, fn) =>
         name -> counts(fn(spark, dir).queryExecution.executedPlan.toString)
       }.toMap

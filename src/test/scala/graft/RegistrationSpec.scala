@@ -52,23 +52,36 @@ class RegistrationSpec extends SparkSpec {
         s"$oracled oracled + ${declared.size} declared rows-only")
   }
 
+  /** Group 1 of every match of `literal` in the main sources. */
+  private def mainLiterals(literal: scala.util.matching.Regex): Set[String] = {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+    val files = java.nio.file.Files.walk(root)
+    try files.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(f => literal.findAllMatchIn(
+        new String(java.nio.file.Files.readAllBytes(f), "UTF-8")).map(_.group(1)))
+      .toSet
+    finally files.close()
+  }
+
   test("main source reads exactly the three cross-validation conf switches") {
     // Every `graft.*` session conf in main is a second code path. The three
     // kept ones are the reference twins specs compare against (DedupSpec,
     // ApproxSpec); a new one must either earn a spec or not land. Literals
     // with a capitalized segment name a class (`"graft.Bench"`), not a key.
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
-    val literal = "\"graft\\.([^\"]*)\"".r
-    val files = java.nio.file.Files.walk(root)
-    val keys = try files.iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .flatMap(f => literal.findAllMatchIn(
-        new String(java.nio.file.Files.readAllBytes(f), "UTF-8")).map(_.group(1)))
+    val keys = mainLiterals("\"graft\\.([^\"]*)\"".r)
       .filterNot(_.split('.').exists(_.headOption.exists(_.isUpper)))
-      .toSet
-    finally files.close()
     assert(keys === Set("simhash.impl", "winnow.impl", "x3.spine"))
+  }
+
+  test("main source reads exactly the ten SPARK_GRAFT environment names") {
+    // Every env knob is a second way to run the bench or the fixtures. Bench
+    // reads the driver's inputs plus its parent-to-child FORKED/SINGLE_RUN
+    // signals; FixtureCache reads its bypass. A new knob must replace one.
+    assert(mainLiterals("\"SPARK_GRAFT_([A-Z0-9_]*)\"".r) === Set("SF_DIR",
+      "CPUS", "ONLY", "NO_FORK", "DETAIL", "PRIOR_DETAIL", "BUDGET_S", "FORKED",
+      "SINGLE_RUN", "NO_FIXTURE_CACHE"))
   }
 
   test("no duplicate names across module query maps") {
