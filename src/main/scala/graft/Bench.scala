@@ -85,9 +85,7 @@ object Bench {
     * machinery prewarm), measured ~10-12 s and priced at the high end so the
     * projection errs toward caution. */
   private val ForkBootS = 12.0
-  /** `stall: true` marks an entry whose runs span more than StallRatio x AND
-    * more than StallMinSpreadS seconds (so a tiny entry's cold-vs-warm
-    * codegen gap can't masquerade as a machine stall). */
+  /** `stall: true` thresholds (see [[stalled]]). */
   private val StallRatio = 5.0
   private val StallMinSpreadS = 2.0
 
@@ -129,6 +127,25 @@ object Bench {
   private[graft] def singleRunFrom(wallS: Double, projectedS: Double,
                                    budgetS: Double): Boolean =
     wallS + 1.25 * projectedS > budgetS || wallS > 0.9 * budgetS
+
+  /** Whether an entry's warm runs (2..n) spread like a machine stall. Run 1
+    * carries the fork's one-time codegen and class-loading cost, so it is
+    * not judged: a cold-vs-warm gap is not a stall. */
+  private[graft] def stalled(t: Timing): Boolean = {
+    val warm = t.runs.drop(1)
+    !t.failed && warm.size >= 2 && warm.min > 0 &&
+      warm.max > warm.min * StallRatio && warm.max - warm.min > StallMinSpreadS
+  }
+
+  /** Projected seconds for the remaining forks: boot plus, per member, cold
+    * ~1.2x warm plus two warm runs, its prior scaled by `ratio` (the running
+    * board's median warm / prior, 1.0 until one exists, so a slower host than
+    * the priors' is priced at its own speed); no prior prices at 1 s. */
+  private[graft] def projectedS(remaining: Seq[Seq[String]],
+                                prior: Map[String, Double],
+                                ratio: Option[Double]): Double =
+    remaining.map(g => ForkBootS + g.map(n =>
+      3.2 * prior.get(n).map(_ * ratio.getOrElse(1.0)).getOrElse(1.0) + 0.3).sum).sum
 
   /** Median of warm / prior_warm over the non-failed entries that have a
     * prior: the board's per-entry drift against the committed round, immune
@@ -201,7 +218,7 @@ object Bench {
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             false
           }
-        // Release anything the query pinned (persist/localCheckpoint inside
+        // Release anything the query pinned (persist/Materialize inside
         // operators like the LSH signature materialization): leaked blocks
         // would GC-thrash (and warm-start) the next run.
         spark.catalog.clearCache()
@@ -344,11 +361,8 @@ object Bench {
       System.err.println(
         f"[bench] cumulative wall $wall%.1f s after $done/${names.size} entries")
       if (!singleRun) {
-        // each remaining fork: boot + its members' runs, priced at cold
-        // ~1.2x warm plus two warm runs; entries with no prior at 1 s
-        val projected = groups.drop(gi + 1).map { case (rg, _) =>
-          ForkBootS + rg.map(n => 3.2 * prior.getOrElse(n, 1.0) + 0.3).sum
-        }.sum
+        val ratio = medianPriorRatio(buf.map(t => t.copy(prior = prior.get(t.name))).toSeq)
+        val projected = projectedS(groups.drop(gi + 1).map(_._1), prior, ratio)
         if (singleRunFrom(wall, projected, budgetS)) {
           singleRun = true
           System.err.println(f"[bench] wall $wall%.1f s, projected " +
@@ -384,10 +398,6 @@ object Bench {
   /** Full per-query record — the artifact the bounded tail cannot clip. */
   private def writeDetail(path: String, results: Seq[Timing],
                           total: Double, sfDir: String): Unit = {
-    def stalled(t: Timing): Boolean =
-      !t.failed && t.runs.size >= 2 && t.runs.min > 0 &&
-        t.runs.max > t.runs.min * StallRatio &&
-        t.runs.max - t.runs.min > StallMinSpreadS
     val nStalled = results.count(stalled)
     val nSingleRun = results.count(_.tiebreak.contains("single_run"))
     val rows = results.map { t =>
@@ -410,7 +420,7 @@ object Bench {
     val json =
       f"""{"metric": "total", "value": $total%.3f, "unit": "sec",
          |$header "median_prior_ratio": ${ratioJson(medianPriorRatio(results))},
-         | "methodology": "forked JVMs: the four census stream entries share one fork, the other stream entries and entries whose prior_warm exceeds 4 s get a private fork, the rest run in shared forks of 24 in descending prior_warm order; every entry runs 3 times in its fork, cold = run 1, warm = min of the runs (run_taken = its 1-based index); when the wall clock plus the projected cost of the remaining forks (x1.25) would overrun budget_s, or the wall clock passes 90%% of it, the remaining forks run each entry once (tiebreak: single_run, counted in n_single_run); an entry missing from a batch fork's output is retried once in a private fork before it counts as failed; stall: true marks runs spanning >5x and >2 s; prior_warm = the committed board's warm, median_prior_ratio = the median of warm / prior_warm; cache_hit = every FixtureCache lookup was served from the persisted parquet; census_pos = the member's position in the census fork; raw per-run times in runs",
+         | "methodology": "forked JVMs: the four census stream entries share one fork, the other stream entries and entries whose prior_warm exceeds 4 s get a private fork, the rest run in shared forks of 24 in descending prior_warm order; every entry runs 3 times in its fork, cold = run 1, warm = min of the runs (run_taken = its 1-based index); when the wall clock plus the projected cost of the remaining forks (x1.25, priors scaled by the running median_prior_ratio) would overrun budget_s, or the wall clock passes 90%% of it, the remaining forks run each entry once (tiebreak: single_run, counted in n_single_run); an entry missing from a batch fork's output is retried once in a private fork before it counts as failed; stall: true marks warm runs (2..n) spanning >5x and >2 s; prior_warm = the committed board's warm, median_prior_ratio = the median of warm / prior_warm; cache_hit = every FixtureCache lookup was served from the persisted parquet; census_pos = the member's position in the census fork; raw per-run times in runs",
          | "sf": "$sfDir",
          | "queries": {
          |${rows.mkString(",\n")}

@@ -176,13 +176,6 @@ object CanalJson {
     StructField("created_at", TimestampType),
     StructField("updated_at", TimestampType)))
 
-  val usersSchema: StructType = StructType(Seq(
-    StructField("id", LongType),
-    StructField("username", StringType),
-    StructField("password", StringType),
-    StructField("email", StringType),
-    StructField("created_at", TimestampType)))
-
   val ordersSchema: StructType = StructType(Seq(
     StructField("id", LongType),
     StructField("user_id", LongType),

@@ -1,5 +1,6 @@
 package graft.cdc
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -145,13 +146,10 @@ object CdcApply {
         element_at(col("data"), attr).as("__new"),
         element_at(col("old_data"), attr).as("__old"))
       .distinct()
-    // three delta branches read ONE materialization: without it the
-    // per-branch op filters push into the dedup subtrees, the canonical
-    // plans diverge, exchange reuse dies, and the input is scanned and
-    // identity-shuffled 3× (plan-audited; the maintainJoinAgg pattern).
     // Streaming plans can't checkpoint — there the micro-batch engine owns
     // incrementalization and each branch reads the (small) batch source.
-    val e = if (deduped.isStreaming) deduped else deduped.localCheckpoint(false)
+    val e = if (deduped.isStreaming) deduped
+      else Materialize.once(deduped, "maintainCounts delta branches")
     val plus = e.filter(col("op") === "insert" ||
         (col("op") === "update" && col("__old").isNotNull))
       .select(col("__new").as("g"), lit(1L).as("delta"))
@@ -205,10 +203,9 @@ object CdcApply {
       // the redelivery contract, HashAggregate instead of the SortAggregate
       // that first(__g: string) would force (see maintainCounts)
       .distinct()
-    // one materialization for the three delta branches (see
-    // maintainCounts — pushed filters otherwise triple the scan+shuffle;
-    // streaming plans can't checkpoint, the micro-batch engine owns it)
-    val e = if (deduped.isStreaming) deduped else deduped.localCheckpoint(false)
+    // streaming plans can't checkpoint, the micro-batch engine owns it
+    val e = if (deduped.isStreaming) deduped
+      else Materialize.once(deduped, "maintainSums delta branches")
     val plus = e.filter(col("op") === "insert" || col("op") === "update")
       .select(col("__g").as("g"), col("__m").as("dm"), lit(1L).as("dn"))
     val minusDel = e.filter(col("op") === "delete")
@@ -294,30 +291,24 @@ object CdcApply {
       projected.withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1).drop("__rn", "offset", "es_ms")
     }
-    val fTouch = batchLatest(factEvents, Map(
+    val fTouch = Materialize.once(batchLatest(factEvents, Map(
         "fk_new" -> element_at(col("data"), fkCol).cast("bigint"),
         "m_new" -> element_at(col("data"), measureCol).cast("bigint")))
       .join(factSnap.select(col("pk"), col("fk").as("fk_old"), col("m").as("m_old")),
-        Seq("pk"), "left")
-      .localCheckpoint(false) // two delta branches read one materialization
-    // dMeas and dTouch are each consumed TWICE below (the affected-fk id
-    // union AND a join) — without a materialization the column pruning
-    // pushed into each consumer diverges the canonical subtrees, exchange
-    // reuse dies, and the measure-delta aggregate and the dim batchLatest
-    // (groupBy + window, 2 exchanges each) compute twice (the
-    // maintainCounts multi-branch pathology; round-21 plan audit counted
-    // 16 real exchanges on this entry, the board's worst). One lazy
-    // localCheckpoint each runs them once; batchLatest's window already
+        Seq("pk"), "left"), "maintainJoinAgg fact delta branches")
+    // dMeas and dTouch each feed the affected-fk union AND a join. Round 21's
+    // plan audit counted 16 real exchanges on this entry before they were
+    // materialized, the board's worst. batchLatest's window already
     // precludes streaming through this operator.
-    val dMeas = fTouch.filter(col("fk_old").isNotNull)
+    val dMeas = Materialize.once(fTouch.filter(col("fk_old").isNotNull)
       .select(col("fk_old").as("fk"), (-col("m_old")).as("dm"), lit(-1L).as("dn"))
       .unionByName(fTouch.filter(col("op") =!= "delete")
         .select(col("fk_new").as("fk"), col("m_new").as("dm"), lit(1L).as("dn")))
-      .groupBy("fk").agg(sum("dm").as("dm"), sum("dn").as("dn"))
-      .localCheckpoint(false)
-    val dTouch = batchLatest(dimEvents, Map(
-      "attr_new" -> element_at(col("data"), attrCol)))
-      .localCheckpoint(false)
+      .groupBy("fk").agg(sum("dm").as("dm"), sum("dn").as("dn")),
+      "maintainJoinAgg affected fks + measure join")
+    val dTouch = Materialize.once(batchLatest(dimEvents, Map(
+      "attr_new" -> element_at(col("data"), attrCol))),
+      "maintainJoinAgg affected fks + dim join")
     // every fk whose mass or group could move
     val aff = dMeas.select(col("fk"))
       .unionByName(dTouch.select(col("pk").as("fk"))).distinct()
@@ -513,7 +504,7 @@ object CdcApply {
     // net effect per touched pk: logical-identity dedup, then latest image
     val w = Window.partitionBy(col("pk"))
       .orderBy(col("es_ms").desc, col("offset").desc)
-    val net = events.select(
+    val net = Materialize.once(events.select(
         col("op"), col("offset"), unix_millis(col("timestamp")).as("es_ms"),
         element_at(col("data"), pkCol).cast("bigint").as("pk"),
         element_at(col("data"), groupCol).as("g_new"),
@@ -524,20 +515,19 @@ object CdcApply {
       // SortAggregate (see scd2Project; round-20 plan audit)
       .groupBy(col("op"), col("es_ms"), col("pk"), col("g_new"), col("m_new"))
       .agg(min(col("offset")).as("offset"))
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-      .localCheckpoint(false) // touched-set, post-snapshot, dirty all read it
+      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1),
+      "maintainMax touched set + post-snapshot + dirty groups")
     val touched = net.select(col("pk"))
     // post-batch snapshot: untouched keys pass through, touched keys take
     // their net image (tombstoned keys vanish)
-    val postSnap = preSnap.join(touched, Seq("pk"), "left_anti")
+    val postSnap = Materialize.once(preSnap.join(touched, Seq("pk"), "left_anti")
       .unionByName(net.filter(col("op") =!= "delete")
-        .select(col("pk"), col("g_new").as("g"), col("m_new").as("m")))
-      .localCheckpoint(false)
+        .select(col("pk"), col("g_new").as("g"), col("m_new").as("m"))),
+      "maintainMax post-batch snapshot")
     // dirty groups: every group a touched key sat in before OR sits in now
-    val dirty = preSnap.join(touched, Seq("pk"), "left_semi").select(col("g"))
+    val dirty = Materialize.once(preSnap.join(touched, Seq("pk"), "left_semi").select(col("g"))
       .unionByName(net.filter(col("op") =!= "delete").select(col("g_new").as("g")))
-      .distinct()
-      .localCheckpoint(false) // read by the recompute AND the view anti-join
+      .distinct(), "maintainMax dirty groups: recompute + view anti-join")
     val recomputed = postSnap.join(broadcast(dirty), Seq("g"), "left_semi")
       .groupBy(col("g")).agg(max(col("m")).as("max_measure"))
       .select(col("g").as(groupCol), col("max_measure"))

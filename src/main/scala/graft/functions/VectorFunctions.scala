@@ -41,10 +41,4 @@ object VectorFunctions {
     * node (bit-identical to the interpreted HOF fold it replaces, and the
     * stable tree the L2 arm of `CosineTopKRewrite` matches). */
   def l2Distance(a: Column, b: Column): Column = sqrt(l2sq(a, b))
-
-  /** Sign bit of the projection of `a` onto a fixed hyperplane vector —
-    * one bit of a random-hyperplane LSH signature. `plane` must be a
-    * literal array column of the same dimension. */
-  def hyperplaneBit(a: Column, plane: Column): Column =
-    (dot(a, plane) >= 0).cast("int")
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -144,9 +145,9 @@ object Dedup {
   def exactIncrementalBucketed(indexBucketed: DataFrame, incoming: DataFrame,
                                textCol: String, idCol: String,
                                nBuckets: Int = LshIndexBuckets): DataFrame = {
-    val inc = incoming
-      .select(col(idCol), sha2(col(textCol), 256).as("text_sha"))
-      .localCheckpoint(false) // routing join + bucket collect
+    val inc = Materialize.once(
+      incoming.select(col(idCol), sha2(col(textCol), 256).as("text_sha")),
+      "exact-dedup routing join + bucket collect")
     val seen = IndexMaintenance.pruneToBuckets(indexBucketed,
         inc.select(shaBucket(col("text_sha"), nBuckets).as("shab")), "shab")
       .select(col("text_sha")).distinct().withColumn("in_corpus", lit(1))
@@ -166,14 +167,6 @@ object Dedup {
           i => array_join(slice(words, i, lit(n)), " "))))
       .otherwise(array().cast("array<string>"))
   }
-
-  /** MinHash signature of a shingle-set: for each of `numHashes` seeded
-    * xxhash64 functions, the minimum hash over the set. Deterministic (seeds
-    * are the hash-function index). */
-  def minhashSignature(shingleArr: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { seed =>
-      array_min(transform(shingleArr, sh => xxhash64(lit(seed), sh)))
-    }: _*)
 
   /** Per-document shingle MULTISET counts `(id, shingle, c)` — the shared
     * (and run-level cacheable) INPUT of the shingle-keyed x2 family
@@ -227,19 +220,18 @@ object Dedup {
                                   rowsPerBand: Int = 2,
                                   minJaccard: Double = 0.5): DataFrame = {
     val numHashes = bands * rowsPerBand
-    // One aggregation pass, then a lineage cut: localCheckpoint
-    // materializes the signatures so neither the band projection nor the
-    // two self-join sides can re-inline the minhash tree (Catalyst's
-    // CollapseProject made that mistake 16× over in an earlier revision —
-    // 1887 s at sf0.1).
+    // One aggregation pass, then materialized: un-materialized, Catalyst's
+    // CollapseProject re-inlined the minhash tree into the band projection
+    // and both self-join sides, 16× over in an earlier revision (1887 s at
+    // sf0.1).
     val minCols = (0 until numHashes).map { seed =>
       min(xxhash64(lit(seed), col("shingle"))).as(s"h$seed")
     }
-    val sigs = sh
+    val sigs = Materialize.once(sh
       .groupBy("id").agg(minCols.head, minCols.tail: _*)
       .select(col("id"),
-        array((0 until numHashes).map(i => col(s"h$i")): _*).as("sig"))
-      .localCheckpoint(false)
+        array((0 until numHashes).map(i => col(s"h$i")): _*).as("sig")),
+      "minhash bands + both self-join sides")
 
     val banded = sigs.select(
       col("id"), col("sig"),
@@ -309,10 +301,10 @@ object Dedup {
       min(conv(substring(col(s"m${i / 2}"), 1 + 15 * (i % 2), 15), 16, 10)
         .cast("bigint")).as(s"h$i")
     }
-    val sigs = shRows.groupBy("id")
+    val sigs = Materialize.once(shRows.groupBy("id")
       .agg(minCols.head, minCols.tail: _*)
-      .select(col("id"), array((0 until numHashes).map(i => col(s"h$i")): _*).as("sig"))
-      .localCheckpoint(false)
+      .select(col("id"), array((0 until numHashes).map(i => col(s"h$i")): _*).as("sig")),
+      "portable minhash band rows")
     def bandKey(sig: Column, b: Int): Column =
       concat_ws(",", slice(sig, b * rowsPerBand + 1, rowsPerBand))
     sigs.select(col("id"), col("sig"),
@@ -502,8 +494,8 @@ object Dedup {
                                batchShingles: DataFrame,
                                bands: Int = 8, rowsPerBand: Int = 2,
                                minJaccard: Double = 0.5): DataFrame = {
-    val batchBands = portableBandRowsFromShingles(batchShingles, bands,
-      rowsPerBand).localCheckpoint(false) // feeds the two collision joins
+    val batchBands = Materialize.once(portableBandRowsFromShingles(
+      batchShingles, bands, rowsPerBand), "LSH discovery collision joins")
     discoverVerifiedPairsCore(corpusBands, batchBands, _ => corpusShingles,
       batchShingles, minJaccard)
   }
@@ -519,8 +511,9 @@ object Dedup {
                                        bands: Int = 8, rowsPerBand: Int = 2,
                                        minJaccard: Double = 0.5,
                                        nBuckets: Int = LshIndexBuckets): DataFrame = {
-    val batchBands = portableBandRowsFromShingles(batchShingles, bands,
-      rowsPerBand).localCheckpoint(false) // collision joins + bucket collect
+    val batchBands = Materialize.once(portableBandRowsFromShingles(
+      batchShingles, bands, rowsPerBand),
+      "LSH discovery collision joins + bucket collect")
     // a corpus shingle frame carrying the `idb` layout column is probed
     // PRUNED to the candidate endpoints' buckets; a plain frame is used
     // whole — both sides of verification stay exact either way
@@ -543,7 +536,7 @@ object Dedup {
     // the batch shingle tree (scan + explode + distinct) has two consumers
     // (the band rows the caller built and the verification side's union)
     // and is LEFT UNMATERIALIZED on purpose: an interleaved A/B at sf0.1
-    // measured the localCheckpoint-once variant equal-to-slower (5.1-6.5
+    // measured the materialize-once variant equal-to-slower (5.1-6.5
     // vs 5.3-5.6 s on x10_state_reps, identical hashes) — serializing
     // every shingle string through the block manager costs as much as
     // re-running the cheap parallel tree, the same barrier-vs-reeval trade
@@ -557,30 +550,28 @@ object Dedup {
     val vsBatch = side(batchBands, "id_x")
       .join(side(batchBands, "id_y"), Seq("band", "band_key"))
       .filter(col("id_y") < col("id_x"))
-    val cand = vsCorpus.unionByName(vsBatch)
+    val cand = Materialize.once(vsCorpus.unionByName(vsBatch)
       .select(least(col("id_x"), col("id_y")).as("id_a"),
         greatest(col("id_x"), col("id_y")).as("id_b"))
-      .dropDuplicates("id_a", "id_b") // multi-band collisions verify once
-      .localCheckpoint(false) // feeds the id restriction + the verify join
+      .dropDuplicates("id_a", "id_b"), // multi-band collisions verify once
+      "LSH candidates: id restriction + verify join")
     // exact verification over candidate ids only: the standing shingle
     // artifact is touched through a semi-join on candidate endpoints, so
     // verify work is ∝ Σ_candidates |shingles|, never ∝ |corpus|. When the
     // shingle side will be BUCKET-PRUNED, pruneShinglesToIds adds a
-    // driver-side bucket collect as a THIRD consumer of `ids` — cut the
-    // lineage so the collect and the two semi-joins share one
-    // materialization instead of each re-running the union+distinct over
-    // the checkpointed candidates (round-18 ADVICE); on the default
-    // (unpruned) path the two semi-joins re-run that cheap tree, which the
+    // driver-side bucket collect as a THIRD consumer of `ids`, so it is
+    // materialized then (round-18 ADVICE); on the default (unpruned) path
+    // the two semi-joins re-run that cheap tree, which the
     // barrier-vs-reeval A/Bs consistently favor at this frame size
     val ids0 = cand.select(col("id_a").as("id"))
       .union(cand.select(col("id_b").as("id"))).distinct()
-    val ids = if (checkpointIds) ids0.localCheckpoint(false) else ids0
-    val sh = corpusShinglesFor(ids).select(col("id"), col("shingle"))
+    val ids = if (checkpointIds) Materialize.once(ids0, "LSH verify ids") else ids0
+    val sh = Materialize.once(corpusShinglesFor(ids).select(col("id"), col("shingle"))
       .join(ids, Seq("id"), "left_semi")
       .unionByName(bsh.select(col("id"), col("shingle"))
         .join(ids, Seq("id"), "left_semi"))
-      .select(col("id"), xxhash64(col("shingle")).as("shingle_h"))
-      .localCheckpoint(false) // sizes + both verify sides
+      .select(col("id"), xxhash64(col("shingle")).as("shingle_h")),
+      "LSH verify: set sizes + both verify sides")
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("set_size"))
     cand
       .join(sh.select(col("id").as("id_a"), col("shingle_h")), Seq("id_a"))
@@ -678,14 +669,6 @@ object Dedup {
     IndexMaintenance.compactPartitionedIndex(spark, indexDir, "bkb",
       _.toInt, maxFilesPerBucket)
 
-  /** Repair a band-index compaction interrupted mid-swap
-    * ([[repairDigestIndex]]'s band twin — the crash-recovery half of
-    * [[compactLshBandIndex]]'s contract, spec-pinned in
-    * IndexMaintenanceSpec). */
-  def repairLshBandIndex(spark: org.apache.spark.sql.SparkSession,
-                         indexDir: String): Int =
-    IndexMaintenance.repairPartitionedIndex(spark, indexDir)
-
   /** INCREMENTAL near-dup ingest — X2's analog of [[exactIncremental]]:
     * classify each NEW document against the STANDING corpus's persisted
     * LSH band index and against earlier documents of its own batch,
@@ -764,8 +747,8 @@ object Dedup {
                         textCol: String, idCol: String,
                         shingleSize: Int = 3, bands: Int = 8,
                         rowsPerBand: Int = 2, minAgree: Int = 4): DataFrame = {
-    val batchBands = portableBandRows(batch, textCol, idCol, shingleSize,
-      bands, rowsPerBand).localCheckpoint(false) // feeds both match passes
+    val batchBands = Materialize.once(portableBandRows(batch, textCol, idCol,
+      shingleSize, bands, rowsPerBand), "LSH ingest match passes")
     ingestClassifyCore(corpusBands, batchBands, batch, idCol,
       bands * rowsPerBand, minAgree)
   }
@@ -780,8 +763,8 @@ object Dedup {
                                 shingleSize: Int = 3, bands: Int = 8,
                                 rowsPerBand: Int = 2, minAgree: Int = 4,
                                 nBuckets: Int = LshIndexBuckets): DataFrame = {
-    val batchBands = portableBandRows(batch, textCol, idCol, shingleSize,
-      bands, rowsPerBand).localCheckpoint(false) // match passes + buckets
+    val batchBands = Materialize.once(portableBandRows(batch, textCol, idCol,
+      shingleSize, bands, rowsPerBand), "LSH ingest match passes + bucket collect")
     ingestClassifyCore(
       pruneBandIndexToBatch(indexBucketed, batchBands, nBuckets),
       batchBands, batch, idCol, bands * rowsPerBand, minAgree)
@@ -844,29 +827,12 @@ object Dedup {
       expression(split(textCol, " ")), 64, md5 = false))
   }
 
-  /** SimHash assembly from word-level (id, h) hash rows: one codegen'd
-    * partial/final agg of `nBits` ±1 vote sums, then bit assembly — instead
-    * of `nBits` interpreted `aggregate` lambdas per row; one narrow shuffle
-    * on id. */
-  private def simhashFromWordHashFrame(wordHashes: DataFrame, nBits: Int): DataFrame = {
-    val voteCols = (0 until nBits).map { bit =>
-      sum(when(shiftright(col("h"), bit).bitwiseAND(1) === 1, 1).otherwise(-1))
-        .as(s"v$bit")
-    }
-    wordHashes.groupBy("id").agg(voteCols.head, voteCols.tail: _*)
-      .select(col("id"),
-        (0 until nBits).map { bit =>
-          when(col(s"v$bit") > 0, lit(1L << bit)).otherwise(lit(0L))
-        }.reduce((a, b) => a.bitwiseOR(b)).as("sh"))
-  }
-
   /** The [[graft.functions.SimHashBits]] per-row signature — default since
     * round 15: the whole vote loop runs inside one codegen'd projection, so
     * the word rows never exist and the per-doc vote aggregation's shuffle
     * disappears (the [[graft.functions.WinnowSelect]] lesson applied to the
-    * other per-document-local sketch). `graft.simhash.impl=agg` keeps the
-    * exploded-word aggregate twin; equality between the two is
-    * property-pinned in DedupSpec for both hash families. */
+    * other per-document-local sketch). DedupSpec pins equality with the
+    * exploded-word aggregate twin (test scope) for both hash families. */
   private def simhashExprFrame(df: DataFrame, textCol: String, idCol: String,
                                nBits: Int, md5: Boolean): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge._
@@ -875,32 +841,18 @@ object Dedup {
         expression(split(col(textCol), " ")), nBits, md5)).as("sh"))
   }
 
-  private def useAggSimhash(df: DataFrame): Boolean =
-    df.sparkSession.conf.getOption("graft.simhash.impl").contains("agg")
-
   /** SimHash frame (id, sh) over 64 xxhash64-derived bits. Identical vote
     * semantics to [[simhash]] (duplicates counted, empty text = one
     * empty-string word). */
   def simhashFrame(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    if (useAggSimhash(df))
-      simhashFromWordHashFrame(
-        df.select(col(idCol).as("id"), explode(split(col(textCol), " ")).as("w"))
-          .select(col("id"), xxhash64(col("w")).as("h")),
-        64)
-    else simhashExprFrame(df, textCol, idCol, 64, md5 = false)
+    simhashExprFrame(df, textCol, idCol, 64, md5 = false)
 
   /** PORTABLE SimHash twin: 60 bits from `int(md5(word)[0:15 hex])` — every
     * step (word hash, bit votes, bit assembly) is reproducible in ANSI-ish
     * SQL, so the signature pipeline is oracle-checkable end-to-end, exactly
     * like [[minhashLshPairsPortable]] vs the xxhash64 fast twin. */
   def simhashFramePortable(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    if (useAggSimhash(df))
-      simhashFromWordHashFrame(
-        df.select(col(idCol).as("id"), explode(split(col(textCol), " ")).as("w"))
-          .select(col("id"),
-            conv(substring(md5(col("w")), 1, 15), 16, 10).cast("bigint").as("h")),
-        60)
-    else simhashExprFrame(df, textCol, idCol, 60, md5 = true)
+    simhashExprFrame(df, textCol, idCol, 60, md5 = true)
 
   /** SimHash near-dup candidates: by pigeonhole, Hamming(a,b) ≤ k guarantees
     * at least one of (k+1) bit-blocks is equal — join per block, then verify
@@ -924,7 +876,7 @@ object Dedup {
     // block b spans bits [nBits*b/blocks, nBits*(b+1)/blocks) — widths differ
     // by at most one bit; every bit belongs to exactly one block
     val bounds = (0 to blocks).map(b => nBits * b / blocks)
-    val hashed = frame.localCheckpoint(false)
+    val hashed = Materialize.once(frame, "simhash block join + hamming verify")
     val blocked = hashed.select(col("id"), col("sh"),
       posexplode(array((0 until blocks).map { b =>
         val start = bounds(b)
@@ -967,8 +919,8 @@ object Dedup {
     * in pairs, so an ODD maxIters admits one extra round before the bound
     * check). Every round is one co-partitioned shuffle join (labels⋈edges
     * on the node id) plus a min-aggregate — no driver-side data, and
-    * `localCheckpoint` cuts the lineage so plan size stays constant across
-    * rounds; rounds run TWO per materialization+probe job (round-21, from
+    * materializing each round keeps plan size constant across rounds;
+    * rounds run TWO per materialization+probe job (round-21, from
     * round-20 verdict #3) since only a "no change" probe result carries
     * information, halving the per-CC job-barrier count. At extreme diameters
     * the two-phase large-star/small-star variant (Kiveris et al., "Connected
@@ -980,15 +932,13 @@ object Dedup {
     * `id == cluster_id` is the canonical keeper. */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
                           idB: String = "id_b", maxIters: Int = 20): DataFrame = {
-    // materialize the pair producer once: the symmetrizing union otherwise
-    // computes the (often expensive) upstream plan per branch (kCore rule)
-    val p = pairs.select(col(idA), col(idB)).localCheckpoint(false)
-    val edges = p.select(col(idA).as("src"), col(idB).as("dst"))
-      .union(p.select(col(idB).as("src"), col(idA).as("dst")))
-      .localCheckpoint(false)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint(false)
+    val p = Materialize.once(pairs.select(col(idA), col(idB)),
+      "connected components symmetrizing union")
+    val edges = Materialize.once(p.select(col(idA).as("src"), col(idB).as("dst"))
+      .union(p.select(col(idB).as("src"), col(idA).as("dst"))),
+      "connected components rounds")
+    var labels = Materialize.once(edges.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")), "connected components first round")
     val labelType = labels.schema("label").dataType
     // one min-label propagation round, optionally carrying each node's
     // previous label as `prev` for the convergence probe (the node's own
@@ -1016,15 +966,15 @@ object Dedup {
       // verdict #3): a "labels changed" probe result is information-free —
       // only the final "no change" gates exit — so probing every round
       // paid one job barrier per round for nothing. The mid round's LAZY
-      // localCheckpoint materializes INSIDE the probe job (its persisted
+      // materialization fills INSIDE the probe job (its persisted
       // blocks are shared by the second round's two consumers, so nothing
       // recomputes), halving the per-CC job count; the worst case is one
       // wasted in-job no-op round when convergence lands on the mid round.
       // Fixpoint, exit condition, and returned labels are unchanged: the
       // probe still tests "did the LAST round change anything", which at
       // a fixpoint is false regardless of round parity.
-      val mid = round(labels, withPrev = false).localCheckpoint(false)
-      val next = round(mid, withPrev = true).localCheckpoint(false)
+      val mid = Materialize.once(round(labels, withPrev = false), "CC paired round")
+      val next = Materialize.once(round(mid, withPrev = true), "CC probe + next round")
       // coalesce: sum over an EMPTY label frame (no edges) is null
       converged = next
         .agg(coalesce(sum(when(col("label") < col("prev"), 1L).otherwise(0L)),
@@ -1069,21 +1019,17 @@ object Dedup {
     * shuffles per round; this is the escape hatch its doc points at. */
   def connectedComponentsStar(pairs: DataFrame, idA: String = "id_a",
                               idB: String = "id_b", maxIters: Int = 50): DataFrame = {
-    // materialize the pair producer once: allNodes' two union branches and
-    // the edge normalization would otherwise each recompute the (often
-    // expensive) upstream plan — 3× the producer cost per call (kCore rule)
-    val p = pairs.select(col(idA), col(idB)).localCheckpoint(false)
+    val p = Materialize.once(pairs.select(col(idA), col(idB)),
+      "star CC node union branches + edge normalization")
     // every node mentioned anywhere keeps a row even if its only pair is a
     // self-loop (parity with the hash-min contract)
-    val allNodes = p.select(col(idA).as("id"))
-      .union(p.select(col(idB).as("id"))).distinct()
-      .localCheckpoint(false)
-    var edges = p
+    val allNodes = Materialize.once(p.select(col(idA).as("id"))
+      .union(p.select(col(idB).as("id"))).distinct(), "star CC final label join")
+    var edges = Materialize.once(p
       .filter(col(idA) =!= col(idB))
       .select(least(col(idA), col(idB)).as("small"),
         greatest(col(idA), col(idB)).as("large"))
-      .distinct()
-      .localCheckpoint(false)
+      .distinct(), "star CC fingerprint + rounds")
     // Edge-set fingerprint for the convergence probe: the edge list is
     // DISTINCT, so (count, sum of per-edge hash) identifies the set up to a
     // 64-bit hash-sum collision — replacing the former 2× exceptAll probe
@@ -1115,16 +1061,14 @@ object Dedup {
         .filter(col("small") =!= col("large"))
         .distinct()
       // SMALL-STAR with edges held at the larger endpoint: all of u's
-      // (strictly smaller) neighbors and u itself re-attach to the min.
-      // Checkpointed: both union branches below read it, and un-materialized
-      // the whole large-star window pipeline would run twice per round
-      val ss0 = ls.withColumn("m", min(col("small")).over(Window.partitionBy("large")))
-        .localCheckpoint(false)
-      val next = ss0.select(col("m").as("small"), col("small").as("large"))
+      // (strictly smaller) neighbors and u itself re-attach to the min
+      val ss0 = Materialize.once(
+        ls.withColumn("m", min(col("small")).over(Window.partitionBy("large"))),
+        "star CC small-star union branches")
+      val next = Materialize.once(ss0.select(col("m").as("small"), col("small").as("large"))
         .union(ss0.select(col("m").as("small"), col("large")))
         .filter(col("small") =!= col("large"))
-        .distinct()
-        .localCheckpoint(false)
+        .distinct(), "star CC fingerprint + next round")
       val fp = fingerprint(next)
       converged = fp == prevFp
       prevFp = fp
@@ -1182,9 +1126,9 @@ object Dedup {
     * [[shingleCounts]] sharing rationale for the 5-gram x1 family. */
   def duplicatedNgramFractionFromShingles(shRows: DataFrame): DataFrame = {
     // per-doc-distinct rows, so count-per-hash IS the doc frequency
-    val sh = shRows
-      .select(col("id"), xxhash64(col("shingle")).as("sh_h"))
-      .localCheckpoint(false)
+    val sh = Materialize.once(
+      shRows.select(col("id"), xxhash64(col("shingle")).as("sh_h")),
+      "duplicated-ngram doc frequency + join")
     val docFreq = sh.groupBy("sh_h").agg(count(lit(1)).as("n_docs"))
     sh.join(docFreq, Seq("sh_h"))
       .groupBy(col("id"))
@@ -1215,9 +1159,9 @@ object Dedup {
   /** [[noveltyScores]] over a pre-materialized exploded per-document
     * DISTINCT shingle frame `(id, shingle)`. */
   def noveltyScoresFromShingles(shRows: DataFrame): DataFrame = {
-    val sh = shRows
-      .select(col("id"), xxhash64(col("shingle")).as("sh_h"))
-      .localCheckpoint(false)
+    val sh = Materialize.once(
+      shRows.select(col("id"), xxhash64(col("shingle")).as("sh_h")),
+      "novelty first-seen + join")
     val firstSeen = sh.groupBy("sh_h").agg(min(col("id")).as("first_id"))
     sh.join(firstSeen, Seq("sh_h"))
       .groupBy(col("id"))
@@ -1266,8 +1210,8 @@ object Dedup {
 
   def duplicatedSpans(df: DataFrame, textCol: String, idCol: String,
                       n: Int = 5): DataFrame =
-    duplicatedSpansFromGrams(
-      gramRows(df, textCol, idCol, n).localCheckpoint(false), n)
+    duplicatedSpansFromGrams(Materialize.once(gramRows(df, textCol, idCol, n),
+      "duplicated-span gram census + span scan"), n)
 
   /** [[duplicatedSpans]] over a pre-materialized positional gram frame
     * (see [[gramRows]]) — callers sharing a gram table across the x1
@@ -1310,14 +1254,15 @@ object Dedup {
                             n: Int = 5): DataFrame =
     removeDuplicatedSpansFromGrams(
       df.select(col(idCol).as("id"), split(col(textCol), " ").as("w")),
-      gramRows(df, textCol, idCol, n).localCheckpoint(false), n)
+      Materialize.once(gramRows(df, textCol, idCol, n),
+        "span-removal gram census + span scan"), n)
 
   /** [[removeDuplicatedSpans]] over a pre-materialized positional gram
     * frame plus the live word arrays `(id, w)` (the rebuild side — cheap
     * per-row splits that stay derived from the source). */
   def removeDuplicatedSpansFromGrams(wordRows: DataFrame, grams: DataFrame,
                                      n: Int): DataFrame = {
-    val words = wordRows.localCheckpoint(false) // rebuild + n_words share it
+    val words = Materialize.once(wordRows, "span-removal rebuild + n_words")
     val dup = grams.select(col("gram"), col("id")).distinct()
       .groupBy("gram").agg(count(lit(1)).as("n_docs"))
       .filter(col("n_docs") >= 2)
@@ -1422,13 +1367,11 @@ object Dedup {
     * `(id, shingle)` — see [[shingleCounts]]. */
   def ngramJaccardPairsFromShingles(shRows: DataFrame,
                                     minJaccard: Double = 0.5): DataFrame = {
-    // localCheckpoint so the three consumers (sizes + both join sides)
-    // don't re-derive the shingle rows; join on the 8-byte shingle hash,
-    // not the string — the inverted-index shuffle carries fixed-width keys
-    // (collisions: ~n²/2⁶⁴, negligible)
-    val sh = shRows
-      .select(col("id"), xxhash64(col("shingle")).as("shingle_h"))
-      .localCheckpoint(false)
+    // join on the 8-byte shingle hash, not the string — the inverted-index
+    // shuffle carries fixed-width keys (collisions: ~n²/2⁶⁴, negligible)
+    val sh = Materialize.once(
+      shRows.select(col("id"), xxhash64(col("shingle")).as("shingle_h")),
+      "jaccard set sizes + both join sides")
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("set_size"))
     val a = sh.select(col("shingle_h"), col("id").as("id_a"))
     val b = sh.select(col("shingle_h"), col("id").as("id_b"))
@@ -1465,9 +1408,9 @@ object Dedup {
     * `(id, shingle)` — see [[shingleCounts]]. */
   def containmentPairsFromShingles(shRows: DataFrame,
                                    minPpm: Long = 500000L): DataFrame = {
-    val sh = shRows
-      .select(col("id"), xxhash64(col("shingle")).as("shingle_h"))
-      .localCheckpoint(false)
+    val sh = Materialize.once(
+      shRows.select(col("id"), xxhash64(col("shingle")).as("shingle_h")),
+      "containment set sizes + both join sides")
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("set_size"))
     val a = sh.select(col("shingle_h"), col("id").as("id_a"))
     val b = sh.select(col("shingle_h"), col("id").as("id_b"))
@@ -1524,10 +1467,10 @@ object Dedup {
     // re-group by the 8-byte hash so a (vanishingly unlikely) 64-bit
     // shingle collision merges counts exactly as the text form's
     // groupBy(id, xxhash64) did — value-identical either way
-    val tf = shCounts
+    val tf = Materialize.once(shCounts
       .select(col("id"), xxhash64(col("shingle")).as("sh"), col("c"))
-      .groupBy("id", "sh").agg(sum(col("c")).as("c"))
-      .localCheckpoint(false) // df census + norms + index join share one pass
+      .groupBy("id", "sh").agg(sum(col("c")).as("c")),
+      "tf-cosine df census + norms + index join")
     val dfs = tf.groupBy("sh").agg(count(lit(1)).as("df"))
     val t = tf.join(dfs, Seq("sh")).filter(col("df") <= dfCap)
     val norms = t.groupBy("id").agg(sum(col("c") * col("c")).as("n2"))
@@ -1645,17 +1588,16 @@ object Dedup {
     * the selected HASH set per window is identical to rightmost-min SWA
     * winnowing, only tied positions differ).
     *
-    * Default physical form (round 15): the codegen
+    * Physical form (round 15): the codegen
     * [[graft.functions.WinnowSelect]] Expression computes the whole
     * selection per document from the UTF-8 bytes — O(len·k) with no
-    * per-gram substring head-rescan (the scale cliff the round-14 note at
-    * the gram-extraction comment documented for ≥100 KB docs) and NO gram
+    * per-gram substring head-rescan (the SQL form's scale cliff: 200 docs
+    * × ~100 KB took ~0.5 s here vs 156-217 s there) and NO gram
     * shuffle at all: only the ~2/(w+1)-density selected rows are ever
     * exploded, and the census aggregation is the single exchange left.
-    * `graft.winnow.impl=window` keeps the previous SQL formulation
-    * ([[winnowSelectedWindowed]]) — equality between the two is
-    * property-pinned in DedupSpec on the corpus, 100 KB long docs, and
-    * multi-byte UTF-8.
+    * DedupSpec pins equality with the previous SQL-window formulation
+    * (a test-scope twin) on the corpus, 100 KB long docs, and multi-byte
+    * UTF-8.
     *
     * Round 16 made the Expression's hot loop allocation-free (60-bit long
     * per gram instead of a 15-char String, long window minima, hex-format
@@ -1667,75 +1609,17 @@ object Dedup {
     * threads, and it reuses [[graft.functions.SimHashBits]]'s prefix→long
     * conversion. Value identity re-pinned (WinnowProps, DedupSpec). */
   private[graft] def winnowSelected(df: DataFrame, textCol: String,
-                                    idCol: String, k: Int, w: Int): DataFrame =
-    if (df.sparkSession.conf.getOption("graft.winnow.impl").contains("window"))
-      winnowSelectedWindowed(df, textCol, idCol, k, w)
-    else {
-      require(k >= 2 && w >= 2, "need k >= 2 and w >= 2")
-      df.filter(length(col(textCol)) >= k + w - 1)
-        .select(col(idCol).as("doc_id"),
-          (length(col(textCol)) - (k - 1)).cast("long").as("n_grams"),
-          explode(org.apache.spark.sql.GraftColumnBridge.column(
-            graft.functions.WinnowSelect(
-              org.apache.spark.sql.GraftColumnBridge.expression(col(textCol)),
-              k, w))).as("s"))
-        .select(col("doc_id"), col("n_grams"),
-          col("s.pos").as("pos"), col("s.h").as("h"))
-    }
-
-  /** The SQL-window formulation [[winnowSelected]] shipped with through
-    * round 14 (now the `graft.winnow.impl=window` fallback and the
-    * cross-validation twin): explode every gram, then two window passes —
-    * pass 1 gives `wmin(e)` = min hash of the window ENDING at position e;
-    * position p is a minimum of SOME window containing it iff
-    * `max(wmin(e) for e in [p, p+w−1])` equals `h(p)` — wmin(e) ≤ h(p) for
-    * every window containing p, so equality at the max IS existence.
-    * Both passes share one (doc_id, pos) sort. */
-  private[graft] def winnowSelectedWindowed(df: DataFrame, textCol: String,
-                                            idCol: String, k: Int, w: Int): DataFrame = {
+                                    idCol: String, k: Int, w: Int): DataFrame = {
     require(k >= 2 && w >= 2, "need k >= 2 and w >= 2")
-    // Gram extraction = substring + md5 in ONE codegen'd generate+project
-    // stage. Three shapes were measured at sf0.1 in round 14 (static
-    // calls + solo forks) and this one won them; round 15's per-doc
-    // WinnowSelect Expression (the byte-offset escape hatch this comment
-    // used to defer) then beat it 2.8x interleaved (1.2 vs 3.4 s median,
-    // identical hashes) and is now the default — this SQL form remains as
-    // the cross-validation twin. On the long-doc regime the gap is
-    // asymptotic, not constant: 200 docs × ~100 KB measure ~0.5 s (expr)
-    // vs 156-217 s (this form) in the same session — the
-    // O(len²) substring head-rescan plus the 20M-gram shuffle vs one
-    // O(len·k) byte pass. The round-14 ranking, kept for the record:
-    //   - this form: the explode and the hash projection fuse inside
-    //     whole-stage codegen, so the doc text is never copied per gram
-    //     row and downstream rows are narrow (doc_id, pos, h). substring
-    //     rescans UTF-8 from the head (O(len) per gram), acceptable while
-    //     docs are ≲ a few KB;
-    //   - a one-time per-doc char ARRAY carried through the explode: O(k)
-    //     random access, but the ~10 KB array is copied into every gram
-    //     row's UnsafeRow — GC storms, 43 s cold runs;
-    //   - hashing inside a `transform` lambda over the char array (narrow
-    //     rows AND O(k) access): higher-order lambdas don't participate in
-    //     whole-stage codegen, and the interpreted per-element path was
-    //     ~2× slower than this form.
-    // The hash is the md5 15-hex-char PREFIX as a string — hex is
-    // order-isomorphic to its numeric value, so window min/max select the
-    // same positions and a per-gram `conv` buys nothing.
-    val grams = df.filter(length(col(textCol)) >= k + w - 1)
-      .select(col(idCol).as("doc_id"), col(textCol).as("__t"),
-        (length(col(textCol)) - (k - 1)).cast("long").as("n_grams"))
-      .withColumn("pos", explode(expr(s"sequence(1, length(__t) - ${k - 1}, 1)")))
-      .withColumn("h",
-        substring(md5(expr(s"substring(__t, pos, $k)")), 1, 15))
-      .drop("__t")
-    val ord = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val back = ord.rowsBetween(-(w - 1), 0)
-    val fwd = ord.rowsBetween(0, w - 1)
-    grams
-      .withColumn("wmin",
-        when(col("pos") >= w, min(col("h")).over(back))) // null on partial windows
-      .withColumn("sel_max", max(col("wmin")).over(fwd)) // max ignores nulls
-      .filter(col("h") === col("sel_max"))
-      .drop("wmin", "sel_max")
+    df.filter(length(col(textCol)) >= k + w - 1)
+      .select(col(idCol).as("doc_id"),
+        (length(col(textCol)) - (k - 1)).cast("long").as("n_grams"),
+        explode(org.apache.spark.sql.GraftColumnBridge.column(
+          graft.functions.WinnowSelect(
+            org.apache.spark.sql.GraftColumnBridge.expression(col(textCol)),
+            k, w))).as("s"))
+      .select(col("doc_id"), col("n_grams"),
+        col("s.pos").as("pos"), col("s.h").as("h"))
   }
 
   def winnowFingerprints(df: DataFrame, textCol: String, idCol: String,

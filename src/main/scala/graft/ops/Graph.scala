@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -35,26 +36,22 @@ object Graph {
   def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int = 5,
                dampingPpm: Long = 850000L): DataFrame = {
     val basePpm = 1000000L - dampingPpm
-    // materialize the (possibly expensive) producers once: the degree agg +
-    // join would otherwise compute `edges` twice, and every round's left
-    // join would recompute `nodes` (kCore rule)
-    val e = edges.localCheckpoint(false)
-    val n = nodes.select(col("node")).localCheckpoint(false)
+    val e = Materialize.once(edges, "pageRank degree agg + degree join")
+    val n = Materialize.once(nodes.select(col("node")), "pageRank rounds")
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    // edge+degree frame is loop-invariant: materialize once, reuse per round
-    val withDeg = e.join(deg, "src").localCheckpoint(false)
+    val withDeg = Materialize.once(e.join(deg, "src"), "pageRank rounds")
     var ranks = n.select(col("node"), lit(1000000L).as("rank_ppm"))
     for (_ <- 1 to iters) {
       val contrib = ranks
         .join(withDeg, ranks("node") === withDeg("src"))
         .select(col("dst").as("node"), expr("rank_ppm DIV outdeg").as("c"))
         .groupBy("node").agg(sum("c").as("s"))
-      ranks = n
+      ranks = Materialize.once(n
         .join(contrib, Seq("node"), "left")
         .select(col("node"),
           (lit(basePpm) +
-            expr(s"($dampingPpm * coalesce(s, 0L)) DIV 1000000")).as("rank_ppm"))
-        .localCheckpoint(false) // cut lineage: plan depth stays O(1) per round
+            expr(s"($dampingPpm * coalesce(s, 0L)) DIV 1000000")).as("rank_ppm")),
+        "pageRank next round")
     }
     ranks
   }
@@ -83,20 +80,21 @@ object Graph {
     * @return (node, degree, triangles, cc_ppm), one row per node with ≥ 1 edge
     */
   def triangleCounts(pairs: DataFrame): DataFrame = {
-    val e = pairs.select(col("id_a").as("a"), col("id_b").as("b")).distinct()
-      .localCheckpoint(false) // 3 consumers (degree + wedge sides) share one materialization
+    val e = Materialize.once(
+      pairs.select(col("id_a").as("a"), col("id_b").as("b")).distinct(),
+      "triangleCounts degree + wedge sides")
     val deg = e.select(col("a").as("node"))
       .unionByName(e.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("degree"))
-    val oriented = e
+    val oriented = Materialize.once(e
       .join(deg.select(col("node").as("a"), col("degree").as("da")), "a")
       .join(deg.select(col("node").as("b"), col("degree").as("db")), "b")
       .select(
         when(struct(col("da"), col("a")) < struct(col("db"), col("b")),
           col("a")).otherwise(col("b")).as("src"),
         when(struct(col("da"), col("a")) < struct(col("db"), col("b")),
-          col("b")).otherwise(col("a")).as("dst"))
-      .localCheckpoint(false)
+          col("b")).otherwise(col("a")).as("dst")),
+      "triangleCounts wedges + closing join")
     // wedges carry both (v,w) orders; the oriented v–w edge exists in
     // exactly one of them, so the join matches each triangle once
     val wedges = oriented.select(col("src"), col("dst").as("v"))
@@ -158,13 +156,12 @@ object Graph {
   def kCore(pairs: DataFrame, k: Int, maxRounds: Int = 8,
             uniquePairs: Boolean = false): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    // materialize pairs once: the symmetrizing union otherwise computes the
-    // (often expensive) pair-producer plan twice, once per branch
-    val p = pairs.select(col("id_a"), col("id_b")).localCheckpoint(false)
+    val p = Materialize.once(pairs.select(col("id_a"), col("id_b")),
+      "kCore symmetrizing union")
     val symRaw = p.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(p.select(col("id_b").as("src"), col("id_a").as("dst")))
-    val sym = (if (uniquePairs) symRaw else symRaw.distinct())
-      .localCheckpoint(false) // loop-invariant: every peel re-joins it
+    val sym = Materialize.once(if (uniquePairs) symRaw else symRaw.distinct(),
+      "kCore peels")
     def peel(nodes: DataFrame): DataFrame = sym
       .join(nodes.select(col("id").as("src")), Seq("src"))
       .join(nodes.select(col("id").as("dst")), Seq("dst"))
@@ -173,10 +170,9 @@ object Graph {
       .select(col("src").as("id"), col("deg"))
     // Peel 1 degenerates to a bare degree count: with all nodes present the
     // two node-joins are identities, so skip them on the largest frame.
-    var cur = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+    var cur = Materialize.once(sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .filter(col("deg") >= k)
-      .select(col("src").as("id"), col("deg"))
-      .localCheckpoint(false)
+      .select(col("src").as("id"), col("deg")), "kCore probe count + next peel")
     var nCur = cur.count()
     var converged = false
     // The degree-init peel is BUDGET-FREE (it replaces the old free initial
@@ -190,7 +186,9 @@ object Graph {
       // Two single-peel rounds per probe; checkpoint EACH so the count
       // materializes two shallow segments (and AQE sees the mid frame's
       // size), not one double-deep one.
-      val next = peel(peel(cur).localCheckpoint(false)).localCheckpoint(false)
+      val next = Materialize.once(
+        peel(Materialize.once(peel(cur), "kCore mid peel")),
+        "kCore probe count + next peel")
       val nNext = next.count()
       converged = nNext == nCur // monotone shrink: equal count = fixpoint
       if (!converged) {

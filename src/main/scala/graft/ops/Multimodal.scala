@@ -23,14 +23,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Typed metadata envelope for an opaque media payload. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("media_type", StringType, nullable = false), // image|audio|video
-    StructField("payload", BinaryType, nullable = true),
-    StructField("n_bytes", LongType, nullable = false),
-    StructField("checksum", StringType, nullable = false)))
-
   /** Wrap a (id, bytes, kind) frame into the media envelope with computed
     * metadata — the ingest normalization step. */
   def toMediaFrame(df: DataFrame, idCol: String, bytesCol: String, kindCol: String): DataFrame =
@@ -65,11 +57,6 @@ object Multimodal {
       }
       out
     }
-
-    /** STUB — frame sampling (a real impl seeks the container): returns the
-      * sampled frame offsets for `fps`-rate sampling of `durationMs`. */
-    def sampleFrameOffsets(durationMs: Long, everyMs: Long): Seq[Long] =
-      (0L until durationMs by everyMs).toSeq
 
     /** The CERTIFIED-INTEGER twin of [[extractFeatures]]: the identical
       * strided byte fold carried as exact int64 sums (`out(i % dim) +=

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -475,11 +476,11 @@ object Similarity {
     val c = corpus.select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
     val wRel = Window.partitionBy(col("query_id"))
       .orderBy(col("rel_m").desc, col("cand_id").asc)
-    val cand = c.join(q, col("query_id") =!= col("cand_id"))
+    val cand = Materialize.once(c.join(q, col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id"), col("c_emb"),
         simM(col("q_emb"), col("c_emb")).as("rel_m"))
       .withColumn("rn", row_number().over(wRel)).filter(col("rn") <= pool)
-      .drop("rn").localCheckpoint(false)
+      .drop("rn"), "MMR candidate pool: pairwise sims + relevance")
     // pairwise candidate sims, computed once: |queries| × pool² rows, bounded
     val a = cand.select(col("query_id"), col("cand_id").as("ca"), col("c_emb").as("ea"))
     val b = cand.select(col("query_id"), col("cand_id").as("cb"), col("c_emb").as("eb"))
@@ -809,13 +810,10 @@ object Similarity {
       s"trainIvfCentroidsInt: nLists=$nLists must be < 2^16 (packed argmin)")
     val seed = m.filter(col("vec_id") < nLists)
       .select(col("vec_id").as("cid"), col("mv").as("cv"))
-    // each round MATERIALIZES its nLists-row output (eager, tiny): without
-    // this, round r's broadcast re-executes rounds 1..r-1 per consumer and
-    // the final serve re-executes the whole chain once more — the classic
-    // iterative-lineage blow-up (what .cache() is for; localCheckpoint also
-    // cuts the lineage so the plan the serve sees is one scan)
+    // eager and tiny (nLists rows): the next round's broadcast and the
+    // final serve read it
     (1 to rounds).foldLeft(seed)((c, _) =>
-      lloydRoundInt(m, c).localCheckpoint(true))
+      Materialize.eager(lloydRoundInt(m, c), "IVF Lloyd round"))
   }
 
   /** CERTIFIED-INTEGER IVF serve over PRE-QUANTIZED milli-code frames with
@@ -936,10 +934,9 @@ object Similarity {
     val sl = pqSlices(m, mSub, dsub)
     val seed = sl.filter(col("vec_id") < ksub)
       .select(col("j"), col("vec_id").as("cid"), col("sv").as("bv"))
-    // per-round materialization of the m×ksub-row codebook — same
-    // iterative-lineage cut as [[trainIvfCentroidsInt]]
+    // the m×ksub-row codebook, eager as in [[trainIvfCentroidsInt]]
     (1 to rounds).foldLeft(seed)((c, _) =>
-      lloydRoundSubInt(sl, c, dsub).localCheckpoint(true))
+      Materialize.eager(lloydRoundSubInt(sl, c, dsub), "PQ Lloyd round"))
   }
 
   private def pqSlices(m: DataFrame, mSub: Int, dsub: Int): DataFrame =
@@ -1135,15 +1132,6 @@ object Similarity {
     IndexMaintenance.compactPartitionedIndex(spark, path, "list",
       _.toLong, maxFilesPerList)
 
-  /** Repair an IVF-index compaction interrupted mid-swap — roll the
-    * staged swap forward from its staging manifest
-    * ([[IndexMaintenance.repairPartitionedIndex]]; run at pipeline
-    * startup, before any concurrent build/append/compact; serve-after-
-    * repair ≡ full rebuild spec-pinned in IndexMaintenanceSpec). */
-  def repairIvfIndexInt(spark: org.apache.spark.sql.SparkSession,
-                        path: String): Int =
-    IndexMaintenance.repairPartitionedIndex(spark, path)
-
   /** Query the integer IVF index: probe selection against the broadcast
     * centroid codes, a partition-pruned read of exactly the probed lists
     * (the only driver step is collecting ≤ nLists probed ids), then exact
@@ -1171,16 +1159,14 @@ object Similarity {
       cents.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv"))
     val wProbe = Window.partitionBy(col("query_id"))
       .orderBy(col("d2c").asc, col("cid").asc)
-    val probes = queries
+    val probes = Materialize.once(queries
       .select(col("vec_id").as("query_id"), col("mv").as("q_mv"))
       .crossJoin(cent)
       .select(col("query_id"), col("q_mv"), col("cid"),
         d2Milli(col("q_mv"), col("cv")).as("d2c"))
       .withColumn("r", row_number().over(wProbe)).filter(col("r") <= nProbe)
-      .select(col("query_id"), col("q_mv"), col("cid").as("list"))
-      // two consumers (probed-list collect + the broadcast join): cut the
-      // lineage so the centroid ranking runs once, not per consumer
-      .localCheckpoint(false)
+      .select(col("query_id"), col("q_mv"), col("cid").as("list")),
+      "IVF probed-list collect + broadcast join")
     val c = IndexMaintenance.pruneToBuckets(spark.read.parquet(indexPath),
         probes.select(col("list")), "list")
       .select(col("vec_id").as("neighbor_id"), col("mv").as("c_mv"), col("list"))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -74,9 +75,6 @@ object TextOps {
   /** Hits of a marker list in a word array. */
   def markerHitsArr(words: Column, markers: Seq[String]): Column =
     size(filter(words, w => w.isin(markers.map(x => x: Any): _*)))
-
-  def markerHits(text: Column, markers: Seq[String]): Column =
-    markerHitsArr(split(text, " "), markers)
 
   /** Predicted language = argmax over marker hits, 'und' when all zero.
     * Deterministic tie-break by language code order. Bind `words` to a
@@ -450,13 +448,11 @@ object TextOps {
   def phraseSearch(docs: DataFrame, textCol: String, idCol: String,
                    phrase: Seq[String]): DataFrame = {
     require(phrase.nonEmpty, "phrase must have at least one word")
-    // localCheckpoint: k join sides reuse ONE split+filter pass instead of
-    // re-splitting the corpus per phrase word
-    val postings = docs
+    val postings = Materialize.once(docs
       .select(col(idCol).as("doc_id"),
         posexplode(split(col(textCol), " ")).as(Seq("pos", "w")))
-      .filter(col("w").isin(phrase.distinct.map(x => x: Any): _*))
-      .localCheckpoint(false)
+      .filter(col("w").isin(phrase.distinct.map(x => x: Any): _*)),
+      "phraseSearch join side per phrase word")
     phrase.zipWithIndex.map { case (term, i) =>
       postings.filter(col("w") === term)
         .select(col("doc_id"), (col("pos") - i).as("start"))
@@ -551,8 +547,8 @@ object TextOps {
     * on each side — vocabulary-sized frames, never corpus-sized. */
   def collocations(docs: DataFrame, textCol: String,
                    minCount: Long = 5): DataFrame = {
-    val words = docs.select(split(col(textCol), " ").as("w"))
-      .localCheckpoint(false) // unigram + bigram passes share one split
+    val words = Materialize.once(docs.select(split(col(textCol), " ").as("w")),
+      "collocations unigram + bigram passes")
     val uni = words.select(explode(col("w")).as("word"))
       .filter(col("word") =!= "")
       .groupBy("word").agg(count(lit(1)).as("c"))
@@ -673,21 +669,20 @@ object TextOps {
     * round is one map-side-combined pair count, and the only driver
     * traffic is the ONE winning merge rule per round (bounded metadata —
     * exactly what real BPE trainers ship between workers). The apply step
-    * is a codegen'd fold over bounded word-length arrays. Per-round
-    * localCheckpoint keeps the iterated plan O(1) deep ([[graft.ops.Dedup]]
-    * loop rule). Rows-only for the driver (the loop has no SQL replay);
+    * is a codegen'd fold over bounded word-length arrays. Each round's
+    * table is materialized, so the iterated plan stays O(1) deep.
+    * Rows-only for the driver (the loop has no SQL replay);
     * the spec replays the whole training greedily on the driver and
     * matches every rule. */
   def bpeMerges(docs: DataFrame, textCol: String, numMerges: Int): DataFrame = {
     import docs.sparkSession.implicits._
-    var words = docs
+    var words = Materialize.once(docs
       .select(explode(split(col(textCol), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("freq"))
       // char-split, empty fragments dropped (split("") edge behavior)
       .select(filter(split(col("w"), ""), t => t =!= lit("")).as("toks"),
-        col("freq"))
-      .localCheckpoint(false)
+        col("freq")), "bpeMerges rounds")
     val rules = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
     for (r <- 1 to numMerges) {
       val pairs = words
@@ -704,9 +699,9 @@ object TextOps {
         val row = top.head
         val (a, b, cnt) = (row.getString(0), row.getString(1), row.getLong(2))
         rules += ((r.toLong, a, b, cnt))
-        words = words
-          .select(applyMerge(col("toks"), a, b).as("toks"), col("freq"))
-          .localCheckpoint(false)
+        words = Materialize.once(
+          words.select(applyMerge(col("toks"), a, b).as("toks"), col("freq")),
+          "bpeMerges next round")
       }
     }
     rules.toSeq.toDF("merge_rank", "left", "right", "pair_count")
@@ -738,13 +733,14 @@ object TextOps {
     var vocab = words.select("w").distinct()
       .select(col("w"),
         filter(split(col("w"), ""), t => t =!= lit("")).as("toks"))
-    // one projection per rule, with a lazy checkpoint as a plan BARRIER:
-    // without it CollapseProject folds all rules into one nested-lambda
-    // mega-expression whose codegen cost dwarfs the (vocabulary-sized)
-    // evaluation — the same per-rule cut bpeMerges uses
+    // one projection per rule, materialized as a plan BARRIER even with one
+    // consumer: without it CollapseProject folds all rules into one
+    // nested-lambda mega-expression whose codegen cost dwarfs the
+    // (vocabulary-sized) evaluation
     rules.foreach { case (a, b) =>
-      vocab = vocab.select(col("w"), applyMerge(col("toks"), a, b).as("toks"))
-        .localCheckpoint(false)
+      vocab = Materialize.once(
+        vocab.select(col("w"), applyMerge(col("toks"), a, b).as("toks")),
+        "bpeApply next rule")
     }
     words.join(vocab.select(col("w"), size(col("toks")).as("w_tokens")), "w")
       .groupBy("doc_id")

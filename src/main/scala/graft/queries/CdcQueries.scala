@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -707,13 +708,11 @@ object CdcQueries {
     * op chars on the valid path (updates counted twice: the census sees
     * DELIVERIES, upstream of the idempotency dedup) plus the dead-letter
     * reasons, with Kafka log-compaction tombstones (null values — a
-    * contract message, not an error) classified apart from parse errors.
-    * One parse materialization feeds both branches (the maintainCounts
-    * localCheckpoint rule). */
+    * contract message, not an error) classified apart from parse errors. */
   def cdc_dbz_routing(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val parsed = DebeziumJson.parse(debeziumOrderEvents(s, dir))
-      .localCheckpoint(false)
+    val parsed = Materialize.once(DebeziumJson.parse(debeziumOrderEvents(s, dir)),
+      "debezium valid + dead-letter branches")
     val valid = DebeziumJson.flatten(parsed).select($"operation".as("kind"))
     val bad = DebeziumJson.invalid(parsed).select($"reason".as("kind"))
     valid.unionByName(bad)
@@ -885,9 +884,8 @@ object CdcQueries {
     * later keys don't exist yet. One cutoff exercises all three visibility
     * classes, and DuckDB derives each from the key arithmetic alone. */
   def cdc_wire_asof(s: SparkSession, dir: String): DataFrame =
-    // localCheckpoint: generate+parse the wire fixture once; the ranking
-    // window reads checkpointed blocks (the cdc_scd2_incremental pattern)
-    wireState(CdcApply.stateAsOf(wireOrderEvents(s, dir).localCheckpoint(),
+    wireState(CdcApply.stateAsOf(
+      Materialize.eager(wireOrderEvents(s, dir), "as-of state ranking"),
       1704067200000L + 15000L))
 
   /** W8/incremental view — a grouped count maintained purely from ±1 event
@@ -934,8 +932,8 @@ object CdcQueries {
   def cdc_snapshot_diff(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.streaming.Snapshot
-    // one wire generation feeds both sides (the s5 localCheckpoint pattern)
-    val evts = wireOrderEvents(s, dir).localCheckpoint()
+    val evts = Materialize.eager(wireOrderEvents(s, dir),
+      "snapshot diff before + after sides")
     val before = wireState(CdcApply.stateAsOf(evts, 1704067200000L + 15000L))
     val after = wireState(CdcApply.materialize(evts))
     Snapshot.diff(before, after, "id", Seq("status", "op"))
@@ -955,8 +953,8 @@ object CdcQueries {
     * versions of every key straight from the base-table arithmetic. */
   def cdc_scd2(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // localCheckpoint: see cdc_wire_asof
-    CdcApply.scd2(wireOrderEvents(s, dir).localCheckpoint(), "status")
+    CdcApply.scd2(Materialize.eager(wireOrderEvents(s, dir), "SCD2 versioning"),
+      "status")
       .select($"pk".cast("bigint").as("id"), $"version", $"status",
         $"valid_from_ms", $"valid_to_ms", $"is_current")
       .orderBy($"id", $"version")
@@ -994,7 +992,8 @@ object CdcQueries {
     * resurrects, post-cutover events win over snapshot images. */
   def cdc_backfill_merge(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val evts = wireOrderEvents(s, dir).localCheckpoint()
+    val evts = Materialize.eager(wireOrderEvents(s, dir),
+      "backfill snapshot side + merge side")
     val cutover = 1704067200000L + 15000L
     wireState(CdcApply.backfillMerge(CdcApply.stateAsOf(evts, cutover), evts))
   }
@@ -1069,9 +1068,8 @@ object CdcQueries {
     * the wrong image, wrong net op, or leaked a tombstone hash-mismatches. */
   def cdc_log_compaction(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // localCheckpoint: generate+parse the fixture once (cdc_wire_asof rule)
     wireState(CdcApply.materialize(CdcApply.compactLog(
-      wireOrderEvents(s, dir).localCheckpoint())))
+      Materialize.eager(wireOrderEvents(s, dir), "log compaction"))))
   }
 
   /** Cutover epoch for the two-table join fixture (shared by
@@ -1131,8 +1129,8 @@ object CdcQueries {
       p1.unionByName(o1).unionByName(o2upd(1000000000L))
         .unionByName(o2upd(1500000000L)) // redelivery, new kafka coordinate
         .unionByName(o2del).unionByName(p2upd).unionByName(p2del))
-    // (multi-pass callers re-read the cachedFixture parquet — no
-    // localCheckpoint needed now that the parse happens once per run)
+    // (multi-pass callers re-read the cachedFixture parquet; the parse
+    // happens once per run)
   }
 
   /** W8'/incremental JOIN view ([[graft.cdc.CdcApply.maintainJoinAgg]]) —

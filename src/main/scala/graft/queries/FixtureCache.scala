@@ -57,9 +57,13 @@ private[graft] object FixtureCache {
                        (gen: => DataFrame): DataFrame =
     cachedImpl(s, dir, name, version, partCols)(gen)
 
+  /** `gen` runs with [[graft.Materialize]] recording suspended: a fixture
+    * build is a run-level artifact, not the work of the entry that asks for
+    * it, so a cold and a warm cache record the same sub-plans. */
   private def cachedImpl(s: SparkSession, dir: String, name: String,
                          version: String, partCols: Seq[String])
-                        (gen: => DataFrame): DataFrame = {
+                        (gen0: => DataFrame): DataFrame = {
+    def gen = graft.Materialize.suspended(gen0)
     if (sys.env.get("SPARK_GRAFT_NO_FIXTURE_CACHE").contains("1")) gen
     else {
       val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")

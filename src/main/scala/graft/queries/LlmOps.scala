@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -300,30 +301,24 @@ object LlmOps {
     // membership AND order purely by the quantized integer dots
     val wP = Window.partitionBy($"query_id")
       .orderBy($"q_dot".desc, $"neighbor_id".asc)
-    // pred and truth each feed BOTH metric frames below (retrievalEval and
-    // the ndcg join) — without a materialization the int8 scoring pass and
-    // the brute-force cosine top-k compute twice (the maintainJoinAgg
-    // twice-consumed pathology; round-21 plan audit: 15 exchanges,
-    // same-scan multiplicity 2 on this entry). One lazy localCheckpoint
-    // each runs them once; the CosineTopKRewrite still fires when the
-    // truth fragment plans (at checkpoint creation), it just fires once
-    // instead of twice.
-    val pred = Similarity.int8TopK(queries, emb, k = k, rerank = k)
+    // pred and truth each feed retrievalEval AND the ndcg join (round 21,
+    // unmaterialized: 15 exchanges, same-scan multiplicity 2). The
+    // CosineTopKRewrite fires when the truth fragment plans (at
+    // materialization), once instead of twice.
+    val pred = Materialize.once(Similarity.int8TopK(queries, emb, k = k, rerank = k)
       .select($"query_id", $"neighbor_id",
-        row_number().over(wP).as("rank"))
-      .localCheckpoint(false)
+        row_number().over(wP).as("rank")), "x3_eval_int8 recall + ndcg (pred)")
     val c = emb.select($"vec_id".as("neighbor_id"), $"embedding".as("c_emb"))
     val wT = Window.partitionBy($"query_id")
       .orderBy($"sim".desc, $"neighbor_id".asc)
-    val truth = queries
+    val truth = Materialize.once(queries
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"))
       .join(c, $"query_id" =!= $"neighbor_id")
       .select($"query_id", $"neighbor_id",
         graft.functions.VectorFunctions.cosine($"q_emb", $"c_emb").as("sim"))
       .withColumn("rank", row_number().over(wT))
       .filter($"rank" <= k)
-      .select($"query_id", $"neighbor_id", $"rank")
-      .localCheckpoint(false)
+      .select($"query_id", $"neighbor_id", $"rank"), "x3_eval_int8 recall + ndcg (truth)")
     Similarity.retrievalEval(pred, truth, k)
       // graded companion: DCG/NDCG over the same rankings, log2 discounts
       // as shared integer literals (Similarity.log2DiscountsPpm5 — the
@@ -515,19 +510,18 @@ object LlmOps {
     * and a GT-derived spine cost +1 audited exchange for its distinct. */
   private def spineRecallRows(s: SparkSession, dir: String, gtName: String,
                               approx: DataFrame, queries: DataFrame,
-                              corpus: DataFrame, k: Int): DataFrame =
-    withQuerySpine(queries,
-      withRecallPm(s, dir, gtName, approx, queries, corpus, k))
+                              corpus: DataFrame, k: Int,
+                              spine: DataFrame => DataFrame = materializedSpine): DataFrame = {
+    val rows = withRecallPm(s, dir, gtName, approx, queries, corpus, k)
+    withQuerySpine(spine(queries.select(col("vec_id").as("query_id"))), rows)
+  }
 
   private def withRecallPm(s: SparkSession, dir: String, gtName: String,
                            approx: DataFrame, queries: DataFrame,
                            corpus: DataFrame, k: Int): DataFrame = {
-    // localCheckpoint: ONE evaluation of the approximate plan feeds both
-    // the recall aggregate and the emitted rows (round-10 ADVICE — the
-    // naive form embedded the approx subtree twice, paying ~2x the approx
-    // cost, and a nondeterministic tie could have scored recall against a
-    // different evaluation than the rows it annotates)
-    val a = approx.localCheckpoint(true)
+    // materialized: a nondeterministic tie must not score recall against a
+    // different evaluation than the rows it annotates (round-10 ADVICE)
+    val a = Materialize.eager(approx, "float-ANN recall aggregate + emitted rows")
     val recall = recallAggOf(a, cachedGt(s, dir, gtName, queries, corpus, k),
       k, "recall_pm")
     a.join(broadcast(recall), Seq("query_id"))
@@ -539,21 +533,8 @@ object LlmOps {
     * sentinel row — rank −1, neighbor −1, sim 0, recall_pm 0 — instead of
     * silently vanishing and overstating the measured recall evidence
     * (round-15 review: the round-14 fix covered only the clustered
-    * annotation side). */
-  private def withQuerySpine(queries: DataFrame, rows: DataFrame): DataFrame = {
-    // The ≤20-row spine is MATERIALIZED (one tiny eager job) before the
-    // outer join — round-16 fix for the round-15 sentinel regression: a
-    // spine that is a live selective parquet scan makes Spark's
-    // InjectRuntimeFilter build an 8 MB bloom_filter_agg subquery (+1
-    // exchange, + one full embeddings re-scan) just to pre-filter the
-    // ≤|queries|·k-row checkpointed rows RDD. Checkpointing hides the
-    // selective scan from the injection rule; semantics identical
-    // (`graft.x3.spine=scan` keeps the round-15 shape for A/B).
-    val spineBase = queries.select(col("vec_id").as("query_id"))
-    val spine =
-      if (queries.sparkSession.conf.getOption("graft.x3.spine").contains("scan"))
-        spineBase
-      else spineBase.localCheckpoint(true)
+    * annotation side). `spine` is the `query_id` frame of the probes. */
+  private def withQuerySpine(spine: DataFrame, rows: DataFrame): DataFrame =
     spine
       // rows = |queries|·k annotated candidates (bounded, checkpointed) —
       // broadcast-build it or the left outer spine join plans a
@@ -562,7 +543,17 @@ object LlmOps {
       .join(broadcast(rows), Seq("query_id"), "left")
       .na.fill(Map("rank" -> -1, "neighbor_id" -> -1L,
         "sim" -> 0.0, "recall_pm" -> 0L))
-  }
+
+  /** The ≤20-row spine, MATERIALIZED (one tiny eager job) before the outer
+    * join — round-16 fix for the round-15 sentinel regression: a spine that
+    * is a live selective parquet scan makes Spark's InjectRuntimeFilter
+    * build an 8 MB bloom_filter_agg subquery (+1 exchange, + one full
+    * embeddings re-scan) just to pre-filter the ≤|queries|·k-row
+    * materialized rows. Materializing hides the selective scan from the
+    * injection rule; ApproxSpec pins row identity with the live-scan
+    * spine. */
+  private def materializedSpine(spine: DataFrame): DataFrame =
+    Materialize.eager(spine, "float-ANN sentinel spine outer join")
 
   /** Deterministic CLUSTERED embedding corpus DERIVED from the real
     * embeddings table (no synthesized values — every member is a fixed
@@ -800,7 +791,12 @@ object LlmOps {
     * the ADC serve + fixed overheads, not the evidence assembly (details
     * and rejected variants on [[spineRecallRows]]). The r16 3.14 s
     * standing was the documented cross-session drift class, not code. */
-  def x3_ann_pq(s: SparkSession, dir: String): DataFrame = {
+  def x3_ann_pq(s: SparkSession, dir: String): DataFrame =
+    x3AnnPq(s, dir, materializedSpine)
+
+  /** [[x3_ann_pq]] with the sentinel spine built by `spine`. */
+  private[graft] def x3AnnPq(s: SparkSession, dir: String,
+                             spine: DataFrame => DataFrame): DataFrame = {
     import s.implicits._
     val emb = embeddings(s, dir)
     val queries = emb.filter($"vec_id" < 20)
@@ -813,7 +809,7 @@ object LlmOps {
     val books = Similarity.trainPqCodebooks(emb, dim = 64, m = 16, ksub = 16)
     spineRecallRows(s, dir, "x3-gt-q20-k5",
         Similarity.pqTopKFromCodes(queries, emb, cachedPqCodes(s, dir, books),
-          books, k = 5, rerank = 25), queries, emb, k = 5)
+          books, k = 5, rerank = 25), queries, emb, k = 5, spine)
       .select($"query_id", $"rank", $"neighbor_id", $"sim", $"recall_pm")
       .orderBy($"query_id", $"rank")
   }
@@ -2034,12 +2030,10 @@ object LlmOps {
   def x4_lang_profile(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = documents(s, dir)
-    // |langs| x 60 rows; materialized once — langClassify reads it twice
-    // (score join + the language grid) and re-running the training agg for
-    // the second read would double the corpus work (the maintainCounts
-    // localCheckpoint rule)
-    val profiles = TextOps.langProfiles(
-      docs.filter($"doc_id" % 5 =!= 0), "text", "lang").localCheckpoint(false)
+    // |langs| x 60 rows
+    val profiles = Materialize.once(TextOps.langProfiles(
+        docs.filter($"doc_id" % 5 =!= 0), "text", "lang"),
+      "language classifier score join + language grid")
     val test = docs.filter($"doc_id" % 5 === 0)
     TextOps.langClassify(test, profiles, "text", "doc_id")
       .join(test.select($"doc_id", $"lang"), Seq("doc_id"))
@@ -2081,17 +2075,14 @@ object LlmOps {
     val top = qw.select($"doc_id", explode($"qw").as("wd"))
       .groupBy($"doc_id", $"wd").agg(count(lit(1)).as("c"))
       .groupBy($"doc_id").agg(max($"c").as("topc"))
-    // materialized once: the train and test slices would otherwise diverge
-    // the canonical subtree (pushed %5 filters) and compute the word-level
-    // shuffle twice (the maintainCounts localCheckpoint rule)
-    val feats = qw.join(top, Seq("doc_id"))
+    val feats = Materialize.once(qw.join(top, Seq("doc_id"))
       .withColumn("sh", TextOps.shinglesAll($"qw", 3))
       .select($"doc_id", $"label",
         expr("size(array_distinct(qw)) * 1000L div size(qw)").as("f_distinct"),
         expr("topc * 1000 div size(qw)").as("f_top"),
         expr("(size(sh) - size(array_distinct(sh))) * 1000L" +
-          " div greatest(size(sh), 1)").as("f_rep3"))
-      .localCheckpoint(false)
+          " div greatest(size(sh), 1)").as("f_rep3")),
+      "quality classifier train + test slices")
     val fcols = Seq("f_distinct", "f_top", "f_rep3")
     TextOps.meanMidpointClassify(
         feats.filter($"doc_id" % 5 =!= 0), feats.filter($"doc_id" % 5 === 0),

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -421,11 +422,11 @@ object MetricsOps {
     * + both rules read it), stats broadcast, alerts unioned map-side. */
   def p37_alert_inhibit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val hourly = events(s, dir)
+    val hourly = Materialize.once(events(s, dir)
       .groupBy($"event_type", date_trunc("hour", $"ts").as("hour"))
       .agg(count(lit(1)).as("cnt"),
-        sum(round($"value" * 100).cast("long")).as("sumv"))
-      .localCheckpoint(false)
+        sum(round($"value" * 100).cast("long")).as("sumv")),
+      "p37 stats pass + per-hour pass")
     val stats = hourly.groupBy($"event_type")
       .agg(count(lit(1)).as("nh"), sum($"cnt").as("tot"),
         sum($"sumv").as("totv"))
@@ -478,10 +479,9 @@ object MetricsOps {
     * first when silent minutes must count as zeros. */
   def p26_cusum(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val perMin = events(s, dir)
+    val perMin = Materialize.once(events(s, dir)
       .groupBy($"event_type", date_trunc("minute", $"ts").as("minute"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(false) // stats pass + cusum pass share one bucketing
+      .agg(count(lit(1)).as("cnt")), "p26 stats pass + cusum pass")
     val stats = perMin.groupBy($"event_type")
       .agg(expr("sum(cnt) DIV count(1) + 1").as("k"))
     val w = Window.partitionBy($"event_type").orderBy($"minute")
@@ -1000,10 +1000,9 @@ object MetricsOps {
 
   def p21_anomaly(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val perMin = events(s, dir)
+    val perMin = Materialize.once(events(s, dir)
       .groupBy($"event_type", date_trunc("minute", $"ts").as("minute"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(false) // stats pass + flag pass share one bucketing
+      .agg(count(lit(1)).as("cnt")), "p21 stats pass + flag pass")
     val stats = perMin.groupBy($"event_type").agg(
       count(lit(1)).as("n_minutes"), sum($"cnt").as("s"),
       sum($"cnt" * $"cnt").as("q"))
@@ -1062,10 +1061,9 @@ object MetricsOps {
     * 1 440 rows each); both fill passes ride one (series, minute) sort. */
   def p22_gapfill(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val perMin = events(s, dir)
+    val perMin = Materialize.once(events(s, dir)
       .groupBy($"event_type", date_trunc("minute", $"ts").as("minute"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(false) // bounds pass + join side share one bucketing
+      .agg(count(lit(1)).as("cnt")), "p22 bounds pass + join side")
     val bounds = perMin.groupBy($"event_type").agg(
       min($"minute").as("mn"), max($"minute").as("mx"))
     val spine = bounds.select($"event_type",
@@ -1111,11 +1109,11 @@ object MetricsOps {
   def p23_lttb(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val nB = 48
-    val perMin = events(s, dir)
+    val perMin = Materialize.once(events(s, dir)
       .groupBy($"event_type", date_trunc("minute", $"ts").as("minute"))
       .agg(count(lit(1)).as("cnt"))
-      .select($"event_type", expr("unix_timestamp(minute) DIV 60").as("t"), $"cnt")
-      .localCheckpoint(false) // bounds pass + candidate pass share the bucketing
+      .select($"event_type", expr("unix_timestamp(minute) DIV 60").as("t"), $"cnt"),
+      "p23 bounds pass + candidate pass")
     val bounds = perMin.groupBy($"event_type")
       .agg(min($"t").as("tmn"), max($"t").as("tmx"))
     val pts = perMin.join(broadcast(bounds), Seq("event_type"))
@@ -1189,11 +1187,10 @@ object MetricsOps {
   def p25_sliding_distinct(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val W = 60L
-    val ub = events(s, dir)
+    val ub = Materialize.once(events(s, dir)
       .select($"event_type", $"user_id",
         expr("unix_timestamp(date_trunc('minute', ts)) DIV 60").as("b"))
-      .distinct()
-      .localCheckpoint(false) // islands pass + bounds pass share the dedup
+      .distinct(), "p25 islands pass + bounds pass")
     val lagW = Window.partitionBy($"event_type", $"user_id").orderBy($"b".asc)
     val runW = lagW.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val islands = ub

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -487,11 +488,11 @@ object Relational {
     * approximately, made exact. */
   def q47_bitmap_distinct(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val leaf = lineitem(s, dir)
+    val leaf = Materialize.eager(lineitem(s, dir)
       .groupBy($"l_returnflag", $"l_linestatus",
         expr("bitmap_bucket_number(l_orderkey)").as("bkt"))
-      .agg(expr("bitmap_construct_agg(bitmap_bit_position(l_orderkey))").as("bm"))
-      .localCheckpoint() // both levels read the leaf cube, not lineitem
+      .agg(expr("bitmap_construct_agg(bitmap_bit_position(l_orderkey))").as("bm")),
+      "bitmap cube: both rollup levels")
     val fine = leaf.groupBy($"l_returnflag", $"l_linestatus")
       .agg(sum(expr("bitmap_count(bm)")).as("n_orders"))
     val coarse = leaf.groupBy($"l_returnflag", $"bkt")
@@ -620,9 +621,8 @@ object Relational {
       .select(
         when($"lt".isNull || $"ts_us" - $"lt.t_us" > 7L * 86400000000L, "direct")
           .otherwise($"lt.ch").as("channel"))
-    val counts = attributed.groupBy($"channel")
-      .agg(count(lit(1)).as("n_conversions"))
-      .localCheckpoint(false) // share pass re-reads counts, not the window
+    val counts = Materialize.once(attributed.groupBy($"channel")
+      .agg(count(lit(1)).as("n_conversions")), "attribution counts + share pass")
     val tot = counts.agg(sum($"n_conversions").as("t"))
     counts.crossJoin(broadcast(tot))
       .select($"channel", $"n_conversions",
@@ -645,10 +645,10 @@ object Relational {
     * groups, HLL union for billion-key rollups. */
   def q51_hll_store(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val leaf = lineitem(s, dir)
+    val leaf = Materialize.eager(lineitem(s, dir)
       .groupBy($"l_returnflag", $"l_linestatus")
-      .agg(expr("hll_sketch_agg(l_orderkey, 14)").as("sk"))
-      .localCheckpoint() // both levels read the leaf sketches, not lineitem
+      .agg(expr("hll_sketch_agg(l_orderkey, 14)").as("sk")),
+      "HLL sketch store: both rollup levels")
     val fine = leaf.select($"l_returnflag", $"l_linestatus",
       expr("hll_sketch_estimate(sk)").cast("bigint").as("n_orders_est"))
     val coarse = leaf.groupBy($"l_returnflag")
@@ -664,11 +664,11 @@ object Relational {
     val ev = events(s, dir)
       .select($"event_type", expr("unix_timestamp(ts) DIV 60").as("m"))
     val mid = ev.agg(expr("(min(m) + max(m)) DIV 2").as("mid"))
-    val counts = ev.crossJoin(broadcast(mid))
+    val counts = Materialize.once(ev.crossJoin(broadcast(mid))
       .groupBy($"event_type")
       .agg(sum(when($"m" <= $"mid", 1L).otherwise(0L)).as("a"),
-        sum(when($"m" > $"mid", 1L).otherwise(0L)).as("b"))
-      .localCheckpoint(false) // totals pass + drift pass share one scan
+        sum(when($"m" > $"mid", 1L).otherwise(0L)).as("b")),
+      "drift totals pass + drift pass")
     val tot = counts.agg(sum($"a").as("ta"), sum($"b").as("tb"))
     counts.crossJoin(broadcast(tot))
       .select($"event_type", $"a", $"b",

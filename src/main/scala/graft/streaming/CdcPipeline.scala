@@ -81,20 +81,6 @@ object CdcPipeline {
   def operationCounts(events: DataFrame): DataFrame =
     events.groupBy(col("table"), col("op")).count()
 
-  /** P1 streaming twin: sliding 5-minute windowed rate per (table, op) with
-    * a 10-minute watermark bounding state. */
-  def windowedRates(events: DataFrame,
-                    windowLen: String = "5 minutes",
-                    slide: String = "1 minute",
-                    watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("timestamp", watermark)
-      .groupBy(window(col("timestamp"), windowLen, slide), col("table"), col("op"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("window_start"), col("window.end").as("window_end"),
-        col("table"), col("op"), col("cnt"),
-        round(col("cnt") / 300.0, 6).as("rate_per_sec"))
-
   /** MemoryStream feed row for the keyed-event streams the census entries
     * drive through [[intervalCorrelate]] (p29): key, event identity, exact
     * microsecond event time. */

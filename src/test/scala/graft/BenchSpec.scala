@@ -67,6 +67,30 @@ class BenchSpec extends AnyFunSuite {
     assert(!Bench.singleRunFrom(wallS = 100, projectedS = 1000, budgetS = 2100))
   }
 
+  test("stall judges the warm runs only: a slow run 1 is not a stall") {
+    def t(runs: Double*) = Bench.Timing("q", runs.head, runs.min, runs = runs)
+    // cdc_op_counts on a 4-vCPU board: fork codegen in run 1, calm after
+    assert(!Bench.stalled(t(6.534, 0.991, 0.945)))
+    // a real spread among the warm runs still reads as a stall
+    assert(Bench.stalled(t(1.0, 0.9, 8.0)))
+    assert(!Bench.stalled(t(1.0, 0.9, 1.5)))  // within 5x
+    assert(!Bench.stalled(t(0.2, 0.1, 0.9)))  // > 5x but under 2 s apart
+    assert(!Bench.stalled(t(6.5, 0.9)))       // one warm run: nothing to compare
+    assert(!Bench.stalled(Bench.Timing("q", 9.0, 9.0, failed = true, runs = Seq(0.1, 0.1, 9.0))))
+  }
+
+  test("budget projection scales priors by the running median_prior_ratio") {
+    val prior = Map("a" -> 2.0, "b" -> 1.0)
+    val groups = Seq(Seq("a", "b"), Seq("c")) // c has no prior
+    def near(a: Double, b: Double) = math.abs(a - b) < 1e-9
+    val base = Bench.projectedS(groups, prior, None)
+    assert(near(Bench.projectedS(groups, prior, Some(1.0)), base))
+    // twice as slow as the priors' host: only the priced priors double
+    assert(near(Bench.projectedS(groups, prior, Some(2.0)), base + 3.2 * (2.0 + 1.0)))
+    assert(near(Bench.projectedS(groups, prior, Some(0.5)), base - 3.2 * 1.5))
+    assert(Bench.projectedS(Nil, prior, Some(2.0)) === 0.0)
+  }
+
   test("median_prior_ratio skips failed and no-prior entries") {
     def ok(n: String, warm: Double, prior: Option[Double]) =
       Bench.Timing(n, warm, warm, runs = Seq(warm), prior = prior)

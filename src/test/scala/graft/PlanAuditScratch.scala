@@ -5,7 +5,8 @@ package graft
   * parquet file (the multi-branch re-scan pathology the maintainSums audit
   * caught), or any SortAggregate / ObjectHashAggregate (usually a
   * dropDuplicates/first() whose buffer type HashAggregate cannot hold).
-  * Build-only — streaming census builders do execute, so this takes about
+  * Counts cover the final plan plus the sub-plans the build materialized
+  * ([[PlanBudget.auditFrame]]). Build-only — streaming census builders do execute, so this takes about
   * as long as RegistrationSpec.
   * `sbt "Test/runMain graft.PlanAuditScratch [minExchanges]"`. */
 object PlanAuditScratch {
@@ -16,20 +17,17 @@ object PlanAuditScratch {
     spark.sparkContext.setLogLevel("ERROR")
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       try {
-        val p = fn(spark, dir).queryExecution.executedPlan.toString
-        // count nodes by name: a line's node name starts at its first
-        // letter (after the tree-drawing prefix), so only real shuffle
-        // exchanges count — ReusedExchange / BroadcastExchange are healthy
-        // reuse and broadcast, not shuffles
-        def count(prefix: String) = p.linesIterator.count(
-          _.dropWhile(!_.isLetter).startsWith(prefix))
-        val nEx = count("Exchange")
+        val (df, sub) = Materialize.recording(fn(spark, dir))
+        val plans = df.queryExecution.executedPlan.toString +: sub.map(_._2)
+        // a line's node name starts at its first letter (after the
+        // tree-drawing prefix)
+        def count(prefix: String) = plans.map(_.linesIterator.count(
+          _.dropWhile(!_.isLetter).startsWith(prefix))).sum
         val sortAgg = count("SortAggregate")
         val objHashAgg = count("ObjectHashAggregate")
-        // repeated scans of the same file set = same table scanned k times
-        val scans = p.linesIterator.filter(_.contains("Scan parquet"))
-          .map(_.trim.take(120)).toSeq
-        val dupScan = scans.groupBy(identity).values.map(_.size).maxOption.getOrElse(0)
+        val c = plans.map(PlanBudget.counts)
+        val nEx = c.map(_.exchanges).sum
+        val dupScan = c.map(_.maxSameScan).max
         if (nEx >= minEx || dupScan >= 3 || sortAgg > 0 || objHashAgg > 0)
           Some(f"$name%-28s exchanges=$nEx%2d maxSameScan=$dupScan%d " +
             f"sortAgg=$sortAgg%2d objHashAgg=$objHashAgg%2d")

@@ -6,8 +6,10 @@ package graft
   * unpinned entry and `sbt test` would stay green while the 100 TB posture
   * quietly regressed. This spec walks EVERY registered batch entry, counts
   * shuffle exchanges / cartesian products / broadcast nested-loop joins /
-  * same-file re-scans ([[PlanBudget.counts]]), and fails on any growth
-  * against the committed per-entry budget (PLAN_BUDGET.json).
+  * same-file re-scans ([[PlanBudget.counts]]) over its final plan plus the
+  * sub-plans its [[Materialize]] calls recorded (fixture builds excluded,
+  * see [[PlanBudget.auditFrame]]), and fails on any growth against the
+  * committed per-entry budget (PLAN_BUDGET.json).
   *
   * On an INTENTIONAL plan change, regenerate the budget in the same commit:
   * `sbt "Test/runMain graft.PlanBudgetWrite"` — the budget diff then

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared plan-shape accounting for the plan-regression gate (round-14
   * verdict #2): per registered batch entry, count the plan nodes whose
@@ -11,11 +11,16 @@ import org.apache.spark.sql.SparkSession
   * maintainSums pathology: pushed per-branch filters diverge the canonical
   * subtrees, exchange reuse dies, input scanned 3×).
   *
-  * Counts come from the INITIAL physical plan (pre-AQE execution) on the
-  * sf0.001 tables, which is deterministic given the committed testdata and
-  * session conf; fixture-backed entries always plan against the fixture's
-  * persisted parquet (FixtureCache materializes during build), so warm and
-  * cold sessions produce the same shape. [[Bench.streamEntries]] are
+  * Counts come from the INITIAL physical plans (pre-AQE execution) on the
+  * sf0.001 tables, which are deterministic given the committed testdata and
+  * session conf: the entry's final plan PLUS the plan of every frame the
+  * build materialized through [[Materialize]] (a checkpoint turns its input
+  * into an RDD scan, so the final plan alone hides that work). Exchanges,
+  * cartesians and NLJs are summed over the plans; `maxSameScan` is the
+  * maximum over them. Fixture builds are excluded: FixtureCache runs its
+  * generator with recording suspended and the entry plans against the
+  * fixture's persisted parquet, so warm and cold sessions produce the same
+  * counts. [[Bench.streamEntries]] are
   * skipped — their builders drain streaming censuses (already paid once in
   * RegistrationSpec) and their returned frame is a tiny census read whose
   * shape is pinned where it matters, in StreamingSpec.
@@ -52,6 +57,15 @@ object PlanBudget {
         .groupBy(identity).values.map(_.size).maxOption.getOrElse(0))
   }
 
+  /** Counts of the frame `build` returns plus every sub-plan its
+    * [[Materialize]] calls recorded. */
+  def auditFrame(build: => DataFrame): Counts = {
+    val (df, subPlans) = Materialize.recording(build)
+    val all = (df.queryExecution.executedPlan.toString +: subPlans.map(_._2)).map(counts)
+    Counts(all.map(_.exchanges).sum, all.map(_.cartesian).sum, all.map(_.nlj).sum,
+      all.map(_.maxSameScan).max)
+  }
+
   /** Build every auditable entry on sf0.001 and count its plan shape.
     * Clears the session's cached-relation registry first: Spark substitutes
     * InMemoryRelation into any later plan whose subtree matches a cached
@@ -64,7 +78,7 @@ object PlanBudget {
     SparkEntry.queries.toSeq
       .filterNot { case (name, _) => Bench.streamEntries(name) }
       .map { case (name, fn) =>
-        name -> counts(fn(spark, dir).queryExecution.executedPlan.toString)
+        name -> auditFrame(fn(spark, dir))
       }.toMap
   }
 

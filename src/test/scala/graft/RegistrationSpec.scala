@@ -52,27 +52,41 @@ class RegistrationSpec extends SparkSpec {
         s"$oracled oracled + ${declared.size} declared rows-only")
   }
 
-  /** Group 1 of every match of `literal` in the main sources. */
-  private def mainLiterals(literal: scala.util.matching.Regex): Set[String] = {
+  /** Every main source file with its text. */
+  private def mainSources: Seq[(java.nio.file.Path, String)] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
     val files = java.nio.file.Files.walk(root)
     try files.iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      .flatMap(f => literal.findAllMatchIn(
-        new String(java.nio.file.Files.readAllBytes(f), "UTF-8")).map(_.group(1)))
-      .toSet
+      .map(f => f -> new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
+      .toList
     finally files.close()
   }
 
-  test("main source reads exactly the three cross-validation conf switches") {
-    // Every `graft.*` session conf in main is a second code path. The three
-    // kept ones are the reference twins specs compare against (DedupSpec,
-    // ApproxSpec); a new one must either earn a spec or not land. Literals
-    // with a capitalized segment name a class (`"graft.Bench"`), not a key.
+  /** Group 1 of every match of `literal` in the main sources. */
+  private def mainLiterals(literal: scala.util.matching.Regex): Set[String] =
+    mainSources.flatMap { case (_, txt) => literal.findAllMatchIn(txt).map(_.group(1)) }
+      .toSet
+
+  test("main source reads no graft.* conf switch") {
+    // Every `graft.*` session conf in main is a second code path; the
+    // cross-validation twins specs compare against live in test scope.
+    // Literals with a capitalized segment name a class (`"graft.Bench"`),
+    // not a key.
     val keys = mainLiterals("\"graft\\.([^\"]*)\"".r)
       .filterNot(_.split('.').exists(_.headOption.exists(_.isUpper)))
-    assert(keys === Set("simhash.impl", "winnow.impl", "x3.spine"))
+    assert(keys === Set.empty[String])
+  }
+
+  test("main source materializes only through Materialize") {
+    // A raw checkpoint hides its input's plan from the plan gate
+    // (PlanBudget.audit sees only what Materialize records).
+    val raw = mainSources.collect {
+      case (f, txt) if f.getFileName.toString != "Materialize.scala" &&
+          "\\.(localCheckpoint|checkpoint)\\(".r.findFirstIn(txt).nonEmpty => f.toString
+    }
+    assert(raw.isEmpty, s"raw checkpoint calls outside Materialize.scala: ${raw.sorted}")
   }
 
   test("main source reads exactly the ten SPARK_GRAFT environment names") {

@@ -87,22 +87,21 @@ class DedupSpec extends SparkSpec {
   test("simhash: the per-row codegen signature equals the exploded-word " +
       "aggregate twin for BOTH hash families on the corpus") {
     import org.apache.spark.sql.DataFrame
-    def sigs(f: DataFrame => DataFrame, corpus: DataFrame) = {
-      val expr = f(corpus).as[(Long, Long)].collect().toMap
-      spark.conf.set("graft.simhash.impl", "agg")
-      try assert(expr === f(corpus).as[(Long, Long)].collect().toMap,
-        "SimHashBits and the aggregate formulation diverge")
-      finally spark.conf.unset("graft.simhash.impl")
+    type Frame = (DataFrame, String, String) => DataFrame
+    def sigs(f: Frame, twin: Frame, corpus: DataFrame) = {
+      def run(g: Frame) = g(corpus, "text", "doc_id").as[(Long, Long)].collect().toMap
+      val expr = run(f)
+      assert(expr === run(twin), "SimHashBits and the aggregate formulation diverge")
       expr
     }
     val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val xx = sigs(Dedup.simhashFrame(_, "text", "doc_id"), corpus)
-    val md = sigs(Dedup.simhashFramePortable(_, "text", "doc_id"), corpus)
+    val xx = sigs(Dedup.simhashFrame, DedupTwins.simhashFrameAgg, corpus)
+    val md = sigs(Dedup.simhashFramePortable, DedupTwins.simhashFramePortableAgg, corpus)
     assert(xx.nonEmpty && md.nonEmpty)
     md.values.foreach(sh => assert(sh >= 0 && sh < (1L << 60)))
     // the hand corpus exercises empty-ish and duplicate-word vote paths too
-    sigs(Dedup.simhashFrame(_, "text", "doc_id"), docs)
-    sigs(Dedup.simhashFramePortable(_, "text", "doc_id"), docs)
+    sigs(Dedup.simhashFrame, DedupTwins.simhashFrameAgg, docs)
+    sigs(Dedup.simhashFramePortable, DedupTwins.simhashFramePortableAgg, docs)
   }
 
   test("minhash LSH recall vs exact ground truth on the real corpus") {
@@ -629,16 +628,14 @@ class DedupSpec extends SparkSpec {
   test("winnowing: the codegen byte-offset Expression selects EXACTLY the " +
       "windowed-SQL set — corpus, 100KB long docs, multi-byte UTF-8") {
     import spark.implicits._
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      Dedup.winnowSelected(df, "text", "doc_id", k = 8, w = 4)
-        .select($"doc_id", $"pos".cast("long"), $"h", $"n_grams")
+    def rows(sel: org.apache.spark.sql.DataFrame) =
+      sel.select($"doc_id", $"pos".cast("long"), $"h", $"n_grams")
         .as[(Long, Long, String, Long)].collect().toSet
     def both(df: org.apache.spark.sql.DataFrame) = {
-      val expr = rows(df)
-      spark.conf.set("graft.winnow.impl", "window")
-      try assert(expr === rows(df),
+      val expr = rows(Dedup.winnowSelected(df, "text", "doc_id", k = 8, w = 4))
+      assert(expr === rows(
+        DedupTwins.winnowSelectedWindowed(df, "text", "doc_id", k = 8, w = 4)),
         "Expression and windowed-SQL selections diverge")
-      finally spark.conf.unset("graft.winnow.impl")
       expr
     }
     // the real corpus

@@ -84,13 +84,10 @@ class ApproxSpec extends SparkSpec {
   test("sentinel spine modes agree: the round-16 materialized spine emits " +
     "exactly the round-15 live-scan rows (sentinels included)") {
     val dir = "/root/testdata/sf0.001"
-    def rows(mode: String) = {
-      spark.conf.set("graft.x3.spine", mode)
-      try graft.SparkEntry.queries("x3_ann_pq")(spark, dir)
-        .collect().map(_.toSeq).toSeq
-      finally spark.conf.unset("graft.x3.spine")
-    }
-    assert(rows("ckpt") === rows("scan"))
+    val materialized = graft.SparkEntry.queries("x3_ann_pq")(spark, dir)
+    val liveScan = LlmOps.x3AnnPq(spark, dir, spine => spine)
+    assert(materialized.collect().map(_.toSeq).toSeq ===
+      liveScan.collect().map(_.toSeq).toSeq)
   }
 
   test("sketch pair entries' exact_jaccard_pm evidence is a valid ground-truth column") {
