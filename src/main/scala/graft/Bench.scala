@@ -396,8 +396,8 @@ object Bench {
       .mkString("{", ",", "}")
 
   /** Full per-query record — the artifact the bounded tail cannot clip. */
-  private def writeDetail(path: String, results: Seq[Timing],
-                          total: Double, sfDir: String): Unit = {
+  private[graft] def writeDetail(path: String, results: Seq[Timing],
+                                 total: Double, sfDir: String): Unit = {
     val nStalled = results.count(stalled)
     val nSingleRun = results.count(_.tiebreak.contains("single_run"))
     val rows = results.map { t =>
@@ -419,8 +419,8 @@ object Bench {
          |""".stripMargin).getOrElse("")
     val json =
       f"""{"metric": "total", "value": $total%.3f, "unit": "sec",
-         |$header "median_prior_ratio": ${ratioJson(medianPriorRatio(results))},
-         | "methodology": "forked JVMs: the four census stream entries share one fork, the other stream entries and entries whose prior_warm exceeds 4 s get a private fork, the rest run in shared forks of 24 in descending prior_warm order; every entry runs 3 times in its fork, cold = run 1, warm = min of the runs (run_taken = its 1-based index); when the wall clock plus the projected cost of the remaining forks (x1.25, priors scaled by the running median_prior_ratio) would overrun budget_s, or the wall clock passes 90%% of it, the remaining forks run each entry once (tiebreak: single_run, counted in n_single_run); an entry missing from a batch fork's output is retried once in a private fork before it counts as failed; stall: true marks warm runs (2..n) spanning >5x and >2 s; prior_warm = the committed board's warm, median_prior_ratio = the median of warm / prior_warm; cache_hit = every FixtureCache lookup was served from the persisted parquet; census_pos = the member's position in the census fork; raw per-run times in runs",
+         |$header "median_prior_ratio": ${ratioJson(medianPriorRatio(results))}, "hadoop_native": ${org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded},
+         | "methodology": "forked JVMs: the four census stream entries share one fork, the other stream entries and entries whose prior_warm exceeds 4 s get a private fork, the rest run in shared forks of 24 in descending prior_warm order; every entry runs 3 times in its fork, cold = run 1, warm = min of the runs (run_taken = its 1-based index); when the wall clock plus the projected cost of the remaining forks (x1.25, priors scaled by the running median_prior_ratio) would overrun budget_s, or the wall clock passes 90%% of it, the remaining forks run each entry once (tiebreak: single_run, counted in n_single_run); an entry missing from a batch fork's output is retried once in a private fork before it counts as failed; stall: true marks warm runs (2..n) spanning >5x and >2 s; prior_warm = the committed board's warm, median_prior_ratio = the median of warm / prior_warm; cache_hit = every FixtureCache lookup was served from the persisted parquet; census_pos = the member's position in the census fork; hadoop_native = libhadoop is loaded, a fact about the host only: EngineSession's local file system forks no chmod/readlink either way, so no timing here depends on it, while code on Hadoop's own local file system would fork per file where it is false; raw per-run times in runs",
          | "sf": "$sfDir",
          | "queries": {
          |${rows.mkString(",\n")}

@@ -23,6 +23,16 @@ class BenchSpec extends AnyFunSuite {
         """"median_prior_ratio":null}"""))
   }
 
+  test("the detail header says whether libhadoop is loaded") {
+    val path = java.nio.file.Files.createTempFile("bench_detail", ".json")
+    Bench.writeDetail(path.toString,
+      Seq(Bench.Timing("q1", 2.0, 1.0, runs = Seq(2.0, 1.0, 1.5))), 1.0, "/data/sf0.1")
+    val json = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
+    val native = org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded
+    assert(json.contains(s""""hadoop_native": $native,"""))
+    assert(json.contains(""""q1": {"cold": 2.000, "warm": 1.000, "runs": [2.000, 1.000, 1.500]"""))
+  }
+
   /** A runner that replays `results` in order and counts its calls. */
   private final class FakeRunner(results: (Double, Boolean)*) {
     private val it = results.iterator
