@@ -78,47 +78,49 @@ object Dedup {
 
   /** Build (or rebuild) the persisted digest index: the standing corpus's
     * DISTINCT text shas at `indexDir`, partitioned by [[shaBucket]] — one
-    * file per bucket, the bucket count recorded in the `_nbuckets` sidecar
-    * (the [[IndexMaintenance]] persist shape and coordination contract). */
+    * file per bucket ([[IndexMaintenance]]'s persist shape), the bucket
+    * count recorded in the `_nbuckets` sidecar. */
   def buildDigestIndex(corpus: DataFrame, textCol: String, indexDir: String,
-                       nBuckets: Int = LshIndexBuckets): Unit =
-    IndexMaintenance.writePartitionedIndex(
-      corpus.select(sha2(col(textCol), 256).as("text_sha")).distinct()
-        .withColumn("shab", shaBucket(col("text_sha"), nBuckets)),
-      "shab", indexDir, overwrite = true, nBuckets = Some(nBuckets))
+                       nBuckets: Int = LshIndexBuckets): Unit = {
+    IndexMaintenance.writePartitionedIndex(digestRows(corpus, textCol, nBuckets),
+      "shab", indexDir, overwrite = true)
+    BucketMeta.write(corpus.sparkSession, indexDir, "shab", nBuckets)
+  }
 
   /** MAINTAIN the digest index across ingests: append a batch's KEEPERS'
     * shas (files only added — one per touched bucket per ingest; standing
-    * files never rewritten). Keepers' shas are distinct by construction
-    * (first-copy-wins keeps one doc per new sha), so append == rebuild
-    * over corpus ∪ keepers, spec-pinned in DedupSpec. Fails loudly when
-    * `nBuckets` disagrees with the index's recorded bucket count —
-    * a mismatched append would write rows into directories later probes
-    * never read (round-18 ADVICE). */
+    * files never rewritten), bucketed under the index's recorded count.
+    * Keepers' shas are distinct by construction (first-copy-wins keeps one
+    * doc per new sha), so append == rebuild over corpus ∪ keepers,
+    * spec-pinned in DedupSpec. */
   def appendDigestIndex(batchKeepers: DataFrame, textCol: String,
-                        indexDir: String,
-                        nBuckets: Int = LshIndexBuckets): Unit =
-    IndexMaintenance.writePartitionedIndex(
-      batchKeepers.select(sha2(col(textCol), 256).as("text_sha")).distinct()
-        .withColumn("shab", shaBucket(col("text_sha"), nBuckets)),
-      "shab", indexDir, overwrite = false, nBuckets = Some(nBuckets))
+                        indexDir: String): Unit = {
+    val n = indexBuckets(batchKeepers.sparkSession, indexDir, "shab", "buildDigestIndex")
+    IndexMaintenance.writePartitionedIndex(digestRows(batchKeepers, textCol, n),
+      "shab", indexDir, overwrite = false)
+  }
+
+  private def digestRows(docs: DataFrame, textCol: String, nBuckets: Int): DataFrame =
+    docs.select(sha2(col(textCol), 256).as("text_sha")).distinct()
+      .withColumn("shab", shaBucket(col("text_sha"), nBuckets))
 
   /** Read a persisted digest index together with its RECORDED bucket
     * count — the probe-side half of the coordination contract: feed the
     * returned count to [[exactIncrementalBucketed]] and a modulus mismatch
-    * is impossible by construction. Requires a round-19+ index (sidecar
-    * present); fails loudly otherwise. */
+    * is impossible by construction. */
   def readDigestIndex(spark: org.apache.spark.sql.SparkSession,
                       indexDir: String): (DataFrame, Int) = {
-    val n = BucketMeta.read(spark, indexDir) match {
-      case Some(("shab", n)) => n
-      case other => throw new IllegalArgumentException(
-        s"readDigestIndex: no shab bucket-count sidecar at $indexDir " +
-          s"(found $other) — rebuild via buildDigestIndex, or probe with " +
-          "the build-time nBuckets explicitly")
-    }
+    val n = indexBuckets(spark, indexDir, "shab", "buildDigestIndex")
     (spark.read.parquet(indexDir), n)
   }
+
+  /** The recorded bucket count of the existing `partCol` index at `dir`, by
+    * [[BucketMeta.bucketCount]]'s rule; an absent index fails: an append or
+    * read needs it built first (by `build`). */
+  private def indexBuckets(spark: org.apache.spark.sql.SparkSession, dir: String,
+                           partCol: String, build: String): Int =
+    BucketMeta.bucketCount(spark, dir, partCol)(throw new IllegalStateException(
+      s"no $partCol index at $dir (no ${BucketMeta.File} sidecar): build it first with $build"))
 
   /** Compact the digest index after appends — the same staged-swap
     * rewrite as [[compactLshBandIndex]] / IVF, via
@@ -592,26 +594,30 @@ object Dedup {
     * [[lshIncrementalPortable]]: the [[portableBandRows]] signature+band
     * rows of the standing corpus, written as parquet at `indexDir`
     * PARTITIONED BY the `bkb` band-key bucket so later ingests probe it
-    * partition-pruned (the bucketed-layout discipline above). */
+    * partition-pruned (the bucketed-layout discipline above) — one file per
+    * bucket ([[IndexMaintenance]]'s persist shape), the bucket count
+    * recorded in the `_nbuckets` sidecar. */
   def buildLshBandIndex(corpus: DataFrame, textCol: String, idCol: String,
                         indexDir: String, shingleSize: Int = 3,
                         bands: Int = 8, rowsPerBand: Int = 2,
-                        nBuckets: Int = LshIndexBuckets): Unit =
-    // one file per bucket + the `_nbuckets` sidecar — the shared
-    // [[IndexMaintenance]] persist shape and coordination contract
+                        nBuckets: Int = LshIndexBuckets): Unit = {
     IndexMaintenance.writePartitionedIndex(
       bucketedBandRows(
         portableBandRows(corpus, textCol, idCol, shingleSize, bands,
           rowsPerBand), nBuckets),
-      "bkb", indexDir, overwrite = true, nBuckets = Some(nBuckets))
+      "bkb", indexDir, overwrite = true)
+    BucketMeta.write(corpus.sparkSession, indexDir, "bkb", nBuckets)
+  }
 
   /** MAINTAIN the persisted LSH band index across ingests: append the
     * band rows of a batch's KEEPERS (the docs an ingest classified
-    * `keep`) so the NEXT ingest's corpus side includes them — the
-    * "append new keepers' band rows" half of the
-    * [[lshIncrementalPortable]] contract, which until round 17 was the
-    * caller's prose obligation with no operator behind it. Only the batch
-    * is hashed; the write APPENDS files and standing index files are
+    * `keep`), bucketed under the index's recorded count, so the NEXT
+    * ingest's corpus side includes them — the "append new keepers' band
+    * rows" half of the [[lshIncrementalPortable]] contract, which until
+    * round 17 was the caller's prose obligation with no operator behind
+    * it. Only the batch is hashed; the write APPENDS files (one per touched
+    * bucket per ingest, the bounded append-rate that makes nightly
+    * compaction a threshold sweep, not a race) and standing index files are
     * never rewritten (the [[graft.ops.Similarity.appendIvfIndexInt]]
     * discipline, spec-pinned in DedupSpec). Band rows are per-document
     * independent, so append-then-classify is bit-identical to a full
@@ -620,33 +626,22 @@ object Dedup {
   def appendLshBandIndex(batchKeepers: DataFrame, textCol: String,
                          idCol: String, indexDir: String,
                          shingleSize: Int = 3, bands: Int = 8,
-                         rowsPerBand: Int = 2,
-                         nBuckets: Int = LshIndexBuckets): Unit =
-    // one file per touched bucket PER INGEST (the bounded append-rate that
-    // makes nightly compaction a threshold sweep, not a race); fails
-    // loudly when `nBuckets` disagrees with the index's recorded count —
-    // a mismatched append would write rows into directories later probes
-    // never read (round-18 ADVICE)
+                         rowsPerBand: Int = 2): Unit = {
+    val n = indexBuckets(batchKeepers.sparkSession, indexDir, "bkb", "buildLshBandIndex")
     IndexMaintenance.writePartitionedIndex(
       bucketedBandRows(
         portableBandRows(batchKeepers, textCol, idCol, shingleSize, bands,
-          rowsPerBand), nBuckets),
-      "bkb", indexDir, overwrite = false, nBuckets = Some(nBuckets))
+          rowsPerBand), n),
+      "bkb", indexDir, overwrite = false)
+  }
 
   /** Read a persisted LSH band index together with its RECORDED bucket
     * count ([[readDigestIndex]]'s band twin): feed the returned count to
     * [[lshIngestClassifyBucketed]] / [[lshDiscoverVerifiedPairsBucketed]]
-    * and a modulus mismatch is impossible by construction. Requires a
-    * round-19+ index (sidecar present); fails loudly otherwise. */
+    * and a modulus mismatch is impossible by construction. */
   def readLshBandIndex(spark: org.apache.spark.sql.SparkSession,
                        indexDir: String): (DataFrame, Int) = {
-    val n = BucketMeta.read(spark, indexDir) match {
-      case Some(("bkb", n)) => n
-      case other => throw new IllegalArgumentException(
-        s"readLshBandIndex: no bkb bucket-count sidecar at $indexDir " +
-          s"(found $other) — rebuild via buildLshBandIndex, or probe with " +
-          "the build-time nBuckets explicitly")
-    }
+    val n = indexBuckets(spark, indexDir, "bkb", "buildLshBandIndex")
     (spark.read.parquet(indexDir), n)
   }
 
@@ -673,9 +668,10 @@ object Dedup {
     * classify each NEW document against the STANDING corpus's persisted
     * LSH band index and against earlier documents of its own batch,
     * re-hashing only the batch. The corpus index (the [[portableBandRows]]
-    * signature+band rows) is built at `indexDir` ONLY when no valid index
-    * (`_SUCCESS` marker) is already there — every later ingest against the
-    * same path reuses it, so per-ingest cost is O(batch), never O(corpus):
+    * signature+band rows) is built at `indexDir` ONLY when no index is
+    * there yet ([[BucketMeta.bucketCount]]'s new store) — every later
+    * ingest against the same path reuses it, so per-ingest cost is
+    * O(batch), never O(corpus):
     * the property that keeps continuous near-dedup viable at 100 TB,
     * exactly as [[exactIncremental]] establishes for digests. The caller
     * owns invalidation: maintain the index across ingests (append new
@@ -695,48 +691,24 @@ object Dedup {
                              shingleSize: Int = 3, bands: Int = 8,
                              rowsPerBand: Int = 2, minAgree: Int = 4): DataFrame = {
     val spark = corpus.sparkSession
-    // An existing valid index is REUSED, not rebuilt — this is what makes
-    // the per-ingest cost genuinely O(batch) across calls (round-8 ADVICE:
-    // an unconditional rebuild made the claim true only in prose). The
-    // check goes through the Hadoop FileSystem so it works on HDFS/S3
-    // paths too (a java.io.File check is always-false there and would
-    // silently rebuild every ingest — round-9 review). The caller owns
-    // invalidation (fresh indexDir or explicit [[buildLshBandIndex]] on a
-    // corpus change) AND first-build coordination: index maintenance is a
-    // single-writer pipeline step; two concurrent FIRST ingests against
-    // one empty indexDir race their overwrite writes.
-    val idxPath = new org.apache.hadoop.fs.Path(indexDir, "_SUCCESS")
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(idxPath))
+    // An existing index is REUSED, not rebuilt — this is what makes the
+    // per-ingest cost genuinely O(batch) across calls (round-8 ADVICE: an
+    // unconditional rebuild made the claim true only in prose). Only a new
+    // store (no sidecar, no bkb= directory) is built; an existing one is
+    // probed partition-pruned under its RECORDED bucket count, so an index
+    // built with a non-default count is probed correctly without the caller
+    // carrying the number. The caller owns invalidation (fresh indexDir or
+    // explicit [[buildLshBandIndex]] on a corpus change) AND first-build
+    // coordination: index maintenance is a single-writer pipeline step; two
+    // concurrent FIRST ingests against one empty indexDir race their
+    // overwrite writes.
+    val n = BucketMeta.bucketCount(spark, indexDir, "bkb") {
       buildLshBandIndex(corpus, textCol, idCol, indexDir,
         shingleSize, bands, rowsPerBand)
-    val idxDf = spark.read.parquet(indexDir)
-    if (!idxDf.columns.contains("bkb"))
-      // a pre-round-18 index written by the UNBUCKETED build: no layout to
-      // prune, so classify against the full rows instead of failing with a
-      // missing-column AnalysisException (round-18 ADVICE); the next
-      // explicit rebuild adopts the bucketed layout
-      lshIngestClassify(idxDf, batch, textCol, idCol, shingleSize, bands,
-        rowsPerBand, minAgree)
-    else {
-      // probe the bucketed layout partition-pruned — only the batch's
-      // colliding bkb directories are read, never the whole standing index
-      // — under the index's RECORDED bucket count: the sidecar is the
-      // build/probe coordination contract, so an index built with a
-      // non-default count is probed correctly without the caller carrying
-      // the number (round-18 ADVICE). A round-18 index (bucketed, no
-      // sidecar) predates non-default builds through this path; validate
-      // its directories against the default best-effort and proceed.
-      val probeBuckets = BucketMeta.read(spark, indexDir) match {
-        case Some(("bkb", n)) => n
-        case _ =>
-          IndexMaintenance.requireBucketMeta(spark, indexDir, "bkb",
-            LshIndexBuckets, "lshIncrementalPortable probe")
-          LshIndexBuckets
-      }
-      lshIngestClassifyBucketed(idxDf, batch, textCol, idCol, shingleSize,
-        bands, rowsPerBand, minAgree, probeBuckets)
+      LshIndexBuckets
     }
+    lshIngestClassifyBucketed(spark.read.parquet(indexDir), batch, textCol,
+      idCol, shingleSize, bands, rowsPerBand, minAgree, n)
   }
 
   /** The ingest-classify core of [[lshIncrementalPortable]], taking the

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import graft.tables.BucketMeta
 
 /** The shared lifecycle mechanics of this engine's three maintained,
   * directory-partitioned parquet index families — the exact-dedup digest
@@ -27,88 +26,31 @@ import graft.tables.BucketMeta
   *   - REPAIR: roll a crashed swap forward from its staging manifest
   *     ([[repairPartitionedIndex]]).
   *
-  * Bucket-count coordination contract (round-18 ADVICE): for the modulus
-  * families (digest `shab`, band `bkb`) the bucket id is
-  * `pmod(hash(key), nBuckets)` — a probe or append computed under a
-  * DIFFERENT nBuckets than the build prunes the wrong directories and
-  * silently misclassifies. Build therefore records the count in a
-  * [[graft.tables.BucketMeta]] sidecar at the index root (underscore-
-  * prefixed, so parquet reads ignore it), and append/probe REQUIRE it to
-  * match, failing loudly on mismatch. A pre-sidecar (round-18) index gets
-  * best-effort validation — every existing partition value must fall in
-  * [0, nBuckets) — and STAYS sidecar-less until an explicit rebuild: best-effort
-  * validation cannot prove a smaller-modulus build, so recording its
-  * assumed count would certify exactly what it cannot verify (round-19
-  * ADVICE). The IVF family's
-  * partition values are centroid ids, not a modulus; its coordination
-  * contract is the centroid array the caller holds, so it carries no
-  * sidecar. */
+  * For the modulus families (digest `shab`, band `bkb`) the bucket id is
+  * `pmod(hash(key), nBuckets)`, so an append or probe computed under
+  * another count than the build's prunes the wrong directories: a build
+  * records its count in the `_nbuckets` sidecar, and append and probe take
+  * it from there by [[graft.tables.BucketMeta.bucketCount]]'s rule. The IVF
+  * family's partition values are centroid ids, not a modulus; its
+  * coordination contract is the centroid array the caller holds, so it
+  * carries no sidecar. */
 private[ops] object IndexMaintenance {
 
   private def fsFor(spark: SparkSession, path: org.apache.hadoop.fs.Path) =
     path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Enforce the bucket-count contract before an append or probe computes
-    * bucket ids under `nBuckets`: a recorded sidecar must match exactly;
-    * a legacy index (no sidecar) is validated best-effort — every existing
-    * `partCol=v` directory value must fall in [0, nBuckets), which catches
-    * a build under a LARGER modulus (a smaller one is unprovable from
-    * directories alone; the sidecar exists for exactly that case and every
-    * build since round 19 writes it). */
-  def requireBucketMeta(spark: SparkSession, dir: String, partCol: String,
-                        nBuckets: Int, op: String): Unit =
-    BucketMeta.read(spark, dir) match {
-      case Some((c, n)) =>
-        require(c == partCol && n == nBuckets,
-          s"$op: index at $dir was built with $c=$n but this call computes " +
-            s"$partCol buckets under nBuckets=$nBuckets — a mismatched " +
-            "modulus prunes the wrong directories (or appends rows into " +
-            "directories later probes never read); pass the recorded count")
-      case None =>
-        val bad = BucketMeta.partitionValues(spark, dir, partCol)
-          .flatMap(_.toLongOption)
-          .filter(v => v < 0 || v >= nBuckets)
-        require(bad.isEmpty,
-          s"$op: index at $dir holds $partCol values ${bad.mkString(",")} " +
-            s"outside [0, $nBuckets) — it was built under a different " +
-            "bucket count than this call assumes")
-    }
 
   /** The shared persist shape of all three families: write the rows
     * `partitionBy(partCol)`, optionally hash-repartitioned on it first so
     * each partition lands as ONE file (one task per bucket — without this
     * every upstream task writes its own file into every partition it holds
     * rows for, and the layout is born with the small-file pathology
-    * compaction exists to repair). For the modulus families (`nBuckets`
-    * supplied) an append first enforces the bucket-count contract and the
-    * write records/refreshes the sidecar. */
+    * compaction exists to repair). */
   def writePartitionedIndex(rows: DataFrame, partCol: String, dir: String,
                             overwrite: Boolean,
-                            nBuckets: Option[Int] = None,
                             onePerPartition: Boolean = true): Unit = {
-    val spark = rows.sparkSession
-    // Legacy-append posture (round-19 ADVICE): an append onto a
-    // pre-sidecar index only validates the bucket contract BEST-EFFORT
-    // (every partition value in [0, nBuckets) — a build under a SMALLER
-    // modulus is unprovable from directories alone), so writing a sidecar
-    // after such an append would record an UNPROVEN count as the layout's
-    // source of truth and make a silent mixed-modulus misclassification
-    // permanent and confidently certified. Only a build (overwrite)
-    // records the count; an append REFRESHES an existing sidecar but never
-    // creates one — adopting the contract on a legacy index requires an
-    // explicit rebuild.
-    val hadSidecar = !overwrite && nBuckets.isDefined &&
-      BucketMeta.read(spark, dir).isDefined
-    if (!overwrite)
-      nBuckets.foreach(requireBucketMeta(spark, dir, partCol, _, "append"))
     val out = if (onePerPartition) rows.repartition(col(partCol)) else rows
     out.write.mode(if (overwrite) "overwrite" else "append")
       .partitionBy(partCol).parquet(dir)
-    // after the data write: an overwrite clears the directory first (the
-    // build is the count's source of truth), a sidecar-carrying append
-    // re-records the verified-matching count
-    if (overwrite || hadSidecar)
-      nBuckets.foreach(BucketMeta.write(spark, dir, partCol, _))
   }
 
   /** The shared bounded pruned probe: collect the batch's DISTINCT bucket

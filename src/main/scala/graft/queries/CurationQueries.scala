@@ -277,6 +277,15 @@ object CurationQueries {
   private[graft] def x10Threshold(s: SparkSession, dir: String): DataFrame =
     x10ThresholdAt(s, dir, num = 4)
 
+  /** The night's new documents, ids at or past the 4/5 cut, materialized
+    * once: the x10 entries read the delta in several sub-plans, and each
+    * would otherwise re-plan the threshold cross join over `documents`. */
+  private def x10Delta(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    Materialize.once(documents(s, dir).crossJoin(x10Threshold(s, dir))
+      .filter($"doc_id" >= $"thr").select($"doc_id", $"lang", $"text"), "x10 night delta")
+  }
+
   /** The generalized `num`/5-id cut — the two-night chain needs the 3/5
     * line too (standing < 3/5, night 1 = [3/5, 4/5), night 2 ≥ 4/5). */
   private[graft] def x10ThresholdAt(s: SparkSession, dir: String,
@@ -704,11 +713,8 @@ object CurationQueries {
     * nights. Timed body = night 2's increment only; night-1 state is a
     * prewarmed ingest artifact. */
   def x10_two_night_census(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val st1 = x10NightOneState(s, dir)
-    val delta2 = documents(s, dir).crossJoin(x10Threshold(s, dir))
-      .filter($"doc_id" >= $"thr").drop("thr")
-      .select($"doc_id", $"lang", $"text")
+    val delta2 = x10Delta(s, dir)
     incrementalCensusCore(st1.digests, st1.reps, st1.kept, st1.census,
       discoverTouching(st1, delta2), delta2)
   }
@@ -745,10 +751,7 @@ object CurationQueries {
     * this band is no longer possible — the trigger now sits below the
     * drift amplitudes this entry has actually exhibited. */
   def x10_state_reps(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val delta = documents(s, dir).crossJoin(x10Threshold(s, dir))
-      .filter($"doc_id" >= $"thr").drop("thr")
-      .select($"doc_id", $"lang", $"text")
+    val delta = x10Delta(s, dir)
     val st = x10StandingState(s, dir)
     incrementalRepsCore(st.digests, st.reps, discoverTouching(st, delta),
       delta)
@@ -785,10 +788,7 @@ object CurationQueries {
     * mandatory heavy-entry retry (warm > 4 s and > 1.35x prior now always
     * re-forks), so a drifted number can no longer stand unadjudicated. */
   def x10_pipeline_incremental(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val delta = documents(s, dir).crossJoin(x10Threshold(s, dir))
-      .filter($"doc_id" >= $"thr").drop("thr")
-      .select($"doc_id", $"lang", $"text")
+    val delta = x10Delta(s, dir)
     incrementalCensus(s, dir, delta)
   }
 

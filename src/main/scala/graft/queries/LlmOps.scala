@@ -2478,17 +2478,17 @@ object LlmOps {
     Dedup.buildLshBandIndex(docs.filter($"doc_id" % 20 === 3), "text",
       "doc_id", idxDir, nBuckets = 8)
     val b1 = docs.filter($"doc_id" % 20 === 1)
-    // probes read the non-default bucket count from the index's own
-    // sidecar (readLshBandIndex) — exactly the coordination this entry's
-    // 8-bucket layout needs (a default-32 probe here would prune the
-    // wrong directories; the sidecar contract makes that unrepresentable)
+    // probes and the append read the non-default bucket count from the
+    // index's own sidecar — exactly the coordination this entry's 8-bucket
+    // layout needs (a default-32 probe here would prune the wrong
+    // directories; the sidecar contract makes that unrepresentable)
     val (idx1, nb1) = Dedup.readLshBandIndex(s, idxDir)
     val keepers1 = b1.join(
       Dedup.lshIngestClassifyBucketed(idx1, b1,
           "text", "doc_id", nBuckets = nb1)
         .filter($"status" === "keep").select($"doc_id"),
       Seq("doc_id"))
-    Dedup.appendLshBandIndex(keepers1, "text", "doc_id", idxDir, nBuckets = 8)
+    Dedup.appendLshBandIndex(keepers1, "text", "doc_id", idxDir)
     Dedup.compactLshBandIndex(s, idxDir, maxFilesPerBucket = 1)
     val (idx2, nb2) = Dedup.readLshBandIndex(s, idxDir)
     Dedup.lshIngestClassifyBucketed(idx2,

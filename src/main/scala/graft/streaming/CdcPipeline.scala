@@ -234,18 +234,9 @@ object CdcPipeline {
     * themselves, so the store converges.
     *
     * The bucket count `n` is a property of the store, recorded once as
-    * `bucket=n` in its [[BucketMeta]] sidecar (`_nbuckets` at the store's
-    * root, hidden from `spark.read.parquet(statePath)`). The rules, checked
-    * before anything is written:
-    *   - sidecar present: it is authoritative, whatever the session's
-    *     parallelism;
-    *   - absent and no `bucket=` directory: a new store takes the batch
-    *     session's `spark.sql.shuffle.partitions`, written to the sidecar
-    *     first;
-    *   - absent but `bucket=` directories exist: a store of an older layout,
-    *     bucketed by another hash — the batch fails;
-    *   - unreadable, not a positive count, or recorded for another
-    *     partition column: the batch fails.
+    * `bucket=n` in its `_nbuckets` sidecar and decided before anything is
+    * written by [[BucketMeta.bucketCount]]; a new store takes the batch
+    * session's `spark.sql.shuffle.partitions`, written to the sidecar first.
     * Why the session's parallelism and not a fixed, finer count: a micro-
     * batch of k keys dirties about n·(1 − (1 − 1/n)^k) buckets, and a live
     * feed's batches grow until they absorb the feed's rate over one batch
@@ -280,8 +271,11 @@ object CdcPipeline {
           val spark = batch.sparkSession
           val root = new Path(statePath)
           val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-          val n = storeBuckets(spark, statePath,
-            spark.conf.get("spark.sql.shuffle.partitions").toInt)
+          val n = BucketMeta.bucketCount(spark, statePath, "bucket") {
+            val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
+            BucketMeta.write(spark, statePath, "bucket", session)
+            session
+          }
           val key = Seq(col("database"), col("table"), col("pk"))
           val isError = CanalJson.processErrorRow(col("data"))
           val keyed = batch
@@ -323,21 +317,4 @@ object CdcPipeline {
   private def fileNames(fs: FileSystem, dir: Path): Option[Set[String]] =
     try Some(fs.listStatus(dir).map(_.getPath.getName).toSet)
     catch { case _: FileNotFoundException => None }
-
-  /** The store's bucket count, from its [[BucketMeta]] sidecar by the
-    * rules in [[materializeSink]]; a new store records `newStore`. */
-  private def storeBuckets(spark: SparkSession, statePath: String, newStore: Int): Int =
-    BucketMeta.read(spark, statePath) match {
-      case Some(("bucket", n)) => n
-      case Some((c, _)) => throw new IllegalStateException(
-        s"$statePath/${BucketMeta.File} records $c buckets, not the sink's bucket")
-      case None =>
-        if (BucketMeta.partitionValues(spark, statePath, "bucket").nonEmpty)
-          throw new IllegalStateException(
-            s"$statePath has bucket= directories but no ${BucketMeta.File} sidecar: a " +
-              "store of an older layout, bucketed by another hash; replay the feed " +
-              "into a new state path")
-        BucketMeta.write(spark, statePath, "bucket", newStore)
-        newStore
-    }
 }

@@ -10,12 +10,12 @@ import org.apache.spark.sql.SparkSession
   * `partCol=` directories were computed under. The leading `_` keeps it out
   * of `spark.read.parquet(dir)`.
   *
-  * Two kinds of store record one: the maintained index families
-  * ([[graft.ops.IndexMaintenance]]) and the CDC materialize sink
-  * ([[graft.streaming.CdcPipeline.materializeSink]]). The format and its
-  * reading are shared here; what a store WITHOUT a sidecar means is each
-  * owner's rule (a pre-sidecar index is validated best-effort, a
-  * pre-sidecar sink store was bucketed by another hash and is refused). */
+  * Two kinds of store record one: the modulus index families (digest
+  * `shab` and LSH band `bkb`, [[graft.ops.Dedup]]) and the CDC materialize
+  * sink ([[graft.streaming.CdcPipeline.materializeSink]]). Which modulus a
+  * store was built under is decided by [[bucketCount]] alone, for all of
+  * them: the store's sidecar is the only source of its layout, never the
+  * caller. */
 object BucketMeta {
 
   val File = "_nbuckets"
@@ -53,6 +53,35 @@ object BucketMeta {
         s"$p must hold partCol=<positive bucket count>, found '${text.take(40)}'")
     }
   }
+
+  /** The bucket count of the store at `dir`, partitioned by `partCol` —
+    * the one rule every bucketed store follows, checked before anything is
+    * written or probed:
+    *   - a sidecar recording `partCol` gives the count, whatever the
+    *     caller's session or parameters;
+    *   - a damaged sidecar (not `partCol=n` with a positive `n`), or one
+    *     recording another column, fails;
+    *   - no sidecar but `partCol=` directories present fails: a store of an
+    *     older layout, or a build that died before recording its count,
+    *     whose modulus nothing can prove;
+    *   - no sidecar and no directory is a new store: `newStore` creates it
+    *     (the sink records its session's count, an index build writes its
+    *     rows and its count) and returns the count it recorded. A caller
+    *     that needs an existing store (an index append or read) throws from
+    *     `newStore` instead.
+    * Every failure names the sidecar file. */
+  def bucketCount(spark: SparkSession, dir: String, partCol: String)(newStore: => Int): Int =
+    read(spark, dir) match {
+      case Some((`partCol`, n)) => n
+      case Some((c, _)) => throw new IllegalStateException(
+        s"$dir/$File records $c buckets, not $partCol")
+      case None if partitionValues(spark, dir, partCol).nonEmpty =>
+        throw new IllegalStateException(
+          s"$dir has $partCol= directories but no $File sidecar, so the modulus they " +
+            "were bucketed under is unknown (an older layout, or a build that did not " +
+            "finish); rerun the index build, or replay the feed into a new state path")
+      case None => newStore
+    }
 
   /** The values of the `partCol=` directories directly under `dir`; empty
     * if `dir` does not exist. */

@@ -89,6 +89,17 @@ class RegistrationSpec extends SparkSpec {
     assert(raw.isEmpty, s"raw checkpoint calls outside Materialize.scala: ${raw.sorted}")
   }
 
+  test("main source decides a store's bucket count only in BucketMeta") {
+    // BucketMeta.bucketCount is the one rule for what a bucketed store's
+    // sidecar (or its absence) means; a second reader of the sidecar or of
+    // the partition directories is a second copy of that rule.
+    val readers = mainSources.collect {
+      case (f, txt) if !f.endsWith(java.nio.file.Paths.get("tables", "BucketMeta.scala")) &&
+          "BucketMeta\\.(read|partitionValues)\\b".r.findFirstIn(txt).nonEmpty => f.toString
+    }
+    assert(readers.isEmpty, s"BucketMeta.read/partitionValues outside BucketMeta.scala: ${readers.sorted}")
+  }
+
   test("main source reads exactly the ten SPARK_GRAFT environment names") {
     // Every env knob is a second way to run the bench or the fixtures. Bench
     // reads the driver's inputs plus its parent-to-child FORKED/SINGLE_RUN

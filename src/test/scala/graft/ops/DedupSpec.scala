@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -690,32 +691,30 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  /** The `partCol=` directory values under `dir`, as ints. */
+  private def bucketDirs(dir: String, partCol: String): Seq[Int] = {
+    val s = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+    try s.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith(s"$partCol=")).map(_.stripPrefix(s"$partCol=").toInt).toSeq
+    finally s.close()
+  }
+
   test("bucket-count contract: build records the sidecar, readers return " +
-    "it, a mismatched append fails loudly, the portable probe adopts the " +
-    "recorded count, and a legacy larger-modulus index is caught " +
-    "best-effort") {
+    "it, and append and the portable probe adopt the recorded count") {
     val band = java.nio.file.Files.createTempDirectory("lsh-idx-meta-").toString
     val sha = java.nio.file.Files.createTempDirectory("sha-idx-meta-").toString
-    val legacy = java.nio.file.Files.createTempDirectory("lsh-idx-leg-").toString
     try {
       val corpus = (1 to 60).map(i => (i.toLong,
           s"corpus doc $i tok${i}a tok${i}b tok${i}c tok${i}d tok${i}e"))
         .toDF("doc_id", "text")
       // band index built with a NON-default bucket count
       Dedup.buildLshBandIndex(corpus, "text", "doc_id", band, nBuckets = 8)
-      val (bandDf, bandN) = Dedup.readLshBandIndex(spark, band)
+      val (_, bandN) = Dedup.readLshBandIndex(spark, band)
       assert(bandN === 8)
-      // a default-count append against the 8-bucket layout must fail
-      // LOUDLY — it would write rows into bkb directories >= 8 that every
-      // 8-modulus probe computes ids below (round-18 ADVICE)
-      val e1 = intercept[IllegalArgumentException] {
-        Dedup.appendLshBandIndex(docs.filter($"doc_id" === 5L), "text",
-          "doc_id", band) // default nBuckets = 32
-      }
-      assert(e1.getMessage.contains("bkb=8"))
-      // a matching append succeeds and keeps the sidecar
-      Dedup.appendLshBandIndex(docs.filter($"doc_id" === 5L), "text",
-        "doc_id", band, nBuckets = 8)
+      // the append buckets under the recorded 8, not the default 32: every
+      // directory stays below 8, and the sidecar is unchanged
+      Dedup.appendLshBandIndex(docs, "text", "doc_id", band)
+      assert(bucketDirs(band, "bkb").forall(_ < 8), bucketDirs(band, "bkb"))
       assert(Dedup.readLshBandIndex(spark, band)._2 === 8)
       // the portable probe reads the count from the sidecar: its
       // classification equals the explicit nBuckets=8 call (a default-32
@@ -733,36 +732,68 @@ class DedupSpec extends SparkSpec {
       // digest family: same contract
       Dedup.buildDigestIndex(corpus, "text", sha, nBuckets = 8)
       assert(Dedup.readDigestIndex(spark, sha)._2 === 8)
-      val e2 = intercept[IllegalArgumentException] {
-        Dedup.appendDigestIndex(docs.filter($"doc_id" === 5L), "text", sha)
-      }
-      assert(e2.getMessage.contains("shab=8"))
-      // legacy (pre-sidecar) index built under a LARGER modulus: directory
-      // values >= the assumed count prove the mismatch without a sidecar
-      Dedup.buildLshBandIndex(corpus, "text", "doc_id", legacy) // 32 buckets
-      val fs = new org.apache.hadoop.fs.Path(legacy)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(legacy,
-        graft.tables.BucketMeta.File), false)
-      val e3 = intercept[IllegalArgumentException] {
-        Dedup.appendLshBandIndex(docs.filter($"doc_id" === 5L), "text",
-          "doc_id", legacy, nBuckets = 8)
-      }
-      assert(e3.getMessage.contains("outside [0, 8)"))
-      // no-sidecar readers fail loudly rather than guessing a modulus
-      intercept[IllegalArgumentException](Dedup.readLshBandIndex(spark, legacy))
-      // a legacy append that PASSES best-effort validation (its modulus
-      // matches the layout) must NOT mint a sidecar: best-effort cannot
-      // prove a smaller-modulus build, so recording the assumed count
-      // would certify what it cannot verify — the index stays legacy
-      // until an explicit rebuild (round-19 ADVICE)
-      Dedup.appendLshBandIndex(docs.filter($"doc_id" === 5L), "text",
-        "doc_id", legacy) // default nBuckets = 32, matches the 32 build
-      assert(graft.tables.BucketMeta.read(spark, legacy).isEmpty,
-        "append minted a sidecar from best-effort-only validation")
-      intercept[IllegalArgumentException](Dedup.readLshBandIndex(spark, legacy))
-      Seq(band, sha, legacy).foreach(d =>
+      Dedup.appendDigestIndex(docs, "text", sha)
+      assert(bucketDirs(sha, "shab").forall(_ < 8), bucketDirs(sha, "shab"))
+      assert(Dedup.readDigestIndex(spark, sha)._2 === 8)
+    } finally {
+      Seq(band, sha).foreach(d =>
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
+    }
+  }
+
+  test("index append, read and the portable probe fail a store of the old " +
+    "layout or with a bad marker, naming the sidecar, and leave it untouched") {
+    import graft.tables.BucketMeta
+    def tree(root: String): Seq[(String, Long)] = {
+      val p = java.nio.file.Paths.get(root)
+      val s = java.nio.file.Files.walk(p)
+      try s.iterator().asScala.map(f => (p.relativize(f).toString,
+        if (java.nio.file.Files.isRegularFile(f)) java.nio.file.Files.size(f) else -1L))
+        .toSeq.sorted
+      finally s.close()
+    }
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+    def marker(text: String)(dir: String): Unit = {
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, BucketMeta.File),
+        text.getBytes("UTF-8"))
+      ()
+    }
+    // each call with the partition column its index family buckets by
+    val calls: Seq[(String, String, String => Any)] = Seq(
+      ("appendDigestIndex", "shab", Dedup.appendDigestIndex(docs, "text", _)),
+      ("appendLshBandIndex", "bkb", Dedup.appendLshBandIndex(docs, "text", "doc_id", _)),
+      ("readDigestIndex", "shab", Dedup.readDigestIndex(spark, _)),
+      ("readLshBandIndex", "bkb", Dedup.readLshBandIndex(spark, _)),
+      ("lshIncrementalPortable", "bkb",
+        Dedup.lshIncrementalPortable(docs, docs, "text", "doc_id", _)))
+    val cases: Seq[(String, String => String => Unit)] = Seq(
+      // partCol= directories, no sidecar
+      "old layout" -> { c => dir =>
+        Seq((1L, 2L)).toDF("id", "band").write.parquet(s"$dir/$c=5") },
+      "non-numeric marker" -> (c => marker(s"$c=four")),
+      "zero buckets" -> (c => marker(s"$c=0")),
+      "another partition column" -> (c => marker(s"${if (c == "bkb") "shab" else "bkb"}=4")))
+    for ((what, setUp) <- cases; (call, partCol, run) <- calls) {
+      val dir = java.nio.file.Files.createTempDirectory("idx-layout-").toString
+      try {
+        setUp(partCol)(dir)
+        val before = tree(dir)
+        val e = intercept[Exception](run(dir))
+        assert(msgs(e).exists(_.contains(BucketMeta.File)),
+          s"$what / $call: ${msgs(e).take(2)}")
+        assert(tree(dir) === before, s"$what / $call: the store must be untouched")
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+    // no store at all: append and read need one built first (the portable
+    // probe builds it)
+    for ((call, _, run) <- calls.filterNot(_._1 == "lshIncrementalPortable")) {
+      val dir = java.nio.file.Files.createTempDirectory("idx-none-").toString
+      try {
+        val e = intercept[IllegalStateException](run(dir))
+        assert(e.getMessage.contains("build it first"), s"$call: ${e.getMessage}")
+        assert(tree(dir) === Seq(("", -1L)), s"$call: nothing may be written")
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
 
@@ -867,29 +898,6 @@ class DedupSpec extends SparkSpec {
     } finally {
       Seq(band, sha).foreach(d =>
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
-    }
-  }
-
-  test("lshIncrementalPortable: an UNBUCKETED (pre-round-18) index falls " +
-    "back to the full-scan classify instead of failing on the missing " +
-    "bkb column") {
-    val idx = java.nio.file.Files.createTempDirectory("lsh-idx-flat-").toString
-    try {
-      val corpus = docs.filter($"doc_id" <= 2)
-      val batch = docs.filter($"doc_id" > 2)
-      // the old layout: band rows with NO bkb column, no sidecar
-      Dedup.buildLshBandRows(corpus, "text", "doc_id")
-        .write.mode("overwrite").parquet(idx)
-      val got = Dedup.lshIncrementalPortable(
-          corpus.limit(0), batch, "text", "doc_id", idx)
-        .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-      val expected = Dedup.lshIngestClassify(
-          spark.read.parquet(idx), batch, "text", "doc_id")
-        .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-      assert(got === expected)
-      assert(got(5L) === "keep" && got(3L) != "keep")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idx))
     }
   }
 }
