@@ -4,7 +4,7 @@ import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.tables.BucketMeta
+import graft.tables.{Bucketed, BucketedStore}
 
 /** Deduplication operators for large-scale training-data pipelines
   * (SURVEY.md §2.7 X1/X2): exact, MinHash-LSH, SimHash, n-gram Jaccard.
@@ -62,30 +62,27 @@ object Dedup {
   //
   // The exact-dedup analog of the band/IVF index lifecycle: the standing
   // corpus's distinct text shas persist PARTITIONED BY `shab` =
-  // pmod(xxhash64(text_sha), nBuckets); every ingest probes the index
-  // partition-pruned to the BATCH's sha buckets (bounded collect, literal
-  // IN — the probe reads ≈ min(1, |batch buckets|/nBuckets) of the index
-  // bytes), keepers' shas APPEND (files only added), and compaction
-  // rewrites over-threshold buckets via the shared staged swap. Until
-  // round 18 the standing side of [[exactIncremental]] was the CALLER's
-  // frame — re-hashing the corpus per ingest unless the caller maintained
-  // its own digest artifact (the x10 pipeline does; the standalone X1
-  // operator had no file-level story).
+  // pmod(xxhash64(text_sha), n) ([[digestIndex]]); every ingest probes the
+  // index partition-pruned to the BATCH's sha buckets (the probe reads ≈
+  // min(1, |batch buckets|/n) of the index bytes), keepers' shas APPEND
+  // (files only added), and compaction rewrites over-threshold buckets via
+  // the store's staged swap.
 
   /** Bucket column for the sha-bucketed digest index layout. */
   def shaBucket(sha: Column, nBuckets: Int): Column =
     pmod(xxhash64(sha), lit(nBuckets.toLong)).cast("int")
 
+  /** The persisted digest index at `dir`: distinct `text_sha` rows
+    * bucketed by [[shaBucket]] into `shab`. */
+  def digestIndex(dir: String): BucketedStore =
+    BucketedStore(dir, "shab", shaBucket(col("text_sha"), _))
+
   /** Build (or rebuild) the persisted digest index: the standing corpus's
-    * DISTINCT text shas at `indexDir`, partitioned by [[shaBucket]] — one
-    * file per bucket ([[IndexMaintenance]]'s persist shape), the bucket
+    * DISTINCT text shas at `indexDir`, one file per bucket, the bucket
     * count recorded in the `_nbuckets` sidecar. */
   def buildDigestIndex(corpus: DataFrame, textCol: String, indexDir: String,
-                       nBuckets: Int = LshIndexBuckets): Unit = {
-    IndexMaintenance.writePartitionedIndex(digestRows(corpus, textCol, nBuckets),
-      "shab", indexDir, overwrite = true)
-    BucketMeta.write(corpus.sparkSession, indexDir, "shab", nBuckets)
-  }
+                       nBuckets: Int = LshIndexBuckets): Unit =
+    digestIndex(indexDir).create(digestRows(corpus, textCol), nBuckets)
 
   /** MAINTAIN the digest index across ingests: append a batch's KEEPERS'
     * shas (files only added — one per touched bucket per ingest; standing
@@ -94,64 +91,23 @@ object Dedup {
     * doc per new sha), so append == rebuild over corpus ∪ keepers,
     * spec-pinned in DedupSpec. */
   def appendDigestIndex(batchKeepers: DataFrame, textCol: String,
-                        indexDir: String): Unit = {
-    val n = indexBuckets(batchKeepers.sparkSession, indexDir, "shab", "buildDigestIndex")
-    IndexMaintenance.writePartitionedIndex(digestRows(batchKeepers, textCol, n),
-      "shab", indexDir, overwrite = false)
-  }
+                        indexDir: String): Unit =
+    digestIndex(indexDir).append(digestRows(batchKeepers, textCol))
 
-  private def digestRows(docs: DataFrame, textCol: String, nBuckets: Int): DataFrame =
+  private def digestRows(docs: DataFrame, textCol: String): DataFrame =
     docs.select(sha2(col(textCol), 256).as("text_sha")).distinct()
-      .withColumn("shab", shaBucket(col("text_sha"), nBuckets))
 
-  /** Read a persisted digest index together with its RECORDED bucket
-    * count — the probe-side half of the coordination contract: feed the
-    * returned count to [[exactIncrementalBucketed]] and a modulus mismatch
-    * is impossible by construction. */
-  def readDigestIndex(spark: org.apache.spark.sql.SparkSession,
-                      indexDir: String): (DataFrame, Int) = {
-    val n = indexBuckets(spark, indexDir, "shab", "buildDigestIndex")
-    (spark.read.parquet(indexDir), n)
-  }
-
-  /** The recorded bucket count of the existing `partCol` index at `dir`, by
-    * [[BucketMeta.bucketCount]]'s rule; an absent index fails: an append or
-    * read needs it built first (by `build`). */
-  private def indexBuckets(spark: org.apache.spark.sql.SparkSession, dir: String,
-                           partCol: String, build: String): Int =
-    BucketMeta.bucketCount(spark, dir, partCol)(throw new IllegalStateException(
-      s"no $partCol index at $dir (no ${BucketMeta.File} sidecar): build it first with $build"))
-
-  /** Compact the digest index after appends — the same staged-swap
-    * rewrite as [[compactLshBandIndex]] / IVF, via
-    * [[IndexMaintenance.compactPartitionedIndex]]. */
-  def compactDigestIndex(spark: org.apache.spark.sql.SparkSession,
-                         indexDir: String, maxFilesPerBucket: Int): Int =
-    IndexMaintenance.compactPartitionedIndex(spark, indexDir, "shab",
-      _.toInt, maxFilesPerBucket)
-
-  /** Repair a digest-index compaction interrupted mid-swap — roll the
-    * staged swap forward from its staging manifest
-    * ([[IndexMaintenance.repairPartitionedIndex]]; run at pipeline
-    * startup, before any concurrent build/append/compact). Returns the
-    * number of partitions repaired (0 when there is nothing to do). */
-  def repairDigestIndex(spark: org.apache.spark.sql.SparkSession,
-                        indexDir: String): Int =
-    IndexMaintenance.repairPartitionedIndex(spark, indexDir)
-
-  /** [[exactIncremental]] against the BUCKETED persisted digest index
-    * (frame carrying its `shab` partition column): only the batch is
-    * hashed, and the standing index is read PARTITION-PRUNED to the
-    * batch's sha buckets — identical routing by construction (the bucket
-    * is a pure function of the join key). */
-  def exactIncrementalBucketed(indexBucketed: DataFrame, incoming: DataFrame,
-                               textCol: String, idCol: String,
-                               nBuckets: Int = LshIndexBuckets): DataFrame = {
+  /** [[exactIncremental]] against the persisted digest index (a
+    * [[digestIndex]] read): only the batch is hashed, and the standing
+    * index is read PARTITION-PRUNED to the batch's sha buckets under the
+    * index's recorded count — identical routing by construction (the
+    * bucket is a pure function of the join key). */
+  def exactIncrementalBucketed(index: Bucketed, incoming: DataFrame,
+                               textCol: String, idCol: String): DataFrame = {
     val inc = Materialize.once(
       incoming.select(col(idCol), sha2(col(textCol), 256).as("text_sha")),
       "exact-dedup routing join + bucket collect")
-    val seen = IndexMaintenance.pruneToBuckets(indexBucketed,
-        inc.select(shaBucket(col("text_sha"), nBuckets).as("shab")), "shab")
+    val seen = index.probe(inc)
       .select(col("text_sha")).distinct().withColumn("in_corpus", lit(1))
     exactIncrementalCore(inc, seen, idCol)
   }
@@ -407,25 +363,10 @@ object Dedup {
   def lshBandBucket(band: Column, bandKey: Column, nBuckets: Int): Column =
     pmod(xxhash64(band, bandKey), lit(nBuckets.toLong)).cast("int")
 
-  /** Band rows plus their `bkb` bucket — the frame the bucketed index
-    * persists (`partitionBy("bkb")`) and every bucketed probe consumes. */
-  def bucketedBandRows(bandRows: DataFrame,
-                       nBuckets: Int = LshIndexBuckets): DataFrame =
-    bandRows.withColumn("bkb",
-      lshBandBucket(col("band"), col("band_key"), nBuckets))
-
-  /** Prune a bucketed band-index frame to the buckets the BATCH can
-    * collide in: collect the batch's distinct bucket ids (bounded
-    * metadata, ≤ nBuckets ints) and filter with a literal IN — STATIC
-    * partition pruning over the persisted layout, visible as a non-empty
-    * `PartitionFilters` on the index scan (spec-pinned in DedupSpec). */
-  def pruneBandIndexToBatch(indexBucketed: DataFrame, batchBands: DataFrame,
-                            nBuckets: Int = LshIndexBuckets): DataFrame =
-    IndexMaintenance.pruneToBuckets(indexBucketed,
-        batchBands.select(
-          lshBandBucket(col("band"), col("band_key"), nBuckets).as("bkb")),
-        "bkb")
-      .drop("bkb")
+  /** The persisted LSH band index at `dir`: band rows bucketed by
+    * [[lshBandBucket]] into `bkb`. */
+  def bandIndex(dir: String): BucketedStore =
+    BucketedStore(dir, "bkb", lshBandBucket(col("band"), col("band_key"), _))
 
   /** Bucket column for the id-bucketed SHINGLE artifact layout — the
     * VERIFICATION side of discovery gets the same pruned-probe discipline
@@ -434,24 +375,14 @@ object Dedup {
   def docIdBucket(id: Column, nBuckets: Int): Column =
     pmod(xxhash64(id), lit(nBuckets.toLong)).cast("int")
 
-  /** Shingle rows plus their `idb` bucket — the frame the bucketed
-    * shingle artifact persists (`partitionBy("idb")`). */
-  def bucketedShingleRows(sh: DataFrame,
-                          nBuckets: Int = LshIndexBuckets): DataFrame =
-    sh.withColumn("idb", docIdBucket(col("id"), nBuckets))
-
-  /** Prune a bucketed shingle frame to the buckets a bounded id set can
-    * live in (collect ≤ nBuckets bucket ids, literal IN partition filter
-    * — [[pruneBandIndexToBatch]]'s discipline on the id key). A strict
-    * superset filter: the exact semi-join on id still runs after it.
-    * Scan savings ∝ untouched buckets — decisive when the candidate set
-    * is small against the bucket count, a no-op degradation (never a
-    * wrong answer) when candidates touch every bucket. */
-  def pruneShinglesToIds(shingleBucketed: DataFrame, ids: DataFrame,
-                         nBuckets: Int = LshIndexBuckets): DataFrame =
-    IndexMaintenance.pruneToBuckets(shingleBucketed,
-        ids.select(docIdBucket(col("id"), nBuckets).as("idb")), "idb")
-      .drop("idb")
+  /** The shingle artifact at `dir`: `(id, shingle)` rows bucketed by
+    * [[docIdBucket]] into `idb`. Probing it with a bounded id set is a
+    * strict superset filter (the exact semi-join on id still runs after
+    * it): scan savings ∝ untouched buckets, decisive when the candidate set
+    * is small against the bucket count, a no-op degradation (never a wrong
+    * answer) when candidates touch every bucket. */
+  def shingleIndex(dir: String): BucketedStore =
+    BucketedStore(dir, "idb", docIdBucket(col("id"), _))
 
   /** Near-dup pairs TOUCHING a new batch, DISCOVERED from the standing
     * corpus's persisted band index and then EXACTLY verified — the
@@ -502,31 +433,28 @@ object Dedup {
       batchShingles, minJaccard)
   }
 
-  /** [[lshDiscoverVerifiedPairs]] against a BUCKETED persisted index frame
-    * (band rows carrying their `bkb` partition column): the standing index
-    * is read PARTITION-PRUNED to the batch's colliding buckets
-    * ([[pruneBandIndexToBatch]]) before the collision join — identical
-    * discovered set by construction, index bytes read ∝ batch buckets. */
-  def lshDiscoverVerifiedPairsBucketed(indexBucketed: DataFrame,
-                                       corpusShingles: DataFrame,
+  /** [[lshDiscoverVerifiedPairs]] against the persisted band index (a
+    * [[bandIndex]] read): the standing index is read PARTITION-PRUNED to
+    * the batch's colliding buckets before the collision join — identical
+    * discovered set by construction, index bytes read ∝ batch buckets. The
+    * standing shingles are a frame used whole (`Left`) or a
+    * [[shingleIndex]] probed PRUNED to the candidate endpoints' buckets
+    * (`Right`); both sides of verification stay exact either way. */
+  def lshDiscoverVerifiedPairsBucketed(index: Bucketed,
+                                       corpusShingles: Either[DataFrame, Bucketed],
                                        batchShingles: DataFrame,
                                        bands: Int = 8, rowsPerBand: Int = 2,
-                                       minJaccard: Double = 0.5,
-                                       nBuckets: Int = LshIndexBuckets): DataFrame = {
+                                       minJaccard: Double = 0.5): DataFrame = {
     val batchBands = Materialize.once(portableBandRowsFromShingles(
       batchShingles, bands, rowsPerBand),
       "LSH discovery collision joins + bucket collect")
-    // a corpus shingle frame carrying the `idb` layout column is probed
-    // PRUNED to the candidate endpoints' buckets; a plain frame is used
-    // whole — both sides of verification stay exact either way
-    val pruneShingles = corpusShingles.columns.contains("idb")
-    val shinglesFor: DataFrame => DataFrame =
-      if (pruneShingles) ids => pruneShinglesToIds(corpusShingles, ids, nBuckets)
-      else _ => corpusShingles
-    discoverVerifiedPairsCore(
-      pruneBandIndexToBatch(indexBucketed, batchBands, nBuckets),
+    val shinglesFor: DataFrame => DataFrame = corpusShingles match {
+      case Left(whole) => _ => whole
+      case Right(idx) => ids => idx.probe(ids).drop("idb")
+    }
+    discoverVerifiedPairsCore(index.probe(batchBands).drop("bkb"),
       batchBands, shinglesFor, batchShingles, minJaccard,
-      checkpointIds = pruneShingles)
+      checkpointIds = corpusShingles.isRight)
   }
 
   private def discoverVerifiedPairsCore(corpusBands: DataFrame,
@@ -560,7 +488,7 @@ object Dedup {
     // exact verification over candidate ids only: the standing shingle
     // artifact is touched through a semi-join on candidate endpoints, so
     // verify work is ∝ Σ_candidates |shingles|, never ∝ |corpus|. When the
-    // shingle side will be BUCKET-PRUNED, pruneShinglesToIds adds a
+    // shingle side will be BUCKET-PRUNED, the shingle probe adds a
     // driver-side bucket collect as a THIRD consumer of `ids`, so it is
     // materialized then (round-18 ADVICE); on the default (unpruned) path
     // the two semi-joins re-run that cheap tree, which the
@@ -592,84 +520,42 @@ object Dedup {
 
   /** Build (or rebuild) the persisted LSH band index for
     * [[lshIncrementalPortable]]: the [[portableBandRows]] signature+band
-    * rows of the standing corpus, written as parquet at `indexDir`
-    * PARTITIONED BY the `bkb` band-key bucket so later ingests probe it
-    * partition-pruned (the bucketed-layout discipline above) — one file per
-    * bucket ([[IndexMaintenance]]'s persist shape), the bucket count
-    * recorded in the `_nbuckets` sidecar. */
+    * rows of the standing corpus as a [[bandIndex]] at `indexDir`, so later
+    * ingests probe it partition-pruned (the bucketed-layout discipline
+    * above) — one file per bucket, the bucket count recorded in the
+    * `_nbuckets` sidecar. */
   def buildLshBandIndex(corpus: DataFrame, textCol: String, idCol: String,
                         indexDir: String, shingleSize: Int = 3,
                         bands: Int = 8, rowsPerBand: Int = 2,
-                        nBuckets: Int = LshIndexBuckets): Unit = {
-    IndexMaintenance.writePartitionedIndex(
-      bucketedBandRows(
-        portableBandRows(corpus, textCol, idCol, shingleSize, bands,
-          rowsPerBand), nBuckets),
-      "bkb", indexDir, overwrite = true)
-    BucketMeta.write(corpus.sparkSession, indexDir, "bkb", nBuckets)
-  }
+                        nBuckets: Int = LshIndexBuckets): Unit =
+    bandIndex(indexDir).create(portableBandRows(corpus, textCol, idCol,
+      shingleSize, bands, rowsPerBand), nBuckets)
 
   /** MAINTAIN the persisted LSH band index across ingests: append the
     * band rows of a batch's KEEPERS (the docs an ingest classified
     * `keep`), bucketed under the index's recorded count, so the NEXT
     * ingest's corpus side includes them — the "append new keepers' band
-    * rows" half of the [[lshIncrementalPortable]] contract, which until
-    * round 17 was the caller's prose obligation with no operator behind
-    * it. Only the batch is hashed; the write APPENDS files (one per touched
-    * bucket per ingest, the bounded append-rate that makes nightly
-    * compaction a threshold sweep, not a race) and standing index files are
-    * never rewritten (the [[graft.ops.Similarity.appendIvfIndexInt]]
-    * discipline, spec-pinned in DedupSpec). Band rows are per-document
+    * rows" half of the [[lshIncrementalPortable]] contract. Only the batch
+    * is hashed; the write APPENDS files (one per touched bucket per
+    * ingest, the bounded append-rate that makes nightly compaction a
+    * threshold sweep, not a race) and standing index files are never
+    * rewritten (spec-pinned in DedupSpec). Band rows are per-document
     * independent, so append-then-classify is bit-identical to a full
     * rebuild over corpus ∪ keepers — same single-writer pipeline contract
     * as the first build. */
   def appendLshBandIndex(batchKeepers: DataFrame, textCol: String,
                          idCol: String, indexDir: String,
                          shingleSize: Int = 3, bands: Int = 8,
-                         rowsPerBand: Int = 2): Unit = {
-    val n = indexBuckets(batchKeepers.sparkSession, indexDir, "bkb", "buildLshBandIndex")
-    IndexMaintenance.writePartitionedIndex(
-      bucketedBandRows(
-        portableBandRows(batchKeepers, textCol, idCol, shingleSize, bands,
-          rowsPerBand), n),
-      "bkb", indexDir, overwrite = false)
-  }
-
-  /** Read a persisted LSH band index together with its RECORDED bucket
-    * count ([[readDigestIndex]]'s band twin): feed the returned count to
-    * [[lshIngestClassifyBucketed]] / [[lshDiscoverVerifiedPairsBucketed]]
-    * and a modulus mismatch is impossible by construction. */
-  def readLshBandIndex(spark: org.apache.spark.sql.SparkSession,
-                       indexDir: String): (DataFrame, Int) = {
-    val n = indexBuckets(spark, indexDir, "bkb", "buildLshBandIndex")
-    (spark.read.parquet(indexDir), n)
-  }
-
-  /** Compact the bucketed LSH band index after appends —
-    * [[appendLshBandIndex]]'s maintenance sibling and the LSH twin of
-    * [[graft.ops.Similarity.compactIvfIndexInt]]: every nightly append
-    * adds files into the keepers' `bkb` partitions, so a long-lived index
-    * accumulates the small-file pathology exactly like the IVF lists.
-    * Rewrites ONLY the bucket directories whose data-file count exceeds
-    * `maxFilesPerBucket` down to one file each (partition-pruned read of
-    * exactly those buckets); under-threshold buckets keep their standing
-    * files byte-for-byte. Band rows are only moved, never changed, so
-    * probe-after-compact is bit-identical to probe-before and every
-    * consumer's oracle is unchanged — the staged-swap commit mechanics
-    * (add-then-remove, duplicate-rows crash mode, abort on failed rename)
-    * are [[IndexMaintenance.compactPartitionedIndex]]'s, spec-pinned in
-    * DedupSpec. */
-  def compactLshBandIndex(spark: org.apache.spark.sql.SparkSession,
-                          indexDir: String, maxFilesPerBucket: Int): Int =
-    IndexMaintenance.compactPartitionedIndex(spark, indexDir, "bkb",
-      _.toInt, maxFilesPerBucket)
+                         rowsPerBand: Int = 2): Unit =
+    bandIndex(indexDir).append(portableBandRows(batchKeepers, textCol, idCol,
+      shingleSize, bands, rowsPerBand))
 
   /** INCREMENTAL near-dup ingest — X2's analog of [[exactIncremental]]:
     * classify each NEW document against the STANDING corpus's persisted
     * LSH band index and against earlier documents of its own batch,
     * re-hashing only the batch. The corpus index (the [[portableBandRows]]
     * signature+band rows) is built at `indexDir` ONLY when no index is
-    * there yet ([[BucketMeta.bucketCount]]'s new store) — every later
+    * there yet (a new [[bandIndex]] store) — every later
     * ingest against the same path reuses it, so per-ingest cost is
     * O(batch), never O(corpus):
     * the property that keeps continuous near-dedup viable at 100 TB,
@@ -702,13 +588,13 @@ object Dedup {
     // coordination: index maintenance is a single-writer pipeline step; two
     // concurrent FIRST ingests against one empty indexDir race their
     // overwrite writes.
-    val n = BucketMeta.bucketCount(spark, indexDir, "bkb") {
+    val index = bandIndex(indexDir).readOr(spark) {
       buildLshBandIndex(corpus, textCol, idCol, indexDir,
         shingleSize, bands, rowsPerBand)
       LshIndexBuckets
     }
-    lshIngestClassifyBucketed(spark.read.parquet(indexDir), batch, textCol,
-      idCol, shingleSize, bands, rowsPerBand, minAgree, n)
+    lshIngestClassifyBucketed(index, batch, textCol, idCol, shingleSize,
+      bands, rowsPerBand, minAgree)
   }
 
   /** The ingest-classify core of [[lshIncrementalPortable]], taking the
@@ -725,20 +611,18 @@ object Dedup {
       bands * rowsPerBand, minAgree)
   }
 
-  /** [[lshIngestClassify]] against a BUCKETED persisted index frame (band
-    * rows carrying their `bkb` partition column): the standing index is
-    * read PARTITION-PRUNED to the batch's colliding buckets
-    * ([[pruneBandIndexToBatch]]) before the collision joins — identical
+  /** [[lshIngestClassify]] against the persisted band index (a
+    * [[bandIndex]] read, or its rows kept as frames): the standing index is
+    * read PARTITION-PRUNED to the batch's colliding buckets under the
+    * index's recorded count before the collision joins — identical
     * classification by construction, index bytes read ∝ batch buckets. */
-  def lshIngestClassifyBucketed(indexBucketed: DataFrame, batch: DataFrame,
+  def lshIngestClassifyBucketed(index: Bucketed, batch: DataFrame,
                                 textCol: String, idCol: String,
                                 shingleSize: Int = 3, bands: Int = 8,
-                                rowsPerBand: Int = 2, minAgree: Int = 4,
-                                nBuckets: Int = LshIndexBuckets): DataFrame = {
+                                rowsPerBand: Int = 2, minAgree: Int = 4): DataFrame = {
     val batchBands = Materialize.once(portableBandRows(batch, textCol, idCol,
       shingleSize, bands, rowsPerBand), "LSH ingest match passes + bucket collect")
-    ingestClassifyCore(
-      pruneBandIndexToBatch(indexBucketed, batchBands, nBuckets),
+    ingestClassifyCore(index.probe(batchBands).drop("bkb"),
       batchBands, batch, idCol, bands * rowsPerBand, minAgree)
   }
 

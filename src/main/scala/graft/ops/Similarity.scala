@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.VectorFunctions._
+import graft.tables.BucketedStore
 
 /** Similarity search over embedding columns (SURVEY.md §2.7 X3).
   *
@@ -270,50 +271,6 @@ object Similarity {
     array(cents.zipWithIndex.map { case (c, i) =>
       struct(sqDist(emb, xNorm2, c).as("d"), lit(i).as("list"))
     }: _*)
-  }
-
-  /** Persist the IVF inverted lists as a parquet index partitioned BY LIST:
-    * at 100 TB this is the serving layout — each probe reads only its list's
-    * directory (partition-pruned scan), so a query batch touches
-    * |union of probed lists| / nLists of the index bytes instead of the full
-    * corpus. Returns the trained centroids (the driver-side model that
-    * routes probes). */
-  def writeIvfIndex(corpus: DataFrame, dim: Int, nLists: Int,
-                    path: String): Array[Array[Double]] = {
-    val cents = trainIvfCentroids(corpus, dim, nLists)
-    // the IVF family's coordination contract is the centroid array the
-    // caller holds (list ids are data-adaptive, not a modulus), so no
-    // `_nbuckets` sidecar; the assignment's own output partitioning is
-    // kept as-is (no per-list repartition) — file counts per list are
-    // spec-pinned and compaction is the small-file story here
-    IndexMaintenance.writePartitionedIndex(
-      corpus.select(col("vec_id"), col("embedding"),
-        array_min(distStructs(col("embedding"), cents)).getField("list").as("list")),
-      "list", path, overwrite = true, onePerPartition = false)
-    cents
-  }
-
-  /** Query a persisted IVF index: assign probes, collect the DISTINCT probed
-    * list ids (bounded metadata, ≤ nLists ints — the only driver-side step),
-    * then re-rank against a partition-pruned read of exactly those lists.
-    * Identical ranking semantics to [[ivfTopK]]. */
-  def ivfTopKFromIndex(spark: org.apache.spark.sql.SparkSession, queries: DataFrame,
-                       indexPath: String, cents: Array[Array[Double]], k: Int,
-                       nProbe: Int = 4, roundTo: Int = 3): DataFrame = {
-    val probes = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        explode(slice(array_sort(distStructs(col("embedding"), cents)), 1, nProbe))
-          .as("probe"))
-      .select(col("query_id"), col("q_emb"), col("probe.list").as("list"))
-    val c = IndexMaintenance.pruneToBuckets(spark.read.parquet(indexPath),
-        probes.select(col("list")), "list")
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("c_emb"), col("list"))
-    val scored = broadcast(probes).join(c, Seq("list"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosine(col("q_emb"), col("c_emb")), roundTo).as("sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
   /** IVF (inverted-file) approximate top-k — the classic ANN scale path:
@@ -1014,14 +971,22 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** CERTIFIED-INTEGER persisted IVF index — [[writeIvfIndex]]'s
-    * oracle-checkable sibling. Assignment uses the [[ivfTopKIntCertified]]
-    * substitutions (seed centroids = first `nLists` corpus vectors by id,
-    * exact int64 milli-L2²) and the lists land as a `list`-partitioned
-    * parquet, the 100 TB serving layout. Stores the integer milli-codes —
-    * the serving path never touches floats. Returns the centroid codes as
-    * bounded driver-side metadata (nLists rows — the float path's `cents`
-    * contract), which the query side broadcasts. */
+  /** The persisted integer IVF index at `dir`: `(vec_id, mv)` rows
+    * partitioned by their assigned centroid id `list`, `n` = the number of
+    * lists. The list is computed by assignment against the centroids, not
+    * from the count, so the key is the `list` column itself. */
+  def ivfIndex(dir: String): BucketedStore = BucketedStore(dir, "list", _ => col("list"))
+
+  /** CERTIFIED-INTEGER persisted IVF index. Assignment uses the
+    * [[ivfTopKIntCertified]] substitutions (seed centroids = first `nLists`
+    * corpus vectors by id, exact int64 milli-L2²) and the lists land as an
+    * [[ivfIndex]], the 100 TB serving layout: each probe reads only its
+    * lists' directories, so a query batch touches |probed lists| / nLists
+    * of the index bytes. Stores the integer milli-codes — the serving path
+    * never touches floats. The assignment's own output partitioning is
+    * kept (no per-list repartition); compaction is the small-file story
+    * here. Returns the centroid codes as bounded driver-side metadata
+    * (nLists rows), which the query side broadcasts. */
   def writeIvfIndexInt(corpus: DataFrame, nLists: Int,
                        path: String): Array[(Long, Array[Long])] = {
     val m = corpus.select(col("vec_id"), milliCodes(col("embedding")).as("mv"))
@@ -1029,13 +994,13 @@ object Similarity {
       .select(col("vec_id").as("cid"), col("mv").as("cv")))
     val wAssign = Window.partitionBy(col("vec_id"))
       .orderBy(col("d2c").asc, col("cid").asc)
-    IndexMaintenance.writePartitionedIndex(
+    ivfIndex(path).create(
       m.crossJoin(cent)
         .select(col("vec_id"), col("mv"), col("cid"),
           d2Milli(col("mv"), col("cv")).as("d2c"))
         .withColumn("r", row_number().over(wAssign)).filter(col("r") === 1)
         .select(col("vec_id"), col("mv"), col("cid").as("list")),
-      "list", path, overwrite = true, onePerPartition = false)
+      nLists, onePerPartition = false)
     cent.collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
       .sortBy(_._1)
@@ -1043,14 +1008,17 @@ object Similarity {
 
   /** Write an integer IVF index from PRE-QUANTIZED frames with
     * caller-supplied centroids — [[writeIvfIndexInt]]'s layout (milli
-    * codes in a `list`-partitioned parquet) with the coarse quantizer a
-    * parameter, so the TRAINED centroids ([[trainIvfCentroidsInt]]) drive
-    * the persisted layout too, not just the in-memory serve. Returns the
-    * centroid codes as bounded driver-side metadata (`nLists` rows). */
+    * codes in an [[ivfIndex]]) with the coarse quantizer a parameter, so
+    * the TRAINED centroids ([[trainIvfCentroidsInt]]) drive the persisted
+    * layout too, not just the in-memory serve. Returns the centroid codes
+    * as bounded driver-side metadata (`nLists` rows). */
   def writeIvfIndexIntWith(m: DataFrame, cents: DataFrame,
                            path: String): Array[(Long, Array[Long])] = {
+    val out = cents.collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
+      .sortBy(_._1)
     val cent = broadcast(cents)
-    IndexMaintenance.writePartitionedIndex(
+    ivfIndex(path).create(
       m.crossJoin(cent)
         .select(col("vec_id"), col("mv"), col("cid"),
           d2Milli(col("mv"), col("cv")).as("d2c"))
@@ -1059,10 +1027,8 @@ object Similarity {
         .groupBy(col("vec_id"), col("mv"))
         .agg(packedArgmin(col("d2c"), col("cid")).as("__p"))
         .select(col("vec_id"), col("mv"), unpackArgmin(col("__p")).as("list")),
-      "list", path, overwrite = true, onePerPartition = false)
-    cents.collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-      .sortBy(_._1)
+      out.length, onePerPartition = false)
+    out
   }
 
   /** Append a NEW vector batch to an existing integer IVF index against
@@ -1074,7 +1040,8 @@ object Similarity {
     * rewritten (spec-pinned at the file level). With fixed centroids,
     * append-then-serve is bit-identical to a full rebuild — the
     * `x3_ann_ivf_append` entry certifies exactly that against the
-    * full-rebuild oracle. */
+    * full-rebuild oracle. Compaction after appends is the store's
+    * [[BucketedStore.compact]]. */
   def appendIvfIndexInt(spark: org.apache.spark.sql.SparkSession,
                         newBatch: DataFrame,
                         cents: Array[(Long, Array[Long])], path: String): Unit = {
@@ -1085,7 +1052,7 @@ object Similarity {
       "appendIvfIndexInt: centroid ids must be in [0, 2^16) (packed argmin)")
     val cent = broadcast(
       cents.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv"))
-    IndexMaintenance.writePartitionedIndex(
+    ivfIndex(path).append(
       newBatch.select(col("vec_id"), milliCodes(col("embedding")).as("mv"))
         .crossJoin(cent)
         .select(col("vec_id"), col("mv"), col("cid"),
@@ -1094,43 +1061,8 @@ object Similarity {
         .groupBy(col("vec_id"), col("mv"))
         .agg(packedArgmin(col("d2c"), col("cid")).as("__p"))
         .select(col("vec_id"), col("mv"), unpackArgmin(col("__p")).as("list")),
-      "list", path, overwrite = false, onePerPartition = false)
+      onePerPartition = false)
   }
-
-  /** Compact an integer IVF index after appends ([[appendIvfIndexInt]]'s
-    * maintenance sibling): nightly batch appends add one file per touched
-    * list partition, and at 100 TB that is the classic small-file
-    * pathology — a probed list's read cost becomes dominated by per-file
-    * open/footer overhead instead of bytes. Rewrite ONLY the list
-    * partitions whose data-file count exceeds `maxFilesPerList`
-    * (partition-pruned read of exactly those lists, hash-repartitioned on
-    * `list` so each rewritten partition lands as ONE file); partitions at
-    * or under the threshold keep their standing files byte-for-byte — the
-    * append path's file-level immutability holds wherever compaction has
-    * nothing to do. Rows are only moved, never changed, so
-    * compact-then-serve is bit-identical to the uncompacted index and the
-    * oracle stays the full-rebuild SQL (SimilaritySpec pins the file
-    * counts and the serve equivalence).
-    *
-    * Commit mechanics (shared with the LSH band index's
-    * [[graft.ops.Dedup.compactLshBandIndex]] via
-    * [[IndexMaintenance.compactPartitionedIndex]], round 18): staged
-    * files RENAME IN FIRST, displaced standing files delete after — a
-    * crash mid-swap leaves DUPLICATE rows (detectable: vec_id counts
-    * exceed distinct; repair: delete the non-staged files, whose names
-    * the still-present staging dir identifies) rather than silently
-    * MISSING rows that a re-run's under-threshold file count would mask.
-    * The staging dir is only removed after every swap completes. Same
-    * single-writer pipeline contract as the first index build and append;
-    * a production deployment would wrap the swap in a table format's
-    * atomic metadata commit (Iceberg/Delta), and this function is exactly
-    * its rewrite-data-files action. Returns the number of compacted
-    * partitions (bounded driver-side metadata — one FileSystem listing
-    * per list dir, ≤ nLists). */
-  def compactIvfIndexInt(spark: org.apache.spark.sql.SparkSession,
-                         path: String, maxFilesPerList: Int): Int =
-    IndexMaintenance.compactPartitionedIndex(spark, path, "list",
-      _.toLong, maxFilesPerList)
 
   /** Query the integer IVF index: probe selection against the broadcast
     * centroid codes, a partition-pruned read of exactly the probed lists
@@ -1167,8 +1099,7 @@ object Similarity {
       .withColumn("r", row_number().over(wProbe)).filter(col("r") <= nProbe)
       .select(col("query_id"), col("q_mv"), col("cid").as("list")),
       "IVF probed-list collect + broadcast join")
-    val c = IndexMaintenance.pruneToBuckets(spark.read.parquet(indexPath),
-        probes.select(col("list")), "list")
+    val c = ivfIndex(indexPath).read(spark).probe(probes)
       .select(col("vec_id").as("neighbor_id"), col("mv").as("c_mv"), col("list"))
     val wTop = Window.partitionBy(col("query_id"))
       .orderBy(col("d2m").asc, col("neighbor_id").asc)

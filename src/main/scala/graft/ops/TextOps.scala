@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Materialize
+import graft.tables.BucketedStore
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -460,40 +461,41 @@ object TextOps {
       .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
   }
 
-  /** Persist a positional inverted index: (doc_id, pos, word) postings
-    * written PARTITIONED BY a hash bucket of the word, so a phrase query
-    * reads only its terms' buckets via partition pruning — the serving
-    * layout for repeated full-text queries at 100 TB, where re-tokenizing
-    * the corpus per query ([[phraseSearch]]) would re-scan everything.
-    * Bucketing by `pmod(xxhash64(w), nBuckets)` (not by raw word) bounds
-    * the directory fan-out at any vocabulary size. */
+  /** The positional postings index at `dir`: `(doc_id, pos, w)` rows
+    * partitioned by the word's hash bucket `pmod(xxhash64(w), n)` (not by
+    * raw word, which bounds the directory fan-out at any vocabulary
+    * size). */
+  def postingsIndex(dir: String): BucketedStore =
+    BucketedStore(dir, "bucket", n => pmod(xxhash64(col("w")), lit(n)).cast("int"))
+
+  /** Persist a positional inverted index as a [[postingsIndex]] with
+    * `nBuckets` buckets, so a phrase query reads only its terms' buckets
+    * via partition pruning — the serving layout for repeated full-text
+    * queries at 100 TB, where re-tokenizing the corpus per query
+    * ([[phraseSearch]]) would re-scan everything. */
   def writePostingsIndex(docs: DataFrame, textCol: String, idCol: String,
                          path: String, nBuckets: Int = 64): Unit =
-    docs.select(col(idCol).as("doc_id"),
-        posexplode(split(col(textCol), " ")).as(Seq("pos", "w")))
-      .withColumn("bucket", pmod(xxhash64(col("w")), lit(nBuckets)).cast("int"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
+    postingsIndex(path).create(
+      docs.select(col(idCol).as("doc_id"),
+        posexplode(split(col(textCol), " ")).as(Seq("pos", "w"))),
+      nBuckets, onePerPartition = false)
 
-  /** Phrase query against a [[writePostingsIndex]] store: compute the
-    * phrase terms' bucket ids (bounded metadata — ≤ phrase-length ints, the
-    * only driver-side step, same pattern as the IVF probe-list collect),
-    * partition-prune the read to those buckets, then the identical
+  /** Phrase query against a [[writePostingsIndex]] store: the phrase
+    * terms' buckets under the store's recorded count (bounded metadata —
+    * ≤ phrase-length ints, the only driver-side step, same pattern as the
+    * IVF probe-list collect) partition-prune the read, then the identical
     * (doc, phrase-start) equi-join as [[phraseSearch]] — results match it
     * row-for-row. */
   def phraseFromIndex(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                      phrase: Seq[String], nBuckets: Int = 64): DataFrame = {
+                      phrase: Seq[String]): DataFrame = {
     require(phrase.nonEmpty, "phrase must have at least one word")
     import spark.implicits._
-    // the SAME hash expression the writer used, evaluated on the phrase terms
-    val buckets: Array[Int] = phrase.distinct.toDF("w")
-      .select(pmod(xxhash64(col("w")), lit(nBuckets)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0))
     // no checkpoint here (unlike phraseSearch): each term side re-reads the
     // store as its OWN bucket-pruned, word-filtered parquet scan — that scan
     // is the whole point of the persisted layout, and keeping it in the plan
     // lets the pruning be asserted on the final query
-    val postings = spark.read.parquet(indexPath)
-      .filter(col("bucket").isin(buckets.map(x => x: Any): _*))
+    val postings = postingsIndex(indexPath).read(spark)
+      .probe(phrase.distinct.toDF("w"))
     phrase.zipWithIndex.map { case (term, i) =>
       postings.filter(col("w") === term)
         .select(col("doc_id"), (col("pos") - i).as("start"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.tables.Tables._
 import org.apache.spark.sql.expressions.Window
 import graft.ops.{Curation, Dedup, TextOps}
+import graft.tables.Bucketed
 
 /** Dataset-curation operators (SURVEY.md §2.7 X7) as named queries over the
   * `documents` table: deterministic train/val/test split, per-source quota
@@ -305,13 +306,15 @@ object CurationQueries {
     * (lang, split) aggregate the increment patches), `bandIdx` (the LSH
     * band index over standing exact-kept docs — the pair-DISCOVERY
     * artifact, [[Dedup.buildLshBandRowsFromShingles]] at the x2 family's
-    * 8×2 parameters, persisted PARTITIONED BY the `bkb` band-key bucket so
-    * probes read it partition-pruned), and `shingleIdx` (the standing
-    * keepers' distinct
-    * 3-shingle rows — the exact-verification side of discovery). */
+    * 8×2 parameters, a [[Dedup.bandIndex]] store so probes read it
+    * partition-pruned), and `shingleIdx` (the standing keepers' distinct
+    * 3-shingle rows, a [[Dedup.shingleIndex]] store — the
+    * exact-verification side of discovery). Both indexes carry their
+    * stores' recorded bucket count through every night's in-memory
+    * append. */
   private[graft] final case class X10State(digests: DataFrame, reps: DataFrame,
                                     kept: DataFrame, census: DataFrame,
-                                    bandIdx: DataFrame, shingleIdx: DataFrame)
+                                    bandIdx: Bucketed, shingleIdx: Bucketed)
 
   private[graft] def x10StandingState(s: SparkSession, dir: String): X10State =
     x10StandingStateAt(s, dir, num = 4)
@@ -362,24 +365,24 @@ object CurationQueries {
     // persisted PARTITIONED BY the id bucket so verification probes read
     // only the candidate endpoints' buckets (the band-index discipline on
     // the OTHER discovery artifact — round 18)
-    val shingleIdx = FixtureCache.cachedPartitioned(s, dir,
-        s"x10-std-shingles-sh3-idb32$suf", "v1", Seq("idb")) {
-      Dedup.bucketedShingleRows(
-        Dedup.shingleCounts(
-            standingDocs.join(reps.select($"doc_id"), Seq("doc_id")),
-            "text", "doc_id", n = 3)
-          .select($"id", $"shingle"))
+    val shingleIdx = FixtureCache.cachedStore(s, dir,
+        s"x10-std-shingles-sh3-idb32$suf", "v2", Dedup.shingleIndex,
+        Dedup.LshIndexBuckets) {
+      Dedup.shingleCounts(
+          standingDocs.join(reps.select($"doc_id"), Seq("doc_id")),
+          "text", "doc_id", n = 3)
+        .select($"id", $"shingle")
     }
     // built FROM the just-persisted shingle fixture (not a second live
     // derivation of the standing shingles — round-17 review): one corpus
     // shingle pass per cold cache build. Persisted PARTITIONED BY the
     // band-key bucket so discovery probes it partition-pruned (round-17
     // verdict #1 — the last per-ingest O(corpus) scan in the nightly loop)
-    val bandIdx = FixtureCache.cachedPartitioned(s, dir,
-        s"x10-std-bands-sh3-b8-r2-bkb32$suf", "v1", Seq("bkb")) {
-      Dedup.bucketedBandRows(
-        Dedup.buildLshBandRowsFromShingles(shingleIdx.drop("idb"), bands = 8,
-          rowsPerBand = 2))
+    val bandIdx = FixtureCache.cachedStore(s, dir,
+        s"x10-std-bands-sh3-b8-r2-bkb32$suf", "v2", Dedup.bandIndex,
+        Dedup.LshIndexBuckets) {
+      Dedup.buildLshBandRowsFromShingles(shingleIdx.rows.drop("idb"),
+        bands = 8, rowsPerBand = 2)
     }
     X10State(digests, reps, kept, census, bandIdx, shingleIdx)
   }
@@ -452,7 +455,7 @@ object CurationQueries {
     // regime — candidate sets small against the bucket count — is further
     // out. The operator keeps it and DedupSpec pins it.
     Dedup.lshDiscoverVerifiedPairsBucketed(st.bandIdx,
-        st.shingleIdx.drop("idb"),
+        Left(st.shingleIdx.rows.drop("idb")),
         deltaSh, bands = 8, rowsPerBand = 2, minJaccard = 0.3)
       .select(col("id_a"), col("id_b"))
   }
@@ -654,7 +657,6 @@ object CurationQueries {
       .select($"id".as("doc_id"))
     val deltaSh = Dedup.shingleCounts(deltaKeptExact, "text", "doc_id", n = 3)
       .select($"id", $"shingle")
-    val deltaShBucketed = Dedup.bucketedShingleRows(deltaSh)
     X10State(
       digests = st.digests
         .unionByName(delta.select(sha2($"text", 256).as("sha"))).distinct(),
@@ -667,9 +669,8 @@ object CurationQueries {
             Curation.splitAssign($"doc_id").as("split"),
             TextOps.wordCount($"text").cast("long").as("n_words"))),
       census = censusFromMerged(st.kept, st.census, deltaKeptExact, merged),
-      bandIdx = st.bandIdx.unionByName(Dedup.bucketedBandRows(
-        Dedup.buildLshBandRowsFromShingles(deltaSh))),
-      shingleIdx = st.shingleIdx.unionByName(deltaShBucketed))
+      bandIdx = st.bandIdx.union(Dedup.buildLshBandRowsFromShingles(deltaSh)),
+      shingleIdx = st.shingleIdx.union(deltaSh))
   }
 
   /** NIGHT-1 standing state for the two-night chain: the 3/5 base state
@@ -696,10 +697,10 @@ object CurationQueries {
       reps = FixtureCache.cached(s, dir, "x10-n1-reps", "v1")(upd.reps),
       kept = FixtureCache.cached(s, dir, "x10-n1-kept", "v1")(upd.kept),
       census = FixtureCache.cached(s, dir, "x10-n1-census", "v1")(upd.census),
-      bandIdx = FixtureCache.cachedPartitioned(s, dir,
-        "x10-n1-bands-sh3-b8-r2-bkb32", "v1", Seq("bkb"))(upd.bandIdx),
-      shingleIdx = FixtureCache.cachedPartitioned(s, dir,
-        "x10-n1-shingles-sh3-idb32", "v1", Seq("idb"))(upd.shingleIdx))
+      bandIdx = FixtureCache.cachedStore(s, dir, "x10-n1-bands-sh3-b8-r2-bkb32",
+        "v2", Dedup.bandIndex, Dedup.LshIndexBuckets)(upd.bandIdx.rows),
+      shingleIdx = FixtureCache.cachedStore(s, dir, "x10-n1-shingles-sh3-idb32",
+        "v2", Dedup.shingleIndex, Dedup.LshIndexBuckets)(upd.shingleIdx.rows))
   }
 
   /** X10''' — NIGHT 2 of the chained nightly build: the ≥ 4/5 slice

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.tables.{Bucketed, BucketedStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Run-level derived-data cache shared by the query modules: persist a
@@ -45,49 +46,55 @@ private[graft] object FixtureCache {
 
   def cached(s: SparkSession, dir: String, name: String,
              version: String)(gen: => DataFrame): DataFrame =
-    cachedImpl(s, dir, name, version, Nil)(gen)
+    cachedImpl(dir, name, version)(gen)(gen.write.mode("overwrite").parquet(_))(
+      s.read.parquet(_))
 
-  /** [[cached]] with a PARTITIONED parquet layout (`partitionBy(partCols)`)
-    * — for fixtures that are themselves partition-pruned probe targets
-    * (the bucketed LSH band index). `gen` must already carry the partition
-    * columns so the no-cache bypass path serves the same schema; partition
-    * columns should be typed int to match directory read-back inference. */
-  def cachedPartitioned(s: SparkSession, dir: String, name: String,
-                        version: String, partCols: Seq[String])
-                       (gen: => DataFrame): DataFrame =
-    cachedImpl(s, dir, name, version, partCols)(gen)
+  /** [[cached]] for a fixture that is itself a bucketed store (the LSH
+    * band index, the shingle artifact): `gen`'s rows land as the store
+    * `store(entry)` created with `n` buckets, so the fixture records its
+    * count like any store, and every read returns the rows with the count
+    * from the entry's sidecar. */
+  def cachedStore(s: SparkSession, dir: String, name: String, version: String,
+                  store: String => BucketedStore, n: Int)
+                 (gen: => DataFrame): Bucketed =
+    cachedImpl(dir, name, version)(store(name).bucketed(gen, n))(
+      store(_).create(gen, n))(store(_).read(s))
 
-  /** `gen` runs with [[graft.Materialize]] recording suspended: a fixture
-    * build is a run-level artifact, not the work of the entry that asks for
-    * it, so a cold and a warm cache record the same sub-plans. */
-  private def cachedImpl(s: SparkSession, dir: String, name: String,
-                         version: String, partCols: Seq[String])
-                        (gen0: => DataFrame): DataFrame = {
-    def gen = graft.Materialize.suspended(gen0)
-    if (sys.env.get("SPARK_GRAFT_NO_FIXTURE_CACHE").contains("1")) gen
+  /** The cache entry directory of fixture `name` at `version` over the
+    * data directory `dir`. */
+  private[graft] def entryDir(dir: String, name: String, version: String): java.io.File = {
+    val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
+    val root = new java.io.File(System.getProperty("java.io.tmpdir"), "graft-fixture-cache")
+    new java.io.File(root, s"$name-$version-$safe-${dataFingerprint(dir)}")
+  }
+
+  /** `write` lands the fixture in a fresh directory and `read` serves it
+    * from one; `bypass` is the uncached value. The fixture is built with
+    * [[graft.Materialize]] recording suspended: a fixture build is a
+    * run-level artifact, not the work of the entry that asks for it, so a
+    * cold and a warm cache record the same sub-plans. */
+  private def cachedImpl[T](dir: String, name: String, version: String)
+                           (bypass: => T)(write: String => Unit)(read: String => T): T =
+    if (sys.env.get("SPARK_GRAFT_NO_FIXTURE_CACHE").contains("1"))
+      graft.Materialize.suspended(bypass)
     else {
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val root = new java.io.File(
-        System.getProperty("java.io.tmpdir"), "graft-fixture-cache")
-      val dst = new java.io.File(root,
-        s"$name-$version-$safe-${dataFingerprint(dir)}")
-      def ready = new java.io.File(dst, "_SUCCESS").exists()
+      val dst = entryDir(dir, name, version)
+      // an entry only ever appears by the rename of a finished write
+      def ready = dst.isDirectory
       val src: java.io.File = this.synchronized {
         if (ready) { record(name, hit = true); dst }
         else {
           record(name, hit = false)
-          val tmp = new java.io.File(root,
+          val tmp = new java.io.File(dst.getParentFile,
             s"${dst.getName}.tmp-${ProcessHandle.current().pid()}")
-          gen.write.mode("overwrite").partitionBy(partCols: _*)
-            .parquet(tmp.getPath)
+          graft.Materialize.suspended(write(tmp.getPath))
           if (!ready && tmp.renameTo(dst)) dst
           else if (ready) { deleteRecursively(tmp); dst } // lost the race; equal copy
           else tmp            // rename failed with no winner visible: serve ours
         }
       }
-      s.read.parquet(src.getPath)
+      read(src.getPath)
     }
-  }
 
   /** Cheap content fingerprint of a testdata dir: fold every file's
     * (relative name, length, mtime) into one hash — a driver-side listing,

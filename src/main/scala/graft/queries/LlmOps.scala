@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.tables.Tables._
 import graft.ops.{Dedup, Graph, Similarity, TextOps}
+import graft.tables.Bucketed
 
 /** LLM-training-data pipeline operators (SURVEY.md §2.7) as named queries
   * over the `documents` / `embeddings` tables: deduplication (exact, MinHash
@@ -75,19 +76,18 @@ object LlmOps {
     // routes against - x2_lsh_compact's sizing discipline)
     Dedup.buildDigestIndex(docs.filter($"doc_id" % 5 === 1), "text", idxDir)
     val b1 = docs.filter($"doc_id" % 10 === 0)
-    // probes read the bucket count from the index's own sidecar
-    // (readDigestIndex) — the build/probe modulus contract enforced by
+    // probes read the bucket count from the index's own sidecar (the
+    // store read) — the build/probe modulus contract enforced by
     // construction, not by the caller carrying the number
-    val (idx1, nb1) = Dedup.readDigestIndex(s, idxDir)
+    val index = Dedup.digestIndex(idxDir)
     val keepers1 = b1.join(
-      Dedup.exactIncrementalBucketed(idx1, b1, "text", "doc_id", nb1)
+      Dedup.exactIncrementalBucketed(index.read(s), b1, "text", "doc_id")
         .filter($"action" === "keep").select($"doc_id"),
       Seq("doc_id"))
     Dedup.appendDigestIndex(keepers1, "text", idxDir)
-    Dedup.compactDigestIndex(s, idxDir, maxFilesPerBucket = 1)
-    val (idx2, nb2) = Dedup.readDigestIndex(s, idxDir)
-    Dedup.exactIncrementalBucketed(idx2,
-        docs.filter($"doc_id" % 10 === 5), "text", "doc_id", nb2)
+    index.compact(s, maxFilesPerPartition = 1)
+    Dedup.exactIncrementalBucketed(index.read(s),
+        docs.filter($"doc_id" % 10 === 5), "text", "doc_id")
       .orderBy($"doc_id")
   }
 
@@ -694,9 +694,8 @@ object LlmOps {
     * [[Similarity.ivfTopKFromIndexInt]]): seed centroids + int64 milli-L2²
     * make the whole write→prune→serve chain hash-checkable (the oracle
     * replays it from raw embeddings — the index materialization must be
-    * semantically invisible). The float-trained serving twin
-    * ([[Similarity.ivfTopKFromIndex]]) stays spec-asserted in
-    * SimilaritySpec, including its partition-pruned scan. */
+    * semantically invisible). The float-trained IVF serve stays in memory
+    * ([[Similarity.ivfTopK]], `x3_ann_ivf`). */
   def x3_ann_ivf_index(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = embeddings(s, dir)
@@ -744,7 +743,7 @@ object LlmOps {
       .orderBy($"query_id", $"rank")
   }
 
-  /** X3b'''''' — IVF index COMPACTION ([[Similarity.compactIvfIndexInt]]):
+  /** X3b'''''' — IVF index COMPACTION (the [[Similarity.ivfIndex]] store's compact):
     * the maintenance step the append path makes necessary — nightly
     * batch appends add a file per touched list partition, the classic
     * small-file pathology at 100 TB. Standing index from the first 400
@@ -765,7 +764,7 @@ object LlmOps {
     Similarity.appendIvfIndexInt(s,
       emb.filter($"vec_id" >= 400 && $"vec_id" < 450), cents, idxDir)
     Similarity.appendIvfIndexInt(s, emb.filter($"vec_id" >= 450), cents, idxDir)
-    Similarity.compactIvfIndexInt(s, idxDir, maxFilesPerList = 1)
+    Similarity.ivfIndex(idxDir).compact(s, maxFilesPerPartition = 1)
     Similarity.ivfTopKFromIndexInt(s,
         emb.filter($"vec_id" >= 20 && $"vec_id" < 40), idxDir, cents,
         k = 5, nProbe = 4)
@@ -2270,15 +2269,14 @@ object LlmOps {
     * corpus-split tag — so a parameter change self-invalidates the
     * cross-JVM cache without a manual version bump (round-9 ADVICE);
     * `version` covers pure algorithm changes only. */
-  private def cachedLshBandIndex(s: SparkSession, dir: String): DataFrame = {
+  private def cachedLshBandIndex(s: SparkSession, dir: String): Bucketed = {
     import s.implicits._
-    // persisted PARTITIONED BY the band-key bucket (the round-18 layout):
-    // every ingest probe reads only its batch's colliding bkb directories
-    FixtureCache.cachedPartitioned(s, dir,
-        "lsh-band-index-sh3-b8-r2-bkb32-corpus-mod5ne0", "v1", Seq("bkb")) {
-      Dedup.bucketedBandRows(
-        Dedup.buildLshBandRows(documents(s, dir).filter($"doc_id" % 5 =!= 0),
-          "text", "doc_id", shingleSize = 3, bands = 8, rowsPerBand = 2))
+    // a band-index store (the round-18 layout): every ingest probe reads
+    // only its batch's colliding bkb directories
+    FixtureCache.cachedStore(s, dir, "lsh-band-index-sh3-b8-r2-bkb32-corpus-mod5ne0",
+        "v2", Dedup.bandIndex, Dedup.LshIndexBuckets) {
+      Dedup.buildLshBandRows(documents(s, dir).filter($"doc_id" % 5 =!= 0),
+        "text", "doc_id", shingleSize = 3, bands = 8, rowsPerBand = 2)
     }
   }
 
@@ -2422,18 +2420,19 @@ object LlmOps {
         .filter($"status" === "keep").select($"doc_id"),
       Seq("doc_id"))
     // maintained = persisted bucketed index ∪ night-1 keepers' band rows
-    // (bucketed the same way, so night 2's partition-pruning filter pushes
-    // through the union: pruned parquet read on the standing side, a plain
-    // rowwise filter on the small in-flight keeper side)
-    val maintained = corpusBands.unionByName(Dedup.bucketedBandRows(
-      Dedup.buildLshBandRows(keepers1, "text", "doc_id")))
+    // (bucketed under the index's recorded count, so night 2's
+    // partition-pruning filter pushes through the union: pruned parquet
+    // read on the standing side, a plain rowwise filter on the small
+    // in-flight keeper side)
+    val maintained = corpusBands.union(
+      Dedup.buildLshBandRows(keepers1, "text", "doc_id"))
     Dedup.lshIngestClassifyBucketed(maintained,
         docs.filter($"doc_id" % 10 === 5), "text", "doc_id")
       .orderBy($"doc_id")
   }
 
   /** X2g'' — the FILE-LEVEL maintenance cycle with COMPACTION
-    * ([[Dedup.compactLshBandIndex]]): the ingest-cycle contract driven
+    * (the [[Dedup.bandIndex]] store's compact): the ingest-cycle contract driven
     * through the PERSISTED bucketed layout end-to-end — build the
     * standing index from the small `%20=3` corpus slice
     * (`partitionBy(bkb)` write), classify night 1 (`%20=1`) via a
@@ -2482,17 +2481,15 @@ object LlmOps {
     // index's own sidecar — exactly the coordination this entry's 8-bucket
     // layout needs (a default-32 probe here would prune the wrong
     // directories; the sidecar contract makes that unrepresentable)
-    val (idx1, nb1) = Dedup.readLshBandIndex(s, idxDir)
+    val index = Dedup.bandIndex(idxDir)
     val keepers1 = b1.join(
-      Dedup.lshIngestClassifyBucketed(idx1, b1,
-          "text", "doc_id", nBuckets = nb1)
+      Dedup.lshIngestClassifyBucketed(index.read(s), b1, "text", "doc_id")
         .filter($"status" === "keep").select($"doc_id"),
       Seq("doc_id"))
     Dedup.appendLshBandIndex(keepers1, "text", "doc_id", idxDir)
-    Dedup.compactLshBandIndex(s, idxDir, maxFilesPerBucket = 1)
-    val (idx2, nb2) = Dedup.readLshBandIndex(s, idxDir)
-    Dedup.lshIngestClassifyBucketed(idx2,
-        docs.filter($"doc_id" % 20 === 6), "text", "doc_id", nBuckets = nb2)
+    index.compact(s, maxFilesPerPartition = 1)
+    Dedup.lshIngestClassifyBucketed(index.read(s),
+        docs.filter($"doc_id" % 20 === 6), "text", "doc_id")
       .orderBy($"doc_id")
   }
 

@@ -4,10 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
-import org.apache.hadoop.fs.{FileSystem, Path}
-import java.io.FileNotFoundException
+import org.apache.hadoop.fs.Path
 import graft.cdc.{CanalJson, CdcApply}
-import graft.tables.BucketMeta
+import graft.tables.BucketedStore
 
 /** The streaming assembly of the CDC engine (SURVEY.md §3.1):
   * source → canal-json parse → validity route → flatten → {event sink,
@@ -167,30 +166,6 @@ object CdcPipeline {
     }
   }
 
-  /** Small-file compaction for a partitioned parquet store — the standing
-    * maintenance job every streaming sink needs: a micro-batch trigger
-    * writes one file per partition PER BATCH, so a (table, day) leaf
-    * accumulates thousands of files and listing/open cost starts to
-    * dominate scans long before data size does. Rewrites the store to
-    * `dest` with `filesPerPartition` files per leaf (deterministic salt
-    * from `saltCol`, so re-runs produce identical layout), preserving the
-    * partition columns and therefore the pruning behavior. One shuffle,
-    * keyed on (partition cols, salt); no driver-side data. Writing to a
-    * fresh dest + atomic swap is the caller's orchestration — in-place
-    * rewrite of a live store is not defined here on purpose. */
-  def compactStore(spark: SparkSession, src: String, dest: String,
-                   partitionCols: Seq[String], saltCol: String,
-                   filesPerPartition: Int = 1): Unit = {
-    require(filesPerPartition >= 1, "filesPerPartition must be >= 1")
-    val df = spark.read.parquet(src)
-    val keys = partitionCols.map(col) :+
-      pmod(xxhash64(col(saltCol)), lit(filesPerPartition.toLong))
-    df.repartition(keys: _*)
-      .write.mode("overwrite")
-      .partitionBy(partitionCols: _*)
-      .parquet(dest)
-  }
-
   /** Materialized-state sink (CDC apply, §2.5): per micro-batch, upsert the
     * latest image per key into a parquet state dir. The apply is idempotent
     * (latest-by-key is deterministic under duplicate delivery).
@@ -223,19 +198,14 @@ object CdcPipeline {
     * the shuffle stage runs as a job of its own. A batch with no clean rows
     * (a no-data batch, or poison only) runs job 1 alone.
     *
-    * Tombstone-only buckets: dynamic overwrite never touches a partition
-    * with no output rows, so a dirty bucket whose keys were all deleted
-    * would keep its old files. Each dirty bucket directory that exists is
-    * listed before the write; after it, a directory whose file names did
-    * not change got no output and is deleted. Replay: a crash between the
-    * overwrite commit and that delete replays the batch; the bucket still
-    * holds its unchanged old files, the replay re-ranks it to no output
-    * again and deletes it, and the overwritten buckets re-rank to
-    * themselves, so the store converges.
+    * Tombstone-only buckets: a dirty bucket whose keys were all deleted
+    * gets no output rows and is deleted by the store's
+    * [[BucketedStore.overwriteBuckets]], which also defines the replay of a
+    * crash between the overwrite commit and that delete.
     *
     * The bucket count `n` is a property of the store, recorded once as
     * `bucket=n` in its `_nbuckets` sidecar and decided before anything is
-    * written by [[BucketMeta.bucketCount]]; a new store takes the batch
+    * written ([[BucketedStore.open]]); a new store takes the batch
     * session's `spark.sql.shuffle.partitions`, written to the sidecar first.
     * Why the session's parallelism and not a fixed, finer count: a micro-
     * batch of k keys dirties about n·(1 − (1 − 1/n)^k) buckets, and a live
@@ -269,18 +239,10 @@ object CdcPipeline {
         batch.persist()
         try {
           val spark = batch.sparkSession
-          val root = new Path(statePath)
-          val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-          val n = BucketMeta.bucketCount(spark, statePath, "bucket") {
-            val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
-            BucketMeta.write(spark, statePath, "bucket", session)
-            session
-          }
-          val key = Seq(col("database"), col("table"), col("pk"))
+          val store = stateStore(statePath)
+          val n = store.open(spark, spark.conf.get("spark.sql.shuffle.partitions").toInt)
           val isError = CanalJson.processErrorRow(col("data"))
-          val keyed = batch
-            .withColumn("pk", CdcApply.envelopePk)
-            .withColumn("bucket", pmod(hash(key: _*), lit(n)))
+          val keyed = store.withBuckets(batch.withColumn("pk", CdcApply.envelopePk), n)
           val perBucket = keyed.groupBy(col("bucket"))
             .agg(count(when(isError, 1)).as("errors"), count(when(!isError, 1)).as("clean"))
             .collect()
@@ -289,19 +251,9 @@ object CdcPipeline {
           val dirty = perBucket.filter(_.getLong(2) > 0).map(_.getInt(0)).sorted
           if (dirty.nonEmpty) {
             val clean = keyed.filter(!isError)
-            // the dirty buckets that hold state, with their files before the write
-            val before = dirty.toSeq.map(b => new Path(root, s"bucket=$b"))
-              .flatMap(d => fileNames(fs, d).map(d -> _))
-            val merged =
-              if (before.isEmpty) clean
-              else clean.unionByName(spark.read.schema(clean.schema)
-                .option("basePath", statePath).parquet(before.map(_._1.toString): _*))
-            CdcApply.latestByPk(merged.repartition(n, key: _*))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("bucket").parquet(statePath)
-            before.foreach { case (d, names) =>
-              if (fileNames(fs, d).contains(names)) fs.delete(d, true)
+            store.overwriteBuckets(spark, dirty.toSeq, clean.schema) { prior =>
+              CdcApply.latestByPk(prior.fold(clean)(clean.unionByName(_))
+                .repartition(n, StateKey: _*))
             }
           }
           PipelineHealth.SinkCounters.inc("materialize", "success")
@@ -313,8 +265,12 @@ object CdcPipeline {
         ()
       }
 
-  /** The names of the files in `dir`, or None if it does not exist. */
-  private def fileNames(fs: FileSystem, dir: Path): Option[Set[String]] =
-    try Some(fs.listStatus(dir).map(_.getPath.getName).toSet)
-    catch { case _: FileNotFoundException => None }
+  /** The envelope-declared key the state store buckets and ranks on. */
+  private val StateKey = Seq(col("database"), col("table"), col("pk"))
+
+  /** The materialize sink's state store at `dir`: latest images bucketed
+    * by `pmod(hash(database, table, pk), n)`, the Murmur3 expression
+    * `HashPartitioning` assigns shuffle partitions with. */
+  def stateStore(dir: String): BucketedStore =
+    BucketedStore(dir, "bucket", n => pmod(hash(StateKey: _*), lit(n)))
 }

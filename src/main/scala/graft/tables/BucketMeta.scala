@@ -10,12 +10,10 @@ import org.apache.spark.sql.SparkSession
   * `partCol=` directories were computed under. The leading `_` keeps it out
   * of `spark.read.parquet(dir)`.
   *
-  * Two kinds of store record one: the modulus index families (digest
-  * `shab` and LSH band `bkb`, [[graft.ops.Dedup]]) and the CDC materialize
-  * sink ([[graft.streaming.CdcPipeline.materializeSink]]). Which modulus a
-  * store was built under is decided by [[bucketCount]] alone, for all of
-  * them: the store's sidecar is the only source of its layout, never the
-  * caller. */
+  * Every [[BucketedStore]] records one when it is created: the index
+  * families and the CDC materialize sink alike. Which count a store was
+  * built under is decided by [[bucketCount]] alone, for all of them: the
+  * store's sidecar is the only source of its layout, never the caller. */
 object BucketMeta {
 
   val File = "_nbuckets"

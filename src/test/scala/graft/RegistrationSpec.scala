@@ -100,6 +100,21 @@ class RegistrationSpec extends SparkSpec {
     assert(readers.isEmpty, s"BucketMeta.read/partitionValues outside BucketMeta.scala: ${readers.sorted}")
   }
 
+  test("main source writes a partitioned layout only through graft.tables") {
+    // A raw DataFrameWriter partitionBy outside graft/tables/ is a layout no
+    // store owns: no recorded bucket count, no compaction or repair. The
+    // writes partitioned by column values rather than a bucket are named.
+    val writer = ("\\.write(?:Stream)?(?:\\s*\\.\\w+\\((?:[^()]|\\([^()]*\\))*\\))*" +
+      "\\s*\\.partitionBy\\(([^)]*)\\)").r
+    val tables = java.nio.file.Paths.get("graft", "tables")
+    val raw = mainSources.filterNot(_._1.getParent.endsWith(tables)).flatMap {
+      case (f, txt) => writer.findAllMatchIn(txt).map(m => s"${f.getFileName}: ${m.group(1)}")
+    }
+    assert(raw.toSet === Set(
+      "CdcPipeline.scala: \"table\", \"event_date\"", // eventStoreSink
+      "CdcQueries.scala: \"tbl\", \"day\""))          // cdc_store_pruned
+  }
+
   test("main source reads exactly the ten SPARK_GRAFT environment names") {
     // Every env knob is a second way to run the bench or the fixtures. Bench
     // reads the driver's inputs plus its parent-to-child FORKED/SINGLE_RUN

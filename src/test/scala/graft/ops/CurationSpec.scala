@@ -249,8 +249,7 @@ class CurationSpec extends SparkSpec {
     // the probe discoverTouching builds: the batch's band rows prune the
     // bucketed fixture read (the discovery subtree is localCheckpoint'd in
     // the entry, so the pruning must be asserted on the probe frame itself)
-    val probe = Dedup.pruneBandIndexToBatch(st.bandIdx,
-      Dedup.buildLshBandRows(delta, "text", "doc_id"))
+    val probe = st.bandIdx.probe(Dedup.buildLshBandRows(delta, "text", "doc_id"))
     val plan = probe.queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*bkb".r.findFirstIn(plan).isDefined,
       s"expected non-empty partition filter on `bkb`, got:\n$plan")
@@ -258,8 +257,7 @@ class CurationSpec extends SparkSpec {
       s"probe does not scan the persisted band-index fixture:\n$plan")
     // the VERIFICATION artifact gets the same discipline: the standing
     // shingle fixture is read pruned to the candidate endpoints' buckets
-    val shProbe = Dedup.pruneShinglesToIds(st.shingleIdx,
-      delta.select($"doc_id".as("id")))
+    val shProbe = st.shingleIdx.probe(delta.select($"doc_id".as("id")))
     val shPlan = shProbe.queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*idb".r.findFirstIn(shPlan).isDefined,
       s"expected non-empty partition filter on `idb`, got:\n$shPlan")
@@ -284,7 +282,7 @@ class CurationSpec extends SparkSpec {
     val deltaSh = Dedup.shingleCounts(delta, "text", "doc_id", n = 3)
       .select($"id", $"shingle")
     val exact = Dedup.ngramJaccardPairsFromShingles(
-        st.shingleIdx.drop("idb").unionByName(deltaSh), minJaccard = 0.3)
+        st.shingleIdx.rows.drop("idb").unionByName(deltaSh), minJaccard = 0.3)
       .filter($"id_b" >= thr)
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
     assert(got === exact,

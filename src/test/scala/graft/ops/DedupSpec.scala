@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.queries.FixtureCache
+import graft.tables.Bucketed
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -369,7 +371,7 @@ class DedupSpec extends SparkSpec {
       val b1 = docs.filter($"doc_id" > 2)
       Dedup.buildLshBandIndex(corpus, "text", "doc_id", idx)
       val standing = files(idx)
-      val c1 = Dedup.lshIngestClassifyBucketed(spark.read.parquet(idx), b1,
+      val c1 = Dedup.lshIngestClassifyBucketed(Dedup.bandIndex(idx).read(spark), b1,
           "text", "doc_id")
         .collect().map(r => (r.getLong(0), r.getString(1))).toMap
       assert(c1(5L) === "keep" && c1(3L) != "keep")
@@ -392,7 +394,7 @@ class DedupSpec extends SparkSpec {
       // night 2: a dup of the night-1 keeper routes near_dup_of_corpus
       val b2 = docs.filter($"doc_id" === 5L)
         .select(lit(6L).as("doc_id"), $"text")
-      val c2 = Dedup.lshIngestClassifyBucketed(spark.read.parquet(idx), b2,
+      val c2 = Dedup.lshIngestClassifyBucketed(Dedup.bandIndex(idx).read(spark), b2,
           "text", "doc_id")
         .collect().map(r => (r.getLong(0), r.getString(1))).toMap
       assert(c2(6L) === "near_dup_of_corpus")
@@ -422,13 +424,14 @@ class DedupSpec extends SparkSpec {
         .filter(f => f.isDirectory && f.getName.startsWith("bkb=")).length
       assert(bucketDirs > 8,
         s"corpus fills only $bucketDirs buckets — fixture too small to show pruning")
-      val batchBuckets = Dedup.bucketedBandRows(
-          Dedup.buildLshBandRows(batch, "text", "doc_id"))
+      val batchBuckets = Dedup.bandIndex(idx).withBuckets(
+          Dedup.buildLshBandRows(batch, "text", "doc_id"), Dedup.LshIndexBuckets)
         .select($"bkb").distinct().count()
       assert(batchBuckets <= 8 && batchBuckets < bucketDirs)
-      val idxDf = spark.read.parquet(idx)
+      val index = Dedup.bandIndex(idx).read(spark)
+      val idxDf = index.rows
       // classify: pruned plan + equality with the full-scan frame form
-      val pruned = Dedup.lshIngestClassifyBucketed(idxDf, batch, "text", "doc_id")
+      val pruned = Dedup.lshIngestClassifyBucketed(index, batch, "text", "doc_id")
       val plan = pruned.queryExecution.executedPlan.toString
       assert("PartitionFilters: \\[[^\\]]*bkb".r.findFirstIn(plan).isDefined,
         s"expected non-empty partition filter on `bkb`, got:\n$plan")
@@ -446,10 +449,13 @@ class DedupSpec extends SparkSpec {
         .select($"id", $"shingle")
       val batchSh = Dedup.shingleCounts(batch, "text", "doc_id", n = 3)
         .select($"id", $"shingle")
-      // the corpus shingle side carries the idb layout column -> the
-      // verification read is also pruned (to candidate-endpoint buckets)
-      val discPruned = Dedup.lshDiscoverVerifiedPairsBucketed(idxDf,
-          Dedup.bucketedShingleRows(corpusSh), batchSh, minJaccard = 0.3)
+      // the corpus shingle side is a bucketed shingle index (kept as
+      // frames) -> the verification read is also pruned (to
+      // candidate-endpoint buckets)
+      val discPruned = Dedup.lshDiscoverVerifiedPairsBucketed(index,
+          Right(Dedup.shingleIndex(s"$idx-shingles")
+            .bucketed(corpusSh, Dedup.LshIndexBuckets)),
+          batchSh, minJaccard = 0.3)
         .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
       val discFull = Dedup.lshDiscoverVerifiedPairs(idxDf.drop("bkb"),
           corpusSh, batchSh, minJaccard = 0.3)
@@ -495,10 +501,10 @@ class DedupSpec extends SparkSpec {
           "keeper doc 120 new120a new120b new120c new120d extra"))
         .toDF("doc_id", "text")
       def classify() = Dedup.lshIngestClassifyBucketed(
-          spark.read.parquet(idx), batch, "text", "doc_id")
+          Dedup.bandIndex(idx).read(spark), batch, "text", "doc_id")
         .collect().map(r => (r.getLong(0), r.getString(1))).toMap
       val preCompact = classify()
-      val n = Dedup.compactLshBandIndex(spark, idx, maxFilesPerBucket = 1)
+      val n = Dedup.bandIndex(idx).compact(spark, maxFilesPerPartition = 1)
       assert(n === multi.size, s"compacted $n of ${multi.size} multi-file buckets")
       val after = files(idx)
       // every bucket now one file; untouched buckets byte-identical in place
@@ -516,7 +522,7 @@ class DedupSpec extends SparkSpec {
         .collect().toSet
       assert(rows(idx) === rows(rebuilt))
       // idempotence: nothing left over threshold
-      assert(Dedup.compactLshBandIndex(spark, idx, maxFilesPerBucket = 1) === 0)
+      assert(Dedup.bandIndex(idx).compact(spark, maxFilesPerPartition = 1) === 0)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idx))
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(rebuilt))
@@ -551,8 +557,8 @@ class DedupSpec extends SparkSpec {
       val b1 = Seq((100L, "standing document 7"), (101L, "night one text"),
         (102L, "night one text"), (103L, "another night one text"))
         .toDF("doc_id", "text")
-      val idxDf = spark.read.parquet(idx)
-      val pruned = Dedup.exactIncrementalBucketed(idxDf, b1, "text", "doc_id")
+      val pruned = Dedup.exactIncrementalBucketed(Dedup.digestIndex(idx).read(spark),
+        b1, "text", "doc_id")
       val plan = pruned.queryExecution.executedPlan.toString
       assert("PartitionFilters: \\[[^\\]]*shab".r.findFirstIn(plan).isDefined,
         s"expected non-empty partition filter on `shab`, got:\n$plan")
@@ -571,8 +577,8 @@ class DedupSpec extends SparkSpec {
       }
       assert(after.size > built.size)
       // compact converges and moves no rows
-      assert(Dedup.compactDigestIndex(spark, idx, maxFilesPerBucket = 1) > 0)
-      assert(Dedup.compactDigestIndex(spark, idx, maxFilesPerBucket = 1) === 0)
+      assert(Dedup.digestIndex(idx).compact(spark, maxFilesPerPartition = 1) > 0)
+      assert(Dedup.digestIndex(idx).compact(spark, maxFilesPerPartition = 1) === 0)
       Dedup.buildDigestIndex(corpus.unionByName(keepers1), "text", rebuilt)
       def shas(d: String) = spark.read.parquet(d)
         .select($"text_sha").as[String].collect().toSet
@@ -581,7 +587,7 @@ class DedupSpec extends SparkSpec {
       val b2 = Seq((200L, "night one text"), (201L, "brand new night two"))
         .toDF("doc_id", "text")
       val c2 = asMap(Dedup.exactIncrementalBucketed(
-        spark.read.parquet(idx), b2, "text", "doc_id"))
+        Dedup.digestIndex(idx).read(spark), b2, "text", "doc_id"))
       assert(c2 === Map(200L -> "drop_vs_corpus", 201L -> "keep"))
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idx))
@@ -709,13 +715,13 @@ class DedupSpec extends SparkSpec {
         .toDF("doc_id", "text")
       // band index built with a NON-default bucket count
       Dedup.buildLshBandIndex(corpus, "text", "doc_id", band, nBuckets = 8)
-      val (_, bandN) = Dedup.readLshBandIndex(spark, band)
+      val bandN = Dedup.bandIndex(band).read(spark).n
       assert(bandN === 8)
       // the append buckets under the recorded 8, not the default 32: every
       // directory stays below 8, and the sidecar is unchanged
       Dedup.appendLshBandIndex(docs, "text", "doc_id", band)
       assert(bucketDirs(band, "bkb").forall(_ < 8), bucketDirs(band, "bkb"))
-      assert(Dedup.readLshBandIndex(spark, band)._2 === 8)
+      assert(Dedup.bandIndex(band).read(spark).n === 8)
       // the portable probe reads the count from the sidecar: its
       // classification equals the explicit nBuckets=8 call (a default-32
       // probe would prune the wrong directories)
@@ -726,15 +732,16 @@ class DedupSpec extends SparkSpec {
       val viaPortable = asMap(Dedup.lshIncrementalPortable(
         corpus.limit(0), batch, "text", "doc_id", band))
       val viaExplicit = asMap(Dedup.lshIngestClassifyBucketed(
-        spark.read.parquet(band), batch, "text", "doc_id", nBuckets = 8))
+        Bucketed(Dedup.bandIndex(band), spark.read.parquet(band), 8), batch,
+        "text", "doc_id"))
       assert(viaPortable === viaExplicit)
       assert(viaPortable(200L) === "near_dup_of_corpus")
       // digest family: same contract
       Dedup.buildDigestIndex(corpus, "text", sha, nBuckets = 8)
-      assert(Dedup.readDigestIndex(spark, sha)._2 === 8)
+      assert(Dedup.digestIndex(sha).read(spark).n === 8)
       Dedup.appendDigestIndex(docs, "text", sha)
       assert(bucketDirs(sha, "shab").forall(_ < 8), bucketDirs(sha, "shab"))
-      assert(Dedup.readDigestIndex(spark, sha)._2 === 8)
+      assert(Dedup.digestIndex(sha).read(spark).n === 8)
     } finally {
       Seq(band, sha).foreach(d =>
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
@@ -759,12 +766,27 @@ class DedupSpec extends SparkSpec {
         text.getBytes("UTF-8"))
       ()
     }
+    // the fixture cache serves an existing entry through the store's read:
+    // make the store under test the entry (a link to it)
+    def fixtureRead(dir: String): Any = {
+      val entry = FixtureCache.entryDir(dir, "refusal-band-index", "v0").toPath
+      java.nio.file.Files.createDirectories(entry.getParent)
+      java.nio.file.Files.createSymbolicLink(entry, java.nio.file.Paths.get(dir))
+      try FixtureCache.cachedStore(spark, dir, "refusal-band-index", "v0",
+        Dedup.bandIndex, Dedup.LshIndexBuckets)(fail("a cache entry is rebuilt"))
+      finally java.nio.file.Files.delete(entry)
+    }
     // each call with the partition column its index family buckets by
     val calls: Seq[(String, String, String => Any)] = Seq(
       ("appendDigestIndex", "shab", Dedup.appendDigestIndex(docs, "text", _)),
       ("appendLshBandIndex", "bkb", Dedup.appendLshBandIndex(docs, "text", "doc_id", _)),
-      ("readDigestIndex", "shab", Dedup.readDigestIndex(spark, _)),
-      ("readLshBandIndex", "bkb", Dedup.readLshBandIndex(spark, _)),
+      ("digestIndex.read", "shab", Dedup.digestIndex(_).read(spark)),
+      ("bandIndex.read", "bkb", Dedup.bandIndex(_).read(spark)),
+      ("appendIvfIndexInt", "list", Similarity.appendIvfIndexInt(spark,
+        Seq((0L, Seq(1.0f, 1.0f))).toDF("vec_id", "embedding"),
+        Array((0L, Array(1000L, 1000L))), _)),
+      ("phraseFromIndex", "bucket", TextOps.phraseFromIndex(spark, _, Seq("hash", "join"))),
+      ("FixtureCache.cachedStore", "bkb", fixtureRead),
       ("lshIncrementalPortable", "bkb",
         Dedup.lshIncrementalPortable(docs, docs, "text", "doc_id", _)))
     val cases: Seq[(String, String => String => Unit)] = Seq(
@@ -795,6 +817,16 @@ class DedupSpec extends SparkSpec {
         assert(tree(dir) === Seq(("", -1L)), s"$call: nothing may be written")
       } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
+    // a band index the fixture cache builds records its count like any store
+    val src = java.nio.file.Files.createTempDirectory("fixture-src-").toString
+    val entry = FixtureCache.entryDir(src, "refusal-sidecar", "v0")
+    try {
+      FixtureCache.cachedStore(spark, src, "refusal-sidecar", "v0", Dedup.bandIndex,
+        Dedup.LshIndexBuckets)(Dedup.buildLshBandRows(docs, "text", "doc_id"))
+      assert(new String(java.nio.file.Files.readAllBytes(
+        entry.toPath.resolve(BucketMeta.File)), "UTF-8") === "bkb=32")
+    } finally Seq(entry, new java.io.File(src))
+      .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
   }
 
   test("measured pruning payoff: a bucket-subset probe reads STRICTLY " +
@@ -816,7 +848,8 @@ class DedupSpec extends SparkSpec {
         .toDF("doc_id", "text")
       // ---- band index: classify probe --------------------------------
       Dedup.buildLshBandIndex(corpus, "text", "doc_id", band)
-      val idxDf = spark.read.parquet(band)
+      val index = Dedup.bandIndex(band).read(spark)
+      val idxDf = index.rows
       val (fullF, fullB) = ScanStats.indexScanFootprint(
         Dedup.lshIngestClassify(idxDf.drop("bkb"), batch, "text", "doc_id"),
         band)
@@ -824,7 +857,7 @@ class DedupSpec extends SparkSpec {
       // the un-pruned twin selects the WHOLE index — the baseline is real
       assert((fullF, fullB) === ((fsF, fsB)))
       val (prF, prB) = ScanStats.indexScanFootprint(
-        Dedup.lshIngestClassifyBucketed(idxDf, batch, "text", "doc_id"),
+        Dedup.lshIngestClassifyBucketed(index, batch, "text", "doc_id"),
         band)
       // measured at this fixture: the 1-doc batch touches 7 of 32 bkb
       // directories — 7/32 files, 0.22x bytes (digest below: 1/30 files,
@@ -835,23 +868,20 @@ class DedupSpec extends SparkSpec {
       // ---- digest index: exact routing probe (vs on-disk ground truth,
       // which IS what the unfiltered scan of the frame form selects) ----
       Dedup.buildDigestIndex(corpus, "text", sha)
-      val shaDf = spark.read.parquet(sha)
+      val shaIdx = Dedup.digestIndex(sha).read(spark)
       val (dFsF, dFsB) = ScanStats.dirFootprint(sha)
       val (dPrF, dPrB) = ScanStats.indexScanFootprint(
-        Dedup.exactIncrementalBucketed(shaDf, batch, "text", "doc_id"),
+        Dedup.exactIncrementalBucketed(shaIdx, batch, "text", "doc_id"),
         sha)
       assert(dPrF < dFsF && dPrB < dFsB,
         s"digest probe not cheaper: files $dPrF/$dFsF bytes $dPrB/$dFsB")
       // ---- shingle artifact: verification-side probe -----------------
-      Dedup.bucketedShingleRows(
-          Dedup.shingleCounts(corpus, "text", "doc_id", n = 3)
-            .select($"id", $"shingle"))
-        .repartition($"idb")
-        .write.mode("overwrite").partitionBy("idb").parquet(shingles)
-      val shgDf = spark.read.parquet(shingles)
+      Dedup.shingleIndex(shingles).create(
+        Dedup.shingleCounts(corpus, "text", "doc_id", n = 3)
+          .select($"id", $"shingle"), Dedup.LshIndexBuckets)
       val ids = Seq(7L).toDF("id")
       val (sPrF, sPrB) = ScanStats.indexScanFootprint(
-        Dedup.pruneShinglesToIds(shgDf, ids), shingles)
+        Dedup.shingleIndex(shingles).read(spark).probe(ids), shingles)
       val (sFsF, sFsB) = ScanStats.dirFootprint(shingles)
       assert(sPrF < sFsF && sPrB < sFsB,
         s"shingle probe not cheaper: files $sPrF/$sFsF bytes $sPrB/$sFsB")
@@ -876,13 +906,13 @@ class DedupSpec extends SparkSpec {
       Dedup.buildLshBandIndex(corpus, "text", "doc_id", band)
       Dedup.buildDigestIndex(corpus, "text", sha)
       assert(Dedup.lshIngestClassifyBucketed(
-        spark.read.parquet(band), empty, "text", "doc_id").count() === 0)
+        Dedup.bandIndex(band).read(spark), empty, "text", "doc_id").count() === 0)
       assert(Dedup.exactIncrementalBucketed(
-        spark.read.parquet(sha), empty, "text", "doc_id").count() === 0)
+        Dedup.digestIndex(sha).read(spark), empty, "text", "doc_id").count() === 0)
       assert(Dedup.lshDiscoverVerifiedPairsBucketed(
-        spark.read.parquet(band),
-        Dedup.shingleCounts(corpus, "text", "doc_id", n = 3)
-          .select($"id", $"shingle"),
+        Dedup.bandIndex(band).read(spark),
+        Left(Dedup.shingleCounts(corpus, "text", "doc_id", n = 3)
+          .select($"id", $"shingle")),
         Dedup.shingleCounts(empty, "text", "doc_id", n = 3)
           .select($"id", $"shingle"),
         minJaccard = 0.3).count() === 0)
@@ -891,7 +921,7 @@ class DedupSpec extends SparkSpec {
       val novel = Seq((100L, "entirely novel content qq ww ee rr tt"))
         .toDF("doc_id", "text")
       val got = Dedup.exactIncrementalBucketed(
-          spark.read.parquet(sha), novel, "text", "doc_id")
+          Dedup.digestIndex(sha).read(spark), novel, "text", "doc_id")
         .select($"doc_id", $"action")
         .collect().map(r => (r.getLong(0), r.getString(1))).toMap
       assert(got === Map(100L -> "keep"))

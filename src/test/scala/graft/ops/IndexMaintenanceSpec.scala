@@ -1,14 +1,15 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.tables.BucketedStore
 import org.apache.spark.sql.functions._
 
 /** The staged-swap CRASH REPAIR contract (round-18 verdict #3: the
-  * recovery procedure was prose in IndexMaintenance's doc; this spec pins
-  * the operator): a compaction killed in the duplicate window — staged
+  * recovery procedure was prose; this spec pins the operator): a
+  * compaction killed in the duplicate window — staged
   * files renamed in, displaced standing files not yet deleted, staging dir
   * still present — must be (a) detectable, (b) rolled FORWARD by
-  * [[IndexMaintenance.repairPartitionedIndex]] to exactly the state the
+  * [[BucketedStore.repair]] to exactly the state the
   * completed compaction would have left, with probe-after-repair ≡ the
   * pre-crash probe ≡ a rebuild, for both the band (`bkb`) and IVF
   * (`list`) layouts. */
@@ -60,15 +61,15 @@ class IndexMaintenanceSpec extends SparkSpec {
           "keeper doc 120 new120a new120b new120c new120d extra"))
         .toDF("doc_id", "text")
       def classify() = Dedup.lshIngestClassifyBucketed(
-          spark.read.parquet(idx), batch, "text", "doc_id")
+          Dedup.bandIndex(idx).read(spark), batch, "text", "doc_id")
         .collect().map(r => (r.getLong(0), r.getString(1))).toMap
       val rowsBefore = rows(idx).toSet
       val classifyBefore = classify()
       assert(classifyBefore(500L) === "near_dup_of_corpus")
       // crash after the FIRST partition's staged file renamed in, BEFORE
       // its displaced standing files delete — the duplicate window
-      intercept[IndexMaintenance.SimulatedCompactionCrash] {
-        IndexMaintenance.compactPartitionedIndex(spark, idx, "bkb", _.toInt,
+      intercept[BucketedStore.SimulatedCompactionCrash] {
+        Dedup.bandIndex(idx).compact(spark,
           maxFilesPerPartition = 1, crashAfterRenames = 1)
       }
       // DETECT: the staging dir is still present, and the index holds
@@ -80,7 +81,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       assert(crashed.toSet === rowsBefore, "crash lost rows — worse than dup")
       // REPAIR rolls forward: every manifest partition ends at the
       // completed-compaction state (one staged file, no displaced dups)
-      val repaired = IndexMaintenance.repairPartitionedIndex(spark, idx)
+      val repaired = Dedup.bandIndex(idx).repair(spark)
       assert(repaired === overThreshold,
         s"repaired $repaired of $overThreshold crashed partitions")
       assert(stagingDirsOf(idx).isEmpty, "repair left the staging dir")
@@ -95,11 +96,11 @@ class IndexMaintenanceSpec extends SparkSpec {
         rebuilt)
       assert(after.toSet === rows(rebuilt).toSet)
       // idempotent: nothing left to repair, nothing left to compact
-      assert(IndexMaintenance.repairPartitionedIndex(spark, idx) === 0)
-      assert(Dedup.compactLshBandIndex(spark, idx, maxFilesPerBucket = 1) === 0)
+      assert(Dedup.bandIndex(idx).repair(spark) === 0)
+      assert(Dedup.bandIndex(idx).compact(spark, maxFilesPerPartition = 1) === 0)
       // the bucket-count sidecar survives the crash + repair + compact
       // cycle (compaction/repair touch partition dirs, never root files)
-      assert(Dedup.readLshBandIndex(spark, idx)._2 === Dedup.LshIndexBuckets)
+      assert(Dedup.bandIndex(idx).read(spark).n === Dedup.LshIndexBuckets)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idx))
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(rebuilt))
@@ -124,15 +125,15 @@ class IndexMaintenanceSpec extends SparkSpec {
         .select($"query_id", $"rank", $"neighbor_id", $"list_id", $"d2m")
         .as[(Long, Int, Long, Long, Long)].collect().toSet
       val serveBefore = serve()
-      intercept[IndexMaintenance.SimulatedCompactionCrash] {
-        IndexMaintenance.compactPartitionedIndex(spark, dir, "list", _.toLong,
+      intercept[BucketedStore.SimulatedCompactionCrash] {
+        Similarity.ivfIndex(dir).compact(spark,
           maxFilesPerPartition = 1, crashAfterRenames = 1)
       }
       assert(stagingDirsOf(dir).nonEmpty)
       val ids = spark.read.parquet(dir).select($"vec_id").as[Long].collect()
       assert(ids.length > ids.distinct.length,
         "crash in the duplicate window must leave duplicate vec_ids")
-      assert(IndexMaintenance.repairPartitionedIndex(spark, dir) > 0)
+      assert(Similarity.ivfIndex(dir).repair(spark) > 0)
       assert(stagingDirsOf(dir).isEmpty)
       val idsAfter = spark.read.parquet(dir).select($"vec_id").as[Long].collect()
       assert(idsAfter.length === idsAfter.distinct.length)
@@ -146,7 +147,7 @@ class IndexMaintenanceSpec extends SparkSpec {
         .select($"query_id", $"rank", $"neighbor_id", $"list_id", $"d2m")
         .as[(Long, Int, Long, Long, Long)].collect().toSet
       assert(serve() === serveFull)
-      assert(Similarity.compactIvfIndexInt(spark, dir, maxFilesPerList = 1) === 0)
+      assert(Similarity.ivfIndex(dir).compact(spark, maxFilesPerPartition = 1) === 0)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(fullDir))
@@ -161,10 +162,8 @@ class IndexMaintenanceSpec extends SparkSpec {
       // the documented discipline runs the sweep at EVERY pipeline
       // startup; on the first-ever startup neither the index nor (for a
       // nested layout) its parent exists yet (round-19 ADVICE)
-      assert(IndexMaintenance.repairPartitionedIndex(spark,
-        s"$base/nested/never-built-idx") === 0)
-      assert(IndexMaintenance.repairPartitionedIndex(spark,
-        s"$base/never-built-idx") === 0)
+      assert(Dedup.bandIndex(s"$base/nested/never-built-idx").repair(spark) === 0)
+      assert(Dedup.bandIndex(s"$base/never-built-idx").repair(spark) === 0)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
     }
@@ -182,7 +181,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       // happened, so the standing index is intact and repair just sweeps
       val staging = new java.io.File(idx + ".compact-staging-99999")
       assert(staging.mkdir())
-      assert(IndexMaintenance.repairPartitionedIndex(spark, idx) === 0)
+      assert(Dedup.bandIndex(idx).repair(spark) === 0)
       assert(!staging.exists(), "abandoned staging dir not swept")
       assert(filesPerPartition(idx) === before, "sweep touched the index")
     } finally {

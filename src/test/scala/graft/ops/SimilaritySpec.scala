@@ -110,39 +110,6 @@ class SimilaritySpec extends SparkSpec {
       "rerank covering the tie neighborhood must reproduce exact top-k")
   }
 
-  test("persisted IVF index: partition-pruned probe read matches in-memory ivfTopK") {
-    def noise(i: Int, d: Int): Float = (((i * 37 + d * 101) % 97) / 970.0f)
-    val dim = 16
-    val rows = (0 until 200).map { i =>
-      val base = if (i % 2 == 0) Array.fill(dim)(1.0f) else Array.fill(dim)(-1.0f)
-      (i.toLong, base.zipWithIndex.map { case (v, d) => v + noise(i, d) }.toSeq)
-    }
-    val corpus = rows.toDF("vec_id", "embedding")
-    val queries = corpus.filter($"vec_id" < 6)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_idx").toString
-    try {
-      val cents = Similarity.writeIvfIndex(corpus, dim, nLists = 8, path = dir)
-      val fromIndex = Similarity.ivfTopKFromIndex(spark, queries, dir, cents,
-        k = 5, nProbe = 2)
-      val inMem = Similarity.ivfTopK(queries, corpus, k = 5, dim = dim,
-        nLists = 8, nProbe = 2)
-      assert(
-        fromIndex.select($"query_id", $"rank", $"neighbor_id").as[(Long, Int, Long)]
-          .collect().toSet ===
-        inMem.select($"query_id", $"rank", $"neighbor_id").as[(Long, Int, Long)]
-          .collect().toSet)
-      // the probe read must prune on the partition column, not scan+filter:
-      // require a NON-EMPTY PartitionFilters list that names the `list`
-      // partition column (an empty list — scan-everything — also prints
-      // "PartitionFilters: [", which a plain contains-check lets pass)
-      val plan = fromIndex.queryExecution.executedPlan.toString
-      assert("PartitionFilters: \\[[^\\]]*list".r.findFirstIn(plan).isDefined,
-        s"expected non-empty partition filter on `list`, got:\n$plan")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
-  }
-
   test("integer IVF index: pruned-read serve equals the in-memory certified " +
     "twin and prunes on the list partition") {
     def noise(i: Int, d: Int): Float = (((i * 37 + d * 101) % 97) / 970.0f)
@@ -337,7 +304,7 @@ class SimilaritySpec extends SparkSpec {
       assert(before.values.exists(_.size > maxFiles) &&
         before.values.exists(_.size <= maxFiles),
         s"fixture must exercise both branches at threshold $maxFiles: $before")
-      val n = Similarity.compactIvfIndexInt(spark, dir, maxFilesPerList = maxFiles)
+      val n = Similarity.ivfIndex(dir).compact(spark, maxFilesPerPartition = maxFiles)
       val after = filesPerList(dir)
       assert(n === before.values.count(_.size > maxFiles))
       before.foreach { case (list, fs) =>
@@ -358,7 +325,7 @@ class SimilaritySpec extends SparkSpec {
         .as[(Long, Int, Long, Long, Long)].collect().toSet
       assert(serveAfter === serveBefore)
       // idempotent: a second compaction at the same threshold is a no-op
-      assert(Similarity.compactIvfIndexInt(spark, dir, maxFilesPerList = maxFiles) === 0)
+      assert(Similarity.ivfIndex(dir).compact(spark, maxFilesPerPartition = maxFiles) === 0)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }

@@ -172,8 +172,7 @@ class TextOpsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("postings_idx").toString
     try {
       TextOps.writePostingsIndex(docs, "text", "doc_id", dir, nBuckets = 16)
-      val fromIndex = TextOps.phraseFromIndex(spark, dir,
-        Seq("hash", "join"), nBuckets = 16)
+      val fromIndex = TextOps.phraseFromIndex(spark, dir, Seq("hash", "join"))
       val inline = TextOps.phraseSearch(docs, "text", "doc_id", Seq("hash", "join"))
       assert(fromIndex.as[(Long, Long)].collect().toSet ===
         inline.as[(Long, Long)].collect().toSet)
@@ -181,6 +180,33 @@ class TextOpsSpec extends SparkSpec {
       val plan = fromIndex.queryExecution.executedPlan.toString
       assert(plan.contains("PartitionFilters: [") && plan.contains("bucket"),
         s"expected bucket-pruned postings scan, got:\n$plan")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("postings index: a probe takes the bucket count the index recorded, " +
+    "not a default") {
+    val docs = Seq(
+      (1L, "alpha beta gamma delta alpha beta"),
+      (2L, "beta gamma delta epsilon"),
+      (3L, "gamma delta alpha beta gamma delta"),
+      (4L, "nothing relevant here")
+    ).toDF("doc_id", "text")
+    val phrase = Seq("alpha", "beta", "gamma", "delta")
+    // witness: some term's bucket under the old default count (64) lies
+    // outside a 16-bucket index, so a probe under that count misses it
+    val under64 = phrase.toDF("w")
+      .select(pmod(xxhash64($"w"), lit(64)).as("b")).as[Long].collect()
+    assert(under64.exists(_ >= 16), s"fixture has no witness term: $under64")
+    val dir = java.nio.file.Files.createTempDirectory("postings_idx16").toString
+    try {
+      TextOps.writePostingsIndex(docs, "text", "doc_id", dir, nBuckets = 16)
+      val inline = TextOps.phraseSearch(docs, "text", "doc_id", phrase)
+        .as[(Long, Long)].collect().toSet
+      assert(inline === Set((1L, 1L), (3L, 1L)))
+      assert(TextOps.phraseFromIndex(spark, dir, phrase).as[(Long, Long)]
+        .collect().toSet === inline)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }

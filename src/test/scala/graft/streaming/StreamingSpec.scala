@@ -1082,34 +1082,6 @@ class StreamingSpec extends SparkSpec {
     assert(pruned.count() === 6) // 3 seed + 2 update + 1 delete
   }
 
-  test("compactStore: one file per leaf partition, rows and layout preserved") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_compact").toString
-    val ev = CanalJson.events(CanalJson.fixtureRaw(spark))
-      .withColumn("event_date", to_date($"timestamp"))
-      .select($"table", $"event_date", $"op", $"offset", $"pos")
-    // two appends = at least two files per touched leaf (the micro-batch
-    // accumulation pattern a streaming sink produces)
-    ev.write.partitionBy("table", "event_date").mode("append").parquet(s"$tmp/store")
-    ev.withColumn("offset", $"offset" + 100L)
-      .write.partitionBy("table", "event_date").mode("append").parquet(s"$tmp/store")
-    CdcPipeline.compactStore(spark, s"$tmp/store", s"$tmp/compact",
-      Seq("table", "event_date"), saltCol = "offset")
-    val before = spark.read.parquet(s"$tmp/store")
-    val after = spark.read.parquet(s"$tmp/compact")
-    assert(after.count() === before.count())
-    assert(
-      after.groupBy($"table", $"op").count().as[(String, String, Long)].collect().toSet ===
-      before.groupBy($"table", $"op").count().as[(String, String, Long)].collect().toSet)
-    def leafFileCounts(root: String): Seq[Int] =
-      new java.io.File(root).listFiles().filter(_.isDirectory).toSeq.flatMap(
-        _.listFiles().filter(_.isDirectory).toSeq.map(
-          _.listFiles().count(f => f.getName.endsWith(".parquet"))))
-    assert(leafFileCounts(s"$tmp/store").exists(_ >= 2), "fixture must start fragmented")
-    val compacted = leafFileCounts(s"$tmp/compact")
-    assert(compacted.nonEmpty && compacted.forall(_ === 1),
-      s"expected exactly 1 file per leaf, got $compacted")
-  }
-
   test("expireStorePartitions: drops only pre-cutoff days, data scan untouched") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_expire").toString
     val ev = CanalJson.events(CanalJson.fixtureRaw(spark))
@@ -1673,10 +1645,10 @@ class StreamingSpec extends SparkSpec {
       rows(full.kept, "doc_id", "lang", "split", "n_words"))
     assert(rows(state.census, "lang", "split", "n_docs", "total_words") ===
       rows(full.census, "lang", "split", "n_docs", "total_words"))
-    assert(rows(state.shingleIdx, "id", "shingle") ===
-      rows(full.shingleIdx, "id", "shingle"))
-    assert(rows(state.bandIdx, "id", "band", "band_key") ===
-      rows(full.bandIdx, "id", "band", "band_key"))
+    assert(rows(state.shingleIdx.rows, "id", "shingle") ===
+      rows(full.shingleIdx.rows, "id", "shingle"))
+    assert(rows(state.bandIdx.rows, "id", "band", "band_key") ===
+      rows(full.bandIdx.rows, "id", "band", "band_key"))
     // and the chained census equals the batch pipeline entry
     val batchCensus = graft.SparkEntry.queries("x10_pipeline")(spark, dir)
       .as[(String, String, Long, Long)].collect().toSet
@@ -1689,7 +1661,7 @@ class StreamingSpec extends SparkSpec {
     "compaction bounds the file counts, routing matches the frame-form " +
     "replay, and the final index equals a rebuild") {
     // the exact-dedup twin of the streaming vector-ingest protocol: the
-    // nightly classify -> appendDigestIndex -> compactDigestIndex loop
+    // nightly classify -> appendDigestIndex -> digestIndex compact loop
     // driven as foreachBatch rounds against the sha-bucketed index
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.DataFrame
@@ -1715,18 +1687,18 @@ class StreamingSpec extends SparkSpec {
             // the documented startup discipline: every night opens with the
             // crash-recovery sweep, a no-op (0 repaired, no staging
             // residue) whenever the previous night's compaction committed
-            assert(Dedup.repairDigestIndex(spark, idxDir) === 0)
+            assert(Dedup.digestIndex(idxDir).repair(spark) === 0)
             val b = batch.localCheckpoint()
             val c = Dedup.exactIncrementalBucketed(
-              spark.read.parquet(idxDir), b, "text", "doc_id")
+              Dedup.digestIndex(idxDir).read(spark), b, "text", "doc_id")
               .localCheckpoint()
             routed ++= c.select($"doc_id", $"action")
               .as[(Long, String)].collect()
             Dedup.appendDigestIndex(
               b.join(c.filter($"action" === "keep").select($"doc_id"),
                 Seq("doc_id")), "text", idxDir)
-            Dedup.compactDigestIndex(spark, idxDir,
-              maxFilesPerBucket = maxFiles)
+            Dedup.digestIndex(idxDir).compact(spark,
+              maxFilesPerPartition = maxFiles)
             ()
           }
           ()
@@ -1776,7 +1748,7 @@ class StreamingSpec extends SparkSpec {
     "index through a REAL foreachBatch, per-batch compaction bounds the " +
     "file counts, and the final serve equals a full rebuild") {
     // the vector-side twin of the x10 incremental-ingest protocol: the
-    // nightly appendIvfIndexInt + compactIvfIndexInt maintenance loop
+    // nightly appendIvfIndexInt + ivfIndex compact maintenance loop
     // driven as foreachBatch rounds against fixed centroids
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.DataFrame
@@ -1800,8 +1772,8 @@ class StreamingSpec extends SparkSpec {
           if (!batch.isEmpty) {
             val b = batch.localCheckpoint()
             Similarity.appendIvfIndexInt(spark, b, cents, idxDir)
-            Similarity.compactIvfIndexInt(spark, idxDir,
-              maxFilesPerList = maxFiles)
+            Similarity.ivfIndex(idxDir).compact(spark,
+              maxFilesPerPartition = maxFiles)
             ()
           }
           ()
