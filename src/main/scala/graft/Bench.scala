@@ -203,7 +203,7 @@ object Bench {
     // noop sink) before the first measured query: a cold JVM otherwise bills
     // ~3-4 s of one-time class loading to whichever query runs first — which
     // in forked mode is every fork's first query.
-    try spark.read.parquet(s"$sfDir/nation.parquet")
+    try graft.tables.Tables.nation(spark, sfDir)
       .groupBy("n_regionkey").count()
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }

@@ -16,8 +16,13 @@ import scala.collection.mutable.ArrayBuffer
   * so exchange reuse cannot share the work. Do not materialize a frame that
   * is cheaper to recompute than to serialize through the block manager.
   *
-  * [[once]] is lazy: the blocks fill inside the first consumer's job, so it
-  * adds no job barrier. [[eager]] runs one job at the call. `label` names
+  * [[once]] defers only the frame's final stage: its blocks fill inside the
+  * first consumer's job. Under adaptive execution, which `EngineSession`
+  * turns on, the call still runs every shuffle stage of the frame (the
+  * checkpoint's RDD is taken from the adaptive plan, which executes its
+  * query stages to build it), so a frame with an exchange costs its
+  * shuffle jobs at the call; only a frame with no exchange adds no job
+  * barrier. [[eager]] also runs the final stage at the call. `label` names
   * what the materialized frame feeds.
   *
   * Inside a [[recording]] scope each call records `(label, the frame's

@@ -1053,7 +1053,7 @@ object CdcQueries {
     val path = java.nio.file.Files.createTempDirectory("graft-store-").toString
     deleteOnExit(path)
     store.write.mode("overwrite").partitionBy("tbl", "day").parquet(path)
-    s.read.parquet(path)
+    s.read.schema(store.schema).parquet(path)
       .filter($"tbl" === "orders" && $"day" === lit("2024-01-05").cast("date"))
       .select($"id", $"status", $"es_ms")
       .orderBy($"id")

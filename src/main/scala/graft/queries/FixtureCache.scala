@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.tables.{Bucketed, BucketedStore}
+import graft.tables.{Bucketed, BucketedStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Run-level derived-data cache shared by the query modules: persist a
@@ -16,7 +16,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `version` MUST be bumped whenever the generator's output changes — the
   * cache outlives the JVM by design, so a stale entry would silently serve
   * the previous artifact. The key ALSO folds in a fingerprint of the
-  * source data directory (per-file name/length/mtime): regenerated
+  * source data directory ([[Tables.fingerprint]]): regenerated
   * testdata at an unchanged path (new seed, new scale) invalidates the
   * cache without a code change — the version-bump discipline only covers
   * generator changes (round-8 ADVICE). Writers land in a pid-suffixed temp
@@ -47,7 +47,7 @@ private[graft] object FixtureCache {
   def cached(s: SparkSession, dir: String, name: String,
              version: String)(gen: => DataFrame): DataFrame =
     cachedImpl(dir, name, version)(gen)(gen.write.mode("overwrite").parquet(_))(
-      s.read.parquet(_))
+      Tables.parquet(s, _))
 
   /** [[cached]] for a fixture that is itself a bucketed store (the LSH
     * band index, the shingle artifact): `gen`'s rows land as the store
@@ -65,7 +65,7 @@ private[graft] object FixtureCache {
   private[graft] def entryDir(dir: String, name: String, version: String): java.io.File = {
     val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
     val root = new java.io.File(System.getProperty("java.io.tmpdir"), "graft-fixture-cache")
-    new java.io.File(root, s"$name-$version-$safe-${dataFingerprint(dir)}")
+    new java.io.File(root, s"$name-$version-$safe-${Tables.fingerprint(dir)}")
   }
 
   /** `write` lands the fixture in a fresh directory and `read` serves it
@@ -95,29 +95,6 @@ private[graft] object FixtureCache {
       }
       read(src.getPath)
     }
-
-  /** Cheap content fingerprint of a testdata dir: fold every file's
-    * (relative name, length, mtime) into one hash — a driver-side listing,
-    * no data read. Collision across regenerations would need identical
-    * byte counts AND mtimes, which a rewrite can't produce. */
-  def dataFingerprint(dir: String): String = {
-    val base = java.nio.file.Paths.get(dir)
-    var h = 1125899906842597L // FNV-ish seeded fold, order-independent (sum)
-    if (java.nio.file.Files.isDirectory(base)) {
-      val st = java.nio.file.Files.walk(base)
-      try {
-        st.filter(java.nio.file.Files.isRegularFile(_)).forEach { p =>
-          val rel = base.relativize(p).toString
-          var fh = 0L
-          rel.foreach(c => fh = fh * 31 + c)
-          fh = fh * 31 + java.nio.file.Files.size(p)
-          fh = fh * 31 + java.nio.file.Files.getLastModifiedTime(p).toMillis
-          h += fh // commutative: directory-walk order can't change the key
-        }
-      } finally st.close()
-    }
-    java.lang.Long.toHexString(h)
-  }
 
   private def deleteRecursively(f: java.io.File): Unit = {
     val kids = f.listFiles()

@@ -26,7 +26,7 @@ object Snapshot {
   def export(state: DataFrame, snapDir: String,
              meta: Map[String, String] = Map.empty): Unit = {
     state.write.mode("overwrite").parquet(s"$snapDir/data")
-    val rows = state.sparkSession.read.parquet(s"$snapDir/data").count()
+    val rows = state.sparkSession.read.schema(state.schema).parquet(s"$snapDir/data").count()
     val props = new Properties()
     meta.foreach { case (k, v) => props.setProperty(k, v) }
     props.setProperty("row_count", rows.toString)
@@ -39,7 +39,7 @@ object Snapshot {
   /** Restore the snapshot data. Fails loudly if the manifest's recorded row
     * count doesn't match what was read back (torn/partial snapshot). */
   def restore(spark: SparkSession, snapDir: String): DataFrame = {
-    val df = spark.read.parquet(s"$snapDir/data")
+    val df = graft.tables.Tables.parquet(spark, s"$snapDir/data")
     val expected = manifest(snapDir).get("row_count").map(_.toLong)
     expected.foreach { n =>
       val actual = df.count()

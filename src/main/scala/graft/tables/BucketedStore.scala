@@ -74,7 +74,7 @@ final case class BucketedStore(dir: String, partCol: String, key: Int => Column)
     * count it recorded) when there is none. */
   def readOr(spark: SparkSession)(newStore: => Int): Bucketed = {
     val n = BucketMeta.bucketCount(spark, dir, partCol)(newStore)
-    Bucketed(this, spark.read.parquet(dir), n)
+    Bucketed(this, Tables.parquet(spark, dir), n)
   }
 
   private def noStore: Nothing = throw new IllegalStateException(
@@ -149,7 +149,7 @@ final case class BucketedStore(dir: String, partCol: String, key: Int => Column)
     if (over.isEmpty) return 0
     val staging = new Path(dir + s"$StagingInfix${ProcessHandle.current().pid()}")
     // typed literals keep the filter a static partition filter
-    spark.read.parquet(dir)
+    Tables.parquet(spark, dir)
       .filter(col(partCol).isin(over.map(_.toInt).toSeq: _*))
       .repartition(col(partCol))
       .write.mode("overwrite").partitionBy(partCol).parquet(staging.toString)

@@ -115,6 +115,19 @@ class RegistrationSpec extends SparkSpec {
       "CdcQueries.scala: \"tbl\", \"day\""))          // cdc_store_pruned
   }
 
+  test("main source reads parquet without a schema only through graft.tables") {
+    // A schema-less read runs a footer-inference job per query; Tables.parquet
+    // infers a path's schema once. Every other read passes the schema it knows.
+    val reader = ("\\.read((?:\\s*\\.\\w+\\((?:[^()]|\\([^()]*\\))*\\))*)" +
+      "\\s*\\.parquet\\(([^)]*)\\)").r
+    val tables = java.nio.file.Paths.get("graft", "tables")
+    val raw = mainSources.filterNot(_._1.getParent.endsWith(tables)).flatMap {
+      case (f, txt) => reader.findAllMatchIn(txt).filterNot(_.group(1).contains(".schema("))
+        .map(m => s"${f.getFileName}: ${m.group(2)}")
+    }
+    assert(raw.toSet === Set.empty[String])
+  }
+
   test("main source reads exactly the ten SPARK_GRAFT environment names") {
     // Every env knob is a second way to run the bench or the fixtures. Bench
     // reads the driver's inputs plus its parent-to-child FORKED/SINGLE_RUN
