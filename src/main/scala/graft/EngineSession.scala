@@ -17,6 +17,12 @@ import org.apache.spark.sql.SparkSession
   *     triples the JSON parse work per message (see [[graft.cdc.CanalJson]]
   *     .flatten). The filter's only benefit is skipping empty arrays, which
   *     explode's own semantics already provide.
+  *   - `spark.sql.legacy.parquet.nanosAsLong` on: a parquet
+  *     TIMESTAMP(NANOS) column reads as its raw long instead of failing
+  *     ([[graft.tables.Tables.events]] converts it). Set once here, not by
+  *     the read, so a session's parquet settings — and with them
+  *     [[graft.tables.Tables.parquet]]'s memo stamp — never depend on
+  *     whether an events query has run yet;
   *   - the local file system is [[SpawnFreeLocalFs]]'s: without libhadoop,
   *     Hadoop's forks `chmod` per created file or dir and `readlink` per
   *     rename, 2627 processes (125 per micro-batch, 77 of them dedup
@@ -34,6 +40,7 @@ object EngineSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.optimizer.excludedRules", excludedRules)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.hadoop.fs.file.impl", classOf[SpawnFreeLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[SpawnFreeLocalFs].getName)
       // graft's Catalyst surface: native SQL functions + the top-k

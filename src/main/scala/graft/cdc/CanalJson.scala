@@ -119,7 +119,7 @@ object CanalJson {
           .otherwise(lit(null)).as("old_data"),
         col("parsed.sql").as("sql"),
         // the envelope's own key declaration (canal-json pkNames) — what
-        // CdcApply.materializeEnvelopeKeyed keys on, incl. composite keys
+        // CdcApply.envelopePk keys every row on, incl. composite keys
         col("parsed.pkNames").as("pk_names"),
         col("partition"), col("offset"),
         // row index within the message: with (partition, offset) it is the

@@ -10,13 +10,17 @@ import org.apache.spark.sql.expressions.Window
   * case).
   *
   * Semantics (W1-W7):
-  *   - latest-image-wins per primary key, ordered by commit time `es` then
-  *     kafka offset (out-of-order safety within a key);
+  *   - one key, [[envelopePk]]: the payload cells the envelope's `pkNames`
+  *     declares (composite keys included), else the `id` cell;
+  *   - latest-image-wins per key ([[latestByPk]], shared with the streaming
+  *     sink), ordered by commit time `es` then kafka offset (out-of-order
+  *     safety within a key);
   *   - DELETE is a tombstone: the key disappears from materialized state;
-  *   - idempotent under at-least-once replay (duplicate (partition, offset)
-  *     rows collapse before ranking), matching the reference's autoCommit-5s
-  *     duplicate window (index.js:351-352) — but we *deduplicate*, the
-  *     reference does not.
+  *   - idempotent under at-least-once replay: the rank keeps one of a
+  *     redelivery's byte-identical rows, and the delta operators collapse
+  *     a redelivery at a new coordinate to its logical identity. The
+  *     reference's autoCommit-5s duplicate window (index.js:351-352)
+  *     deduplicates nothing.
   *
   * Scale posture: one shuffle on (database, table, pk); `row_number` over
   * that partitioning is the standard max-by-key pattern AQE handles well.
@@ -56,39 +60,31 @@ object CdcApply {
       .select(events.columns.map(col).toSeq: _*)
   }
 
-  /** Materialize latest state per key from a flattened event DataFrame
-    * (output of [[CanalJson.events]]): keep the newest image per
-    * (database, table, pk), drop tombstoned keys. `pkCol` is the key column
-    * inside the `data` map (canal-json `pkNames`, single-column keys in the
-    * reference schema). */
-  def materialize(events: DataFrame, pkCol: String = "id"): DataFrame =
-    latestByPk(dedupDelivery(events)
-      .withColumn("pk", element_at(col("data"), pkCol)))
-
-  /** W2'' — materialization keyed by the ENVELOPE's own key declaration
-    * (canal-json `pkNames`): the key value is the tuple of named payload
-    * cells, null-safe-joined with `\u0001` (payload cells are canal
-    * string-typed scalars; the separator cannot occur in key cells), so
-    * COMPOSITE primary keys — (order_id, line_no)-style, which the
-    * single-`pkCol` form cannot express — rank correctly. Envelopes
-    * without `pkNames` fall back to the reference schema's universal `id`.
-    * Same one-shuffle ranking plan as [[materialize]]; the concat key is a
-    * per-row projection, free at any scale. */
+  /** The batch apply: latest state per key from a flattened event frame
+    * (output of [[CanalJson.events]] or [[DebeziumJson.events]]) — the
+    * newest image per (database, table, [[envelopePk]]) survives unless
+    * tombstoned. The streaming sink's rule on a whole log: same key, same
+    * [[latestByPk]] rank, and likewise no delivery dedup in front of it
+    * (a redelivered coordinate is a byte-identical row, which the rank
+    * already collapses). */
   def materializeEnvelopeKeyed(events: DataFrame): DataFrame =
-    latestByPk(dedupDelivery(events).withColumn("pk", envelopePk))
+    latestByPk(events.withColumn("pk", envelopePk))
 
-  /** The envelope-declared key VALUE ([[materializeEnvelopeKeyed]]'s key,
-    * also the streaming sink's bucket-hash input): tuple of `pkNames`
-    * payload cells, `id` fallback. Equals `element_at(data, "id")` on every
-    * single-`id` feed — the CdcApplyProps equivalence property. */
+  /** The CDC key VALUE — the only one, for every operator here and the
+    * streaming sink: the `pkNames` payload cells null-safe-joined with
+    * `\u0001` (payload cells are canal string-typed scalars; the separator
+    * cannot occur in key cells), so COMPOSITE keys — (order_id, line_no)
+    * style — key correctly. Envelopes without `pkNames` fall back to the
+    * reference schema's universal `id` cell, so on every single-`id` feed
+    * this equals `element_at(data, "id")`. */
   def envelopePk: Column =
     when(col("pk_names").isNotNull && size(col("pk_names")) > 0,
       concat_ws("\u0001",
         transform(col("pk_names"), n => element_at(col("data"), n))))
       .otherwise(element_at(col("data"), "id"))
 
-  /** Latest-image-wins ranking shared by the key-derivation fronts and the
-    * streaming sink: newest (timestamp, offset) per (database, table, pk)
+  /** Latest-image-wins ranking shared by the batch apply and the streaming
+    * sink: newest (timestamp, offset) per (database, table, pk)
     * survives unless tombstoned. A frame already hash-partitioned on
     * (database, table, pk) ranks without another exchange. No delivery
     * dedup here: byte-identical rows are interchangeable under
@@ -105,11 +101,11 @@ object CdcApply {
   /** Temporal (as-of) materialization: the table state as it stood at
     * `asOfMs` (epoch ms, inclusive) — the audit-log read the event store
     * exists for ("what did this row look like before the incident").
-    * Identical plan shape to [[materialize]]; the time predicate is pushed
-    * below the ranking shuffle, so at scale it prunes event-store partitions
-    * before any exchange. */
-  def stateAsOf(events: DataFrame, asOfMs: Long, pkCol: String = "id"): DataFrame =
-    materialize(events.filter(unix_millis(col("timestamp")) <= asOfMs), pkCol)
+    * Identical plan shape to [[materializeEnvelopeKeyed]]; the time
+    * predicate is pushed below the ranking shuffle, so at scale it prunes
+    * event-store partitions before any exchange. */
+  def stateAsOf(events: DataFrame, asOfMs: Long): DataFrame =
+    materializeEnvelopeKeyed(events.filter(unix_millis(col("timestamp")) <= asOfMs))
 
   /** Incremental aggregate maintenance: keep a grouped COUNT correct under
     * INSERT/UPDATE/DELETE without ever rescanning materialized state — the
@@ -129,8 +125,7 @@ object CdcApply {
     * which is what canal-json's `es` (TiDB commit ts) guarantees. Scale:
     * one narrow shuffle on the group value over ±1 rows (map-side
     * combined); state size is |groups|, not |keys|. */
-  def maintainCounts(events: DataFrame, attr: String,
-                     pkCol: String = "id"): DataFrame = {
+  def maintainCounts(events: DataFrame, attr: String): DataFrame = {
     // project to scalars BEFORE the identity dedup: the exchange then
     // carries 7 narrow columns instead of the full data/old_data maps.
     // distinct() over the whole projection, not dropDuplicates on the
@@ -142,7 +137,7 @@ object CdcApply {
     // hash-aggregates with map-side partials (round-20 plan audit).
     val deduped = events.select(
         col("database"), col("table"), col("op"), col("timestamp"),
-        element_at(col("data"), pkCol).as("__pk"),
+        envelopePk.as("__pk"),
         element_at(col("data"), attr).as("__new"),
         element_at(col("old_data"), attr).as("__old"))
       .distinct()
@@ -175,8 +170,7 @@ object CdcApply {
     * existence rule as recompute: COUNT > 0 decides, so a group whose rows
     * all leave vanishes even if its SUM was already 0. Scale: one narrow
     * map-side-combined shuffle on the group value over ±rows; state is
-    * \|groups\|, not \|keys\|. Keyed by [[envelopePk]], so composite-pk
-    * feeds dedup on their declared key tuple.
+    * \|groups\|, not \|keys\|.
     *
     * Null-old UPDATE contract: an UPDATE whose `old` omits the measure
     * coalesces the old image to the new one, so +m_new and −m_old cancel —
@@ -219,6 +213,31 @@ object CdcApply {
       .select(col("g").as(groupCol), col("sum_m"), col("n_rows"))
   }
 
+  /** A batch's NET effect per key, shared by [[maintainJoinAgg]] and
+    * [[maintainMax]]: `(op, pk, valCols…)`, one row per touched key,
+    * tombstones included. Events collapse to LOGICAL identity (op, commit
+    * ms, key — the [[maintainCounts]] redelivery rule), then the latest
+    * (commit ms, offset) image per key survives. `pk` is [[envelopePk]] as
+    * bigint, the auxiliaries' join type; a composite key fails that cast
+    * (ANSI) instead of keying on null. The collapse groups identity +
+    * values with min(offset): the values are functions of the identity, so
+    * the groups are the identities, but the aggregate hashes and keeps a
+    * deterministic offset, where dropDuplicates' first() buffers forced a
+    * SortAggregate (round-20 plan audit). */
+  private def batchLatest(events: DataFrame, valCols: Map[String, Column]): DataFrame = {
+    val projected = events.select(
+      Seq(col("op"), col("offset"), unix_millis(col("timestamp")).as("es_ms"),
+        envelopePk.cast("bigint").as("pk")) ++
+        valCols.map { case (n, c) => c.as(n) }: _*)
+      .groupBy(Seq(col("op"), col("es_ms"), col("pk")) ++
+        valCols.keys.toSeq.sorted.map(col): _*)
+      .agg(min(col("offset")).as("offset"))
+    val w = Window.partitionBy(col("pk"))
+      .orderBy(col("es_ms").desc, col("offset").desc)
+    projected.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn", "offset", "es_ms")
+  }
+
   /** Incremental JOIN-view maintenance (W8', the two-table step up from
     * [[maintainCounts]]): keep
     * `V(attr) = (SUM(measure), COUNT(*)) over fact ⋈_{fact.fk = dim.pk} dim GROUP BY dim.attr`
@@ -235,8 +254,8 @@ object CdcApply {
     *     included) answers "how much mass moves when this dim key changes";
     *   - `dimSnap` (attr per dim pk) answers "which group was that mass in".
     *
-    * Delta rule per batch (events first collapse to logical identity, then
-    * to the latest image per pk — the batch's net effect):
+    * Delta rule per batch (events first collapse to the batch's net effect
+    * per pk, [[batchLatest]]):
     *   fact pk touched:  −(old measure) @ old fk, +(new measure) @ new fk
     *                     (handles measure change, fk move, delete, insert);
     *   affected fk:      view −= (old SUM, old COUNT) @ old attr,
@@ -266,31 +285,7 @@ object CdcApply {
   def maintainJoinAgg(view: DataFrame, measureByFk: DataFrame,
                       factSnap: DataFrame, dimSnap: DataFrame,
                       factEvents: DataFrame, dimEvents: DataFrame,
-                      fkCol: String, measureCol: String, attrCol: String,
-                      pkCol: String = "id"): DataFrame = {
-    // net effect of the batch per fact pk: logical-identity dedup (the
-    // maintainCounts redelivery rule), then latest image per pk
-    def batchLatest(events: DataFrame, valCols: Map[String, Column]): DataFrame = {
-      // logical-identity collapse as a groupBy over identity + values with
-      // min(offset), not dropDuplicates on the identity alone: the payload
-      // values are functions of the identity (redelivery ships the same
-      // image, possibly at a NEW coordinate), so the groups ARE the
-      // identities — but this shape hash-aggregates with a long buffer and
-      // keeps a DETERMINISTIC offset where dropDuplicates held the values
-      // in first() aggregates (string payloads force SortAggregate) and an
-      // arbitrary offset (round-20 plan audit)
-      val projected = events.select(
-        Seq(col("op"), col("offset"), unix_millis(col("timestamp")).as("es_ms"),
-          element_at(col("data"), pkCol).cast("bigint").as("pk")) ++
-          valCols.map { case (n, c) => c.as(n) }: _*)
-        .groupBy(Seq(col("op"), col("es_ms"), col("pk")) ++
-          valCols.keys.toSeq.sorted.map(col): _*)
-        .agg(min(col("offset")).as("offset"))
-      val w = Window.partitionBy(col("pk"))
-        .orderBy(col("es_ms").desc, col("offset").desc)
-      projected.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn", "offset", "es_ms")
-    }
+                      fkCol: String, measureCol: String, attrCol: String): DataFrame = {
     val fTouch = Materialize.once(batchLatest(factEvents, Map(
         "fk_new" -> element_at(col("data"), fkCol).cast("bigint"),
         "m_new" -> element_at(col("data"), measureCol).cast("bigint")))
@@ -361,18 +356,17 @@ object CdcApply {
     * change marks and the closing `lead`) share that partitioning, so
     * Catalyst plans a single exchange. Rows are projected to 7 narrow
     * columns before the shuffle — the data/old_data maps never move. */
-  def scd2(events: DataFrame, attr: String, pkCol: String = "id"): DataFrame =
-    scd2Timeline(scd2Project(events, attr, pkCol), attr)
+  def scd2(events: DataFrame, attr: String): DataFrame =
+    scd2Timeline(scd2Project(events, attr), attr)
 
   /** Project raw flattened events to the 7 narrow columns the SCD2 timeline
     * needs and collapse to logical identity — shared by [[scd2]] and
     * [[scd2Merge]]. */
-  private def scd2Project(events: DataFrame, attr: String,
-                          pkCol: String): DataFrame =
+  private def scd2Project(events: DataFrame, attr: String): DataFrame =
     events.select(
         col("database"), col("table"), col("op"), col("offset"),
         unix_millis(col("timestamp")).as("es_ms"),
-        element_at(col("data"), pkCol).as("pk"),
+        envelopePk.as("pk"),
         element_at(col("data"), attr).as("__v"))
       // identity collapse via groupBy(identity + __v) + min(offset): __v is
       // a function of the identity (redelivery ships the same image, even
@@ -425,15 +419,14 @@ object CdcApply {
     * merged output is indistinguishable from a full rebuild:
     * `scd2Merge(scd2(e ≤ T), e > T) == scd2(e)` — which is exactly what the
     * oracle certifies. */
-  def scd2Merge(history: DataFrame, events: DataFrame, attr: String,
-                pkCol: String = "id"): DataFrame = {
+  def scd2Merge(history: DataFrame, events: DataFrame, attr: String): DataFrame = {
     val closed = history.filter(col("is_current") === 0)
     val open = history.filter(col("is_current") === 1)
     val seed = open.select(
       col("database"), col("table"), lit("update").as("op"),
       lit(Long.MinValue).as("offset"), col("valid_from_ms").as("es_ms"),
       col("pk"), col(attr).as("__v"))
-    val delta = scd2Project(events, attr, pkCol)
+    val delta = scd2Project(events, attr)
     // version base: closed versions per key are 1..v0; the re-derived rows
     // continue at v0+1 (the seed, if still open, KEEPS its old number)
     val base = closed.groupBy(col("database"), col("table"), col("pk"))
@@ -457,26 +450,22 @@ object CdcApply {
     * Mechanism: snapshot rows keep the commit time and offset of the event
     * that produced them — the snapshot preserves provenance — with the
     * offset bumped by one, then union with the raw stream and run the same
-    * latest-image-wins [[materialize]]. A snapshot image is by construction
-    * the per-key MAXIMUM (commit time, offset) among the events it
-    * reflects, so every replayed pre-cutover event loses to it (at worst on
-    * the bumped offset), while post-cutover events win on commit time. A
-    * pre-cutover tombstone's key is absent from the snapshot AND loses on
-    * replay to its own DELETE, which [[materialize]] then filters. The
-    * snapshot's `partition` is set to −1 so its delivery coordinates can
-    * never collide with real kafka coordinates in the dedup.
+    * latest-image-wins [[materializeEnvelopeKeyed]]. A snapshot image is by
+    * construction the per-key MAXIMUM (commit time, offset) among the
+    * events it reflects, so every replayed pre-cutover event loses to it
+    * (at worst on the bumped offset), while post-cutover events win on
+    * commit time. A pre-cutover tombstone's key is absent from the snapshot
+    * AND loses on replay to its own DELETE, which the apply then filters.
     *
-    * Scale: the union is shuffle-free; the only exchange is materialize's
+    * Scale: the union is shuffle-free; the only exchange is the apply's
     * hash partition on (database, table, pk) — same cost as applying the
-    * stream alone. `snapshot` must be shaped like [[materialize]] output
-    * (the flattened event schema; its derived `pk` column is recomputed). */
-  def backfillMerge(snapshot: DataFrame, events: DataFrame,
-                    pkCol: String = "id"): DataFrame = {
-    val snap = snapshot.drop("pk")
-      .withColumn("partition", lit(-1))
+    * stream alone. `snapshot` must be shaped like
+    * [[materializeEnvelopeKeyed]] output (the flattened event schema; its
+    * derived `pk` column is recomputed). */
+  def backfillMerge(snapshot: DataFrame, events: DataFrame): DataFrame =
+    materializeEnvelopeKeyed(snapshot.drop("pk")
       .withColumn("offset", col("offset") + 1)
-    materialize(snap.unionByName(events), pkCol)
-  }
+      .unionByName(events))
 
   /** Incremental maintenance for a NON-invertible aggregate (W8'', the
     * hard case [[maintainCounts]] dodges): `MAX(measure) per group` cannot
@@ -499,23 +488,10 @@ object CdcApply {
     * @param events  flattened change events for the batch
     */
   def maintainMax(view: DataFrame, preSnap: DataFrame, events: DataFrame,
-                  groupCol: String, measureCol: String,
-                  pkCol: String = "id"): DataFrame = {
-    // net effect per touched pk: logical-identity dedup, then latest image
-    val w = Window.partitionBy(col("pk"))
-      .orderBy(col("es_ms").desc, col("offset").desc)
-    val net = Materialize.once(events.select(
-        col("op"), col("offset"), unix_millis(col("timestamp")).as("es_ms"),
-        element_at(col("data"), pkCol).cast("bigint").as("pk"),
-        element_at(col("data"), groupCol).as("g_new"),
-        element_at(col("data"), measureCol).cast("bigint").as("m_new"))
-      // identity collapse via groupBy(identity + values) + min(offset) —
-      // same row set (values are functions of the identity), deterministic
-      // offset, HashAggregate instead of first(g_new: string)'s
-      // SortAggregate (see scd2Project; round-20 plan audit)
-      .groupBy(col("op"), col("es_ms"), col("pk"), col("g_new"), col("m_new"))
-      .agg(min(col("offset")).as("offset"))
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1),
+                  groupCol: String, measureCol: String): DataFrame = {
+    val net = Materialize.once(batchLatest(events, Map(
+        "g_new" -> element_at(col("data"), groupCol),
+        "m_new" -> element_at(col("data"), measureCol).cast("bigint"))),
       "maintainMax touched set + post-snapshot + dirty groups")
     val touched = net.select(col("pk"))
     // post-batch snapshot: untouched keys pass through, touched keys take
@@ -555,14 +531,14 @@ object CdcApply {
     *
     * Scale: one shuffle on (database, table, pk); both window passes (the
     * running first-op and the closing rank) share that partitioning —
-    * exactly the [[materialize]] cost, but run once per compaction window
-    * to make every DOWNSTREAM replay |keys|-sized instead of |events|-
-    * sized. Replay equivalence `materialize(compactLog(e)) == materialize(e)`
-    * is property-certified in CdcApplySpec and oracle-certified by
+    * exactly the [[materializeEnvelopeKeyed]] cost, but run once per
+    * compaction window to make every DOWNSTREAM replay |keys|-sized instead
+    * of |events|-sized. Replay equivalence
+    * `materializeEnvelopeKeyed(compactLog(e)) == materializeEnvelopeKeyed(e)`
+    * is property-certified in CdcApplyProps and oracle-certified by
     * `cdc_log_compaction` (same DuckDB oracle as `cdc_wire_latest`). */
-  def compactLog(events: DataFrame, pkCol: String = "id"): DataFrame = {
-    val keyed = dedupDelivery(events)
-      .withColumn("pk", element_at(col("data"), pkCol))
+  def compactLog(events: DataFrame): DataFrame = {
+    val keyed = dedupDelivery(events).withColumn("pk", envelopePk)
     val w = Window.partitionBy(col("database"), col("table"), col("pk"))
       .orderBy(col("timestamp"), col("offset"))
     val wAll = Window.partitionBy(col("database"), col("table"), col("pk"))
@@ -591,7 +567,7 @@ object CdcApply {
       .filter(col("op") === "update" && col("old_data").isNotNull)
       .select(
         col("timestamp"), col("database"), col("table"),
-        element_at(col("data"), "id").as("pk"),
+        envelopePk.as("pk"),
         element_at(col("old_data"), attr).as(s"old_$attr"),
         element_at(col("data"), attr).as(s"new_$attr"))
       .filter(col(s"old_$attr").isNotNull)

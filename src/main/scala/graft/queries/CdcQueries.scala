@@ -63,7 +63,7 @@ object CdcQueries {
     * unknown-99 row's envelope time is the processing-time fallback. */
   def cdc_materialize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    CdcApply.materialize(CanalJson.events(CanalJson.fixtureRaw(s)))
+    CdcApply.materializeEnvelopeKeyed(CanalJson.events(CanalJson.fixtureRaw(s)))
       .select($"database", $"table", $"pk", $"op",
         to_json($"data").as("data_json"))
       .orderBy($"table", $"pk")
@@ -534,7 +534,7 @@ object CdcQueries {
   private def maxPreSnap(s: SparkSession, dir: String): DataFrame =
       cachedFixture(s, dir, "max-pre-snap", "v1") {
     import s.implicits._
-    CdcApply.materialize(joinFixtureEvents(s, dir)
+    CdcApply.materializeEnvelopeKeyed(joinFixtureEvents(s, dir)
         .filter(unix_millis($"timestamp") < joinFixtureCutover &&
           $"table" === "orders"))
       .select($"pk".cast("bigint").as("pk"),
@@ -549,7 +549,7 @@ object CdcQueries {
       cachedFixture(s, dir, "join-fact-snap", "v1") {
     import s.implicits._
     val es = unix_millis($"timestamp")
-    CdcApply.materialize(joinFixtureEvents(s, dir)
+    CdcApply.materializeEnvelopeKeyed(joinFixtureEvents(s, dir)
         .filter(es < joinFixtureCutover && $"table" === "orders"))
       .select($"pk".cast("bigint").as("pk"),
         element_at($"data", "product_id").cast("bigint").as("fk"),
@@ -560,7 +560,7 @@ object CdcQueries {
       cachedFixture(s, dir, "join-dim-snap", "v1") {
     import s.implicits._
     val es = unix_millis($"timestamp")
-    CdcApply.materialize(joinFixtureEvents(s, dir)
+    CdcApply.materializeEnvelopeKeyed(joinFixtureEvents(s, dir)
         .filter(es < joinFixtureCutover && $"table" === "products"))
       .select($"pk".cast("bigint").as("pk"),
         element_at($"data", "category").as("attr"))
@@ -689,7 +689,7 @@ object CdcQueries {
   }
 
   /** S2' — Debezium-JSON materialization: the SAME apply primitive
-    * ([[CdcApply.materialize]] — delivery dedup, latest-by-pk, tombstone
+    * ([[CdcApply.materializeEnvelopeKeyed]] — latest-by-pk, tombstone
     * drop) running unchanged on the other major open CDC envelope, which is
     * the whole point of normalizing wire formats at the source stage. The
     * `c`/`r` split, the before-image delete shape, the redelivered update,
@@ -697,7 +697,7 @@ object CdcQueries {
     * right for the surviving state to match the orders arithmetic. */
   def cdc_dbz_materialize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    CdcApply.materialize(DebeziumJson.events(debeziumOrderEvents(s, dir)))
+    CdcApply.materializeEnvelopeKeyed(DebeziumJson.events(debeziumOrderEvents(s, dir)))
       .select($"pk".cast("bigint").as("id"),
         element_at($"data", "status").as("status"),
         $"operation", $"op", unix_millis($"timestamp").as("es_ms"))
@@ -726,7 +726,7 @@ object CdcQueries {
     * to 7 lines, so any key-derivation bug that collapses to `order_id`
     * (or falls back to a missing `id` cell) changes the row count and
     * hash-mismatches. INSERT per line, UPDATE (qty doubled, REDELIVERED
-    * under its original coordinate — delivery dedup must hold for
+    * under its original coordinate — the redelivery must collapse for
     * composite-keyed feeds too) for lines ≥ 4, tombstone for line 7.
     * DuckDB derives the surviving state from the lineitem arithmetic
     * alone. */
@@ -789,7 +789,7 @@ object CdcQueries {
   }
 
   def cdc_wire_latest(s: SparkSession, dir: String): DataFrame =
-    wireState(CdcApply.materialize(wireOrderEvents(s, dir)))
+    wireState(CdcApply.materializeEnvelopeKeyed(wireOrderEvents(s, dir)))
 
   /** T8' — the STREAMING delivery dedup promoted to a driver census entry
     * ([[graft.streaming.CdcPipeline.dedupDelivery]] —
@@ -824,8 +824,8 @@ object CdcQueries {
     try {
       val q = CdcPipeline.dedupDelivery(CdcPipeline.events(raw), delay = "2 hours")
         // the envelope carries the raw `data` map, not a pk column — derive
-        // the key the same way the batch apply does (CdcApply pkCol idiom)
-        .select($"op", element_at($"data", "id").cast("bigint").as("id"),
+        // the key the same way the batch apply does (CdcApply.envelopePk)
+        .select($"op", CdcApply.envelopePk.cast("bigint").as("id"),
           unix_millis($"timestamp").as("es_ms"))
         .writeStream.format("memory").queryName(s"t8_$tag")
         .outputMode(OutputMode.Append()).start()
@@ -935,7 +935,7 @@ object CdcQueries {
     val evts = Materialize.eager(wireOrderEvents(s, dir),
       "snapshot diff before + after sides")
     val before = wireState(CdcApply.stateAsOf(evts, 1704067200000L + 15000L))
-    val after = wireState(CdcApply.materialize(evts))
+    val after = wireState(CdcApply.materializeEnvelopeKeyed(evts))
     Snapshot.diff(before, after, "id", Seq("status", "op"))
       .select($"id", $"change",
         coalesce($"before.status", lit("n/a")).as("status_before"),
@@ -1043,7 +1043,7 @@ object CdcQueries {
     * arithmetic alone. */
   def cdc_store_pruned(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val store = CdcApply.materialize(wireOrderEvents(s, dir))
+    val store = CdcApply.materializeEnvelopeKeyed(wireOrderEvents(s, dir))
       .select(lit("orders").as("tbl"),
         date_add(lit("2024-01-01").cast("date"),
           pmod($"pk".cast("bigint"), lit(10)).cast("int")).as("day"),
@@ -1068,7 +1068,7 @@ object CdcQueries {
     * the wrong image, wrong net op, or leaked a tombstone hash-mismatches. */
   def cdc_log_compaction(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    wireState(CdcApply.materialize(CdcApply.compactLog(
+    wireState(CdcApply.materializeEnvelopeKeyed(CdcApply.compactLog(
       Materialize.eager(wireOrderEvents(s, dir), "log compaction"))))
   }
 

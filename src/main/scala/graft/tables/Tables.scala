@@ -114,13 +114,13 @@ object Tables {
   /** events.ts has shipped as both parquet TIMESTAMP(NANOS) and
     * TIMESTAMP(MICROS) across testdata generations, so adapt to the file's
     * schema instead of assuming one era. Nanos: Spark's vectorized reader
-    * rejects the physical type, so read raw longs (legacy flag) and
-    * integer-divide down to microseconds — the same truncation DuckDB
-    * applies. Micros: pass through. Either way the post-load contract is a
-    * `timestamp_ntz` column named `ts`, which everything downstream builds
-    * on. */
+    * rejects the physical type, so read raw longs (the legacy
+    * `nanosAsLong` flag, which [[graft.EngineSession.builder]] sets for the
+    * whole session) and integer-divide down to microseconds — the same
+    * truncation DuckDB applies. Micros: pass through. Either way the
+    * post-load contract is a `timestamp_ntz` column named `ts`, which
+    * everything downstream builds on. */
   def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = table(s, dir, "events")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

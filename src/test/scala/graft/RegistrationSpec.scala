@@ -128,6 +128,23 @@ class RegistrationSpec extends SparkSpec {
     assert(raw.toSet === Set.empty[String])
   }
 
+  test("main source derives a CDC key only through CdcApply.envelopePk") {
+    // One key for every apply operator and the streaming sink. A `pkCol`
+    // knob, or a second read of the `id` cell in graft/cdc/, is a second key
+    // rule, and on a composite-key feed it keys every row on null.
+    val knobs = mainSources.collect {
+      case (f, txt) if "\\bpkCol\\b".r.findFirstIn(txt).nonEmpty => f.toString
+    }
+    assert(knobs.isEmpty, s"pkCol in main: ${knobs.sorted}")
+    val idCell = "element_at\\(\\s*(?:col\\(\"data\"\\)|\\$\"data\")\\s*,\\s*\"id\"\\s*\\)".r
+    val envelopePk = "(?s)def envelopePk\\b.*?\\n\\s*\\n".r
+    val cdc = java.nio.file.Paths.get("graft", "cdc")
+    val idReads = mainSources.filter(_._1.getParent.endsWith(cdc)).flatMap { case (f, txt) =>
+      idCell.findAllMatchIn(envelopePk.replaceAllIn(txt, "")).map(_ => f.getFileName.toString)
+    }
+    assert(idReads.isEmpty, s"id-cell key reads in graft/cdc/ outside envelopePk: $idReads")
+  }
+
   test("main source reads exactly the ten SPARK_GRAFT environment names") {
     // Every env knob is a second way to run the bench or the fixtures. Bench
     // reads the driver's inputs plus its parent-to-child FORKED/SINGLE_RUN

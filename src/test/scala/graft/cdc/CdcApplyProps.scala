@@ -3,6 +3,7 @@ package graft.cdc
 import java.sql.Timestamp
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
+import graft.cdc.CdcFrames.withPkNames
 
 /** Property tests (SURVEY.md §5.2): CDC materialization equals a naive
   * sequential replay for arbitrary event sequences, and is idempotent under
@@ -25,15 +26,17 @@ object CdcApplyProps extends Properties("CdcApply") {
     price <- Gen.choose(1, 999).map(c => s"$c.00")
   } yield Ev(table, pk, op, es, 0L, price)
 
-  /** Build a DataFrame in the CanalJson.events envelope shape. */
-  private def toEvents(evs: Seq[Ev]): org.apache.spark.sql.DataFrame = {
+  /** Build a DataFrame in the CanalJson.events envelope shape, declaring
+    * `pkNames` (none by default: the `id` fallback). */
+  private def toEvents(evs: Seq[Ev],
+                       pkNames: Seq[String] = Nil): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    evs.map { e =>
+    withPkNames(evs.map { e =>
       (new Timestamp(e.es * 1000), "testdb", e.table, e.op.toUpperCase, e.op,
         Map("id" -> e.pk, "price" -> e.price), Option.empty[Map[String, String]],
         Option.empty[String], 0, e.offset, 0)
     }.toDF("timestamp", "database", "table", "operation", "op",
-      "data", "old_data", "sql", "partition", "offset", "pos")
+      "data", "old_data", "sql", "partition", "offset", "pos"), pkNames)
   }
 
   /** Naive replay: last event per key by (es, offset) wins; delete removes. */
@@ -43,9 +46,10 @@ object CdcApplyProps extends Properties("CdcApply") {
       .collect { case (k, last) if last.op != "delete" => k -> (last.op, last.price) }
       .toMap
 
-  private def materialized(evs: Seq[Ev]): Map[(String, String), (String, String)] = {
+  private def materialized(evs: Seq[Ev],
+                           pkNames: Seq[String] = Nil): Map[(String, String), (String, String)] = {
     import org.apache.spark.sql.functions._
-    CdcApply.materialize(toEvents(evs))
+    CdcApply.materializeEnvelopeKeyed(toEvents(evs, pkNames))
       .select(col("table"), col("pk"), col("op"),
         element_at(col("data"), "price").as("price"))
       .collect()
@@ -59,23 +63,12 @@ object CdcApplyProps extends Properties("CdcApply") {
       materialized(evs) == naive(evs)
     }
 
-  property("envelope-keyed apply == single-key apply under pkNames=[id] AND under the id fallback") =
+  property("envelope-keyed apply == naive sequential replay under pkNames=[id] AND under the id fallback") =
     forAll(Gen.listOfN(25, genEv), Gen.oneOf(true, false)) { (evs0, declare) =>
-      import org.apache.spark.sql.functions._
       val evs = evs0.zipWithIndex.map { case (e, i) => e.copy(offset = i.toLong) }
-      // declared single-column key and the pkNames-less fallback must both
-      // land exactly on the pkCol form
-      val pkNames =
-        if (declare) array(lit("id"))
-        else lit(null).cast("array<string>")
-      val env = CdcApply.materializeEnvelopeKeyed(
-          toEvents(evs).withColumn("pk_names", pkNames))
-        .select(col("table"), col("pk"), col("op"),
-          element_at(col("data"), "price").as("price"))
-        .collect()
-        .map(r => (r.getString(0), r.getString(1)) -> (r.getString(2), r.getString(3)))
-        .toMap
-      env == materialized(evs)
+      // a declared single-column key and the pkNames-less fallback must
+      // both key on the id cell
+      materialized(evs, if (declare) Seq("id") else Nil) == naive(evs)
     }
 
   property("idempotent under at-least-once duplicate delivery") =
@@ -117,13 +110,13 @@ object CdcApplyProps extends Properties("CdcApply") {
   /** Events frame where updates carry their true old price image. */
   private def toEventsWithOld(c: Chain): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    c.events.map { e =>
+    withPkNames(c.events.map { e =>
       val old = c.oldImages.get(e.offset).map(p => Map("price" -> p))
       (new Timestamp(e.es * 1000), "testdb", e.table, e.op.toUpperCase, e.op,
         Map("id" -> e.pk, "price" -> e.price), old,
         Option.empty[String], 0, e.offset, 0)
     }.toDF("timestamp", "database", "table", "operation", "op",
-      "data", "old_data", "sql", "partition", "offset", "pos")
+      "data", "old_data", "sql", "partition", "offset", "pos"))
   }
 
   private def scd2Rows(df: org.apache.spark.sql.DataFrame): Set[(String, String, Long, String, Long, Long, Long)] = {
@@ -176,7 +169,7 @@ object CdcApplyProps extends Properties("CdcApply") {
         .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
         .toSet
       val snapshot = CdcApply.stateAsOf(df, cutMs)
-      rows(CdcApply.backfillMerge(snapshot, df)) == rows(CdcApply.materialize(df))
+      rows(CdcApply.backfillMerge(snapshot, df)) == rows(CdcApply.materializeEnvelopeKeyed(df))
     }
 
   property("W8 maintainCounts == recompute for any well-formed chain") =
@@ -213,7 +206,7 @@ object CdcApplyProps extends Properties("CdcApply") {
 
   private def stateOf(events: org.apache.spark.sql.DataFrame): Map[(String, String), String] = {
     import org.apache.spark.sql.functions._
-    CdcApply.materialize(events)
+    CdcApply.materializeEnvelopeKeyed(events)
       .select(col("table"), col("pk"),
         element_at(col("data"), "price").as("price"))
       .collect()
@@ -242,23 +235,23 @@ object CdcApplyProps extends Properties("CdcApply") {
   /** Interleave fact and dim intents on one strictly-increasing es axis. */
   private def twoTableFrames(facts: Seq[FactEv], dims: Seq[DimEv]): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     import spark.implicits._
-    val fe = facts.zipWithIndex.map { case (f, i) =>
+    val fe = withPkNames(facts.zipWithIndex.map { case (f, i) =>
       (new Timestamp((2 * i) * 1000L), "db", "orders", f.op, 2L * i,
         Map("id" -> f.pk.toString, "product_id" -> f.fk.toString,
           "quantity" -> f.qty.toString), 0, 0)
     }.toDF("timestamp", "database", "table", "op", "offset", "data",
-      "partition", "pos")
-    val de = dims.zipWithIndex.map { case (d, i) =>
+      "partition", "pos"))
+    val de = withPkNames(dims.zipWithIndex.map { case (d, i) =>
       (new Timestamp((2 * i + 1) * 1000L), "db", "products", d.op, 2L * i + 1,
         Map("id" -> d.pk.toString, "category" -> d.cat), 0, 0)
     }.toDF("timestamp", "database", "table", "op", "offset", "data",
-      "partition", "pos")
+      "partition", "pos"))
     (fe, de)
   }
 
   private def factSnapOf(ev: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    CdcApply.materialize(ev)
+    CdcApply.materializeEnvelopeKeyed(ev)
       .select(col("pk").cast("bigint").as("pk"),
         element_at(col("data"), "product_id").cast("bigint").as("fk"),
         element_at(col("data"), "quantity").cast("bigint").as("m"))
@@ -266,7 +259,7 @@ object CdcApplyProps extends Properties("CdcApply") {
 
   private def dimSnapOf(ev: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    CdcApply.materialize(ev)
+    CdcApply.materializeEnvelopeKeyed(ev)
       .select(col("pk").cast("bigint").as("pk"),
         element_at(col("data"), "category").as("attr"))
   }
@@ -333,14 +326,12 @@ object CdcApplyProps extends Properties("CdcApply") {
 
   private def toSumEvents(evs: Seq[SEv]): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.lit
-    evs.zipWithIndex.map { case (e, i) =>
+    withPkNames(evs.zipWithIndex.map { case (e, i) =>
       (new Timestamp(e.es * 1000), "testdb", "t", e.op.toUpperCase, e.op,
         Map("id" -> e.pk, "g" -> e.g, "m" -> e.m.toString),
         e.old, Option.empty[String], 0, i.toLong, 0)
     }.toDF("timestamp", "database", "table", "operation", "op",
-      "data", "old_data", "sql", "partition", "offset", "pos")
-      .withColumn("pk_names", lit(null).cast("array<string>"))
+      "data", "old_data", "sql", "partition", "offset", "pos"))
   }
 
   property("W8''' maintainSums == recompute from chain-final state, whole-log redelivered") =
@@ -364,7 +355,7 @@ object CdcApplyProps extends Properties("CdcApply") {
       val cutMs = cutS * 1000
       def snap(ev: org.apache.spark.sql.DataFrame) = {
         import org.apache.spark.sql.functions.{col, element_at}
-        CdcApply.materialize(ev)
+        CdcApply.materializeEnvelopeKeyed(ev)
           .select(col("pk").cast("bigint").as("pk"),
             element_at(col("data"), "product_id").as("g"),
             element_at(col("data"), "quantity").cast("bigint").as("m"))

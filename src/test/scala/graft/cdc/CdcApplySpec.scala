@@ -1,6 +1,7 @@
 package graft.cdc
 
 import graft.SparkSpec
+import graft.cdc.CdcFrames.withPkNames
 import org.apache.spark.sql.functions._
 
 /** CDC apply/materialization semantics (SURVEY.md §2.5 W1-W7): the
@@ -10,7 +11,7 @@ class CdcApplySpec extends SparkSpec {
   import spark.implicits._
 
   lazy val events = CanalJson.events(CanalJson.fixtureRaw(spark)).cache()
-  lazy val state = CdcApply.materialize(events).cache()
+  lazy val state = CdcApply.materializeEnvelopeKeyed(events).cache()
 
   test("W2 latest-image-wins: product 1 shows the updated price") {
     val p1 = state.filter($"table" === "products" && $"pk" === "1")
@@ -50,6 +51,54 @@ class CdcApplySpec extends SparkSpec {
     assert(u.toSeq === Seq("42"), "pkNames-less envelope must key on id")
   }
 
+  test("composite pkNames with no id cell: every operator keys per " +
+    "(order_id, line_no); the bigint-keyed maintainers fail loudly") {
+    import org.apache.spark.sql.DataFrame
+    // 3 keys inserted at ONE commit, two of them in one multi-row envelope:
+    // an operator that keys on the absent `id` cell sees one null key
+    val es = 1704067200000L
+    def line(o: Int, l: Int) =
+      s"""{"order_id":"$o","line_no":"$l","qty":"${10 * o + l}","status":"open"}"""
+    def envelope(rows: Seq[String], off: Long) = (s"""{"data":[${rows.mkString(",")}],""" +
+      s""""old":null,"type":"INSERT","table":"lines","database":"d","es":$es,""" +
+      s""""isDdl":false,"pkNames":["order_id","line_no"]}""", 0, off)
+    val ev = CanalJson.events(Seq(envelope(Seq(line(1, 1), line(1, 2)), 1L),
+      envelope(Seq(line(2, 1)), 2L)).toDF("value", "partition", "offset")).cache()
+    val keys = Seq("1\u00011", "1\u00012", "2\u00011")
+    def pks(df: DataFrame) = df.select($"pk").as[String].collect().toSeq.sorted
+    val perKey = Seq(
+      "materializeEnvelopeKeyed" -> CdcApply.materializeEnvelopeKeyed(ev),
+      "stateAsOf" -> CdcApply.stateAsOf(ev, es),
+      "compactLog" -> CdcApply.compactLog(ev),
+      "backfillMerge" -> CdcApply.backfillMerge(CdcApply.stateAsOf(ev, es), ev),
+      "scd2" -> CdcApply.scd2(ev, "status"))
+    perKey.foreach { case (op, df) =>
+      assert(pks(df) === keys, s"$op must return one row per key")
+    }
+    assert(CdcApply.maintainCounts(ev, "status").as[(String, Long)].collect().toSeq ===
+      Seq("open" -> 3L), "maintainCounts must count every key's insert")
+    val noRows = Seq.empty[(Long, Long, Long)].toDF("pk", "fk", "m")
+    val failing = Seq[(String, () => DataFrame)](
+      "maintainJoinAgg" -> (() => CdcApply.maintainJoinAgg(
+        Seq.empty[(String, Long, Long)].toDF("status", "sum_measure", "n_facts"),
+        Seq.empty[(Long, Long, Long)].toDF("fk", "sum_m", "n"), noRows,
+        Seq.empty[(Long, String)].toDF("pk", "attr"), ev, ev.limit(0),
+        "qty", "qty", "status")),
+      "maintainMax" -> (() => CdcApply.maintainMax(
+        Seq.empty[(String, Long)].toDF("status", "max_measure"),
+        noRows.withColumnRenamed("fk", "g").withColumn("g", $"g".cast("string")),
+        ev, "status", "qty")))
+    failing.foreach { case (op, run) =>
+      val e = intercept[Exception](run().collect())
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage))
+      assert(messages.exists(_.contains("CAST_INVALID_INPUT")),
+        s"$op must fail the bigint key cast, got $e")
+    }
+    ev.unpersist()
+    ()
+  }
+
   test("W8''' maintainSums: group-move UPDATE shifts mass, DELETE needs no " +
     "rescan, count-0 group vanishes") {
     // key 1: INSERT g=a,m=5 then UPDATE moves it to g=b with m=7 (old
@@ -80,7 +129,7 @@ class CdcApplySpec extends SparkSpec {
   test("idempotent under at-least-once duplicate delivery") {
     // fixture contains the same UPDATE twice (offsets 4-dup); replaying the
     // whole log twice must give identical state
-    val doubled = CdcApply.materialize(events.unionAll(events))
+    val doubled = CdcApply.materializeEnvelopeKeyed(events.unionAll(events))
     val a = state.select($"table", $"pk", to_json($"data").as("d")).orderBy("table", "pk")
       .as[(String, String, String)].collect().toSeq
     val b = doubled.select($"table", $"pk", to_json($"data").as("d")).orderBy("table", "pk")
@@ -93,7 +142,7 @@ class CdcApplySpec extends SparkSpec {
     // backfill/repartition can arrive in ANY order — materialize ranks by
     // (event time, offset), so arrival order must not matter. Scramble the
     // arrival order (hash sort + repartition) and require identical state.
-    val scrambled = CdcApply.materialize(
+    val scrambled = CdcApply.materializeEnvelopeKeyed(
       events.repartition(7).sortWithinPartitions(xxhash64($"offset", $"pos")))
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select($"table", $"pk", $"op", to_json($"data").as("d"))
@@ -116,7 +165,7 @@ class CdcApplySpec extends SparkSpec {
   }
 
   test("W9 scd2: change compression, tombstone close, post-delete re-open") {
-    // minimal flattened-event frame (scd2 touches only these 6 columns):
+    // minimal flattened-event frame (scd2 touches only these 7 columns):
     // insert a → no-change update (compressed) → update b → delete →
     // re-insert b, plus a redelivered copy of the b-update at a new offset
     val rows = Seq(
@@ -126,10 +175,10 @@ class CdcApplySpec extends SparkSpec {
       (3000L, "update", 99L, "b"), // redelivery at a new kafka offset
       (4000L, "delete", 40L, "b"),
       (5000L, "insert", 50L, "b")) // same value as before the delete
-    val e = rows.toDF("ms", "op", "offset", "v").select(
+    val e = withPkNames(rows.toDF("ms", "op", "offset", "v").select(
       timestamp_millis($"ms").as("timestamp"), lit("db").as("database"),
       lit("t").as("table"), $"op", $"offset",
-      map(lit("id"), lit("1"), lit("status"), $"v").as("data"))
+      map(lit("id"), lit("1"), lit("status"), $"v").as("data")))
     val out = CdcApply.scd2(e, "status")
       .select($"version", $"status", $"valid_from_ms", $"valid_to_ms",
         $"is_current")
@@ -148,10 +197,10 @@ class CdcApplySpec extends SparkSpec {
       (3000L, "update", 30L, "b"),
       (4000L, "delete", 40L, "b"),
       (5000L, "insert", 50L, "b"))
-    val e = rows.toDF("ms", "op", "offset", "v").select(
+    val e = withPkNames(rows.toDF("ms", "op", "offset", "v").select(
       timestamp_millis($"ms").as("timestamp"), lit("db").as("database"),
       lit("t").as("table"), $"op", $"offset",
-      map(lit("id"), lit("1"), lit("status"), $"v").as("data"))
+      map(lit("id"), lit("1"), lit("status"), $"v").as("data")))
     val full = CdcApply.scd2(e, "status")
       .orderBy("pk", "version")
       .as[(String, String, String, Long, String, Long, Long, Long)]
@@ -188,7 +237,7 @@ class CdcApplySpec extends SparkSpec {
     val orders = events.filter($"table" === "orders")
     val maintained = CdcApply.maintainCounts(orders, "status")
       .as[(String, Long)].collect().toMap
-    val recomputed = CdcApply.materialize(orders)
+    val recomputed = CdcApply.materializeEnvelopeKeyed(orders)
       .select(element_at($"data", "status")).as[String].collect()
       .groupBy(identity).view.mapValues(_.size.toLong).toMap
     assert(maintained === recomputed) // pending nets to 0; completed survives
@@ -210,13 +259,13 @@ class CdcApplySpec extends SparkSpec {
       (2200L, "insert", 22L, 4L, "c", 3L),
       (2500L, "update", 23L, 3L, "b", 1L),   // in-place decrease
       (2600L, "delete", 24L, 2L, "b", 9L))   // b's max dies → left with 1
-    val e = rows.toDF("ms", "op", "offset", "id", "g", "m").select(
+    val e = withPkNames(rows.toDF("ms", "op", "offset", "id", "g", "m").select(
       timestamp_millis($"ms").as("timestamp"), lit("db").as("database"),
       lit("t").as("table"), $"op", $"offset",
       map(lit("id"), $"id".cast("string"), lit("g"), $"g",
         lit("m"), $"m".cast("string")).as("data"),
-      lit(0).as("partition"), lit(0).as("pos"))
-    def snap(ev: DataFrame) = CdcApply.materialize(ev)
+      lit(0).as("partition"), lit(0).as("pos")))
+    def snap(ev: DataFrame) = CdcApply.materializeEnvelopeKeyed(ev)
       .select($"pk".cast("bigint").as("pk"),
         element_at($"data", "g").as("g"),
         element_at($"data", "m").cast("bigint").as("m"))
@@ -249,13 +298,13 @@ class CdcApplySpec extends SparkSpec {
       (2000L, "insert", 23L, "4", "e", None),
       (1000L, "delete", 14L, "5", "z", None),
       (1000L, "insert", 15L, "6", "q", None))
-    val e = rows.toDF("ms", "op", "offset", "id", "v", "old").select(
+    val e = withPkNames(rows.toDF("ms", "op", "offset", "id", "v", "old").select(
       timestamp_millis($"ms").as("timestamp"), lit("db").as("database"),
       lit("t").as("table"), $"op", $"offset",
       map(lit("id"), $"id", lit("val"), $"v").as("data"),
       when($"old".isNotNull, map(lit("val"), $"old"))
         .otherwise(lit(null).cast("map<string,string>")).as("old_data"),
-      lit(0).as("partition"), lit(0).as("pos"))
+      lit(0).as("partition"), lit(0).as("pos")))
     val dup = e.filter($"offset" === 15L).withColumn("offset", lit(95L))
     val c = CdcApply.compactLog(e.unionByName(dup))
       .select($"pk", $"op", element_at($"data", "val").as("v"),
@@ -271,11 +320,11 @@ class CdcApplySpec extends SparkSpec {
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select($"table", $"pk", to_json($"data").as("d"))
         .orderBy("table", "pk").as[(String, String, String)].collect().toSeq
-    assert(canon(CdcApply.materialize(CdcApply.compactLog(events))) ===
+    assert(canon(CdcApply.materializeEnvelopeKeyed(CdcApply.compactLog(events))) ===
       canon(state))
     // compaction is idempotent: compacting the compacted log is a no-op
     val once = CdcApply.compactLog(events)
-    assert(canon(CdcApply.materialize(CdcApply.compactLog(once))) === canon(state))
+    assert(canon(CdcApply.materializeEnvelopeKeyed(CdcApply.compactLog(once))) === canon(state))
   }
 
   test("W8' maintainJoinAgg: incremental == recompute at every cutover") {
@@ -298,23 +347,23 @@ class CdcApplySpec extends SparkSpec {
       (2600L, "delete", 53L, 2L, "b"),
       (2700L, "insert", 54L, 3L, "a"),
       (2800L, "insert", 55L, 2L, "c")) // resurrects dim 2 in a new group
-    val fe = factRows.toDF("ms", "op", "offset", "id", "pid", "qty").select(
+    val fe = withPkNames(factRows.toDF("ms", "op", "offset", "id", "pid", "qty").select(
       timestamp_millis($"ms").as("timestamp"), lit("db").as("database"),
       lit("orders").as("table"), $"op", $"offset",
       map(lit("id"), $"id".cast("string"), lit("product_id"), $"pid".cast("string"),
         lit("quantity"), $"qty".cast("string")).as("data"),
-      lit(0).as("partition"), lit(0).as("pos"))
-    val de = dimRows.toDF("ms", "op", "offset", "id", "cat").select(
+      lit(0).as("partition"), lit(0).as("pos")))
+    val de = withPkNames(dimRows.toDF("ms", "op", "offset", "id", "cat").select(
       timestamp_millis($"ms").as("timestamp"), lit("db").as("database"),
       lit("products").as("table"), $"op", $"offset",
       map(lit("id"), $"id".cast("string"), lit("category"), $"cat").as("data"),
-      lit(0).as("partition"), lit(0).as("pos"))
+      lit(0).as("partition"), lit(0).as("pos")))
 
-    def factSnap(e: DataFrame) = CdcApply.materialize(e)
+    def factSnap(e: DataFrame) = CdcApply.materializeEnvelopeKeyed(e)
       .select($"pk".cast("bigint").as("pk"),
         element_at($"data", "product_id").cast("bigint").as("fk"),
         element_at($"data", "quantity").cast("bigint").as("m"))
-    def dimSnap(e: DataFrame) = CdcApply.materialize(e)
+    def dimSnap(e: DataFrame) = CdcApply.materializeEnvelopeKeyed(e)
       .select($"pk".cast("bigint").as("pk"),
         element_at($"data", "category").as("attr"))
     def recompute(f: DataFrame, d: DataFrame) =

@@ -70,7 +70,7 @@ class DebeziumJsonSpec extends SparkSpec {
   }
 
   test("the apply primitive runs unchanged on the normalized feed") {
-    val state = CdcApply.materialize(events)
+    val state = CdcApply.materializeEnvelopeKeyed(events)
       .select(element_at($"data", "id"), element_at($"data", "status"))
       .as[(String, String)].collect().toSet
     // id 1 updated to done, id 2 tombstoned, id 3 inserted

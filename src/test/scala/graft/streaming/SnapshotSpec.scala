@@ -7,7 +7,7 @@ import graft.cdc.{CanalJson, CdcApply}
 class SnapshotSpec extends SparkSpec {
 
   test("export → restore round-trips state; manifest carries metadata") {
-    val state = CdcApply.materialize(CanalJson.events(CanalJson.fixtureRaw(spark)))
+    val state = CdcApply.materializeEnvelopeKeyed(CanalJson.events(CanalJson.fixtureRaw(spark)))
     val dir = java.nio.file.Files.createTempDirectory("graft_snap").toString
     Snapshot.export(state, dir, Map("source_offset" -> "9"))
     val back = Snapshot.restore(spark, dir)
@@ -34,7 +34,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("torn snapshot (manifest row-count mismatch) fails the restore loudly") {
-    val state = CdcApply.materialize(CanalJson.events(CanalJson.fixtureRaw(spark)))
+    val state = CdcApply.materializeEnvelopeKeyed(CanalJson.events(CanalJson.fixtureRaw(spark)))
     val dir = java.nio.file.Files.createTempDirectory("graft_snap_torn").toString
     Snapshot.export(state, dir)
     val props = new java.util.Properties()

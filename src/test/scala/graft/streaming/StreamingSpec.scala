@@ -224,15 +224,15 @@ class StreamingSpec extends SparkSpec {
       (2600L, "delete", 53L, "products", Map("id" -> "2")),
       (2700L, "insert", 54L, "products", Map("id" -> "3", "category" -> "a")),
       (2800L, "insert", 55L, "products", Map("id" -> "2", "category" -> "c")))
-    def toEvents(df: DataFrame): DataFrame = df.select(
+    def toEvents(df: DataFrame): DataFrame = graft.cdc.CdcFrames.withPkNames(df.select(
       timestamp_millis($"_1").as("timestamp"), lit("db").as("database"),
       $"_4".as("table"), $"_2".as("op"), $"_3".as("offset"), $"_5".as("data"),
-      lit(0).as("partition"), lit(0).as("pos"))
-    def factOf(e: DataFrame) = CdcApply.materialize(e.filter($"table" === "orders"))
+      lit(0).as("partition"), lit(0).as("pos")))
+    def factOf(e: DataFrame) = CdcApply.materializeEnvelopeKeyed(e.filter($"table" === "orders"))
       .select($"pk".cast("bigint").as("pk"),
         element_at($"data", "product_id").cast("bigint").as("fk"),
         element_at($"data", "quantity").cast("bigint").as("m"))
-    def dimOf(e: DataFrame) = CdcApply.materialize(e.filter($"table" === "products"))
+    def dimOf(e: DataFrame) = CdcApply.materializeEnvelopeKeyed(e.filter($"table" === "products"))
       .select($"pk".cast("bigint").as("pk"),
         element_at($"data", "category").as("attr"))
 

@@ -111,6 +111,28 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  test("Tables.events leaves the session's nanosAsLong setting as it finds it") {
+    // the flag is a session setting EngineSession makes; a read that set it
+    // would make every later parquet read's memo stamp depend on whether an
+    // events query had run
+    val dir = tmp("graft_tables_micros")
+    spark.range(2).select(col("id").as("event_id"),
+        timestamp_micros(lit(1704067200000001L) + col("id")).as("ts"))
+      .write.parquet(dir.resolve("events.parquet").toString)
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "false")
+      val events = Tables.events(spark, dir.toString)
+      assert(spark.conf.get(key) === "false")
+      assert(rows(events.select(col("ts").cast("string"))) ===
+        Seq("2024-01-01 00:00:00.000001", "2024-01-01 00:00:00.000002"))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
   test("a BucketedStore read has a raw read's schema and partition-column type") {
     val dir = tmp("graft_tables_store").resolve("store").toString
     val store = BucketedStore(dir, "bucket", n => pmod(xxhash64(col("k")), lit(n)).cast("int"))
