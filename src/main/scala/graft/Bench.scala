@@ -1,6 +1,7 @@
 package graft
 
 import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Driver bench contract: run every SparkEntry query on SPARK_GRAFT_SF_DIR,
   * print ONE JSON line with total + per-query seconds.
@@ -93,14 +94,17 @@ object Bench {
     * query that THROWS is carried with `failed = true` — its elapsed time is
     * a fail-fast artifact, not a measurement, so it is excluded from the
     * total and surfaced via `n_failed`. `prior` is attached by the parent
-    * (children never see priors). */
+    * (children never see priors). `compiles` counts the codegen
+    * compilations of the run `warm` adopted: 0 when every generated class
+    * the entry needs was already in the session's codegen cache. */
   private[graft] final case class Timing(name: String, cold: Double, warm: Double,
                                          failed: Boolean = false,
                                          runs: Seq[Double] = Nil,
                                          cacheHit: Option[Boolean] = None,
                                          prior: Option[Double] = None,
                                          tiebreak: Option[String] = None,
-                                         censusPos: Option[Int] = None)
+                                         censusPos: Option[Int] = None,
+                                         compiles: Option[Long] = None)
 
   /** The measurement policy for one entry. `run` executes the entry once and
     * returns (elapsed seconds, succeeded). Run 1 is always taken; a failing
@@ -207,10 +211,13 @@ object Bench {
       .groupBy("n_regionkey").count()
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
+    def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val results = names.map { name =>
       val fn = SparkEntry.queries(name)
       graft.queries.FixtureCache.clearReport()
+      val compiles = scala.collection.mutable.ArrayBuffer.empty[Long]
       val t = measure(name, singleRun) { () =>
+        val c0 = compiled
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
@@ -223,14 +230,16 @@ object Bench {
         // would GC-thrash (and warm-start) the next run.
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        ((System.nanoTime() - t0) / 1e9, ok)
+        val elapsed = (System.nanoTime() - t0) / 1e9
+        compiles += compiled - c0
+        (elapsed, ok)
       }
       val report = graft.queries.FixtureCache.lookupReport
       val hit = if (report.isEmpty) None else Some(report.values.forall(identity))
       if (!t.failed)
         System.err.println(f"[bench] $name%-24s ${t.warm}%9.3f s  (cold ${t.cold}%.3f s" +
           (if (singleRun) ", single-run mode)" else ")"))
-      t.copy(cacheHit = hit)
+      t.copy(cacheHit = hit, compiles = compiles.lift(t.runs.indexOf(t.runs.min)))
     }
     spark.stop()
     results
@@ -238,12 +247,13 @@ object Bench {
 
   /** Spawn one child JVM for a GROUP of queries; the child re-enters
     * [[main]] with SPARK_GRAFT_FORKED=1 and prints one JSON line whose
-    * section maps (`queries`/`cold`/`runs`/`cache_hit`/`tiebreak`) carry
-    * every query it measured — the parent reads the child's FULL stdout, so
-    * the driver's bounded-tail limit does not apply here (it only bounds the
-    * PARENT's final line). A query absent from the child's `queries` map
-    * (child crash, or the query threw) comes back as a failed Timing; the
-    * caller decides whether to retry it in a private fork. */
+    * section maps (`queries`/`cold`/`runs`/`cache_hit`/`compiles`/
+    * `tiebreak`) carry every query it measured — the parent reads the
+    * child's FULL stdout, so the driver's bounded-tail limit does not apply
+    * here (it only bounds the PARENT's final line). A query absent from the
+    * child's `queries` map (child crash, or the query threw) comes back as a
+    * failed Timing; the caller decides whether to retry it in a private
+    * fork. */
   private def forkGroup(group: Seq[String], singleRun: Boolean): Seq[Timing] = {
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
@@ -278,6 +288,7 @@ object Bench {
     val cacheMap: Map[String, Boolean] =
       "\"([A-Za-z0-9_]+)\":(true|false)".r.findAllMatchIn(section("cache_hit"))
         .map(m => m.group(1) -> m.group(2).toBoolean).toMap
+    val compilesMap = numMap("compiles")
     val tbMap: Map[String, String] =
       "\"([A-Za-z0-9_]+)\":\"([a-z0-9_.+]+)\"".r.findAllMatchIn(section("tiebreak"))
         .map(m => m.group(1) -> m.group(2)).toMap
@@ -286,7 +297,7 @@ object Bench {
         case Some(warm) =>
           val t = Timing(name, coldMap.getOrElse(name, warm), warm,
             runs = runsMap.getOrElse(name, Nil), cacheHit = cacheMap.get(name),
-            tiebreak = tbMap.get(name))
+            tiebreak = tbMap.get(name), compiles = compilesMap.get(name).map(_.toLong))
           System.err.println(
             f"[bench] $name%-24s ${t.warm}%9.3f s  (batch ${group.size}, wall ${wall}%.1f s)")
           t
@@ -409,10 +420,11 @@ object Bench {
       val tb = t.tiebreak.map(r => s""", "tiebreak": "$r"""").getOrElse("")
       val cp = t.censusPos.map(x => s""", "census_pos": $x""").getOrElse("")
       val st = if (stalled(t)) s""", "stall": true""" else ""
+      val cg = t.compiles.map(c => s""", "compiles": $c""").getOrElse("")
       if (t.failed)
         f"""  "${t.name}": {"failed": true, "elapsed": ${t.warm}%.3f, "runs": $runs}"""
       else
-        f"""  "${t.name}": {"cold": ${t.cold}%.3f, "warm": ${t.warm}%.3f, "runs": $runs$taken$tb$cp$st$cache$prior}"""
+        f"""  "${t.name}": {"cold": ${t.cold}%.3f, "warm": ${t.warm}%.3f, "runs": $runs$taken$tb$cp$st$cache$prior$cg}"""
     }
     val header = runStats.map(s =>
       f""" "wall_s": ${s.wallS}%.1f, "budget_s": ${s.budgetS}%.0f, "headroom_s": ${s.budgetS - s.wallS}%.1f, "n_isolated": ${s.nIsolated}, "n_batched": ${s.nBatched}, "n_census_shared": ${s.nCensusShared}, "n_single_run": $nSingleRun, "n_stalled": $nStalled,
@@ -420,7 +432,7 @@ object Bench {
     val json =
       f"""{"metric": "total", "value": $total%.3f, "unit": "sec",
          |$header "median_prior_ratio": ${ratioJson(medianPriorRatio(results))}, "hadoop_native": ${org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded},
-         | "methodology": "forked JVMs: the four census stream entries share one fork, the other stream entries and entries whose prior_warm exceeds 4 s get a private fork, the rest run in shared forks of 24 in descending prior_warm order; every entry runs 3 times in its fork, cold = run 1, warm = min of the runs (run_taken = its 1-based index); when the wall clock plus the projected cost of the remaining forks (x1.25, priors scaled by the running median_prior_ratio) would overrun budget_s, or the wall clock passes 90%% of it, the remaining forks run each entry once (tiebreak: single_run, counted in n_single_run); an entry missing from a batch fork's output is retried once in a private fork before it counts as failed; stall: true marks warm runs (2..n) spanning >5x and >2 s; prior_warm = the committed board's warm, median_prior_ratio = the median of warm / prior_warm; cache_hit = every FixtureCache lookup was served from the persisted parquet; census_pos = the member's position in the census fork; hadoop_native = libhadoop is loaded, a fact about the host only: EngineSession's local file system forks no chmod/readlink either way, so no timing here depends on it, while code on Hadoop's own local file system would fork per file where it is false; raw per-run times in runs",
+         | "methodology": "forked JVMs: the four census stream entries share one fork, the other stream entries and entries whose prior_warm exceeds 4 s get a private fork, the rest run in shared forks of 24 in descending prior_warm order; every entry runs 3 times in its fork, cold = run 1, warm = min of the runs (run_taken = its 1-based index); when the wall clock plus the projected cost of the remaining forks (x1.25, priors scaled by the running median_prior_ratio) would overrun budget_s, or the wall clock passes 90%% of it, the remaining forks run each entry once (tiebreak: single_run, counted in n_single_run); an entry missing from a batch fork's output is retried once in a private fork before it counts as failed; stall: true marks warm runs (2..n) spanning >5x and >2 s; prior_warm = the committed board's warm, median_prior_ratio = the median of warm / prior_warm; cache_hit = every FixtureCache lookup was served from the persisted parquet; compiles = codegen compilations (CodegenMetrics) in the run warm adopted, 0 when that run found every generated class in the codegen cache, which is the steady state a repeated entry reaches; census_pos = the member's position in the census fork; hadoop_native = libhadoop is loaded, a fact about the host only: EngineSession's local file system forks no chmod/readlink either way, so no timing here depends on it, while code on Hadoop's own local file system would fork per file where it is false; raw per-run times in runs",
          | "sf": "$sfDir",
          | "queries": {
          |${rows.mkString(",\n")}
@@ -518,8 +530,9 @@ object Bench {
     val warm = jsonMap(okQ.map(t => t.name -> t.warm))
     val cold = jsonMap(okQ.map(t => t.name -> t.cold))
     val nFailed = s""","n_failed":${failedQ.size}"""
-    // A child's line also carries the raw run times, cache hits and the
-    // single-run tag, which the parent extracts into the detail artifact.
+    // A child's line also carries the raw run times, cache hits, the
+    // adopted runs' compiles and the single-run tag, which the parent
+    // extracts into the detail artifact.
     val runsSection =
       if (isChild) {
         val runs = "," + "\"runs\":" + okQ.map(t =>
@@ -530,12 +543,14 @@ object Bench {
           case hits => "," + "\"cache_hit\":" + hits.map(t =>
             "\"" + t.name + "\":" + t.cacheHit.get).mkString("{", ",", "}")
         }
+        val cg = "," + "\"compiles\":" + okQ.filter(_.compiles.isDefined).map(t =>
+          "\"" + t.name + "\":" + t.compiles.get).mkString("{", ",", "}")
         val tb = okQ.filter(_.tiebreak.isDefined) match {
           case Nil => ""
           case ts => "," + "\"tiebreak\":" + ts.map(t =>
             "\"" + t.name + "\":\"" + t.tiebreak.get + "\"").mkString("{", ",", "}")
         }
-        runs + cache + tb
+        runs + cache + cg + tb
       } else ""
     val priorRatio = medianPriorRatio(results)
     val full = resultLine(totalStr,

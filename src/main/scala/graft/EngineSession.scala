@@ -26,7 +26,20 @@ import org.apache.spark.sql.SparkSession
   *   - the local file system is [[SpawnFreeLocalFs]]'s: without libhadoop,
   *     Hadoop's forks `chmod` per created file or dir and `readlink` per
   *     rename, 2627 processes (125 per micro-batch, 77 of them dedup
-  *     state-store commits) in one `cdc_trickle` run, now 0.
+  *     state-store commits) in one `cdc_trickle` run, now 0;
+  *   - the codegen cache holds 4096 classes, not Spark's 100: one `Verify`
+  *     pass over every entry at sf0.01 compiles 3129 distinct classes (4096
+  *     leaves ~30 % headroom), and one pass of perfbench's 8-entry
+  *     `query_mix` about 190, so under the default, least-recently-used
+  *     eviction threw out every class before its query ran again (226
+  *     Janino compiles of 5–40 ms each on every repeated pass, now 0). A
+  *     static setting: the JVM's first `CodeGenerator` use fixes the size;
+  *   - `spark.sql.codegen.useIdInClassName` off: the class name is part of
+  *     the cached source, and under AQE a stage's codegen id depends on the
+  *     order in which the query's stages finish, so the same stage body came
+  *     back as `GeneratedIteratorForCodegenStage19`, `…21` or `…22` and
+  *     missed the cache (5–12 compiles per `x3_ann_pq_trained` run with an
+  *     unbounded cache). Every stage class is `GeneratedIterator` instead.
   */
 object EngineSession {
   val excludedRules: String =
@@ -41,6 +54,8 @@ object EngineSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.optimizer.excludedRules", excludedRules)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", 4096)
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.hadoop.fs.file.impl", classOf[SpawnFreeLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[SpawnFreeLocalFs].getName)
       // graft's Catalyst surface: native SQL functions + the top-k

@@ -1,5 +1,6 @@
 package graft.cdc
 
+import graft.functions.BatchTime
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -107,8 +108,9 @@ object CanalJson {
       .select(col("parsed"), col("partition"), col("offset"),
               posexplode(col("parsed.data")).as(Seq("pos", "row_data")))
       .select(
-        // es is epoch ms (index.js:250); fallback = processing time
-        coalesce(timestamp_millis(col("parsed.es")), current_timestamp()).as("timestamp"),
+        // es is epoch ms (index.js:250); fallback = processing time, kept
+        // out of the generated source so a batch compiles no new class
+        coalesce(timestamp_millis(col("parsed.es")), BatchTime.now).as("timestamp"),
         coalesce(col("parsed.database"), lit("testdb")).as("database"),
         coalesce(col("parsed.table"), lit("unknown")).as("table"),
         col("parsed.type").as("operation"),

@@ -538,7 +538,10 @@ object CdcApply {
     * is property-certified in CdcApplyProps and oracle-certified by
     * `cdc_log_compaction` (same DuckDB oracle as `cdc_wire_latest`). */
   def compactLog(events: DataFrame): DataFrame = {
-    val keyed = dedupDelivery(events).withColumn("pk", envelopePk)
+    // redelivered copies of a coordinate need no distinct: they are
+    // byte-identical, so interchangeable for every window below, and the
+    // closing `__rn === __n` filter keeps exactly one row per key
+    val keyed = events.withColumn("pk", envelopePk)
     val w = Window.partitionBy(col("database"), col("table"), col("pk"))
       .orderBy(col("timestamp"), col("offset"))
     val wAll = Window.partitionBy(col("database"), col("table"), col("pk"))

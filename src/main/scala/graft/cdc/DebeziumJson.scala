@@ -1,5 +1,6 @@
 package graft.cdc
 
+import graft.functions.BatchTime
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -98,7 +99,7 @@ object DebeziumJson {
     parsed.filter(isValid)
       .select(
         coalesce(timestamp_millis(col("p.source.ts_ms")),
-          timestamp_millis(col("p.ts_ms")), current_timestamp()).as("timestamp"),
+          timestamp_millis(col("p.ts_ms")), BatchTime.now).as("timestamp"),
         coalesce(col("p.source.db"), lit("testdb")).as("database"),
         coalesce(col("p.source.table"), lit("unknown")).as("table"),
         col("p.op").as("operation"),

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.BatchTime
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -31,7 +32,7 @@ object LogShipping {
     raw
       .withColumn("j", from_json(col("value"), dockerLogSchema))
       .select(
-        coalesce(to_timestamp(col("j.time")), current_timestamp()).as("ts"),
+        coalesce(to_timestamp(col("j.time")), BatchTime.now).as("ts"),
         coalesce(col("j.stream"), lit("unknown")).as("stream"),
         coalesce(col("j.log"), col("value")).as("log"))
       .withColumn("level",

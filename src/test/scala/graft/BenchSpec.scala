@@ -33,6 +33,17 @@ class BenchSpec extends AnyFunSuite {
     assert(json.contains(""""q1": {"cold": 2.000, "warm": 1.000, "runs": [2.000, 1.000, 1.500]"""))
   }
 
+  test("a detail row states the adopted run's codegen compiles, and only when measured") {
+    val path = java.nio.file.Files.createTempFile("bench_detail", ".json")
+    Bench.writeDetail(path.toString, Seq(
+      Bench.Timing("q1", 2.0, 1.0, runs = Seq(2.0, 1.0, 1.5), compiles = Some(0L)),
+      Bench.Timing("q2", 2.0, 1.0, runs = Seq(2.0, 1.0))), 2.0, "/data/sf0.1")
+    val json = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
+    assert(json.contains(""""q1": {"cold": 2.000, "warm": 1.000, "runs": [2.000, 1.000, 1.500], "run_taken": 2, "compiles": 0}"""))
+    assert(json.contains(""""q2": {"cold": 2.000, "warm": 1.000, "runs": [2.000, 1.000], "run_taken": 2}"""))
+    assert(json.contains("compiles = codegen compilations"))
+  }
+
   /** A runner that replays `results` in order and counts its calls. */
   private final class FakeRunner(results: (Double, Boolean)*) {
     private val it = results.iterator

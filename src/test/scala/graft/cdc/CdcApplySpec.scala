@@ -306,7 +306,10 @@ class CdcApplySpec extends SparkSpec {
         .otherwise(lit(null).cast("map<string,string>")).as("old_data"),
       lit(0).as("partition"), lit(0).as("pos")))
     val dup = e.filter($"offset" === 15L).withColumn("offset", lit(95L))
-    val c = CdcApply.compactLog(e.unionByName(dup))
+    // byte-identical redeliveries (same coordinate) of first and last
+    // events: the windows see the copies, the net effect must not
+    val redelivered = e.filter($"offset".isin(10L, 12L, 22L, 13L))
+    val c = CdcApply.compactLog(e.unionByName(dup).unionByName(redelivered))
       .select($"pk", $"op", element_at($"data", "val").as("v"),
         element_at($"old_data", "val").as("old"))
       .orderBy($"pk").as[(String, String, String, Option[String])].collect()
